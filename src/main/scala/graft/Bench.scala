@@ -19,7 +19,7 @@ object Bench {
   /** Quiet-host anchors for calibOnce (seconds) in BENCH context — i.e.
     * inside a deeply-warmed JVM after the query warm-up passes, which is
     * where the probe actually runs (a fresh JVM reads ~0.23/0.47 via
-    * graft.tools.CalibProbe; the fully-JIT'd Bench JVM reads ~0.13/0.44
+    * `graft.tools.Probe calib`; the fully-JIT'd Bench JVM reads ~0.13/0.44
     * — anchors use the latter so quiet runs land near 1.0). NOT
     * core-linear (memory-bandwidth-bound before 32 threads); unknown cpu
     * counts snap to the nearest measured config (driver=32, dev=4).
@@ -45,7 +45,7 @@ object Bench {
     * `repassNeeded` tolerates an anchorless query (it stays plain
     * min-of-2), but BenchSpec's meta-check requires every bench-group
     * entry to carry a row here — when adding a bench entry, pin a
-    * PROVISIONAL anchor from a quiet TimeAll/local-bench reading in
+    * PROVISIONAL anchor from a quiet `Probe time`/local-bench reading in
     * the same commit (the lda_em_topics_dist pattern) and re-pin after
     * the first driver bench. BASELINE.md "bench methodology" documents
     * the rule; queries at the 0.4 s floor never trigger regardless.
@@ -184,55 +184,66 @@ object Bench {
     anchors.collect { case (n, a) if a >= 1.0 &&
       SparkEntry.benchQueries2.contains(n) => n }.toSet
 
+  /** Cache hygiene before every timed pass: the warm-up pass leaves the
+    * dedup shingle frame (and any other persisted intermediates) in the
+    * block manager; timing each query against that residue both pollutes
+    * unrelated measurements (round-2: w1 regressed 5.8× with the shingled
+    * corpus resident) and flatters the query that built the cache, so
+    * each query pays its own full cost against a clean JVM heap.
+    * Trained-MODEL caches (k-means centroids, PQ codebooks — tiny driver
+    * arrays with zero block-manager footprint) deliberately survive: the
+    * warm-up builds each index once and the timed passes then measure
+    * encode+search, the way an index is actually used. Round-7
+    * ann_pq_topk retrained per pass and a contention burst during
+    * training tripled one pass ([4.12 s, 11.70 s]).
+    */
+  def clearState(spark: SparkSession): Unit = {
+    graft.ops.DedupOps.clear()
+    graft.ops.MLOps.clear()
+    spark.catalog.clearCache()
+  }
+
+  /** One untimed pass per query, failures ignored (the timed passes
+    * report them): primes codegen, classloading and the model caches
+    * that survive clearState before anything is timed.
+    */
+  def warmUp(spark: SparkSession, names: Seq[String], sfDir: String): Unit =
+    names.foreach { n =>
+      try SparkEntry.queries(n)(spark, sfDir).count()
+      catch { case _: Throwable => () }
+    }
+
+  /** One timed pass of `name` over `sfDir` after clearState, in seconds.
+    * A crashed query must not masquerade as a fast one: it reports -1
+    * (and its exception on stderr).
+    */
+  def timeOne(spark: SparkSession, name: String, sfDir: String): Double = {
+    clearState(spark)
+    val t0 = System.nanoTime()
+    val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: $e")
+      false
+    }
+    if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     // Headline queries only (SparkEntry.benchQueries) — the scale-
     // representative shuffles/joins/windows, not every micro-query.
     // One warm-up pass primes the JVM (codegen, classloading) so the
     // timed pass measures query execution, not first-call JIT.
     val names = SparkEntry.benchQueries
-    names.foreach { n =>
-      try SparkEntry.queries(n)(spark, sfDir).count()
-      catch { case _: Throwable => () }
-    }
-    // Cache hygiene: the warm-up pass leaves the dedup shingle frame (and
-    // any other persisted intermediates) in the block manager; timing each
-    // query against that residue both pollutes unrelated measurements
-    // (round-2: w1 regressed 5.8× with the shingled corpus resident) and
-    // flatters the query that built the cache. Clear before every timed
-    // query so each one pays its own full cost against a clean JVM heap.
-    // Trained-MODEL caches (k-means centroids, PQ codebooks — tiny driver
-    // arrays with zero block-manager footprint) deliberately survive:
-    // the warm-up builds each index once and the timed passes then
-    // measure encode+search, the way an index is actually used. Round-7
-    // ann_pq_topk retrained per pass and a contention burst during
-    // training tripled one pass ([4.12 s, 11.70 s]).
-    def clearState(): Unit = {
-      graft.ops.DedupOps.clear()
-      graft.ops.MLOps.clear()
-      spark.catalog.clearCache()
-    }
+    warmUp(spark, names, sfDir)
     // Two timed passes, report the per-query MIN: a transient burst of
     // machine contention (the whole-run 2x swing BENCH_r04 recorded on a
     // shared driver host) then inflates at most one pass, not the
     // reported number. Min-of-2 measures what the query costs, not what
     // the neighbors were doing.
-    def timeOne(name: String): Double = {
-      clearState()
-      val t0 = System.nanoTime()
-      val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-      catch { case _: Throwable => false }
-      // A crashed query must not masquerade as a fast one: report -1.
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-    }
+    def pass(name: String): Double = timeOne(spark, name, sfDir)
     // Both raw passes are recorded alongside the min: pass 1 runs against a
     // cold OS page cache / partially-JIT'd JVM, pass 2 is fully warm, and
     // the min is systematically a warm-pass number. Publishing the pair
@@ -264,7 +275,7 @@ object Bench {
     // `extra_passes` in the JSON names each triggered query.
     var extraUsed = 0
     var extraBudgetExhausted = false
-    val anchor = calibAnchor(cpus.toInt)
+    val anchor = calibAnchor(cpus)
     // DEFERRED re-passes (round 18, replacing round 17's back-to-back
     // ones): BENCH_r17's emb_pca_power [1.79, 1.53, 8.78, 5.66] showed
     // extra passes running INTO the burst that triggered them — both
@@ -278,12 +289,12 @@ object Bench {
     def timeGroup(groupNames: Seq[String], calibG: Double) = {
       val scale = anchorScale(calibG, anchor)
       val standard = groupNames.map { name =>
-        name -> Seq(timeOne(name), timeOne(name))
+        name -> Seq(pass(name), pass(name))
       }
       // ADVICE r17: an exhausted budget on a mismatched-anchor host must
       // be self-describing, not silent — flagged in the JSON.
       val (raw, used, exhausted) = deferredRepass(
-        standard, n => anchors.get(n).map(_ * scale), timeOne,
+        standard, n => anchors.get(n).map(_ * scale), pass,
         MAX_EXTRA_TOTAL - extraUsed)
       extraUsed += used
       if (exhausted) extraBudgetExhausted = true
@@ -333,10 +344,7 @@ object Bench {
     val calib1 = calibrate()
     val (total, qs, ps, failed, res1, extras1) = timeGroup(names, calib1)
     val names2 = SparkEntry.benchQueries2
-    names2.foreach { n =>
-      try SparkEntry.queries(n)(spark, sfDir).count()
-      catch { case _: Throwable => () }
-    }
+    warmUp(spark, names2, sfDir)
     val calib2 = calibrate()
     val (total2, qs2, ps2, failed2, res2, extras2) = timeGroup(names2, calib2)
     def r3(x: Double): Double = math.rint(x * 1000) / 1000

@@ -614,7 +614,7 @@ object DedupOps {
       // round 18: `cands` (band-collision join) and `marked` (the whole
       // exact-verifier chain) each had TWO consumers — the recall
       // buckets and the precision row — so the corpus-scale truth and
-      // candidate pipelines ran twice per query (JobProbe: jobSum 6.2 s
+      // candidate pipelines ran twice per query (Probe jobs: jobSum 6.2 s
       // for a 3.3 s wall). Pin both pair lists (∝ dup density).
       val candsP = cands.localCheckpoint(false)
       val marked = truth

@@ -413,7 +413,7 @@ object GraphOps {
         .select($"a", $"b")
         // round 18: three consumers (both wedge sides + the closure
         // join) each embedded the full corpus edge-aggregate subtree —
-        // Catalyst optimized it 3x (JobProbe: 1.3 s of planning gap for
+        // Catalyst optimized it 3x (Probe jobs: 1.3 s of planning gap for
         // a |V|-bounded query); one lazy pin keeps the plan linear
         .localCheckpoint(false)
       val e1 = core.select($"a".as("x"), $"b".as("y"))
@@ -485,7 +485,7 @@ object GraphOps {
       // a `k` column — the two k's never interact (every join/group
       // carries k), so membership per k is identical to two separate
       // peels, while the round count the driver must PLAN halves from
-      // 24 to 12 (JobProbe: this query was ~50% Catalyst planning gap,
+      // 24 to 12 (Probe jobs: this query was ~50% Catalyst planning gap,
       // one plan per sequential lazy checkpoint). The deg >= k
       // threshold reads the k column directly.
       val peeled = {

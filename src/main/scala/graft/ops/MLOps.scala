@@ -919,14 +919,17 @@ object MLOps {
   /** Per-centroid squared-L2 + id structs; array_min over this is the
     * map-side assignment (ties break on centroid id).
     */
-  private[ops] def kmeansDistArr(cents: Array[(Int, Seq[Double])]): Column = {
+  private[graft] def kmeansDistArr(cents: Array[(Int, Seq[Double])]): Column = {
     import org.apache.spark.sql.functions.{col => fcol}
+    require(cents.map(_._1).sorted.sameElements(cents.indices),
+      s"centroid keys must be 0 until ${cents.length}: ${cents.map(_._1).sorted.mkString(",")}")
     // ONE transform over the k-ordered centroid literal instead of K
     // unrolled distance trees (round 19, the pqNearestCode pattern):
     // same zip_with/aggregate fold per centroid, same struct(d, k)
     // elements — the transform index IS the centroid id because cents'
     // keys are 0..K-1 by construction (zipWithIndex init, keys
-    // preserved across Lloyd rounds) — so assignments/orderings are
+    // preserved across Lloyd rounds; the require above fails loudly if
+    // a trainer change ever breaks that) — so assignments/orderings are
     // bit-identical while the expression tree shrinks ~Kx.
     transform(typedLit(cents.sortBy(_._1).map(_._2)), (c, k) =>
       struct(aggregate(zip_with(fcol("e"), c, (a, b) => (a - b) * (a - b)),
@@ -941,9 +944,6 @@ object MLOps {
     */
   private val kmeansCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), Array[(Int, Seq[Double])]]
-
-  /** Drops the trained-model caches too (spec isolation; Bench keeps them). */
-  def clearTrainers(): Unit = kmeansCache.clear()
 
   /** Runs the KmIters Lloyd rounds and returns the trained centroids —
     * model-scale (K×dim) driver state, 6dp-rounded per round (see

@@ -146,9 +146,6 @@ object SimilarityOps {
   private val pqCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), Array[Array[(Int, Seq[Double])]]]
 
-  /** Drops the trained-model caches (spec isolation; Bench keeps them). */
-  def clearTrainers(): Unit = pqCache.clear()
-
   private def pqTrain(s: SparkSession, d: String): Array[Array[(Int, Seq[Double])]] =
     pqCache.getOrElseUpdate((s, d, "flat"),
       pqTrainOn(s, graft.ops.MLOps.kmeansCorpus(s, d)))
@@ -197,13 +194,18 @@ object SimilarityOps {
     * are bit-identical; only the expression tree shrinks ~K'x. That
     * tree size was where the measured ann_pq/ann_ivfpq cost sat (128
     * unrolled aggregate trees re-optimized every pass — guide §3.3/§7.3:
-    * planning time itself as the bottleneck).
+    * planning time itself as the bottleneck). The index-as-id reading
+    * needs the codebook keys to be exactly 0 until K'; the require makes
+    * a gapped codebook fail instead of mislabelling every code.
     */
-  private def pqNearestCode(cb: Array[(Int, Seq[Double])], sub: Column): Column =
+  private[graft] def pqNearestCode(cb: Array[(Int, Seq[Double])], sub: Column): Column = {
+    require(cb.map(_._1).sorted.sameElements(cb.indices),
+      s"codebook keys must be 0 until ${cb.length}: ${cb.map(_._1).sorted.mkString(",")}")
     array_min(transform(typedLit(cb.sortBy(_._1).map(_._2)), (c, k) =>
       struct(aggregate(zip_with(sub, c, (x, y) => (x - y) * (x - y)),
         lit(0.0), (acc, x) => acc + x).as("d"), k.as("k"))))
       .getField("k")
+  }
 
   /** The trained coarse centroids as one k-ordered literal array —
     * element_at(…, cid+1) is the broadcast centroid lookup both the

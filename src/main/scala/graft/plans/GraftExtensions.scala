@@ -11,9 +11,8 @@ import graft.functions.{MinHashSig, PolyHash, ShingleHashes, VecDot}
   * itself: [[LevenshteinThresholdRewrite]] (bounded edit-distance
   * predicates run Spark's banded early-exit algorithm).
   *
-  * Register via
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. One SparkStrategy
+  * Installed by [[graft.GraftSession]] (or
+  * `spark.sql.extensions=graft.plans.GraftExtensions`). One SparkStrategy
   * is injected — [[GroupTopKStrategy]], planning the explicit
   * [[GroupTopKPlan]] whole-operator node (every REFERENCE operator still
   * plans onto built-in physical operators per SURVEY §4; GroupTopK is

@@ -140,16 +140,12 @@ case class GroupTopKExec(
   */
 object GroupTopK {
   /** Top-k rows per group under (col, descending?) orderings with all
-    * child columns preserved. Registers [[GroupTopKStrategy]] with the
-    * session's experimental strategies if no extension injected it.
+    * child columns preserved. Planned by [[GroupTopKStrategy]], which
+    * GraftExtensions injects into every GraftSession.
     */
   def topK(df: DataFrame, groupCols: Seq[String],
       orderBy: Seq[(String, Boolean)], k: Int): DataFrame = {
     val spark: SparkSession = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(GroupTopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GroupTopKStrategy
-    }
     val child = df.queryExecution.analyzed
     def attr(n: String): Attribute = child.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Regenerates PLANS.md: formatted physical plans of the flagship queries
   * with the properties PlanSpec asserts, as reviewable evidence.
@@ -9,12 +8,7 @@ import org.apache.spark.sql.SparkSession
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(4)
     val flagships = Seq(
       "j_star_revenue_by_region" ->
         "Star join: broadcast dims, one shuffled fact join, decimal-exact partial agg",
@@ -128,15 +122,11 @@ object DumpPlans {
     sb.append(s"Generated by `graft.tools.DumpPlans` on `$sfDir`. ")
     sb.append("PlanSpec asserts the load-bearing properties; this file is the human-readable evidence.\n")
     flagships.foreach { case (name, note) =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = Probe.formattedPlan(graft.SparkEntry.queries(name)(spark, sfDir))
       sb.append(s"\n## $name\n\n$note\n\n```\n")
       // keep the tree; drop the verbose per-node detail past 120 lines
-      val lines = plan.linesIterator.toSeq
-      val keep = lines.takeWhile(l => !l.startsWith("(1) Scan")) ++
-        lines.dropWhile(l => !l.startsWith("(1) Scan")).take(40)
-      sb.append(keep.mkString("\n"))
+      val (tree, detail) = plan.linesIterator.toSeq.span(!_.startsWith("(1) Scan"))
+      sb.append((tree ++ detail.take(40)).mkString("\n"))
       sb.append("\n```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)

@@ -1,0 +1,112 @@
+package graft.tools
+
+import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+import graft.{Bench, GraftSession, SparkEntry}
+
+/** Dev diagnostics over SparkEntry queries, on the GraftSession Bench runs:
+  *
+  *   time [nameRegex] [sfDir] [passes]  Bench's protocol (one warm-up
+  *       pass, clearState before every timed pass, min of `passes`,
+  *       default 2) for every matching query, heaviest first — finds and
+  *       reproduces slow queries without the whole bench run
+  *   jobs <query> [sfDir]  per-job wall times of one pass (after a
+  *       warm-up and clearState), and the driver gap (wall minus the job
+  *       sum: planning and driver loops)
+  *   plans <nameRegex> <outDir> [sfDir]  `explain("formatted")` of every
+  *       matching query into <outDir>/<name>.txt (the plans/rNN evidence)
+  *   calib  the Bench calibration probe alone (six fresh-JVM passes)
+  *
+  * sfDir defaults to SPARK_GRAFT_SF_DIR, the dataset Bench times; the
+  * width comes from SPARK_GRAFT_CPUS, as in Bench.
+  * Usage: runMain graft.tools.Probe <subcommand> <args...>
+  */
+object Probe {
+  /** The one plan formatter (also DumpPlans'). */
+  def formattedPlan(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode)
+
+  private def matching(nameRegex: String): Seq[String] =
+    SparkEntry.queries.keys.toSeq.sorted.filter(_.matches(nameRegex))
+
+  def main(args: Array[String]): Unit = {
+    def sf(rest: List[String]) = rest.headOption.orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
+      .getOrElse(sys.error("pass sfDir or set SPARK_GRAFT_SF_DIR"))
+    val run: SparkSession => Unit = args.toList match {
+      case "time" :: rest => time(_, rest.headOption.getOrElse(".*"), sf(rest.drop(1)),
+        rest.lift(2).fold(2)(_.toInt))
+      case "jobs" :: query :: rest => jobs(_, query, sf(rest))
+      case "plans" :: nameRegex :: outDir :: rest => plans(_, nameRegex, outDir, sf(rest))
+      case "calib" :: Nil => calib
+      case _ => sys.error("usage: Probe time [nameRegex] [sfDir] [passes] | " +
+        "jobs <query> [sfDir] | plans <nameRegex> <outDir> [sfDir] | calib")
+    }
+    val spark = GraftSession.local()
+    try run(spark) finally spark.stop()
+  }
+
+  private def time(spark: SparkSession, nameRegex: String, sfDir: String,
+                   passes: Int): Unit = {
+    val names = matching(nameRegex)
+    Bench.warmUp(spark, names, sfDir)
+    val rows = names.map { name =>
+      val ps = Seq.fill(passes)(Bench.timeOne(spark, name, sfDir))
+      (name, ps.filter(_ >= 0).minOption.getOrElse(-1.0), ps)
+    }
+    rows.sortBy(-_._2).foreach { case (name, t, ps) =>
+      println(f"[probe] $t%8.3f  $name  passes=${ps.map(p => f"$p%.3f").mkString("[", ",", "]")}")
+    }
+    println(f"[probe] ${rows.map(_._2).filter(_ >= 0).sum}%8.3f  TOTAL (${rows.size} queries)")
+  }
+
+  private def jobs(spark: SparkSession, name: String, sfDir: String): Unit = {
+    Bench.warmUp(spark, Seq(name), sfDir) // the pass pays planning, not first-call JIT
+    Bench.clearState(spark)
+    val starts = scala.collection.concurrent.TrieMap.empty[Int, (Long, String)]
+    val rows = scala.collection.mutable.ListBuffer.empty[(Int, Double, String)]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts(e.jobId) = (e.time,
+          Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        starts.remove(e.jobId).foreach { case (t0, desc) =>
+          rows += ((e.jobId, (e.time - t0) / 1e3, desc))
+        }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val t0 = System.nanoTime()
+    SparkEntry.queries(name)(spark, sfDir).count()
+    val wall = (System.nanoTime() - t0) / 1e9
+    spark.sparkContext.removeSparkListener(l)
+    Thread.sleep(500) // let the listener bus drain the last job ends
+    val sorted = rows.sortBy(_._1)
+    sorted.foreach { case (id, s, desc) =>
+      println(f"[probe] job $id%4d  $s%7.3f s  ${desc.take(80)}")
+    }
+    val jobSum = sorted.map(_._2).sum
+    println(f"[probe] TOTAL jobs=${sorted.size} jobSum=$jobSum%.3f wall=$wall%.3f (gap=${wall - jobSum}%.3f = planning/driver)")
+  }
+
+  private def plans(spark: SparkSession, nameRegex: String, outDir: String,
+                    sfDir: String): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    matching(nameRegex).foreach { name =>
+      try {
+        val plan = formattedPlan(SparkEntry.queries(name)(spark, sfDir))
+        Files.writeString(Paths.get(outDir, s"$name.txt"), plan)
+        println(s"[probe] wrote $outDir/$name.txt")
+      } catch { case e: Throwable => println(s"[probe] $name FAILED: $e") }
+    }
+  }
+
+  private def calib(spark: SparkSession): Unit = {
+    val times = (1 to 6).map { _ =>
+      val t0 = System.nanoTime()
+      Bench.calibOnce(spark)
+      (System.nanoTime() - t0) / 1e9
+    }
+    println(s"[probe] calib cpus=${GraftSession.cpus} runs=${times.map(t => f"$t%.3f").mkString(",")} min=${times.min}")
+  }
+}

@@ -148,7 +148,7 @@ object ScaleLaw {
       else "r16"
     val families = FamilySets.getOrElse(setName, sys.error(
       s"unknown family set '$setName' (valid: ${FamilySets.keys.mkString(", ")})"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = graft.GraftSession.cpus
     // Width policy (round 18, codifying the SCALE.md 16-wide anomaly):
     // "auto" sizes spark.sql.shuffle.partitions per measured dataset via
     // Scaling.sizeShuffleFor (partitions ∝ input bytes, floor = cpus) —
@@ -156,47 +156,26 @@ object ScaleLaw {
     // from one rule and nobody hand-tunes per scale point. A number
     // pins a fixed width (the pre-round-18 protocol, kept so old rows
     // stay reproducible); default is the fixed cpus width.
-    val widthMode = sys.env.getOrElse("SPARK_GRAFT_WIDTH", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        if (widthMode == "auto") cpus else widthMode)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val widthMode = sys.env.getOrElse("SPARK_GRAFT_WIDTH", cpus.toString)
+    val spark = graft.GraftSession.local(cpus)
+    if (widthMode != "auto")
+      spark.conf.set("spark.sql.shuffle.partitions", widthMode)
 
     generateIfAbsent(spark, base, fx, factor)
 
     def widthForDir(dir: String): Int =
       if (widthMode == "auto")
-        graft.ops.Scaling.sizeShuffleFor(spark, dir, cpus.toInt)
+        graft.ops.Scaling.sizeShuffleFor(spark, dir, cpus)
       else widthMode.toInt
 
-    def clearState(): Unit = {
-      graft.ops.DedupOps.clear()
-      graft.ops.MLOps.clear()
-      spark.catalog.clearCache()
-    }
     // Bench's min-of-2 protocol, applied identically at both sizes so the
     // ratio is warm-pass vs warm-pass. One extra UNTIMED warm-up first:
     // it trains the per-dir model caches that deliberately survive
     // clearState (PQ codebooks), exactly as Bench's warm-up pass does.
-    def timeOne(name: String, dir: String): Double = {
-      clearState()
-      val t0 = System.nanoTime()
-      val ok = try { graft.SparkEntry.queries(name)(spark, dir).count(); true }
-      catch { case t: Throwable =>
-        System.err.println(s"[scalelaw] $name@$dir failed: ${t.getMessage}")
-        false
-      }
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-    }
     def minOf2(name: String, dir: String): Double = {
-      try { graft.SparkEntry.queries(name)(spark, dir).count() } // warm-up
-      catch { case _: Throwable => () }
-      val (a, b) = (timeOne(name, dir), timeOne(name, dir))
+      graft.Bench.warmUp(spark, Seq(name), dir)
+      val (a, b) = (graft.Bench.timeOne(spark, name, dir),
+        graft.Bench.timeOne(spark, name, dir))
       if (a < 0 || b < 0) -1.0 else math.min(a, b)
     }
 

@@ -93,7 +93,7 @@ class BenchSpec extends AnyFunSuite {
   test("every bench-group query has an anchor") {
     // the adaptive rule only protects anchored entries, so a bench
     // entry must land WITH a (possibly provisional) anchor in the same
-    // commit — pin it from a quiet TimeAll/local-bench reading and
+    // commit — pin it from a quiet `Probe time`/local-bench reading and
     // re-pin after the first driver bench (the lda_em_topics_dist
     // pattern; Bench.anchors' scaladoc states the workflow)
     val missing = (SparkEntry.benchQueries ++ SparkEntry.benchQueries2)

@@ -1,25 +1,21 @@
 package graft
 
-/** GraftExtensions registers the custom expressions as SQL functions.
-  * (The shared test session already exists, so register through the same
-  * mechanism the extension uses, then exercise them via spark.sql.)
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** GraftExtensions as installed by GraftSession: the custom expressions
+  * are SQL functions and the optimizer rule fires in the shared session
+  * itself, with nothing registered by hand — and GraftSession is the only
+  * place a session can be built, so Bench, Verify and the suite agree.
   */
 class ExtensionsSpec extends SparkSpec {
 
   test("custom expressions are callable from SQL") {
-    // apply the injection path on a live session's registry
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(new FunctionIdentifier("poly_hash"))) {
-      reg.createOrReplaceTempFunction("poly_hash",
-        exprs => graft.functions.PolyHash(exprs.head), "built-in")
-      reg.createOrReplaceTempFunction("vec_dot",
-        exprs => graft.functions.VecDot(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction("shingle_hashes",
-        exprs => graft.functions.ShingleHashes(exprs.head), "built-in")
-      reg.createOrReplaceTempFunction("min_hash_sig",
-        exprs => graft.functions.MinHashSig(exprs.head), "built-in")
-    }
+    for (f <- Seq("poly_hash", "vec_dot", "shingle_hashes", "min_hash_sig"))
+      assert(reg.functionExists(new FunctionIdentifier(f)),
+        s"$f missing: the shared session was built without GraftExtensions")
     val h = spark.sql("SELECT poly_hash('spark') AS h").collect().head.getLong(0)
     // reference recurrence
     var acc = 0L
@@ -88,43 +84,42 @@ class ExtensionsSpec extends SparkSpec {
       .forall(i => sig.getLong(i) == interp.getLong(i)))
   }
 
-  test("GraftExtensions class applies to a builder without error") {
-    // construct (not start) a builder with the extension — validates the
-    // injection wiring compiles and instantiates
-    val ext = new graft.plans.GraftExtensions
-    val e = new org.apache.spark.sql.SparkSessionExtensions
-    ext(e) // must not throw
-  }
-
   test("levenshtein threshold rewrite: plan uses banded form, results exact") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.LevenshteinThresholdRewrite)
-    try {
-      // parquet-backed input: ConvertToLocalRelation would fold a local
-      // Seq through the filter before the rewrite is observable
-      val docs = ops.Tables.documents(spark, sf)
-        .select($"doc_id", substring($"text", 1, 20).as("a"),
-          substring($"text", 21, 20).as("b"))
-      // ground truth via a Project (no comparison → rule never fires)
-      val dist = docs.select($"doc_id", levenshtein($"a", $"b").as("d"))
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      for (k <- Seq(0, 3, 15)) {
-        val q = docs.filter(levenshtein($"a", $"b") <= k).select($"doc_id")
-        val opt = q.queryExecution.optimizedPlan.toString
-        // rewritten: three-arg levenshtein + the -1 guard
-        assert(opt.contains(s"Some($k)") && opt.contains(">= 0"), opt)
-        val got = q.as[Long].collect().toSet
-        assert(got == dist.filter(_._2 <= k).keySet, s"k=$k")
-      }
-      // strict and reversed comparison forms rewrite too
-      val strict = docs.filter(levenshtein($"a", $"b") < 15)
-      assert(strict.queryExecution.optimizedPlan.toString.contains(">= 0"))
-      assert(strict.count() == dist.count(_._2 < 15))
-      val rev = docs.filter(lit(15) >= levenshtein($"a", $"b"))
-      assert(rev.queryExecution.optimizedPlan.toString.contains(">= 0"))
-      assert(rev.count() == dist.count(_._2 <= 15))
-    } finally spark.experimental.extraOptimizations = Nil
+    assert(spark.experimental.extraOptimizations.isEmpty) // injected, not overridden
+    // parquet-backed input: ConvertToLocalRelation would fold a local
+    // Seq through the filter before the rewrite is observable
+    val docs = ops.Tables.documents(spark, sf)
+      .select($"doc_id", substring($"text", 1, 20).as("a"),
+        substring($"text", 21, 20).as("b"))
+    // ground truth via a Project (no comparison → rule never fires)
+    val dist = docs.select($"doc_id", levenshtein($"a", $"b").as("d"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    for (k <- Seq(0, 3, 15)) {
+      val q = docs.filter(levenshtein($"a", $"b") <= k).select($"doc_id")
+      val opt = q.queryExecution.optimizedPlan.toString
+      // rewritten: three-arg levenshtein + the -1 guard
+      assert(opt.contains(s"Some($k)") && opt.contains(">= 0"), opt)
+      val got = q.as[Long].collect().toSet
+      assert(got == dist.filter(_._2 <= k).keySet, s"k=$k")
+    }
+    // strict and reversed comparison forms rewrite too
+    val strict = docs.filter(levenshtein($"a", $"b") < 15)
+    assert(strict.queryExecution.optimizedPlan.toString.contains(">= 0"))
+    assert(strict.count() == dist.count(_._2 < 15))
+    val rev = docs.filter(lit(15) >= levenshtein($"a", $"b"))
+    assert(rev.queryExecution.optimizedPlan.toString.contains(">= 0"))
+    assert(rev.count() == dist.count(_._2 <= 15))
+  }
+
+  test("GraftSession is the only session builder under src/") {
+    // split so this file does not match itself
+    val builder = "SparkSession" + ".builder"
+    val hits = Files.walk(Paths.get("src")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        Files.readString(p).contains(builder))
+      .map(_.getFileName.toString).toSeq
+    assert(hits == Seq("GraftSession.scala"), hits)
   }
 }

@@ -78,6 +78,19 @@ class SimilaritySpec extends SparkSpec {
       exactCos.get((q, n)).foreach(ec => assert(c == ec, s"($q,$n)")) }
   }
 
+  test("argmin helpers reject a gapped codebook instead of mislabelling codes") {
+    // both helpers read the transform index as the code/centroid id, so
+    // keys {0, 2} would silently report code 1 for codeword 2
+    val gapped = Array(0 -> Seq(0.0, 0.0), 2 -> Seq(1.0, 1.0))
+    intercept[IllegalArgumentException](
+      graft.ops.SimilarityOps.pqNearestCode(gapped, col("e")))
+    intercept[IllegalArgumentException](graft.ops.MLOps.kmeansDistArr(gapped))
+    // the contiguous form, in any order, is accepted
+    val ok = Array(1 -> Seq(1.0, 1.0), 0 -> Seq(0.0, 0.0))
+    graft.ops.SimilarityOps.pqNearestCode(ok, col("e"))
+    graft.ops.MLOps.kmeansDistArr(ok)
+  }
+
   test("SQ8 probe rescores its candidates with the exact cosines") {
     // any (query, neighbor) pair the quantized probe surfaces that also
     // sits in the exact top-k must carry the identical rescored cosine —
