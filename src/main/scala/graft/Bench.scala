@@ -189,29 +189,36 @@ object Bench {
     * block manager; timing each query against that residue both pollutes
     * unrelated measurements (round-2: w1 regressed 5.8× with the shingled
     * corpus resident) and flatters the query that built the cache, so
-    * each query pays its own full cost against a clean JVM heap.
-    * Trained-MODEL caches (k-means centroids, PQ codebooks — tiny driver
-    * arrays with zero block-manager footprint) deliberately survive: the
-    * warm-up builds each index once and the timed passes then measure
-    * encode+search, the way an index is actually used. Round-7
-    * ann_pq_topk retrained per pass and a contention burst during
+    * each query pays its own full cost against a clean JVM heap. Which
+    * cached values survive (trained indexes) and which are dropped (pinned
+    * frames and per-pass fits) is `graft.ops.Memo`'s policy, stated there.
+    * Round-7 ann_pq_topk retrained per pass and a contention burst during
     * training tripled one pass ([4.12 s, 11.70 s]).
     */
   def clearState(spark: SparkSession): Unit = {
-    graft.ops.DedupOps.clear()
-    graft.ops.MLOps.clear()
+    graft.ops.Memo.clear()
     spark.catalog.clearCache()
   }
 
-  /** One untimed pass per query, failures ignored (the timed passes
-    * report them): primes codegen, classloading and the model caches
-    * that survive clearState before anything is timed.
+  /** One untimed pass per query: primes codegen, classloading and the
+    * Memo index entries that survive clearState before anything is
+    * timed. A failure is reported on stderr and otherwise ignored (the
+    * timed passes record it).
     */
   def warmUp(spark: SparkSession, names: Seq[String], sfDir: String): Unit =
     names.foreach { n =>
       try SparkEntry.queries(n)(spark, sfDir).count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => System.err.println(s"[bench] warm-up $n failed: $e") }
     }
+
+  /** The headline `queries` map: every group-1 min (a crashed query keeps
+    * its documented -1) plus the g2Published group-2 mins that succeeded.
+    * A crashed group-2 query is listed under `failed2` only; its -1 here
+    * would read as a very fast query to a reader checking `failed`.
+    */
+  def headlineQueries(g1: Seq[(String, Double)],
+      g2: Seq[(String, Double)]): Seq[(String, Double)] =
+    g1 ++ g2.filter { case (n, v) => v >= 0 && g2Published(n) }
 
   /** One timed pass of `name` over `sfDir` after clearState, in seconds.
     * A crashed query must not masquerade as a fast one: it reports -1
@@ -355,7 +362,7 @@ object Bench {
     // machine-compare exactly the entries optimization rounds target.
     // `value` is UNCHANGED: still the group-1 total only, keeping the
     // headline trendline comparable across all rounds.
-    val qsPub = (res1 ++ res2.filter(r => g2Published(r._1)))
+    val qsPub = headlineQueries(res1, res2)
       .map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":$total,"unit":"sec","timing":"min_of_2_adaptive_deferred","queries":$qsPub,"passes":$ps,"failed":$failed,"extra_passes":$extras1,"total2":$total2,"queries2":$qs2,"passes2":$ps2,"failed2":$failed2,"extra_passes2":$extras2,"extra_budget_exhausted":$extraBudgetExhausted,"calib1":${r3(calib1)},"calib2":${r3(calib2)},"calib_anchor":$anchor,"noise_factor":$noise,"sf":"$sfDir"}""")

@@ -91,10 +91,10 @@ object SparkEntry {
     "ann_sq8_topk",
     "ann_lsh_multi_topk",
     "text_bpe_encode",
-    // encode, not train: the trainer caches survive clearState (by
-    // design — see Bench), so timing the train query would measure a
-    // 300-row rank over the cached model; the encode pass is the real
-    // repeated work (a full Viterbi inference pass per timed run)
+    // encode, not train: the trained unigram model is a Memo.index
+    // entry and survives clearState, so timing the train query would
+    // measure a 300-row rank over the cached model; the encode pass is
+    // the real repeated work (a full Viterbi inference pass per timed run)
     "text_lm_backoff",
     "a_countmin_probe",
     "a_heavy_hitters",
@@ -118,13 +118,13 @@ object SparkEntry {
     "dedup_lsh_pr_eval",
     "ml_logreg_gd",
     "graph_assortativity",
-    "ml_als_factors", // round 13: full ALS fit per pass (clearState wipes alsCache)
+    "ml_als_factors", // round 13: full ALS fit per pass (a Memo.perPass entry)
     // round 16: the production dedup composition (banded-LSH candidates →
     // verify → star-CC). Timing it guards the whole LSH-fed cluster path;
     // first Bench-context anchor recorded in BASELINE.md this round.
     "dedup_cluster_reps_lsh",
     // round 17: the distributed treeAggregate LDA fit — full fit per
-    // timed pass BY DESIGN (clearState wipes emDistCache, the
+    // timed pass BY DESIGN (its φ array is a Memo.perPass entry, the
     // ml_als_factors convention), so regressions in the per-round
     // broadcast + tree-reduce shape stay visible.
     "lda_em_topics_dist",

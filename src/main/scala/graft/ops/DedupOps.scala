@@ -153,30 +153,6 @@ object DedupOps {
       .orderBy("d1", "d2")
   }
 
-  /** (doc_id, sh: long hash) exploded shingle hashes + per-doc set sizes.
-    * Tokenization sits in its own Project (materialized attribute), then
-    * the codegen'd ShingleHashes expression emits distinct hashes in one
-    * pass — shingle strings never materialize.
-    */
-  // One persisted shingle frame per (session, sfDir): three queries
-  // (ngram_jaccard, minhash_lsh, levenshtein_verify) and Bench's
-  // warm-up+timed double run all consume it; caching per call would
-  // leave a new MEMORY_AND_DISK copy in the block manager per call
-  // and re-shingle the corpus each time.
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Unpersist and drop every cached shingle frame. The cache assumes
-    * immutable inputs per session; callers that re-time queries (Bench) or
-    * rewrite the underlying parquet must clear it so (a) the block manager
-    * doesn't carry the shingled corpus into unrelated queries and (b) no
-    * stale shingles survive an input rewrite.
-    */
-  def clear(): Unit = {
-    shingleCache.values.foreach(_.unpersist(blocking = true))
-    shingleCache.clear()
-  }
-
   /** Embedding corpus with planted near-duplicates: every 50th vector
     * re-keyed +100000 with dim 0 bumped by +0.1. On a unit-norm corpus the
     * bump yields cosine(base, planted) ≈ 0.995 — a genuine near-dup above
@@ -201,11 +177,15 @@ object DedupOps {
     * Persisted: it feeds 4-6 plan branches (candidate sides, sizes,
     * signatures); without a materialization boundary Spark re-reads and
     * re-shingles the corpus per branch — the multi-consumer fan-out
-    * pattern SURVEY §3.1 calls for caching.
+    * pattern SURVEY §3.1 calls for caching. One Memo.perPass entry per
+    * sfDir, shared by ngram_jaccard, minhash_lsh and levenshtein_verify.
+    * Tokenization sits in its own Project (materialized attribute), then
+    * the codegen'd ShingleHashes expression emits distinct hashes in one
+    * pass — shingle strings never materialize.
     */
   private def shingleFrame(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    shingleCache.getOrElseUpdate((s, d), {
+    Memo.perPass("shingles", s, d) {
       val par = s.sparkContext.defaultParallelism
       documents(s, d)
         .repartition(par) // single-file corpus: fan out before the CPU work
@@ -214,9 +194,58 @@ object DedupOps {
           graft.functions.ShingleHashes.poly_shingles($"t").as("xs"))
         .filter(size($"xs") >= 1)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
   }
 
+  /** The corpus/incoming split of dedup_incremental and
+    * stream_lsh_incremental: every 10th doc arrives in the incoming batch,
+    * with re-keyed exact copies of some corpus docs (guaranteed dups).
+    * Returns (incoming docs, the (doc_id, side, xs) shingle-hash frame —
+    * a Memo.perPass entry with 3 consumers: signatures and both verify
+    * sides — and the distinct (d_new, d_old) pairs sharing an LSH band).
+    */
+  private def incrementalCandidates(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    import s.implicits._
+    val base = documents(s, d).select($"doc_id", $"text")
+    val corpus = base.filter($"doc_id" % 10 =!= 0)
+    val incoming = base.filter($"doc_id" % 10 === 0)
+      .union(corpus.filter($"doc_id" % 25 === 7)
+        .select(($"doc_id" + 2000000).as("doc_id"), $"text"))
+    val sh = Memo.perPass("shingles_incremental", s, d) {
+      corpus.withColumn("side", lit("old"))
+        .union(incoming.withColumn("side", lit("new")))
+        .repartition(s.sparkContext.defaultParallelism)
+        .select($"doc_id", $"side", toks($"text").as("t"))
+        .select($"doc_id", $"side",
+          graft.functions.ShingleHashes.poly_shingles($"t").as("xs"))
+        .filter(size($"xs") >= 1)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    val bands = lshBands(sh, "doc_id", "side")
+    val cands = bands.filter($"side" === "new")
+      .select($"doc_id".as("d_new"), $"band", $"key")
+      .join(bands.filter($"side" === "old")
+        .select($"doc_id".as("d_old"), $"band", $"key"), Seq("band", "key"))
+      .select("d_new", "d_old").distinct()
+    (incoming, sh, cands)
+  }
+
+  /** (keys..., band, key): the NumBands MinHash band keys of each row's
+    * `xs` shingle hashes, RowsPerBand signature values joined per band.
+    */
+  private def lshBands(sh: DataFrame, keys: String*): DataFrame = {
+    val bandKeys = (0 until NumBands).map { b =>
+      concat_ws("_", (0 until RowsPerBand).map(r =>
+        element_at(col("mh"), b * RowsPerBand + r + 1).cast("string")): _*)
+    }
+    sh.select(keys.map(col) :+
+        graft.functions.MinHashSig.min_hash_sig(col("xs")).as("mh"): _*)
+      .select(keys.map(col) :+ posexplode(array(bandKeys: _*)): _*)
+      .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
+  }
+
+  /** (doc_id, sh: long hash) exploded shingle hashes + per-doc set sizes. */
   private def explodedShingles(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     import s.implicits._
     val sh = shingleFrame(s, d)
@@ -551,15 +580,7 @@ object DedupOps {
     "dedup_minhash_lsh" -> ((s, d) => {
       import s.implicits._
       val (e, sizes) = explodedShingles(s, d)
-      val bandKeys = (0 until NumBands).map { b =>
-        concat_ws("_", (0 until RowsPerBand).map(r =>
-          element_at($"mh", b * RowsPerBand + r + 1).cast("string")): _*)
-      }
-      val sig = shingleFrame(s, d)
-        .select($"doc_id",
-          graft.functions.MinHashSig.min_hash_sig($"xs").as("mh"))
-        .select($"doc_id", posexplode(array(bandKeys: _*)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
+      val sig = lshBands(shingleFrame(s, d), "doc_id")
       val cands = sig.toDF("d1", "band", "key")
         .join(sig.toDF("d2", "band", "key"), Seq("band", "key"))
         .filter($"d1" < $"d2")
@@ -598,15 +619,7 @@ object DedupOps {
       import s.implicits._
       val (e, sizes) = explodedShingles(s, d)
       val truth = jaccardPairs(s, e, sizes, 0.5)
-      val bandKeys = (0 until NumBands).map { b =>
-        concat_ws("_", (0 until RowsPerBand).map(r =>
-          element_at($"mh", b * RowsPerBand + r + 1).cast("string")): _*)
-      }
-      val sig = shingleFrame(s, d)
-        .select($"doc_id",
-          graft.functions.MinHashSig.min_hash_sig($"xs").as("mh"))
-        .select($"doc_id", posexplode(array(bandKeys: _*)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
+      val sig = lshBands(shingleFrame(s, d), "doc_id")
       val cands = sig.toDF("d1", "band", "key")
         .join(sig.toDF("d2", "band", "key"), Seq("band", "key"))
         .filter($"d1" < $"d2")
@@ -651,37 +664,7 @@ object DedupOps {
     // alongside genuinely unseen docs.
     "dedup_incremental" -> ((s, d) => {
       import s.implicits._
-      val base = documents(s, d).select($"doc_id", $"text")
-      val corpus = base.filter($"doc_id" % 10 =!= 0)
-      val incoming = base.filter($"doc_id" % 10 === 0)
-        .union(corpus.filter($"doc_id" % 25 === 7)
-          .select(($"doc_id" + 2000000).as("doc_id"), $"text"))
-      val all = corpus.withColumn("side", lit("old"))
-        .union(incoming.withColumn("side", lit("new")))
-      // one cached (doc_id, side, xs) shingle-hash frame, 3 consumers
-      // (signatures + both verify sides); lifecycle owned by clear()
-      val sh = shingleCache.getOrElseUpdate((s, d + "#incremental"), {
-        all.repartition(s.sparkContext.defaultParallelism)
-          .select($"doc_id", $"side", toks($"text").as("t"))
-          .select($"doc_id", $"side",
-            graft.functions.ShingleHashes.poly_shingles($"t").as("xs"))
-          .filter(size($"xs") >= 1)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
-      val bandKeys = (0 until NumBands).map { b =>
-        concat_ws("_", (0 until RowsPerBand).map(r =>
-          element_at($"mh", b * RowsPerBand + r + 1).cast("string")): _*)
-      }
-      val bands = sh
-        .select($"doc_id", $"side",
-          graft.functions.MinHashSig.min_hash_sig($"xs").as("mh"))
-        .select($"doc_id", $"side", posexplode(array(bandKeys: _*)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
-      val cands = bands.filter($"side" === "new")
-        .select($"doc_id".as("d_new"), $"band", $"key")
-        .join(bands.filter($"side" === "old")
-          .select($"doc_id".as("d_old"), $"band", $"key"), Seq("band", "key"))
-        .select("d_new", "d_old").distinct()
+      val (incoming, sh, cands) = incrementalCandidates(s, d)
       val e = sh.select($"doc_id", explode($"xs").as("sh"))
       val sizes = sh.select($"doc_id", size($"xs").as("sz"))
       val matches = cands
@@ -713,39 +696,13 @@ object DedupOps {
     // the static index (stateless), dropDuplicates(doc_id) to emit each
     // flagged doc once — StreamingSpec runs exactly that through
     // MemoryStream across micro-batches and must land on this result.
-    // Shares the incremental shingle cache; same corpus/incoming split
-    // so the planted re-keyed copies are guaranteed band hits.
+    // Shares dedup_incremental's corpus/incoming split, shingle frame and
+    // band candidates, so the planted re-keyed copies are guaranteed band
+    // hits.
     "stream_lsh_incremental" -> ((s, d) => {
       import s.implicits._
-      val base = documents(s, d).select($"doc_id", $"text")
-      val corpus = base.filter($"doc_id" % 10 =!= 0)
-      val incoming = base.filter($"doc_id" % 10 === 0)
-        .union(corpus.filter($"doc_id" % 25 === 7)
-          .select(($"doc_id" + 2000000).as("doc_id"), $"text"))
-      val all = corpus.withColumn("side", lit("old"))
-        .union(incoming.withColumn("side", lit("new")))
-      val sh = shingleCache.getOrElseUpdate((s, d + "#incremental"), {
-        all.repartition(s.sparkContext.defaultParallelism)
-          .select($"doc_id", $"side", toks($"text").as("t"))
-          .select($"doc_id", $"side",
-            graft.functions.ShingleHashes.poly_shingles($"t").as("xs"))
-          .filter(size($"xs") >= 1)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
-      val bandKeys = (0 until NumBands).map { b =>
-        concat_ws("_", (0 until RowsPerBand).map(r =>
-          element_at($"mh", b * RowsPerBand + r + 1).cast("string")): _*)
-      }
-      val bands = sh
-        .select($"doc_id", $"side",
-          graft.functions.MinHashSig.min_hash_sig($"xs").as("mh"))
-        .select($"doc_id", $"side", posexplode(array(bandKeys: _*)))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
-      val hits = bands.filter($"side" === "new")
-        .select($"doc_id".as("d_new"), $"band", $"key")
-        .join(bands.filter($"side" === "old")
-          .select($"doc_id".as("d_old"), $"band", $"key"), Seq("band", "key"))
-        .select("d_new", "d_old").distinct()
+      val (incoming, _, cands) = incrementalCandidates(s, d)
+      val hits = cands
         .groupBy($"d_new")
         .agg(count(lit(1)).as("n_hit_docs"), min($"d_old").as("first_hit"))
       incoming.select($"doc_id")

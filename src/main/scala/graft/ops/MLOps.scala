@@ -84,19 +84,16 @@ object MLOps {
       .setInputCol("toks").setOutputCol("tf")
   }
 
-  /** One prepared LDA input per (session, sfDir): the vectorizer and the
-    * persisted fit-input frame are shared by every u5/u6/fanout query —
-    * the §3.1 "prepare once, fan out" shape. Fit input sits on ONE
-    * partition: seeded online VB is only reproducible when the
-    * treeAggregate merge order is fixed — with multiple partitions,
-    * scheduling order + float non-associativity shift topics between runs
-    * (observed; the EM optimizer has the same property). Transform stays
-    * parallel — see the object scaladoc for the fit-on-sample/
-    * transform-distributed scale recipe.
+  /** One prepared LDA input per sfDir (a Memo.perPass entry): the
+    * vectorizer and the persisted fit-input frame are shared by every
+    * u5/u6/fanout query — the §3.1 "prepare once, fan out" shape. Fit
+    * input sits on ONE partition: seeded online VB is only reproducible
+    * when the treeAggregate merge order is fixed — with multiple
+    * partitions, scheduling order + float non-associativity shift topics
+    * between runs (observed; the EM optimizer has the same property).
+    * Transform stays parallel — see the object scaladoc for the
+    * fit-on-sample/transform-distributed scale recipe.
     */
-  private val inputCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (CountVectorizerModel, DataFrame)]
-
   // The coalesce(1) below is the engine's ONLY single-partition compute:
   // seeded online-VB's trajectory depends on the input partitioning, and
   // one partition is the only partition-count-invariant layout (the u5
@@ -105,13 +102,13 @@ object MLOps {
   // bound, failure mode, and the tree-reduced fixed-partition fallback
   // documented in SCALE.md §"The single-partition LDA fit input".
   def preparedInput(s: SparkSession, d: String): (CountVectorizerModel, DataFrame) =
-    inputCache.getOrElseUpdate((s, d), {
+    Memo.perPass("lda_input", s, d) {
       val toks = docTokens(s, d)
       val cv = fitVectorizer(toks)
       val vec = cv.transform(toks).select("doc_id", "tf").coalesce(1)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (cv, vec)
-    })
+    }
 
   /** Fraction modulus of the hash-sampled FIT stratum: docs whose
     * poly_hash(doc_id) lands in residue 0 mod this train the LDA models;
@@ -123,9 +120,6 @@ object MLOps {
     */
   val FitSampleMod = 2L
 
-  private val sampleInputCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   /** The hash-sampled, vectorized, single-partition LDA FIT input
     * (round-14 VERDICT item #4 — the fit-on-sample recipe implemented
     * as the actual query path, not just documented). The stratum is a
@@ -136,7 +130,7 @@ object MLOps {
     * sample-fit and a full-corpus fit at sf0.01.
     */
   private def sampledFitInput(s: SparkSession, d: String): DataFrame =
-    sampleInputCache.getOrElseUpdate((s, d), {
+    Memo.perPass("lda_sample_input", s, d) {
       import s.implicits._
       val (cv, _) = preparedInput(s, d)
       val toks = docTokens(s, d).filter(
@@ -145,22 +139,19 @@ object MLOps {
           org.apache.spark.sql.functions.lit(FitSampleMod)) === 0)
       cv.transform(toks).select("doc_id", "tf").coalesce(1)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
-  /** Fitted models, keyed by (session, sfDir, k): the same seeded fit
-    * backs topics, doc-topics, save/load, and the fan-out entries.
+  /** Fitted models per (input, k, maxIter): the same seeded fit backs
+    * topics, doc-topics, save/load, and the fan-out entries.
     */
-  private val modelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int), LDAModel]
-
   def fittedLda(s: SparkSession, d: String, k: Int, maxIter: Int = 20): LDAModel =
-    modelCache.getOrElseUpdate((s, d, k, maxIter), {
+    Memo.perPass("lda_model", s, d, k, maxIter) {
       // fit-on-sample, transform-distributed: the fit reads the hash-
       // sampled stratum; every transform in the query map runs over the
       // full prepared corpus
       new LDA().setK(k).setSeed(Seed).setMaxIter(maxIter)
         .setFeaturesCol("tf").fit(sampledFitInput(s, d))
-    })
+    }
 
   /** Fit the given (k, maxIter) configs CONCURRENTLY — CrossValidator's
     * parallel-fit pattern (`setParallelism`), hand-rolled: each seeded
@@ -172,8 +163,8 @@ object MLOps {
     * warmed AND materialized on the calling thread first (one
     * vec.count(): otherwise the first concurrent fits race to compute
     * the same uncached partition — same values either way, just wasted
-    * work), and the caches are TrieMaps, so distinct (k, maxIter) keys
-    * never contend. Wall cost drops from sum(fits) to ~max(fits) —
+    * work), and Memo builds outside any lock, so distinct (k, maxIter)
+    * keys never contend. Wall cost drops from sum(fits) to ~max(fits) —
     * this is the fix for the documented sequential fan-out fit
     * constant; the fit-on-sample recipe for genuine 100 TB corpora
     * (object scaladoc) is unchanged.
@@ -182,7 +173,7 @@ object MLOps {
       cfgs: Seq[(Int, Int)]): Unit = {
     val vec = sampledFitInput(s, d) // the frame the fits actually read
     val todo = cfgs.distinct
-      .filterNot { case (k, it) => modelCache.contains((s, d, k, it)) }
+      .filterNot { case (k, it) => Memo.contains("lda_model", s, d, k, it) }
     if (todo.size > 1) {
       vec.count()
       runParallel(todo.map { case (k, it) =>
@@ -216,7 +207,7 @@ object MLOps {
     }
   }
 
-  /** Relational-EM sibling of [[fitConcurrently]]: warm `emCache` for
+  /** Relational-EM sibling of [[fitConcurrently]]: warm [[ldaEmState]] for
     * the given k's on parallel threads. Safe for the same reasons —
     * and here even multi-partition execution is deterministic, because
     * every EM sum quantizes per row to exact longs BEFORE aggregation
@@ -226,23 +217,9 @@ object MLOps {
     * wall cost of the scan drops from sum(k fits) to ~max(k fit).
     */
   private def emFitConcurrently(s: SparkSession, d: String, ks: Seq[Int]): Unit = {
-    val todo = ks.distinct.filterNot(k => emCache.contains((s, d, k)))
+    val todo = ks.distinct.filterNot(k => Memo.contains("lda_em", s, d, k))
     if (todo.size > 1)
       runParallel(todo.map(k => (s"em-fit-k$k", () => { ldaEmState(s, d, k); () })))
-  }
-
-  /** Drop cached inputs/models and unpersist their storage (mirrors
-    * DedupOps.clear — inputs are assumed immutable per session).
-    */
-  def clear(): Unit = {
-    inputCache.values.foreach { case (_, vec) => vec.unpersist(blocking = true) }
-    inputCache.clear()
-    sampleInputCache.values.foreach(_.unpersist(blocking = true))
-    sampleInputCache.clear()
-    modelCache.clear()
-    emCache.clear()
-    emDistCache.clear()
-    alsCache.clear()
   }
 
   /** (topic: string, word) rows for a fitted model's top-N topic words. */
@@ -504,8 +481,8 @@ object MLOps {
       .select($"source".as("topic"), $"word")
   }
 
-  /** Mean c_v coherence per candidate k over the LDA scan (cached per
-    * (session, sfDir) — u6_lda_model_scan and pipeline_topic_fanout both
+  /** Mean c_v coherence per candidate k over the LDA scan (a Memo.index
+    * entry — u6_lda_model_scan and pipeline_topic_fanout both
     * read it; fits are the cheap 5-iteration scan fits, mirroring the
     * reference's scan_passes=2 vs final passes=10 split). Ranked by the
     * reference's ACTUAL selection measure — c_v, via the [[cvPhi]]
@@ -514,11 +491,8 @@ object MLOps {
     * SUM(phiq)/COUNT over the k's topics (equal-sized topic word sets,
     * so this is the mean of unrounded per-topic means).
     */
-  private val scanCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Int, Double)]]
-
   def coherenceByK(s: SparkSession, d: String): Seq[(Int, Double)] =
-    scanCache.getOrElseUpdate((s, d), {
+    Memo.index("lda_scan", s, d) {
       import s.implicits._
       val (cv, _) = preparedInput(s, d)
       val toks = docTokens(s, d).select($"doc_id", $"toks")
@@ -531,7 +505,7 @@ object MLOps {
       val byK = cvPhiByK(s, tagged, toks)
         .select($"k", $"cv_coherence").as[(Int, Double)].collect().toMap
       ScanKs.map(k => (k, byK(k)))
-    })
+    }
 
   // ---- Relational EM LDA (the oracle-checkable twin of the MLlib fit) ----
 
@@ -608,11 +582,8 @@ object MLOps {
     * single-partition constraint); localCheckpoint truncates the
     * per-round lineage exactly like the PageRank/BFS iterations.
     */
-  private val emCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (DataFrame, DataFrame)]
-
   def ldaEmState(s: SparkSession, d: String, k: Int = EmK): (DataFrame, DataFrame) =
-    emCache.getOrElseUpdate((s, d, k), {
+    Memo.perPass("lda_em", s, d, k) {
       import s.implicits._
       // pre-partition by doc_id: the per-round E-step joins dw ⋈ theta on
       // doc_id, and theta arrives hash-partitioned on doc_id from its own
@@ -713,7 +684,7 @@ object MLOps {
             .as("th"))
       }
       (phi, theta)
-    })
+    }
 
   /** The DISTRIBUTED sufficient-statistics LDA fit (round-17 — the
     * fallback SCALE.md §"The single-partition LDA fit input" documents:
@@ -737,12 +708,9 @@ object MLOps {
     * Nothing in this path pins to one task: with P input partitions the
     * E-step runs P-wide and the reduce is a tree.
     */
-  private val emDistCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int), Array[(String, Array[Double])]]
-
   def ldaEmPhiDist(s: SparkSession, d: String, k: Int = EmK,
                    parts: Int = 0): Array[(String, Array[Double])] =
-    emDistCache.getOrElseUpdate((s, d, k, parts), {
+    Memo.perPass("lda_em_dist", s, d, k, parts) {
       import s.implicits._
       val dw = emCounts(s, d)
       // the one collected object: the cap-bounded vocabulary (sorted so
@@ -899,11 +867,11 @@ object MLOps {
       // plain φ array, so nothing can ever trigger a recomputation that
       // would need them. destroy() them all — per-fit driver memory no
       // longer accretes across datasets/parts keys in a long session
-      // (ADVICE r17; emDistCache itself is wiped by MLOps.clear()).
+      // (ADVICE r17; the φ array itself is a Memo.perPass entry).
       phBs.foreach(_.destroy())
       idxB.destroy()
       vocab.zip(phi.map(identity))
-    })
+    }
 
   /** K-means config (ml_kmeans + its unrolled oracle). */
   val KmK = 8
@@ -936,42 +904,31 @@ object MLOps {
         lit(0.0), (acc, x) => acc + x).as("d"), k.as("k")))
   }
 
-  /** Trained k-means centroids per (session, sfDir). Model-scale (K×dim
-    * doubles) DRIVER state with zero block-manager footprint — unlike the
-    * persisted-frame caches this one survives Bench.clearState, so timed
-    * ANN passes measure index probing, not coarse-quantizer retraining
-    * (training is deterministic, so caching cannot change any result).
-    */
-  private val kmeansCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Array[(Int, Seq[Double])]]
-
   /** Runs the KmIters Lloyd rounds and returns the trained centroids —
     * model-scale (K×dim) driver state, 6dp-rounded per round (see
     * ml_kmeans scaladoc for why rounding makes the trajectory portable).
     * Shared by ml_kmeans and the IVF index (SimilarityOps
-    * ann_ivf_kmeans_topk).
+    * ann_ivf_kmeans_topk); a Memo.index entry.
     */
   private[ops] def kmeansCentroids(s: SparkSession, d: String): Array[(Int, Seq[Double])] =
-    kmeansCache.getOrElseUpdate((s, d), kmeansCentroidsUncached(s, d))
-
-  private def kmeansCentroidsUncached(s: SparkSession, d: String): Array[(Int, Seq[Double])] = {
-    import s.implicits._
-    val corpus = kmeansCorpus(s, d)
-    var cents: Array[(Int, Seq[Double])] = corpus.orderBy($"vec_id").limit(KmK)
-      .collect().zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Double](1)) }
-    for (_ <- 1 to KmIters) {
-      val means = corpus.withColumn("a", array_min(kmeansDistArr(cents)))
-        .select($"a.k".as("cid"), posexplode($"e"))
-        .groupBy($"cid", $"pos").agg(round(avg($"col"), 6).as("m"))
-        .groupBy($"cid").agg(
-          transform(array_sort(collect_list(struct($"pos", $"m"))),
-            x => x.getField("m")).as("c"))
-        .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-      cents = cents.map { case (k, old) => (k, means.getOrElse(k, old)) }
+    Memo.index("kmeans", s, d) {
+      import s.implicits._
+      val corpus = kmeansCorpus(s, d)
+      var cents: Array[(Int, Seq[Double])] = corpus.orderBy($"vec_id").limit(KmK)
+        .collect().zipWithIndex
+        .map { case (r, i) => (i, r.getSeq[Double](1)) }
+      for (_ <- 1 to KmIters) {
+        val means = corpus.withColumn("a", array_min(kmeansDistArr(cents)))
+          .select($"a.k".as("cid"), posexplode($"e"))
+          .groupBy($"cid", $"pos").agg(round(avg($"col"), 6).as("m"))
+          .groupBy($"cid").agg(
+            transform(array_sort(collect_list(struct($"pos", $"m"))),
+              x => x.getField("m")).as("c"))
+          .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
+        cents = cents.map { case (k, old) => (k, means.getOrElse(k, old)) }
+      }
+      cents
     }
-    cents
-  }
 
   /** Ridge regularizer for ml_ridge_probe, in micro-quantized-feature²
     * units (shared with the oracle).
@@ -2168,9 +2125,6 @@ object MLOps {
         ((c("da11") * c("db2") - c("da12") * c("db1")) / c("det")).as(f2))
   }
 
-  private val alsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, Seq[(DataFrame, DataFrame)])]
-
   /** Checkpointed ratings + per-alternation (users, items) factor states.
     * Item init is INTEGER-seeded (the EM/k-means posture): v_f =
     * ((polyhash(part)·31 + f·7919) mod 997 − 498) / 997 — two exact
@@ -2178,7 +2132,7 @@ object MLOps {
     */
   def alsStates(s: SparkSession, d: String)
       : (DataFrame, Seq[(DataFrame, DataFrame)]) =
-    alsCache.getOrElseUpdate((s, d), {
+    Memo.perPass("als", s, d) {
       import s.implicits._
       val r = alsRatings(s, d).localCheckpoint(false)
       val ph = graft.functions.PolyHash.poly_hash($"part".cast("string"))
@@ -2197,7 +2151,7 @@ object MLOps {
         (users, items)
       }
       (r, states)
-    })
+    }
 
   /** One ALS half-step's normal-equation sums: join the ratings with the
     * FIXED side's factors (g1, g2) on `joinKey`, quantize the five

@@ -136,19 +136,11 @@ object SimilarityOps {
     */
   val IvfRescoreK = 10 * TopK
 
-  /** Trained PQ codebooks per (session, sfDir, variant). Model-scale
-    * (M×K'×SubDim doubles) driver state, no block-manager footprint —
-    * kept across Bench.clearState so timed ANN passes measure encode +
-    * search, not codebook retraining (training is deterministic; caching
-    * cannot change results). "flat" = ann_pq_topk's corpus codebooks;
-    * "ivf_residual" = ann_ivfpq_topk's residual codebooks.
+  /** ann_pq_topk's corpus codebooks: model-scale (M×K'×SubDim doubles)
+    * driver state, a Memo.index entry.
     */
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), Array[Array[(Int, Seq[Double])]]]
-
   private def pqTrain(s: SparkSession, d: String): Array[Array[(Int, Seq[Double])]] =
-    pqCache.getOrElseUpdate((s, d, "flat"),
-      pqTrainOn(s, graft.ops.MLOps.kmeansCorpus(s, d)))
+    Memo.index("pq_flat", s, d)(pqTrainOn(s, graft.ops.MLOps.kmeansCorpus(s, d)))
 
   /** Trains the M per-subspace codebooks simultaneously — one corpus
     * pass + one (m, code, pos) shuffle per Lloyd round; codewords round
@@ -233,13 +225,13 @@ object SimilarityOps {
     * flat index, run on the residual corpus (Jégou et al. §IV — coding
     * residuals concentrates the quantizer's budget on within-cell
     * variance). The residual frame is localCheckpoint'ed for the
-    * training passes only.
+    * training passes only. A Memo.index entry, like [[pqTrain]].
     */
   private def ivfResidualCbs(s: SparkSession, d: String): Array[Array[(Int, Seq[Double])]] =
-    pqCache.getOrElseUpdate((s, d, "ivf_residual"), {
+    Memo.index("pq_ivf_residual", s, d) {
       import s.implicits._
       pqTrainOn(s, ivfAssigned(s, d).select($"vec_id", $"re".as("e")).localCheckpoint())
-    })
+    }
 
   /** Deterministic hyperplanes: java.util.Random(42) Gaussians (the LCG and
     * nextGaussian algorithms are fixed by the Java spec, so these constants

@@ -414,14 +414,11 @@ object TextOps {
     *     (single chars floor at count 1 — coverage invariant).
     * Per round: one map-side HOF pass over the word table + one
     * vocab-scale groupBy; the only driver state is the vocab itself
-    * (model-scale, the BPE/k-means/PQ posture). Returns (vocab counts,
-    * total) after UgEmRounds.
+    * (model-scale, the BPE/k-means/PQ posture), a Memo.index entry.
+    * Returns (vocab counts, total) after UgEmRounds.
     */
-  private val ugCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Seq[(String, Long)], Long)]
-
   def unigramModel(s: SparkSession, d: String): (Seq[(String, Long)], Long) =
-    ugCache.getOrElseUpdate((s, d), {
+    Memo.index("unigram", s, d) {
       import s.implicits._
       val w = ugWords(s, d).localCheckpoint()
       val subs = w.select($"word", $"freq",
@@ -449,7 +446,7 @@ object TextOps {
         }
       }
       (vocab, vocab.map(_._2).sum)
-    })
+    }
 
   /** word.substr for HOF lambdas (i: 1-based start Column, j0: len-1). */
   private def word_substr(word: Column, i: Column, j0: Column): Column =

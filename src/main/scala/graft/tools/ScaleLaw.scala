@@ -170,8 +170,8 @@ object ScaleLaw {
 
     // Bench's min-of-2 protocol, applied identically at both sizes so the
     // ratio is warm-pass vs warm-pass. One extra UNTIMED warm-up first:
-    // it trains the per-dir model caches that deliberately survive
-    // clearState (PQ codebooks), exactly as Bench's warm-up pass does.
+    // it trains the Memo.index entries that survive clearState (PQ
+    // codebooks), exactly as Bench's warm-up pass does.
     def minOf2(name: String, dir: String): Double = {
       graft.Bench.warmUp(spark, Seq(name), dir)
       val (a, b) = (graft.Bench.timeOne(spark, name, dir),

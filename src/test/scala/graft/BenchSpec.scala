@@ -90,6 +90,17 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.repassNeeded(Seq(9.9, 9.6), scaled))
   }
 
+  test("headline queries keep group-1 crash markers but no group-2 ones") {
+    // ADVICE r19: a crashed group-2 query is listed under failed2, not
+    // failed, so its -1 in `queries` read as a very fast query
+    val g1 = Seq("j_star_revenue_by_region" -> 0.7, "dedup_exact" -> -1.0)
+    val g2 = Seq("lda_em_topics" -> -1.0, "ml_als_factors" -> 3.1,
+      "a_ks_test" -> 0.8)
+    assert(Bench.g2Published("lda_em_topics") && Bench.g2Published("ml_als_factors"))
+    assert(!Bench.g2Published("a_ks_test"))
+    assert(Bench.headlineQueries(g1, g2) == g1 :+ ("ml_als_factors" -> 3.1))
+  }
+
   test("every bench-group query has an anchor") {
     // the adaptive rule only protects anchored entries, so a bench
     // entry must land WITH a (possibly provisional) anchor in the same

@@ -149,7 +149,7 @@ class DedupSpec extends SparkSpec {
       }
       assert(rows(9)._4 >= 0.9, s"high-j tail: ${rows(9)._4}")
       assert(rows(5)._4 <= 0.85, s"low-j tail: ${rows(5)._4}")
-    } finally graft.ops.DedupOps.clear()
+    } finally graft.ops.Memo.clear()
   }
 
   test("embedding LSH is non-vacuous and recalls the brute-force >=0.9 pairs") {

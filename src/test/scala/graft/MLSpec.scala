@@ -120,7 +120,7 @@ class MLSpec extends SparkSpec {
   test("relational EM-LDA retrains to identical topics (seeded, no cache)") {
     val q = SparkEntry.queries("lda_em_topics")
     val a = q(spark, sf).collect().map(_.toSeq).toSeq
-    graft.ops.MLOps.clear() // drop the cached (phi, theta) — force a full retrain
+    graft.ops.Memo.clear() // drop the cached (phi, theta) — force a full retrain
     val b = q(spark, sf).collect().map(_.toSeq).toSeq
     assert(a == b && a.nonEmpty)
     assert(a.length == graft.ops.MLOps.EmK * graft.ops.MLOps.TopWords)

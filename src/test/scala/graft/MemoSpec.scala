@@ -1,0 +1,85 @@
+package graft
+
+import graft.ops.{MLOps, Memo, TextOps}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.storage.StorageLevel
+
+import java.io.File
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** graft.ops.Memo: entries are keyed on the files they were built from,
+  * so a rewritten input rebuilds instead of serving a stale model, and
+  * `Memo.clear()` drops exactly the per-pass entries.
+  */
+class MemoSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** A fixture dir holding `documents` and `embeddings` derived from sf:
+    * every other embedding (by parity), documents re-keyed by `idShift`.
+    */
+  private def fixture(parity: Int, idShift: Long): String = {
+    val dir = Files.createTempDirectory("graft_memo").toString
+    graft.ops.Tables.documents(spark, sf)
+      .withColumn("doc_id", $"doc_id" + idShift)
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    graft.ops.Tables.embeddings(spark, sf).filter($"vec_id" % 2 === parity)
+      .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  private def rows(q: String, dir: String): Seq[Seq[Any]] =
+    SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSeq
+
+  test("a rewritten input rebuilds both index and per-pass entries") {
+    val a = fixture(0, 0L)
+    val b = fixture(1, 100000L)
+    try {
+      // ml_kmeans reads the k-means centroids (an index entry),
+      // dedup_minhash_lsh the persisted shingle frame (a per-pass entry)
+      val qs = Seq("ml_kmeans", "dedup_minhash_lsh")
+      val onA = qs.map(rows(_, a))
+      val onB = qs.map(rows(_, b))
+      qs.indices.foreach { i =>
+        assert(onA(i).nonEmpty && onA(i) != onB(i), qs(i))
+      }
+      for (t <- Seq("documents", "embeddings")) {
+        FileUtils.deleteDirectory(new File(s"$a/$t.parquet"))
+        FileUtils.copyDirectory(new File(s"$b/$t.parquet"), new File(s"$a/$t.parquet"))
+      }
+      assert(qs.map(rows(_, a)) == onB)
+    } finally {
+      Memo.clear()
+      Seq(a, b).foreach(d => FileUtils.deleteDirectory(new File(d)))
+    }
+  }
+
+  test("a second lookup on an unchanged dir returns the same object") {
+    val input = MLOps.preparedInput(spark, sf)
+    assert(MLOps.preparedInput(spark, sf) eq input)
+    assert(Memo.contains("lda_input", spark, sf))
+    val model = TextOps.unigramModel(spark, sf)
+    assert(TextOps.unigramModel(spark, sf) eq model)
+  }
+
+  test("clear keeps index values and rebuilds per-pass values unpersisted") {
+    val model = TextOps.unigramModel(spark, sf)
+    val (_, vec) = MLOps.preparedInput(spark, sf)
+    assert(vec.storageLevel != StorageLevel.NONE)
+    Memo.clear()
+    assert(vec.storageLevel == StorageLevel.NONE)
+    assert(!Memo.contains("lda_input", spark, sf))
+    assert(TextOps.unigramModel(spark, sf) eq model)
+    val (_, vec2) = MLOps.preparedInput(spark, sf)
+    assert(!(vec2 eq vec))
+    assert(vec2.storageLevel != StorageLevel.NONE)
+  }
+
+  test("Memo is the only TrieMap under src/main/scala/graft/ops") {
+    val hits = Files.walk(Paths.get("src/main/scala/graft/ops")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        Files.readString(p).contains("TrieMap"))
+      .map(_.getFileName.toString).toSeq
+    assert(hits == Seq("Memo.scala"), hits)
+  }
+}

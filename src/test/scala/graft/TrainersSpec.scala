@@ -367,20 +367,20 @@ class TrainersSpec extends SparkSpec {
     // aggregation, so execution interleaving can't reach the values).
     // Likewise for the MLlib side via pipeline_topic_fanout, whose fits
     // are single-partition seeded jobs.
-    import graft.ops.MLOps
-    MLOps.clear()
+    import graft.ops.{Memo, MLOps}
+    Memo.clear()
     val scanConc = SparkEntry.queries("lda_em_scan")(spark, sf)
       .collect().map(_.toSeq).toSeq
-    MLOps.clear()
+    Memo.clear()
     MLOps.ScanKs.foreach(k => MLOps.ldaEmState(spark, sf, k))
     val scanSeq = SparkEntry.queries("lda_em_scan")(spark, sf)
       .collect().map(_.toSeq).toSeq
     assert(scanConc == scanSeq, "EM scan diverged under concurrent warm-up")
 
-    MLOps.clear()
+    Memo.clear()
     val fanConc = SparkEntry.queries("pipeline_topic_fanout")(spark, sf)
       .collect().map(_.toSeq).toSeq
-    MLOps.clear()
+    Memo.clear()
     // sequential MLlib leg: pre-warm every (k, maxIter) the query needs
     // on THIS thread — scan fits first (so coherenceByK's concurrent
     // warm-up finds them cached and no-ops), then the three final
