@@ -184,6 +184,12 @@ object Bench {
     anchors.collect { case (n, a) if a >= 1.0 &&
       SparkEntry.benchQueries2.contains(n) => n }.toSet
 
+  /** The `benchQueries2` entries with no anchor: the adaptive re-pass
+    * rule skips them and g2Published can never list them, so Bench names
+    * each on stderr at startup rather than letting membership drift.
+    */
+  def unanchored(names: Seq[String]): Seq[String] = names.filterNot(anchors.contains)
+
   /** Cache hygiene before every timed pass: the warm-up pass leaves the
     * dedup shingle frame (and any other persisted intermediates) in the
     * block manager; timing each query against that residue both pollutes
@@ -238,6 +244,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
+    unanchored(SparkEntry.benchQueries2).foreach(n => System.err.println(s"[bench] no anchor: $n"))
     val spark = GraftSession.local(cpus)
     // Headline queries only (SparkEntry.benchQueries) — the scale-
     // representative shuffles/joins/windows, not every micro-query.

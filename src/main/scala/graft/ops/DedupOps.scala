@@ -245,12 +245,35 @@ object DedupOps {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
   }
 
-  /** (doc_id, sh: long hash) exploded shingle hashes + per-doc set sizes. */
+  /** (doc_id, sh: long hash) exploded shingle hashes + per-doc set sizes:
+    * the form of the ops that ENUMERATE shared-shingle pairs or probe
+    * single hashes (ngram_jaccard and the pr_eval/gate_sweep ground
+    * truth via jaccardPairs, containment, prefix_filter, the contamination
+    * probes). Verifying an already-generated candidate list reads the
+    * cached arrays instead ([[verifyCandidates]]).
+    */
   private def explodedShingles(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     import s.implicits._
     val sh = shingleFrame(s, d)
     (sh.select($"doc_id", explode($"xs").as("sh")),
       sh.select($"doc_id", size($"xs").as("sz")))
+  }
+
+  /** (a, b, inter, s1, s2) for every candidate pair (a, b) of the
+    * two-column frame `cands`: |A∩B| and both shingle-set sizes, read off
+    * a cached (doc_id, xs) shingle-hash frame joined once per side. `xs`
+    * holds DISTINCT hashes (ShingleHashes), so size(array_intersect) is
+    * the row count the exploded shingle join (explode → join → groupBy →
+    * two size joins, about five shuffles) produced. Callers apply their
+    * own Jaccard gate; `cands` must be distinct, one row per pair.
+    */
+  private def verifyCandidates(cands: DataFrame, sh: DataFrame): DataFrame = {
+    val Array(a, b) = cands.columns
+    def side(c: String, xs: String) = sh.select(col("doc_id").as(c), col("xs").as(xs))
+    cands.join(side(a, "x1"), a).join(side(b, "x2"), b)
+      .select(col(a), col(b),
+        size(array_intersect(col("x1"), col("x2"))).as("inter"),
+        size(col("x1")).as("s1"), size(col("x2")).as("s2"))
   }
 
   /** Connected components over an undirected pair list (d1, d2): returns
@@ -564,7 +587,7 @@ object DedupOps {
 
     // MinHash + banded LSH: 32 permutation-hash minima per doc, 8 bands ×
     // 4 rows, band-collision join for candidates, exact-Jaccard
-    // verification ≥ 0.8.
+    // verification ≥ 0.8 on the cached shingle arrays (verifyCandidates).
     //
     // The signature is MAP-ONLY: the per-doc shingle-hash array is
     // already materialized (cached frame), so the codegen'd MinHashSig
@@ -579,21 +602,15 @@ object DedupOps {
     // declines because custom expressions are non-cheap.
     "dedup_minhash_lsh" -> ((s, d) => {
       import s.implicits._
-      val (e, sizes) = explodedShingles(s, d)
-      val sig = lshBands(shingleFrame(s, d), "doc_id")
+      val sh = shingleFrame(s, d)
+      val sig = lshBands(sh, "doc_id")
       val cands = sig.toDF("d1", "band", "key")
         .join(sig.toDF("d2", "band", "key"), Seq("band", "key"))
         .filter($"d1" < $"d2")
         // distinct is REQUIRED, not an optimization: a pair colliding in
-        // k bands appears k times, and duplicate candidate rows would
-        // multiply the shingle-join `inter` count k× (wrong Jaccard).
+        // k bands appears k times and would be verified and emitted k×.
         .select("d1", "d2").distinct()
-      val e1 = e.toDF("d1", "sh")
-      val e2 = e.toDF("d2", "sh")
-      cands.join(e1, "d1").join(e2, Seq("d2", "sh"))
-        .groupBy($"d1", $"d2").agg(count("*").as("inter"))
-        .join(sizes.toDF("d1", "s1"), "d1")
-        .join(sizes.toDF("d2", "s2"), "d2")
+      verifyCandidates(cands, sh)
         .withColumn("jaccard", round($"inter" / ($"s1" + $"s2" - $"inter"), 6))
         .filter($"jaccard" >= 0.8)
         .select("d1", "d2", "jaccard")
@@ -665,14 +682,7 @@ object DedupOps {
     "dedup_incremental" -> ((s, d) => {
       import s.implicits._
       val (incoming, sh, cands) = incrementalCandidates(s, d)
-      val e = sh.select($"doc_id", explode($"xs").as("sh"))
-      val sizes = sh.select($"doc_id", size($"xs").as("sz"))
-      val matches = cands
-        .join(e.toDF("d_new", "sh"), "d_new")
-        .join(e.toDF("d_old", "sh"), Seq("d_old", "sh"))
-        .groupBy($"d_new", $"d_old").agg(count(lit(1)).as("inter"))
-        .join(sizes.toDF("d_new", "s1"), "d_new")
-        .join(sizes.toDF("d_old", "s2"), "d_old")
+      val matches = verifyCandidates(cands, sh)
         .filter($"inter" / ($"s1" + $"s2" - $"inter") >= 0.8d)
         .groupBy($"d_new")
         .agg(count(lit(1)).as("n_matches"), min($"d_old").as("first_match"))
@@ -848,13 +858,18 @@ object DedupOps {
     // exactly 1), so DedupSpec additionally asserts bit-equality with the
     // exact-pair clustering — at lower gates the LSH S-curve makes the
     // pair sets differ by design (dedup_lsh_pr_eval prices that).
+    // The labels frame is a persisted Memo.perPass entry: the report
+    // stage (pipeline_dedup_corpus) reads the labels this stage wrote
+    // instead of re-running LSH and the star-CC loop on the same input.
     "dedup_cluster_reps_lsh" -> ((s, d) => {
       import s.implicits._
-      val pairs = queries("dedup_minhash_lsh")(s, d).select($"d1", $"d2")
-      ccStars(s, pairs)
-        .toDF("doc_id", "cluster_rep")
-        .withColumn("is_survivor", $"doc_id" === $"cluster_rep")
-        .orderBy("doc_id")
+      Memo.perPass("lsh_clusters", s, d) {
+        val pairs = queries("dedup_minhash_lsh")(s, d).select($"d1", $"d2")
+        ccStars(s, pairs)
+          .toDF("doc_id", "cluster_rep")
+          .withColumn("is_survivor", $"doc_id" === $"cluster_rep")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.orderBy("doc_id")
     }),
 
     // The END-TO-END production dedup REPORT — what "dedup this corpus"
@@ -864,10 +879,11 @@ object DedupOps {
     // as non-survivor cluster members. Docs in no verified pair are kept
     // by definition (LEFT join against the cluster labels). Composes the
     // round-16 dedup_cluster_reps_lsh path, so every stage is the scale
-    // path — candidates ∝ dup density, never all-pairs. One extra
-    // doc-keyed join + a |sources|-row aggregate on top of the cluster
-    // query. Oracle: the shared MinHash CTE chain + recursive closure +
-    // the same left join, per source.
+    // path — candidates ∝ dup density, never all-pairs. It reads that
+    // query's cached labels frame, so after the dedup stage on the same
+    // input it costs one doc-keyed join + a |sources|-row aggregate; run
+    // alone it builds the labels first. Oracle: the shared MinHash CTE
+    // chain + recursive closure + the same left join, per source.
     "pipeline_dedup_corpus" -> ((s, d) => {
       import s.implicits._
       val cc = queries("dedup_cluster_reps_lsh")(s, d)

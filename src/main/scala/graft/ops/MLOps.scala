@@ -713,10 +713,12 @@ object MLOps {
     Memo.perPass("lda_em_dist", s, d, k, parts) {
       import s.implicits._
       val dw = emCounts(s, d)
-      // the one collected object: the cap-bounded vocabulary (sorted so
-      // the index layout is deterministic)
+      // the one collected object: the cap-bounded vocabulary, sorted on
+      // the driver (model-scale, ≤ 50k words) rather than by a sampled
+      // range sort, so the index layout is deterministic. φ per word does
+      // not depend on that layout: seeds hash the word, sums are exact.
       val vocab: Array[String] = dw.select($"word").distinct()
-        .orderBy($"word").as[String].collect()
+        .as[String].collect().sorted
       val v = vocab.length
       val idx: Map[String, Int] = vocab.zipWithIndex.toMap
       val idxB = s.sparkContext.broadcast(idx)
@@ -730,9 +732,9 @@ object MLOps {
           (ws.map { case (w, n) => (idxB.value(w), n) }.toArray,
             Array.fill(k)(1.0 / k))
         }
+      // persisted, not counted: round 1's pass is its first materialization
       var docs = if (parts > 0) base.repartition(parts) else base
       docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      docs.count()
       // φ init: the exact hash recurrence ldaEmState uses, evaluated
       // driver-side over the same vocabulary (per-topic normalization
       // over an exact long sum)

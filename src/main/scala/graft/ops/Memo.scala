@@ -21,6 +21,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *     measure (shingle frames, LDA inputs and models, EM states, ALS).
   *     The distributed EM fit's φ is a plain driver array and still lives
   *     here, so `lda_em_topics_dist` re-pays its fit on every timed pass.
+  *     Two stage results live here too: the LSH star-CC cluster labels
+  *     (`lsh_clusters`, built by `dedup_cluster_reps_lsh`, read by
+  *     `pipeline_dedup_corpus`) and the VADER scores (`vader`, built by
+  *     `u3_vader_sentiment`, read by `u3_sentiment_distribution`). They
+  *     are per-pass so that every timed query still pays its upstream
+  *     stage after `clearState`; reuse happens only inside one composed
+  *     run (the daily DAG's report stage) on an unchanged input.
   *
   * Builds nest (sampled fit input → prepared input, coherence scan →
   * fitted models, IVF residual codebooks → k-means centroids):

@@ -713,27 +713,32 @@ object TextOps {
 
     // U3+F19 (sentiment_analysis.py:42-53): VADER-style compound scoring —
     // sum of lexicon valences normalized by sqrt(s²+15), thresholds ±0.05.
-    // Relational form: broadcast lexicon join, no UDF.
+    // Relational form: broadcast lexicon join, no UDF. The scored frame
+    // is a persisted Memo.perPass entry, read by u3_sentiment_distribution.
     "u3_vader_sentiment" -> ((s, d) => {
       import s.implicits._
-      val docs = documents(s, d)
-      val lex = s.createDataFrame(Lexicons.vaderLexicon).toDF("word", "valence")
-      val sums = docs
-        .select($"doc_id", explode(tokens($"text")).as("word"))
-        .join(broadcast(lex), "word")
-        .groupBy($"doc_id").agg(sum($"valence").as("sv"))
-      docs.join(sums, Seq("doc_id"), "left")
-        .withColumn("sv", coalesce($"sv", lit(0.0)))
-        .withColumn("sentiment_score", round($"sv" / sqrt($"sv" * $"sv" + 15.0), 6))
-        .withColumn("sentiment_label",
-          when($"sentiment_score" >= 0.05, "positive")
-            .when($"sentiment_score" <= -0.05, "negative")
-            .otherwise("neutral"))
-        .select("doc_id", "sentiment_score", "sentiment_label")
-        .orderBy("doc_id")
+      Memo.perPass("vader", s, d) {
+        val docs = documents(s, d)
+        val lex = s.createDataFrame(Lexicons.vaderLexicon).toDF("word", "valence")
+        val sums = docs
+          .select($"doc_id", explode(tokens($"text")).as("word"))
+          .join(broadcast(lex), "word")
+          .groupBy($"doc_id").agg(sum($"valence").as("sv"))
+        docs.join(sums, Seq("doc_id"), "left")
+          .withColumn("sv", coalesce($"sv", lit(0.0)))
+          .withColumn("sentiment_score", round($"sv" / sqrt($"sv" * $"sv" + 15.0), 6))
+          .withColumn("sentiment_label",
+            when($"sentiment_score" >= 0.05, "positive")
+              .when($"sentiment_score" <= -0.05, "negative")
+              .otherwise("neutral"))
+          .select("doc_id", "sentiment_score", "sentiment_label")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.orderBy("doc_id")
     }),
 
-    // F19 distribution (stats.py:16): sentiment label value_counts.
+    // F19 distribution (stats.py:16): sentiment label value_counts over
+    // u3_vader_sentiment's cached scores (the report stage reads what the
+    // sentiment stage wrote; run alone it scores first).
     "u3_sentiment_distribution" -> ((s, d) => {
       import s.implicits._
       val scored = queries("u3_vader_sentiment")(s, d)

@@ -17,7 +17,7 @@ object DumpPlans {
       "u7_tfidf_top_terms" ->
         "TF-IDF: one token explode pass; df via window; L2 window; TakeOrdered",
       "dedup_minhash_lsh" ->
-        "MinHash+LSH: persisted shingle frame, codegen'd hashes, banded self-join",
+        "MinHash+LSH: persisted shingle frame, codegen'd hashes, banded self-join, candidates verified on the cached arrays",
       "ann_lsh_topk" ->
         "LSH ANN: map-only bucket sketch, bucket-restricted broadcast join, rank window",
       "asof_join_purchase_click" ->
@@ -43,7 +43,7 @@ object DumpPlans {
       "j_range_bucketed" ->
         "Range join via bucket blocking: neighbor-bucket explode -> hash equi-join + exact residual, no nested loop",
       "dedup_incremental" ->
-        "Incremental dedup: per-side band keys, new x old collision join only, verify on candidates",
+        "Incremental dedup: per-side band keys, new x old collision join only, verify candidates on the cached arrays",
       "text_dsir_weights" ->
         "DSIR weights: one bigram explode, both bucket counts from a single window, one doc aggregate",
       "graph_pagerank" ->

@@ -1,7 +1,8 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import graft.{Bench, GraftSession, SparkEntry}
@@ -12,7 +13,8 @@ import graft.{Bench, GraftSession, SparkEntry}
   *       pass, clearState before every timed pass, min of `passes`,
   *       default 2) for every matching query, heaviest first — finds and
   *       reproduces slow queries without the whole bench run
-  *   jobs <query> [sfDir]  per-job wall times of one pass (after a
+  *   jobs <query> [sfDir]  per-job wall time, run-stage count, task
+  *       count, single-task stages and call site of one pass (after a
   *       warm-up and clearState), and the driver gap (wall minus the job
   *       sum: planning and driver loops)
   *   plans <nameRegex> <outDir> [sfDir]  `explain("formatted")` of every
@@ -64,29 +66,37 @@ object Probe {
   private def jobs(spark: SparkSession, name: String, sfDir: String): Unit = {
     Bench.warmUp(spark, Seq(name), sfDir) // the pass pays planning, not first-call JIT
     Bench.clearState(spark)
-    val starts = scala.collection.concurrent.TrieMap.empty[Int, (Long, String)]
-    val rows = scala.collection.mutable.ListBuffer.empty[(Int, Double, String)]
+    // per job: start time, call site (its result stage's name), stage
+    // ids; per run stage: its task count (a job also lists the stages it
+    // skipped, which never complete)
+    val starts = scala.collection.concurrent.TrieMap.empty[Int, (Long, String, Seq[Int])]
+    val stageTasks = scala.collection.concurrent.TrieMap.empty[Int, Int]
+    val rows = scala.collection.mutable.ListBuffer.empty[(Int, Double, String, Seq[Int])]
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts(e.jobId) = (e.time,
-          Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
+        starts(e.jobId) = (e.time, e.stageInfos.maxBy(_.stageId).name, e.stageIds)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stageTasks(e.stageInfo.stageId) = e.stageInfo.numTasks
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        starts.remove(e.jobId).foreach { case (t0, desc) =>
-          rows += ((e.jobId, (e.time - t0) / 1e3, desc))
+        starts.remove(e.jobId).foreach { case (t0, site, stages) =>
+          rows += ((e.jobId, (e.time - t0) / 1e3, site, stages.flatMap(stageTasks.get)))
         }
     }
     spark.sparkContext.addSparkListener(l)
     val t0 = System.nanoTime()
     SparkEntry.queries(name)(spark, sfDir).count()
     val wall = (System.nanoTime() - t0) / 1e9
+    Thread.sleep(500) // let the listener bus deliver the last job end
     spark.sparkContext.removeSparkListener(l)
-    Thread.sleep(500) // let the listener bus drain the last job ends
     val sorted = rows.sortBy(_._1)
-    sorted.foreach { case (id, s, desc) =>
-      println(f"[probe] job $id%4d  $s%7.3f s  ${desc.take(80)}")
+    sorted.foreach { case (id, s, site, tasks) =>
+      println(f"[probe] job $id%4d  $s%7.3f s  stages=${tasks.size}%2d tasks=${tasks.sum}%4d " +
+        f"single-task=${tasks.count(_ == 1)}%2d  ${site.take(60)}")
     }
     val jobSum = sorted.map(_._2).sum
-    println(f"[probe] TOTAL jobs=${sorted.size} jobSum=$jobSum%.3f wall=$wall%.3f (gap=${wall - jobSum}%.3f = planning/driver)")
+    val tasks = sorted.flatMap(_._4)
+    println(f"[probe] TOTAL jobs=${sorted.size} stages=${tasks.size} tasks=${tasks.sum} " +
+      f"single-task=${tasks.count(_ == 1)} jobSum=$jobSum%.3f wall=$wall%.3f (gap=${wall - jobSum}%.3f = planning/driver)")
   }
 
   private def plans(spark: SparkSession, nameRegex: String, outDir: String,

@@ -111,4 +111,11 @@ class BenchSpec extends AnyFunSuite {
       .filterNot(Bench.anchors.contains)
     assert(missing.isEmpty, s"bench entries without anchors: $missing")
   }
+
+  test("unanchored names exactly the entries missing from the anchors, in order") {
+    // Bench prints `[bench] no anchor: <name>` at startup for each
+    assert(Bench.unanchored(Seq("zz_new_query", "graph_pagerank", "aa_new_query")) ==
+      Seq("zz_new_query", "aa_new_query"))
+    assert(Bench.unanchored(SparkEntry.benchQueries2).isEmpty)
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{PolyHash, ShingleHashes}
+import graft.functions.{MinHashSig, PolyHash, ShingleHashes}
 import graft.ops.DedupOps
 
 /** Dedup-suite semantics: hash determinism, LSH recall vs the exact
@@ -106,6 +106,63 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSet
     assert(lsh.subsetOf(exact)) // LSH candidates are verified => no false positives
     assert(lsh == exact)        // at s>=0.8 with 8x4 bands, recall is ~1 here
+  }
+
+  test("MinHash-LSH verified on the cached arrays equals the exploded-join verifier") {
+    // The verifier dedup_minhash_lsh used before it read the cached
+    // shingle arrays: the same signatures and band candidates, then
+    // explode → join on (pair, hash) → count per pair → join both sizes.
+    def exploded(dir: String) = {
+      val sh = graft.ops.Tables.documents(spark, dir)
+        .select($"doc_id", filter(split(lower($"text"), "\\s+"), t => length(t) > 0).as("t"))
+        .select($"doc_id", ShingleHashes.poly_shingles($"t").as("xs"))
+        .filter(size($"xs") >= 1)
+      val bands = sh.select($"doc_id", MinHashSig.min_hash_sig($"xs").as("mh"))
+        .select($"doc_id", posexplode(array((0 until DedupOps.NumBands).map { b =>
+          concat_ws("_", (0 until DedupOps.RowsPerBand).map(r =>
+            element_at($"mh", b * DedupOps.RowsPerBand + r + 1).cast("string")): _*)
+        }: _*))).toDF("doc_id", "band", "key")
+      val cands = bands.toDF("d1", "band", "key")
+        .join(bands.toDF("d2", "band", "key"), Seq("band", "key"))
+        .filter($"d1" < $"d2").select("d1", "d2").distinct()
+      val e = sh.select($"doc_id", explode($"xs").as("sh"))
+      val sizes = sh.select($"doc_id", size($"xs").as("sz"))
+      cands.join(e.toDF("d1", "sh"), "d1").join(e.toDF("d2", "sh"), Seq("d2", "sh"))
+        .groupBy($"d1", $"d2").agg(count(lit(1)).as("inter"))
+        .join(sizes.toDF("d1", "s1"), "d1").join(sizes.toDF("d2", "s2"), "d2")
+        .withColumn("jaccard", round($"inter" / ($"s1" + $"s2" - $"inter"), 6))
+        .filter($"jaccard" >= 0.8).select("d1", "d2", "jaccard").orderBy("d1", "d2")
+        .collect().map(_.toSeq).toSeq
+    }
+    // sf0.001 plants only exact dups (jaccard 1); the second fixture adds
+    // partial overlaps on both sides of the gate: docs of 38 shared + u
+    // own tokens, j = 36/(36 + 2u) for u = 8, 4, 2 (0.69, 0.82, 0.9)
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_verify").toString
+    Seq(8, 4, 2).flatMap { u =>
+      (0 until 10).flatMap { p =>
+        val common = (0 until 38).map(k => s"c${u}p${p}x$k")
+        Seq("l", "r").map(side => (common ++ (0 until u).map(k => s"$side${u}p${p}x$k")).mkString(" "))
+      }
+    }.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("fx"))
+      .withColumn("n_chars", length($"text"))
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    try {
+      for (d <- Seq(sf, dir)) {
+        val q = SparkEntry.queries("dedup_minhash_lsh")(spark, d)
+        val got = q.collect().map(_.toSeq).toSeq
+        assert(got.nonEmpty && got == exploded(d), d)
+        // verification reads the arrays: no shingle-hash explode left
+        assert(q.queryExecution.optimizedPlan.collect {
+          case g: org.apache.spark.sql.catalyst.plans.logical.Generate
+            if g.generator.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Explode] => g
+        }.isEmpty, d)
+      }
+      assert(exploded(dir).map(_(2)).toSet.size > 1) // partial Jaccards verified
+    } finally {
+      graft.ops.Memo.clear()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("LSH PR eval reproduces the banding S-curve on planted partial overlaps") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.{MLOps, Memo, TextOps}
 import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.storage.StorageLevel
 
 import java.io.File
@@ -16,11 +17,12 @@ class MemoSpec extends SparkSpec {
   import spark.implicits._
 
   /** A fixture dir holding `documents` and `embeddings` derived from sf:
-    * every other embedding (by parity), documents re-keyed by `idShift`.
+    * every other embedding (by parity), the documents outside one fifth
+    * (doc_id % 5 == parity) re-keyed by `idShift`.
     */
   private def fixture(parity: Int, idShift: Long): String = {
     val dir = Files.createTempDirectory("graft_memo").toString
-    graft.ops.Tables.documents(spark, sf)
+    graft.ops.Tables.documents(spark, sf).filter($"doc_id" % 5 =!= parity)
       .withColumn("doc_id", $"doc_id" + idShift)
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     graft.ops.Tables.embeddings(spark, sf).filter($"vec_id" % 2 === parity)
@@ -36,8 +38,10 @@ class MemoSpec extends SparkSpec {
     val b = fixture(1, 100000L)
     try {
       // ml_kmeans reads the k-means centroids (an index entry),
-      // dedup_minhash_lsh the persisted shingle frame (a per-pass entry)
-      val qs = Seq("ml_kmeans", "dedup_minhash_lsh")
+      // dedup_minhash_lsh the persisted shingle frame, the two report
+      // stages the cluster labels and VADER scores (per-pass entries)
+      val qs = Seq("ml_kmeans", "dedup_minhash_lsh", "pipeline_dedup_corpus",
+        "u3_sentiment_distribution")
       val onA = qs.map(rows(_, a))
       val onB = qs.map(rows(_, b))
       qs.indices.foreach { i =>
@@ -52,6 +56,26 @@ class MemoSpec extends SparkSpec {
       Memo.clear()
       Seq(a, b).foreach(d => FileUtils.deleteDirectory(new File(d)))
     }
+  }
+
+  test("the report stages read the upstream stages' cached frames") {
+    // (upstream stage, report stage, a column only the upstream frame has)
+    val stages = Seq(
+      ("dedup_cluster_reps_lsh", "pipeline_dedup_corpus", "is_survivor"),
+      ("u3_vader_sentiment", "u3_sentiment_distribution", "sentiment_score"))
+    Memo.clear()
+    stages.foreach { case (up, _, _) => rows(up, sf) }
+    val cached = stages.map { case (_, report, c) =>
+      val df = SparkEntry.queries(report)(spark, sf)
+      val reads = df.queryExecution.withCachedData.collect {
+        case r: InMemoryRelation => r.output.map(_.name)
+      }
+      assert(reads.exists(_.contains(c)), s"$report reads no cached $c: $reads")
+      df.collect().map(_.toSeq).toSeq
+    }
+    Memo.clear()
+    assert(!Memo.contains("lsh_clusters", spark, sf) && !Memo.contains("vader", spark, sf))
+    assert(stages.map { case (_, report, _) => rows(report, sf) } == cached)
   }
 
   test("a second lookup on an unchanged dir returns the same object") {
