@@ -1016,16 +1016,11 @@ object FuzzQueries {
   private def sqlTPred(p: TPred): String = p match {
     case LenGe(n)    => s"len(word) >= $n"
     case LenLe(n)    => s"len(word) <= $n"
-    case NotStop     => "word NOT IN (SELECT word FROM sw)"
+    case NotStop     => s"NOT ${graft.ops.TextOps.isStopwordSql("word")}"
     case FirstIn(cs) => cs.mkString("substr(word, 1, 1) IN ('", "', '", "')")
   }
 
   private def sqlTokQuery(sh: TokShape): String = {
-    val sw =
-      if (sh.tpreds.contains(NotStop))
-        s"WITH sw(word) AS (VALUES " +
-          s"${graft.functions.Lexicons.stopwordsEnSqlValues}),\n"
-      else "WITH "
     val dwhere =
       if (sh.dpreds.isEmpty) ""
       else sh.dpreds.map(sqlDPred).mkString("\n  WHERE ", " AND ", "")
@@ -1048,8 +1043,8 @@ object FuzzQueries {
            |GROUP BY 1$having
            |ORDER BY n DESC, word ASC LIMIT ${sh.limit}""".stripMargin
       }
-    s"""${sw}t AS (
-       |  SELECT doc_id, unnest(${graft.ops.TextOps.tokensSql}) AS word
+    s"""WITH t AS (
+       |  SELECT doc_id, unnest(${graft.ops.TextOps.tokensSql("text")}) AS word
        |  FROM documents$dwhere)
        |$body""".stripMargin
   }

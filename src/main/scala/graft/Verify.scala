@@ -42,5 +42,9 @@ object Verify {
       (if (failed.isEmpty) ", 0 failed"
        else s", ${failed.size} FAILED: ${failed.sorted.mkString(",")}"))
     spark.stop()
+    // Every dump and the oracle file are written first, so a partial run
+    // still leaves everything that did succeed; the exit code is what a
+    // script or CI step checks.
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -65,10 +65,6 @@ object Lexicons {
 
   private def sq(s: String): String = "'" + s.replace("'", "''") + "'"
 
-  /** `('a'),('about'),…` — for `WITH sw(word) AS (VALUES …)`. */
-  def stopwordsEnSqlValues: String =
-    stopwordsEn.map(w => s"(${sq(w)})").mkString(",")
-
   /** `['a','about',…]` — DuckDB list literal (lambdas can't hold subqueries). */
   def stopwordsEnSqlList: String =
     stopwordsEn.map(sq).mkString("[", ",", "]")

@@ -90,17 +90,10 @@ object DedupOps {
     graft.functions.PolyHash.poly_hash(c) * lit(HashPack) +
       graft.functions.PolyHash2.poly_hash2(c)
 
-  /** Whitespace tokens (lowered, non-empty). */
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "\\s+"), t => length(t) > 0)
-
-  private val toksSql =
-    "list_filter(string_split_regex(lower(text), '\\s+'), t -> len(t) > 0)"
-
   /** Distinct 3-gram word shingles from a MATERIALIZED token-array column.
     *
     * `t` must be a real attribute, not an expression: interpreted HOFs
-    * re-evaluate their argument per element, so passing `toks(text)` here
+    * re-evaluate their argument per element, so passing `TextOps.tokens(text)` here
     * directly would re-run the full regex tokenization for every
     * element_at (~900 splits per doc — measured 30+ s at sf0.1 vs <1 s
     * with a materialized array). Keeping tokenization in its own Project
@@ -117,7 +110,7 @@ object DedupOps {
       .otherwise(array().cast("array<string>"))
 
   /** Tokenize-then-shingle as one Column (convenience for tests). */
-  def shingles(c: Column): Column = shinglesFromToks(toks(c))
+  def shingles(c: Column): Column = shinglesFromToks(TextOps.tokens(c))
 
   private val shinglesSql =
     s"""list_distinct(list_transform(range(len(toks) - 2),
@@ -128,7 +121,7 @@ object DedupOps {
   // shingle string (round 12 — see ShingleHashes) — identity, set sizes,
   // and any residual ~2^-60 collisions are identical.
   private val shingleCte =
-    s"""t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+    s"""t AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS toks FROM documents),
        |sh AS (SELECT doc_id, $shinglesSql AS shs FROM t WHERE len(toks) >= 3),
        |e0 AS (SELECT doc_id, unnest(shs) AS sh FROM sh),
        |e AS (SELECT DISTINCT doc_id, ${wideHashSql("sh")} AS sh FROM e0),
@@ -189,7 +182,7 @@ object DedupOps {
       val par = s.sparkContext.defaultParallelism
       documents(s, d)
         .repartition(par) // single-file corpus: fan out before the CPU work
-        .select($"doc_id", toks($"text").as("t"))   // tokenization Project
+        .select($"doc_id", TextOps.tokens($"text").as("t"))   // tokenization Project
         .select($"doc_id",
           graft.functions.ShingleHashes.poly_shingles($"t").as("xs"))
         .filter(size($"xs") >= 1)
@@ -216,7 +209,7 @@ object DedupOps {
       corpus.withColumn("side", lit("old"))
         .union(incoming.withColumn("side", lit("new")))
         .repartition(s.sparkContext.defaultParallelism)
-        .select($"doc_id", $"side", toks($"text").as("t"))
+        .select($"doc_id", $"side", TextOps.tokens($"text").as("t"))
         .select($"doc_id", $"side",
           graft.functions.ShingleHashes.poly_shingles($"t").as("xs"))
         .filter(size($"xs") >= 1)
@@ -277,53 +270,15 @@ object DedupOps {
   }
 
   /** Connected components over an undirected pair list (d1, d2): returns
-    * (node, component-min label). Distributed min-label propagation with
-    * POINTER JUMPING (lbl ← lbl(lbl), valid since labels only decrease
-    * and every label is a node id): path doubling makes convergence
-    * logarithmic in component diameter, so the 50-iteration cap is a true
-    * safety margin (covers diameters to 2^50), not a correctness bound a
-    * long duplicate chain could exceed. localCheckpoint truncates the
-    * iterative lineage each round.
-    */
-  def connectedComponents(s: SparkSession, pairs: DataFrame): DataFrame = {
-    import s.implicits._
-    val p = pairs.toDF("d1", "d2")
-    val edges = p.union(p.select($"d2".as("d1"), $"d1".as("d2")))
-      .toDF("a", "b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Round 19: lazy checkpoints — the changed-count below materializes
-    // each round's state; eager cost one extra driver job per round.
-    var labels = edges.select($"a").distinct().withColumn("lbl", $"a")
-      .localCheckpoint(false)
-    var changed = 1L
-    var iters = 0
-    while (changed > 0 && iters < 50) {
-      val nb = edges.join(labels.toDF("b", "nlbl"), "b")
-        .groupBy($"a").agg(min($"nlbl").as("min_nb"))
-      val relaxed = labels.join(nb, Seq("a"))
-        .select($"a", least($"lbl", $"min_nb").as("lbl"))
-      val next = relaxed.toDF("a", "lbl")
-        .join(relaxed.toDF("lbl", "lbl2"), "lbl")
-        .select($"a", $"lbl2".as("lbl"))
-        .localCheckpoint(false)
-      changed = next.toDF("a2", "l2")
-        .join(labels, $"a2" === $"a")
-        .filter($"l2" =!= $"lbl").count()
-      labels = next
-      iters += 1
-    }
-    edges.unpersist()
-    labels
-  }
-
-  /** Connected components via alternating LARGE-STAR / SMALL-STAR rounds
+    * (node, component-min label) for every node in a non-self pair. The
+    * engine's one CC kernel: alternating LARGE-STAR / SMALL-STAR rounds
     * (Kiveris et al. 2014, "Connected Components in MapReduce and
-    * Beyond") — the web-scale upgrade of the pointer-jumping helper
-    * above. Pointer jumping needs O(diameter) label-relax rounds before
-    * the doubling kicks in and keeps a full |V| label table live per
-    * round; the star algorithm rewrites the EDGE set itself and provably
-    * converges in O(log² n) rounds on ANY topology, skewed components
-    * included. Each round is two self-contained map-reduce steps:
+    * Beyond"). Min-label propagation with pointer jumping needs
+    * O(diameter) label-relax rounds before the doubling kicks in and
+    * keeps a full |V| label table live per round; the star algorithm
+    * rewrites the EDGE set itself and provably converges in O(log² n)
+    * rounds on ANY topology, skewed components included. Each round is
+    * two self-contained map-reduce steps:
     *   large-star: every node attaches its strictly-larger neighbors to
     *     the minimum of its closed neighborhood (each undirected edge is
     *     processed from its smaller endpoint — connectivity-preserving);
@@ -417,6 +372,16 @@ object DedupOps {
       .groupBy($"s1", $"s2").agg(count(lit(1)).as("n_pairs"))
       .withColumn("leaks", $"s1" =!= $"s2")
       .orderBy("s1", "s2")
+  }
+
+  /** Cluster labels over the exact verifier's >= 0.8 pairs. */
+  private val exactPairClusterReps: Q = (s, d) => {
+    import s.implicits._
+    val pairs = queries("dedup_ngram_jaccard")(s, d).select($"d1", $"d2")
+    ccStars(s, pairs)
+      .toDF("doc_id", "cluster_rep")
+      .withColumn("is_survivor", $"doc_id" === $"cluster_rep")
+      .orderBy("doc_id")
   }
 
   val queries: Map[String, Q] = Map(
@@ -764,7 +729,7 @@ object DedupOps {
     "dedup_simhash" -> ((s, d) => {
       import s.implicits._
       val tf = documents(s, d)
-        .select($"doc_id", explode(toks($"text")).as("tok"))
+        .select($"doc_id", explode(TextOps.tokens($"text")).as("tok"))
         .groupBy($"doc_id", $"tok").agg(count("*").as("cnt"))
         .withColumn("x", polyHash($"tok"))
       tf.select($"doc_id", $"cnt", $"x",
@@ -807,48 +772,25 @@ object DedupOps {
 
     // Duplicate-CLUSTER resolution — the step after pair generation in a
     // real dedup pipeline: near-dup pairs form a graph; keep ONE survivor
-    // per connected component (min doc_id), not one per pair. Distributed
-    // min-label propagation to fixpoint over the candidate graph: each
-    // iteration is one equi-join + partial-aggregated min, with
-    // localCheckpoint truncating the iterative lineage. The graph is the
-    // CANDIDATE set (∝ duplicate density, not corpus size), so iteration
-    // count ≈ cluster diameter — small in practice; at 100 TB this is the
-    // standard CC-over-candidate-edges shape (large-star/small-star being
-    // the heavy-duty variant for adversarial diameters). Oracle: DuckDB
-    // recursive-CTE transitive closure over the same pairs.
+    // per connected component (min doc_id), not one per pair, via the
+    // star-CC kernel (see ccStars) over the candidate graph. The graph is
+    // the CANDIDATE set (∝ duplicate density, not corpus size). Oracle:
+    // DuckDB recursive-CTE transitive closure over the same pairs.
     // NOTE: this exact-pair-fed variant is the DIFFERENTIAL TWIN;
     // `dedup_cluster_reps_lsh` (banded-LSH candidate source) is the
     // PRODUCTION entry at corpus scale — the exact verifier enumerates
     // all shared-shingle candidates and exists here as the recall oracle.
-    "dedup_cluster_reps" -> ((s, d) => {
-      import s.implicits._
-      val pairs = queries("dedup_ngram_jaccard")(s, d).select($"d1", $"d2")
-      connectedComponents(s, pairs)
-        .toDF("doc_id", "cluster_rep")
-        .withColumn("is_survivor", $"doc_id" === $"cluster_rep")
-        .orderBy("doc_id")
-    }),
+    "dedup_cluster_reps" -> exactPairClusterReps,
 
-    // Same resolution computed by the alternating large-star/small-star
-    // algorithm (see ccStars) — bitwise-identical output to
-    // dedup_cluster_reps by construction (both assign the component
-    // minimum), differentially proven by the shared oracle; the spec
-    // additionally pits both against a local union-find on a planted
-    // high-diameter chain, the topology where pointer jumping is weakest.
-    "dedup_cluster_reps_star" -> ((s, d) => {
-      import s.implicits._
-      val pairs = queries("dedup_ngram_jaccard")(s, d).select($"d1", $"d2")
-      ccStars(s, pairs)
-        .toDF("doc_id", "cluster_rep")
-        .withColumn("is_survivor", $"doc_id" === $"cluster_rep")
-        .orderBy("doc_id")
-    }),
+    // The star-CC resolution under its own name: the same query as
+    // dedup_cluster_reps, checked by the same oracle.
+    "dedup_cluster_reps_star" -> exactPairClusterReps,
 
     // The PRODUCTION end-to-end corpus-dedup composition (round-15
     // VERDICT #1): star-CC + survivor pick consuming the BANDED-LSH
     // verified pairs (dedup_minhash_lsh) instead of the exact shared-
-    // shingle verifier's. The two cluster_reps twins above prove the CC
-    // algorithms; THIS entry is the query a real 100 TB dedup runs —
+    // shingle verifier's. dedup_cluster_reps above proves the CC kernel
+    // on the exact pairs; THIS entry is the query a real 100 TB dedup runs —
     // candidates from band collisions (∝ dup density, never all-pairs),
     // exact-Jaccard verification on candidates only, components over the
     // verified pairs, keep the min-id survivor. Oracle: the DuckDB
@@ -947,7 +889,7 @@ object DedupOps {
       val base = jaccardPairs(s, e, sizes, 0.5).localCheckpoint(false)
       Seq(0.7, 0.8, 0.9).map { g =>
         val pairs = base.filter($"jaccard" >= g).select($"d1", $"d2")
-        val cc = connectedComponents(s, pairs).toDF("doc_id", "rep")
+        val cc = ccStars(s, pairs).toDF("doc_id", "rep")
         cc.agg(count(lit(1)).as("n_docs_in_clusters"),
             sum(when($"doc_id" =!= $"rep", 1L).otherwise(0L))
               .as("n_removed"))
@@ -978,7 +920,7 @@ object DedupOps {
     "dedup_substring_spans" -> ((s, d) => {
       import s.implicits._
       val W = 20
-      val tokd = documents(s, d).select($"doc_id", toks($"text").as("tk"))
+      val tokd = documents(s, d).select($"doc_id", TextOps.tokens($"text").as("tk"))
       val halves = tokd.filter($"doc_id" % 50 === 0)
         .select(($"doc_id" + 2000000).as("doc_id"),
           slice($"tk", lit(1), floor(size($"tk") / 2).cast("int")).as("tk"))
@@ -1038,7 +980,7 @@ object DedupOps {
     "dedup_substring_exact" -> ((s, d) => {
       import s.implicits._
       val W = 20
-      val tokd = documents(s, d).select($"doc_id", toks($"text").as("tk"))
+      val tokd = documents(s, d).select($"doc_id", TextOps.tokens($"text").as("tk"))
       val halves = tokd.filter($"doc_id" % 50 === 0)
         .select(($"doc_id" + 2000000).as("doc_id"),
           slice($"tk", lit(1), floor(size($"tk") / 2).cast("int")).as("tk"))
@@ -1092,7 +1034,7 @@ object DedupOps {
     // prefix-filter discipline the shingle pipeline uses).
     "dedup_winnow_pairs" -> ((s, d) => {
       import s.implicits._
-      val tokd = documents(s, d).select($"doc_id", toks($"text").as("tk"))
+      val tokd = documents(s, d).select($"doc_id", TextOps.tokens($"text").as("tk"))
       val grams = tokd
         .withColumn("ng", size($"tk") - 4)
         .filter($"ng" >= 1)
@@ -1398,7 +1340,7 @@ object DedupOps {
        |ORDER BY d1, d2""".stripMargin
 
   /** Transitive closure over the >=0.8-Jaccard pairs with min-label
-    * components — the shared oracle for both CC implementations.
+    * components — the oracle of dedup_cluster_reps and its _star name.
     */
   private val clusterRepsSql =
     s"""WITH RECURSIVE $shingleCte,
@@ -1485,7 +1427,7 @@ object DedupOps {
          |  UNION ALL
          |  SELECT doc_id + 1000000 AS doc_id, text FROM documents
          |  WHERE doc_id % 100 = 0),
-         |t AS (SELECT doc_id, ${TextOps.tokensSql} AS tk FROM all_docs),
+         |t AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS tk FROM all_docs),
          |c AS (
          |  SELECT doc_id, tk, len(tk) AS n,
          |    unnest(generate_series(0, (len(tk) - 1) // 10)) AS pid
@@ -1635,7 +1577,7 @@ object DedupOps {
          |  ROUND(n_gate_hits * 1.0 / n_cand, 6) AS precision_at_gate
          |FROM bu CROSS JOIN ov ORDER BY bucket""".stripMargin,
     "dedup_winnow_pairs" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS toks FROM documents),
          |g AS (
          |  SELECT doc_id, len(toks) - 4 AS ng, i AS p,
          |    ${wideHashSql("array_to_string(toks[(i+1):(i+5)], ' ')")} AS h
@@ -1681,7 +1623,7 @@ object DedupOps {
          |  UNION ALL
          |  SELECT doc_id, text, 'new' AS side FROM incoming),
          |t AS (SELECT doc_id, side,
-         |  list_filter(string_split_regex(lower(text), '\\s+'), t -> len(t) > 0) AS toks
+         |  ${TextOps.tokensSql("text")} AS toks
          |  FROM all_docs),
          |shg AS (SELECT doc_id, side, $shinglesSql AS shs FROM t WHERE len(toks) >= 3),
          |e0 AS (SELECT doc_id, side, unnest(shs) AS sh FROM shg),
@@ -1729,7 +1671,7 @@ object DedupOps {
          |  UNION ALL
          |  SELECT doc_id, text, 'new' AS side FROM incoming),
          |t AS (SELECT doc_id, side,
-         |  list_filter(string_split_regex(lower(text), '\\s+'), t -> len(t) > 0) AS toks
+         |  ${TextOps.tokensSql("text")} AS toks
          |  FROM all_docs),
          |shg AS (SELECT doc_id, side, $shinglesSql AS shs FROM t WHERE len(toks) >= 3),
          |e0 AS (SELECT doc_id, side, unnest(shs) AS sh FROM shg),
@@ -1759,7 +1701,7 @@ object DedupOps {
     "dedup_simhash" ->
       s"""WITH tf AS (
          |  SELECT doc_id, tok, COUNT(*) AS cnt FROM (
-         |    SELECT doc_id, unnest($toksSql) AS tok FROM documents)
+         |    SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS tok FROM documents)
          |  GROUP BY doc_id, tok),
          |hx AS (SELECT doc_id, cnt, ${polyHashSql("tok")} AS x FROM tf),
          |bits AS (
@@ -1774,7 +1716,7 @@ object DedupOps {
     "dedup_simhash_pairs" ->
       s"""WITH tf AS (
          |  SELECT doc_id, tok, COUNT(*) AS cnt FROM (
-         |    SELECT doc_id, unnest($toksSql) AS tok FROM documents)
+         |    SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS tok FROM documents)
          |  GROUP BY doc_id, tok),
          |hx AS (SELECT doc_id, cnt, ${polyHashSql("tok")} AS x FROM tf),
          |bits AS (
@@ -1864,11 +1806,9 @@ object DedupOps {
          |ORDER BY gate""".stripMargin
     },
     "dedup_cluster_reps" -> clusterRepsSql,
-    // the star-algorithm variant computes the SAME resolution — one
-    // recursive-CTE transitive-closure twin serves both
     "dedup_cluster_reps_star" -> clusterRepsSql,
     "dedup_substring_spans" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS tk FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS tk FROM documents),
          |h0 AS (
          |  SELECT doc_id + 2000000 AS doc_id, tk[1:len(tk)//2] AS tk
          |  FROM t WHERE doc_id % 50 = 0),
@@ -1887,7 +1827,7 @@ object DedupOps {
          |  ROUND(n_shared * 1.0 / n_windows, 6) AS shared_ratio
          |FROM pd JOIN fd USING (doc_id) ORDER BY doc_id""".stripMargin,
     "dedup_substring_exact" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS tk FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS tk FROM documents),
          |h0 AS (
          |  SELECT doc_id + 2000000 AS doc_id, tk[1:len(tk)//2] AS tk
          |  FROM t WHERE doc_id % 50 = 0),

@@ -5,7 +5,6 @@ import org.apache.spark.ml.feature.CountVectorizerModel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.Lexicons
 
 /** ML layer (SURVEY §2.10 U5/U6/U8, §7.1 M7): CountVectorizer bag-of-words,
   * seeded LDA topic modeling (reference: Gensim LdaModel k=12/32/auto,
@@ -51,17 +50,15 @@ object MLOps {
   val Seed = 42L
   val ScanKs = Seq(2, 4, 6)
 
-  /** tokens minus stopwords, as the LDA input column (+ source for the
-    * relational topic derivation).
+  /** Each doc's content words (TextOps.isContentWord), as the LDA input
+    * column (+ source for the relational topic derivation).
     */
   private def docTokens(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val sw = graft.functions.Lexicons.stopwordsEn.toSet
-    val swCol = array(sw.toSeq.sorted.map(lit): _*)
     documents(s, d)
       .repartition(s.sparkContext.defaultParallelism)
-      .select($"doc_id", $"source", filter(split(lower($"text"), "\\s+"),
-        t => length(t) >= 3 && !array_contains(swCol, t)).as("toks"))
+      .select($"doc_id", $"source",
+        filter(TextOps.tokens($"text"), t => TextOps.isContentWord(t)).as("toks"))
   }
 
   /** Deterministic vectorizer: CountVectorizer.fit breaks corpus-count
@@ -745,34 +742,10 @@ object MLOps {
         val colSum = Array.tabulate(k)(j => (0 until v).map(w => wt(w)(j)).sum)
         Array.tabulate(v, k)((w, j) => wt(w)(j).toDouble / colSum(j).toDouble)
       }
-      // Value-identical fast path for BigDecimal.valueOf(y).setScale(0,
-      // HALF_UP).toLong (round 18 — this ran once per (word, topic) per
-      // doc per pass and the BigDecimal.valueOf detour (Double.toString
-      // + decimal parse + object churn) dominated the fit's CPU). The
-      // slow path's only difference from plain half-up-on-the-double is
-      // that it rounds the SHORTEST DECIMAL REPRESENTATION of y, which
-      // differs from y by at most ulp(y)/2 — below 1e9 that is < 1.2e-7,
-      // so the two can only disagree when y lies within ~1e-7 of a
-      // half-integer boundary. The guard routes anything within 1e-5 of
-      // a boundary (100x margin, which also swallows the fp error of
-      // the floor/subtract probe itself) plus everything >= 1e9 (where
-      // ulp outgrows the band) to the exact BigDecimal path, so the
-      // result is bit-identical by construction, not by testing alone
-      // (MLSpec's dist==relational==oracle differential still pins it).
-      def halfUpMicro(x: Double): Long = {
-        val y = x * 1e6
-        val t = math.abs(y)
-        if (t < 1e9 && math.abs(t - math.floor(t) - 0.5) > 1e-5) {
-          val r = math.floor(t + 0.5).toLong
-          if (y < 0) -r else r
-        } else
-          BigDecimal.valueOf(y)
-            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-      }
       // per-doc wkm terms from the CURRENT (φ, θ): rl = θ_j·φ_wj, den =
       // the same left-to-right fold the relational aggregate() uses,
-      // wkm = HALF_UP(n·(rl_j/den)·1e6) — bit-identical to the round()/
-      // cast chain in ldaEmState
+      // wkm = HALF_UP(n·(rl_j/den)·1e6) by QRound's scalar form —
+      // bit-identical to the round()/cast chain in ldaEmState
       def wkmOf(ws: Array[(Int, Long)], th: Array[Double],
                 ph: Array[Array[Double]]): Array[(Int, Array[Long])] =
         ws.map { case (w, n) =>
@@ -780,7 +753,7 @@ object MLOps {
           var den = 0.0
           var j = 0
           while (j < k) { den += rl(j); j += 1 }
-          (w, Array.tabulate(k)(j => halfUpMicro(n * (rl(j) / den))))
+          (w, Array.tabulate(k)(j => QRound.qroundLong(n * (rl(j) / den) * 1e6)))
         }
       val phBs = scala.collection.mutable.ListBuffer
         .empty[org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]]
@@ -2317,16 +2290,12 @@ object MLOps {
 
   // ---- oracle SQL (NPMI queries only — the LDA fits are rows-only) ----
 
-  private val tokensSql =
-    "list_filter(string_split_regex(lower(text), '\\s+'), t -> len(t) > 0)"
-
   /** Shared NPMI prelude over the relational source topics. */
   private val npmiCte =
-    s"""sw(word) AS (VALUES ${Lexicons.stopwordsEnSqlValues}),
-       |tok AS (
+    s"""tok AS (
        |  SELECT doc_id, source, word FROM (
-       |    SELECT doc_id, source, unnest($tokensSql) AS word FROM documents)
-       |  WHERE len(word) >= 3 AND word NOT IN (SELECT word FROM sw)),
+       |    SELECT doc_id, source, unnest(${TextOps.tokensSql("text")}) AS word FROM documents)
+       |  WHERE ${TextOps.isContentWordSql("word")}),
        |tw AS (SELECT source, word, COUNT(*) AS cnt FROM tok GROUP BY source, word),
        |topics AS (
        |  SELECT source AS topic, word FROM (
@@ -2365,11 +2334,10 @@ object MLOps {
     * 10-token segments of the filtered token sequence.
     */
   private val npmiWindowedCte =
-    s"""sw(word) AS (VALUES ${Lexicons.stopwordsEnSqlValues}),
-       |ft AS (
+    s"""ft AS (
        |  SELECT doc_id, source,
-       |    list_filter($tokensSql,
-       |      t -> len(t) >= 3 AND NOT list_contains(${Lexicons.stopwordsEnSqlList}, t)) AS toks
+       |    list_filter(${TextOps.tokensSql("text")},
+       |      t -> ${TextOps.isContentWordSql("t")}) AS toks
        |  FROM documents),
        |tok AS (SELECT doc_id, source, unnest(toks) AS word FROM ft),
        |tw AS (SELECT source, word, COUNT(*) AS cnt FROM tok GROUP BY source, word),
@@ -2487,11 +2455,10 @@ object MLOps {
     * derivation as npmiWindowedCte).
     */
   private val cvU6PreludeSql =
-    s"""sw(word) AS (VALUES ${Lexicons.stopwordsEnSqlValues}),
-       |ft AS (
+    s"""ft AS (
        |  SELECT doc_id, source,
-       |    list_filter($tokensSql,
-       |      t -> len(t) >= 3 AND NOT list_contains(${Lexicons.stopwordsEnSqlList}, t)) AS toks
+       |    list_filter(${TextOps.tokensSql("text")},
+       |      t -> ${TextOps.isContentWordSql("t")}) AS toks
        |  FROM documents),
        |tw AS (
        |  SELECT source, word, COUNT(*) AS cnt FROM (
@@ -2602,11 +2569,10 @@ object MLOps {
          |         + $k * $EmAlphaMicro AS DOUBLE) AS p
          |  FROM ${pfx}sdk$t)""".stripMargin
     }.mkString(",\n")
-    s"""${pfx}sw(word) AS (VALUES ${Lexicons.stopwordsEnSqlValues}),
-       |${pfx}tok AS (
+    s"""${pfx}tok AS (
        |  SELECT doc_id, word FROM (
-       |    SELECT doc_id, unnest($tokensSql) AS word FROM documents)
-       |  WHERE len(word) >= 3 AND word NOT IN (SELECT word FROM ${pfx}sw)),
+       |    SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS word FROM documents)
+       |  WHERE ${TextOps.isContentWordSql("word")}),
        |${pfx}vdf AS (
        |  SELECT word, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
        |  FROM ${pfx}tok GROUP BY 1),
@@ -2763,14 +2729,11 @@ object MLOps {
     // stopword-filtered, df >= 5, total order tf desc / word asc, 50k
     // cap), so the CountVectorizerModel contents are oracle-checkable
     // even though the model OBJECT isn't SQL
-    "u8_bow_vocabulary" -> {
-      val sw = graft.functions.Lexicons.stopwordsEn.toSeq.sorted
-        .map(w => s"'$w'").mkString(", ")
+    "u8_bow_vocabulary" ->
       s"""WITH tok AS (
          |  SELECT doc_id, word FROM (
-         |    SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS word
-         |    FROM documents)
-         |  WHERE len(word) >= 3 AND word NOT IN ($sw)),
+         |    SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS word FROM documents)
+         |  WHERE ${TextOps.isContentWordSql("word")}),
          |v AS (
          |  SELECT word, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
          |  FROM tok GROUP BY 1 HAVING COUNT(DISTINCT doc_id) >= 5)
@@ -2778,8 +2741,7 @@ object MLOps {
          |  CAST(row_number() OVER (ORDER BY tf DESC, word ASC) - 1 AS INT)
          |    AS vocab_index
          |FROM (SELECT * FROM v ORDER BY tf DESC, word ASC LIMIT 50000)
-         |ORDER BY word""".stripMargin
-    },
+         |ORDER BY word""".stripMargin,
     "u6_npmi_windowed" ->
       s"""WITH $npmiWindowedCte
          |SELECT topic, ROUND(AVG(npmi), 6) AS npmi_coherence,
@@ -2800,8 +2762,8 @@ object MLOps {
          |  WHERE rk <= $TopWords),
          |ft AS (
          |  SELECT doc_id,
-         |    list_filter($tokensSql,
-         |      t -> len(t) >= 3 AND NOT list_contains(${Lexicons.stopwordsEnSqlList}, t)) AS toks
+         |    list_filter(${TextOps.tokensSql("text")},
+         |      t -> ${TextOps.isContentWordSql("t")}) AS toks
          |  FROM documents),
          |$cvBodySql
          |$cvSelectSql""".stripMargin,
@@ -2833,8 +2795,8 @@ object MLOps {
       s"""WITH $chains,
          |ft AS (
          |  SELECT doc_id,
-         |    list_filter($tokensSql,
-         |      t -> len(t) >= 3 AND NOT list_contains(${Lexicons.stopwordsEnSqlList}, t)) AS toks
+         |    list_filter(${TextOps.tokensSql("text")},
+         |      t -> ${TextOps.isContentWordSql("t")}) AS toks
          |  FROM documents),
          |$topicCtes,
          |$bodies

@@ -557,7 +557,7 @@ object MultimodalOps {
         s"exp(CASE WHEN n = 0 THEN 0.0 ELSE CAST(s$c AS DOUBLE) / (n * 1000) END) AS e$c"
       s"""WITH tok AS (
          |  SELECT doc_id,
-         |    list_filter(string_split_regex(lower(text), '\\s+'), t -> len(t) > 0) AS toks
+         |    ${TextOps.tokensSql("text")} AS toks
          |  FROM documents),
          |h AS (
          |  SELECT doc_id, len(toks) AS n,
@@ -703,7 +703,7 @@ object MultimodalOps {
          |ORDER BY doc_a, doc_b""".stripMargin,
     "mm_interleaved_pack" ->
       s"""WITH t AS (
-         |  SELECT doc_id, len(${graft.ops.TextOps.tokensSql}) AS text_tok,
+         |  SELECT doc_id, len(${TextOps.tokensSql("text")}) AS text_tok,
          |    CASE doc_id % 3 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
          |         ELSE 'wav' END AS media_format,
          |    strlen(text) AS n_bytes

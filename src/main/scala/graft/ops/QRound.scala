@@ -31,6 +31,20 @@ import org.apache.spark.sql.functions._
   * use it freely (and the DuckDB oracles are unchanged either way).
   */
 object QRound {
+  /** The same rule on a driver- or executor-side double, for the
+    * hand-written trainers (the distributed EM fit) that must stay
+    * bit-identical to the Column form: `BigDecimal.valueOf(y)
+    * .setScale(0, HALF_UP).toLong`, with the same guard.
+    */
+  def qroundLong(y: Double): Long = {
+    val t = math.abs(y)
+    if (t < 1e9 && math.abs(t - math.floor(t) - 0.5) > 1e-5) {
+      val r = math.floor(t + 0.5).toLong
+      if (y < 0) -r else r
+    } else
+      BigDecimal.valueOf(y).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+  }
+
   def qroundLong(y: Column): Column = {
     val t = abs(y)
     when(t < lit(1e9) &&

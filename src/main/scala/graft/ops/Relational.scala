@@ -383,8 +383,7 @@ object Relational {
     "f26_array_ops" -> ((s, d) => {
       import s.implicits._
       documents(s, d)
-        .select($"doc_id",
-          filter(split(lower($"text"), "\\s+"), t => length(t) > 0).as("toks"))
+        .select($"doc_id", TextOps.tokens($"text").as("toks"))
         .select($"doc_id",
           size($"toks").as("n_toks"),
           array_join(slice($"toks", 1, 5), " ").as("first5"),
@@ -500,16 +499,14 @@ object Relational {
     // corpus token stream.
     "d5_stopword_union" -> ((s, d) => {
       import s.implicits._
-      val nltkish = graft.functions.Lexicons.stopwordsEn
       val custom = Seq("spark", "data", "query") // the "domain list" source
-      val nCol = array(nltkish.map(lit): _*)
       val cCol = array(custom.map(lit): _*)
       documents(s, d)
-        .select(explode(filter(split(lower($"text"), "\\s+"), t => length(t) > 0)).as("w"))
+        .select(explode(TextOps.tokens($"text")).as("w"))
         .agg(count("*").as("n_tokens"),
-          sum(when(array_contains(nCol, $"w"), 1).otherwise(0)).as("n_base"),
+          sum(when(TextOps.isStopword($"w"), 1).otherwise(0)).as("n_base"),
           sum(when(array_contains(cCol, $"w"), 1).otherwise(0)).as("n_custom"),
-          sum(when(array_contains(nCol, $"w") || array_contains(cCol, $"w"), 1)
+          sum(when(TextOps.isStopword($"w") || array_contains(cCol, $"w"), 1)
             .otherwise(0)).as("n_union"))
     }),
 
@@ -1009,10 +1006,7 @@ object Relational {
     "p9_schema_guard" ->
       "SELECT 'unscored' AS label, COUNT(*) AS n FROM documents",
     "f26_array_ops" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS toks
-        |  FROM documents)
+      s"""WITH t AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS toks FROM documents)
         |SELECT doc_id, len(toks) AS n_toks,
         |  array_to_string(toks[1:5], ' ') AS first5,
         |  toks[-1] AS last_tok,
@@ -1047,15 +1041,13 @@ object Relational {
     },
     "d5_stopword_union" ->
       s"""WITH tok AS (
-         |  SELECT unnest(list_filter(string_split_regex(lower(text), '\\s+'),
-         |    t -> len(t) > 0)) AS w
-         |  FROM documents)
+         |  SELECT unnest(${TextOps.tokensSql("text")}) AS w FROM documents)
          |SELECT COUNT(*) AS n_tokens,
-         |  CAST(SUM(CASE WHEN list_contains(${graft.functions.Lexicons.stopwordsEnSqlList}, w)
+         |  CAST(SUM(CASE WHEN ${TextOps.isStopwordSql("w")}
          |      THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
          |  CAST(SUM(CASE WHEN w IN ('spark','data','query') THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_custom,
-         |  CAST(SUM(CASE WHEN list_contains(${graft.functions.Lexicons.stopwordsEnSqlList}, w)
+         |  CAST(SUM(CASE WHEN ${TextOps.isStopwordSql("w")}
          |        OR w IN ('spark','data','query')
          |      THEN 1 ELSE 0 END) AS BIGINT) AS n_union
          |FROM tok""".stripMargin,

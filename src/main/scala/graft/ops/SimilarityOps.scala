@@ -1713,8 +1713,7 @@ object SimilarityOps {
     * the rrf and rbo oracles.
     */
   private lazy val fusionRankCtesSql: String =
-      s"""sw(word) AS (VALUES ${graft.functions.Lexicons.stopwordsEnSqlValues}),
-         |t AS (SELECT doc_id, ${TextOps.tokensSql} AS toks FROM documents),
+      s"""t AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS toks FROM documents),
          |qd AS (
          |  SELECT doc_id AS qdoc FROM documents
          |  WHERE ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")}
@@ -1724,7 +1723,7 @@ object SimilarityOps {
          |  SELECT qdoc, word FROM (
          |    SELECT qd.qdoc, unnest(t.toks) AS word
          |    FROM t JOIN qd ON t.doc_id = qd.qdoc)
-         |  WHERE len(word) >= 4 AND word NOT IN (SELECT word FROM sw)),
+         |  WHERE len(word) >= 4 AND NOT ${TextOps.isStopwordSql("word")}),
          |qtf AS (SELECT qdoc, word, COUNT(*) AS qtf FROM qtok GROUP BY 1, 2),
          |qterms AS (
          |  SELECT qdoc, word FROM (

@@ -30,6 +30,45 @@ object TextOps {
 
   type Q = (SparkSession, String) => DataFrame
 
+  // ---- Token rules: each defined once here, with its DuckDB twin ----
+
+  /** Tokens of a text column — the reference's `lower().split()`
+    * (data_preparation.py:92,113): lower, split on whitespace, drop
+    * empties. The engine's only tokenizer (the one Scala-side split in
+    * MultimodalOps runs inside mapPartitions, where no Column can).
+    */
+  private[graft] def tokens(c: Column): Column =
+    filter(split(lower(c), "\\s+"), t => length(t) > 0)
+
+  /** [[tokens]] over the DuckDB column or expression `c`. */
+  private[graft] def tokensSql(c: String): String =
+    s"list_filter(string_split_regex(lower($c), '\\s+'), t -> len(t) > 0)"
+
+  /** Stopword membership as IN over the literal list: the optimizer
+    * rewrites a >10-element literal IN to InSet, one hash-set probe per
+    * token, where array_contains over a literal array scans all ~120
+    * entries per token — and this probe runs once per token of the
+    * corpus. The list holds non-null literals, so the probe is null only
+    * for a null token, which filter()/when() treat as false.
+    */
+  private[graft] def isStopword(t: Column): Column =
+    t.isin(Lexicons.stopwordsEn: _*)
+
+  /** [[isStopword]] over the DuckDB token `v`. */
+  private[graft] def isStopwordSql(v: String): String =
+    s"list_contains(${Lexicons.stopwordsEnSqlList}, $v)"
+
+  /** A content word — the reference's word-cloud and topic-model token
+    * filter (stats_visualization.py:121-155, topic_modeling.py:129-133):
+    * at least 3 characters and not a stopword.
+    */
+  private[graft] def isContentWord(t: Column): Column =
+    length(t) >= 3 && !isStopword(t)
+
+  /** [[isContentWord]] over the DuckDB token `v`. */
+  private[graft] def isContentWordSql(v: String): String =
+    s"len($v) >= 3 AND NOT ${isStopwordSql(v)}"
+
   /** BPE training rounds (text_bpe_merges + its unrolled oracle). */
   val BpeRounds = 8
 
@@ -148,7 +187,6 @@ object TextOps {
     "text || ' Visit https://ex.com/page?id=' || doc_id || " +
       "' <b>Bold</b> <i>x</i> 42 1234 a b Z! www'"
 
-  /** Tokens of the raw text: lower, split on whitespace, drop empties. */
   /** Per-(test doc, candidate class) multinomial-NB log scores — the
     * shared core of text_nb_classifier (argmax → confusion matrix) and
     * ml_calibration_bins (softmax → reliability bins). Laplace-smoothed
@@ -163,7 +201,7 @@ object TextOps {
     */
   private lazy val nbScoredCtes: String =
     s"""dz AS (
-       |  SELECT doc_id, lang, $tokensSql AS toks,
+       |  SELECT doc_id, lang, ${tokensSql("text")} AS toks,
        |    ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")}
        |      % 10 AS bucket
        |  FROM documents),
@@ -288,9 +326,6 @@ object TextOps {
       .localCheckpoint(false)
   }
 
-  private[graft] def tokens(c: Column): Column =
-    filter(split(lower(c), "\\s+"), t => length(t) > 0)
-
   /** The BM25-family building block (round 18 — factored out when the
     * per-query copies got pinned behind localCheckpoints): the corpus
     * token stream term-filtered to the query-term set and aggregated to
@@ -334,9 +369,6 @@ object TextOps {
       |     WHEN t LIKE '%ing' AND len(t) > 5 THEN substr(t, 1, len(t) - 3)
       |     WHEN t LIKE '%ed' AND len(t) > 4 THEN substr(t, 1, len(t) - 2)
       |     ELSE t END""".stripMargin
-
-  private[graft] val tokensSql =
-    "list_filter(string_split_regex(lower(text), '\\s+'), t -> len(t) > 0)"
 
   // ---- Unigram-LM (SentencePiece-style) tokenizer trainer ----
 
@@ -517,7 +549,7 @@ object TextOps {
     }.mkString(",\n")
     s"""ugw AS MATERIALIZED (
        |  SELECT word, CAST(COUNT(*) AS BIGINT) AS freq FROM (
-       |    SELECT unnest($tokensSql) AS word FROM documents)
+       |    SELECT unnest(${tokensSql("text")}) AS word FROM documents)
        |  GROUP BY 1 HAVING COUNT(*) >= 2 AND len(word) <= $WL),
        |ugsub AS (
        |  SELECT substr(w.word, ii.i, jj.j) AS piece,
@@ -573,7 +605,7 @@ object TextOps {
     }.mkString(",\n")
     s"""w AS MATERIALIZED (
        |  SELECT word, COUNT(*) AS freq FROM (
-       |    SELECT unnest($tokensSql) AS word FROM documents)
+       |    SELECT unnest(${tokensSql("text")}) AS word FROM documents)
        |  GROUP BY 1 HAVING COUNT(*) >= 2),
        |s0 AS MATERIALIZED (
        |  SELECT word, freq,
@@ -608,19 +640,6 @@ object TextOps {
         round(avg($"logp"), 6).as("avg_logprob"))
   }
 
-  /** Stopword membership as IN over the literal list — the optimizer
-    * rewrites a >10-element literal IN to InSet (one hash-set probe per
-    * token) where array_contains over the literal array linearly scanned the
-    * ~120-element literal per token (round-19; guide §1.2 per-task work —
-    * this predicate sits inside every tokenize-filter path, so at 100 TB
-    * it runs once per token in the firehose). Null/match semantics are
-    * identical: the list is literal non-null strings, so both forms
-    * return null only for a null probe, which filter()/when() treat as
-    * false.
-    */
-  private[graft] def isStopword(t: Column): Column =
-    t.isin(Lexicons.stopwordsEn: _*)
-
   val queries: Map[String, Q] = Map(
     // F1-F9 (data_preparation.py:61-96): the regex cleaning chain over a
     // deliberately dirtied column.
@@ -651,7 +670,7 @@ object TextOps {
       import s.implicits._
       documents(s, d)
         .select(explode(tokens($"text")).as("word"))
-        .filter(length($"word") >= 3 && !isStopword($"word"))
+        .filter(isContentWord($"word"))
         .groupBy($"word").agg(count("*").as("cnt"))
         .orderBy(desc("cnt"), asc("word"))
         .limit(100)
@@ -681,7 +700,7 @@ object TextOps {
       val n = docs.agg(count("*").as("n_docs"))
       val tf = docs
         .select($"doc_id", explode(tokens($"text")).as("word"))
-        .filter(length($"word") >= 3 && !isStopword($"word"))
+        .filter(isContentWord($"word"))
         .groupBy($"doc_id", $"word").agg(count("*").as("tf"))
       // df from the SAME tf table — one tokenize+aggregate pass total (at
       // 100 TB the token firehose is the dominant cost; never produce it
@@ -1709,7 +1728,7 @@ object TextOps {
       documents(s, d)
         .withColumn("article_clean_raw", cleanText(noisy(s)))
         .select($"doc_id", $"lang",
-          filter(split($"article_clean_raw", "\\s+"), t => length(t) > 0).as("toks"))
+          tokens($"article_clean_raw").as("toks"))
         .select($"doc_id", $"lang",
           size($"toks").as("n_words"),
           array_join(transform($"toks", t => lemmaLite(t)), " ").as("article_clean"))
@@ -2612,8 +2631,6 @@ object TextOps {
     }),
   )
 
-  private val swVals = Lexicons.stopwordsEnSqlValues
-  private val swList = Lexicons.stopwordsEnSqlList
   private val lexVals = Lexicons.vaderSqlValues
   private val langVals = Lexicons.langSqlValues
 
@@ -2627,12 +2644,12 @@ object TextOps {
     * Exposes `qq(doc_id, n_tok, avg_len, stop_ratio, ttr, quality)`.
     */
   private lazy val qualityCteSql =
-    s"""t AS (SELECT doc_id, $tokensSql AS toks FROM documents),
+    s"""t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
        |q AS (
        |  SELECT doc_id, len(toks) AS n_tok,
        |    CAST(list_reduce(list_prepend(0, list_transform(toks, x -> len(x))),
        |      (a, b) -> a + b) AS DOUBLE) / len(toks) AS avg_len,
-       |    CAST(len(list_filter(toks, x -> list_contains($swList, x))) AS DOUBLE)
+       |    CAST(len(list_filter(toks, x -> ${isStopwordSql("x")})) AS DOUBLE)
        |      / len(toks) AS stop_ratio,
        |    CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks) AS ttr
        |  FROM t),
@@ -2647,31 +2664,28 @@ object TextOps {
       s"""SELECT doc_id, ${cleanTextSql(noisySql)} AS article_clean
          |FROM documents ORDER BY doc_id""".stripMargin,
     "f_word_counts" ->
-      s"""WITH sw(word) AS (VALUES $swVals),
-         |t AS (SELECT doc_id, $tokensSql AS toks FROM documents)
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents)
          |SELECT doc_id, len(toks) AS n_words,
-         |  len(list_filter(toks, x -> NOT list_contains($swList, x))) AS n_words_clean
+         |  len(list_filter(toks, x -> NOT ${isStopwordSql("x")})) AS n_words_clean
          |FROM t WHERE len(toks) > 40 ORDER BY doc_id""".stripMargin,
     "a10_word_freq" ->
-      s"""WITH sw(word) AS (VALUES $swVals)
-         |SELECT word, COUNT(*) AS cnt FROM (
-         |  SELECT unnest($tokensSql) AS word FROM documents)
-         |WHERE len(word) >= 3 AND word NOT IN (SELECT word FROM sw)
+      s"""SELECT word, COUNT(*) AS cnt FROM (
+         |  SELECT unnest(${tokensSql("text")}) AS word FROM documents)
+         |WHERE ${isContentWordSql("word")}
          |GROUP BY word ORDER BY cnt DESC, word ASC LIMIT 100""".stripMargin,
     "a11_vocab_prune" ->
       s"""WITH n AS (SELECT COUNT(*) AS n_docs FROM documents)
          |SELECT word, COUNT(*) AS df FROM (
-         |  SELECT DISTINCT doc_id, unnest($tokensSql) AS word FROM documents)
+         |  SELECT DISTINCT doc_id, unnest(${tokensSql("text")}) AS word FROM documents)
          |GROUP BY word
          |HAVING COUNT(*) >= 5 AND COUNT(*) <= (SELECT n_docs FROM n) * 0.5
          |ORDER BY df DESC, word ASC LIMIT 50000""".stripMargin,
     "u7_tfidf_top_terms" ->
-      s"""WITH sw(word) AS (VALUES $swVals),
-         |n AS (SELECT COUNT(*) AS n_docs FROM documents),
+      s"""WITH n AS (SELECT COUNT(*) AS n_docs FROM documents),
          |tf AS (
          |  SELECT doc_id, word, COUNT(*) AS tf FROM (
-         |    SELECT doc_id, unnest($tokensSql) AS word FROM documents)
-         |  WHERE len(word) >= 3 AND word NOT IN (SELECT word FROM sw)
+         |    SELECT doc_id, unnest(${tokensSql("text")}) AS word FROM documents)
+         |  WHERE ${isContentWordSql("word")}
          |  GROUP BY doc_id, word),
          |df AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY word),
          |w AS (
@@ -2685,7 +2699,7 @@ object TextOps {
          |GROUP BY word ORDER BY score DESC, word ASC LIMIT 15""".stripMargin,
     "u3_vader_sentiment" ->
       s"""WITH lex(word, valence) AS (VALUES $lexVals),
-         |tok AS (SELECT doc_id, unnest($tokensSql) AS word FROM documents),
+         |tok AS (SELECT doc_id, unnest(${tokensSql("text")}) AS word FROM documents),
          |sums AS (
          |  SELECT doc_id, SUM(valence) AS sv FROM tok JOIN lex USING (word)
          |  GROUP BY doc_id)
@@ -2701,7 +2715,7 @@ object TextOps {
          |ORDER BY d.doc_id""".stripMargin,
     "u3_sentiment_distribution" ->
       s"""WITH lex(word, valence) AS (VALUES $lexVals),
-         |tok AS (SELECT doc_id, unnest($tokensSql) AS word FROM documents),
+         |tok AS (SELECT doc_id, unnest(${tokensSql("text")}) AS word FROM documents),
          |sums AS (
          |  SELECT doc_id, SUM(valence) AS sv FROM tok JOIN lex USING (word)
          |  GROUP BY doc_id),
@@ -2717,7 +2731,7 @@ object TextOps {
          |GROUP BY 1 ORDER BY cnt DESC, sentiment_label ASC""".stripMargin,
     "text_langid" ->
       s"""WITH lw(cand_lang, word) AS (VALUES $langVals),
-         |tok AS (SELECT doc_id, unnest($tokensSql) AS word FROM documents),
+         |tok AS (SELECT doc_id, unnest(${tokensSql("text")}) AS word FROM documents),
          |ntok AS (SELECT doc_id, COUNT(*) AS n_tok FROM tok GROUP BY doc_id),
          |hits AS (
          |  SELECT doc_id, cand_lang, COUNT(*) AS hits
@@ -2739,7 +2753,7 @@ object TextOps {
          |FROM qq ORDER BY doc_id""".stripMargin,
     "text_gopher_rules" ->
       s"""WITH t AS (
-         |  SELECT doc_id, text, $tokensSql AS toks FROM documents),
+         |  SELECT doc_id, text, ${tokensSql("text")} AS toks FROM documents),
          |b AS (
          |  SELECT doc_id,
          |    CAST(len(toks) AS BIGINT) AS n_words,
@@ -2801,11 +2815,11 @@ object TextOps {
         |  ROUND(alloc / n_docs, 6) AS epochs
         |FROM a ORDER BY source""".stripMargin,
     "text_token_count" ->
-      s"""SELECT doc_id, len($tokensSql) AS ws_tokens,
+      s"""SELECT doc_id, len(${tokensSql("text")}) AS ws_tokens,
          |  len(regexp_extract_all(text, '[a-zA-Z]+|\\d|[^\\sa-zA-Z\\d]')) AS bpe_tokens
          |FROM documents ORDER BY doc_id""".stripMargin,
     "text_repetition" ->
-      s"""WITH t AS (SELECT doc_id, $tokensSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
          |b AS (
          |  SELECT doc_id, len(toks) AS n_tok, len(list_distinct(toks)) AS n_distinct,
          |    list_transform(range(len(toks) - 1), i -> toks[i+1] || ' ' || toks[i+2]) AS bgs
@@ -2825,7 +2839,7 @@ object TextOps {
          |WHERE n_tok >= 1
          |ORDER BY b.doc_id""".stripMargin,
     "text_bm25_topk" ->
-      s"""WITH t AS (SELECT doc_id, $tokensSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
          |dl AS (SELECT doc_id, len(toks) AS dl FROM t),
          |st AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
          |tf AS (
@@ -2847,7 +2861,7 @@ object TextOps {
     // the ground truth that certifies the engine's MaxScore pruning
     // lossless (micro-integer weights make the equality exact).
     "retrieval_maxscore_topk" ->
-      s"""WITH t AS (SELECT doc_id, $tokensSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
          |dl AS (SELECT doc_id, len(toks) AS dl FROM t),
          |st AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
          |tf AS (
@@ -2871,7 +2885,7 @@ object TextOps {
          |  doc_id, score
          |FROM s ORDER BY rank""".stripMargin,
     "text_lm_score" ->
-      s"""WITH t AS (SELECT doc_id, $tokensSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
          |db AS (
          |  SELECT doc_id,
          |    unnest(list_transform(range(len(toks) - 1),
@@ -2886,8 +2900,7 @@ object TextOps {
          |JOIN uni ON split_part(bg, ' ', 1) = uni.w
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "text_bm25_eval" ->
-      s"""WITH sw(word) AS (VALUES ${Lexicons.stopwordsEnSqlValues}),
-         |t AS (SELECT doc_id, $tokensSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
          |qd AS (
          |  SELECT doc_id AS qdoc FROM documents
          |  WHERE ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")}
@@ -2897,7 +2910,7 @@ object TextOps {
          |  SELECT qdoc, word FROM (
          |    SELECT qd.qdoc, unnest(t.toks) AS word
          |    FROM t JOIN qd ON t.doc_id = qd.qdoc)
-         |  WHERE len(word) >= 4 AND word NOT IN (SELECT word FROM sw)),
+         |  WHERE len(word) >= 4 AND NOT ${isStopwordSql("word")}),
          |qtf AS (SELECT qdoc, word, COUNT(*) AS qtf FROM qtok GROUP BY 1, 2),
          |qterms AS (
          |  SELECT qdoc, word FROM (
@@ -2938,8 +2951,7 @@ object TextOps {
     // mine the 2 expansion terms, tf2/df2/w2 re-score the 5-term
     // expanded query at integer weights 2·orig + 1·exp.
     "retrieval_prf_expansion" ->
-      s"""WITH sw(word) AS (VALUES ${Lexicons.stopwordsEnSqlValues}),
-         |t AS (SELECT doc_id, $tokensSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
          |qd AS (
          |  SELECT doc_id AS qdoc FROM documents
          |  WHERE ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")}
@@ -2949,7 +2961,7 @@ object TextOps {
          |  SELECT qdoc, word FROM (
          |    SELECT qd.qdoc, unnest(t.toks) AS word
          |    FROM t JOIN qd ON t.doc_id = qd.qdoc)
-         |  WHERE len(word) >= 4 AND word NOT IN (SELECT word FROM sw)),
+         |  WHERE len(word) >= 4 AND NOT ${isStopwordSql("word")}),
          |qtf AS (SELECT qdoc, word, COUNT(*) AS qtf FROM qtok GROUP BY 1, 2),
          |qterms AS (
          |  SELECT qdoc, word FROM (
@@ -2985,7 +2997,7 @@ object TextOps {
          |ec AS (
          |  SELECT fb.qdoc, tok.word, COUNT(*) AS ftf
          |  FROM tok JOIN fb ON tok.doc_id = fb.doc_id
-         |  WHERE len(tok.word) >= 4 AND tok.word NOT IN (SELECT word FROM sw)
+         |  WHERE len(tok.word) >= 4 AND NOT ${isStopwordSql("tok.word")}
          |    AND NOT EXISTS (SELECT 1 FROM qterms q
          |      WHERE q.qdoc = fb.qdoc AND q.word = tok.word)
          |  GROUP BY 1, 2),
@@ -3175,7 +3187,7 @@ object TextOps {
          |FROM pd GROUP BY alpha, n_cal, k, qhat_m
          |ORDER BY alpha""".stripMargin,
     "corpus_doremi_weights" ->
-      s"""WITH t AS (SELECT doc_id, $tokensSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
          |db AS (
          |  SELECT doc_id,
          |    unnest(list_transform(range(len(toks) - 1),
@@ -3220,7 +3232,7 @@ object TextOps {
          |  (wm * 1000) // (SELECT MAX(wm) FROM w2) AS rate_permille
          |FROM w2 ORDER BY source""".stripMargin,
     "u_phrase_bigrams" ->
-      s"""WITH t AS (SELECT doc_id, $tokensSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
          |db AS (
          |  SELECT unnest(list_transform(range(len(toks) - 1),
          |    i -> toks[i+1] || ' ' || toks[i+2])) AS bg
@@ -3251,7 +3263,7 @@ object TextOps {
          |GROUP BY lang ORDER BY lang""".stripMargin,
     "text_kn_bigram" ->
       s"""WITH dzk AS MATERIALIZED (
-         |  SELECT doc_id, $tokensSql AS t,
+         |  SELECT doc_id, ${tokensSql("text")} AS t,
          |    ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")}
          |      % 10 AS bucket
          |  FROM documents),
@@ -3299,7 +3311,7 @@ object TextOps {
          |FROM sck GROUP BY 1 ORDER BY 1""".stripMargin,
     "text_lm_backoff" ->
       s"""WITH d AS MATERIALIZED (
-         |  SELECT doc_id, $tokensSql AS toks,
+         |  SELECT doc_id, ${tokensSql("text")} AS toks,
          |    ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")} % 10 AS bucket
          |  FROM documents),
          |uni AS (SELECT w, COUNT(*) AS cu FROM (
@@ -3367,12 +3379,12 @@ object TextOps {
              |  ' ' || replace((SELECT pair FROM b$i), ' ', '') || ' ')""".stripMargin
       }
       s"""WITH $bpeCtesSql,
-         |aw AS (SELECT DISTINCT unnest($tokensSql) AS word FROM documents),
+         |aw AS (SELECT DISTINCT unnest(${tokensSql("text")}) AS word FROM documents),
          |enc AS (
          |  SELECT word, len(list_filter(string_split($encSeq, ' '),
          |    t -> len(t) > 0)) AS n_sub
          |  FROM aw),
-         |tok AS (SELECT source, unnest($tokensSql) AS w FROM documents)
+         |tok AS (SELECT source, unnest(${tokensSql("text")}) AS w FROM documents)
          |SELECT source, COUNT(*) AS n_words,
          |  CAST(SUM(n_sub) AS BIGINT) AS n_bpe_tokens,
          |  ROUND(CAST(SUM(len(w)) AS DOUBLE) / SUM(n_sub), 6) AS chars_per_token
@@ -3396,7 +3408,7 @@ object TextOps {
          |  SELECT word, len(list_filter(string_split($encSeq, ' '),
          |    t -> len(t) > 0)) AS n_bpe
          |  FROM (SELECT word FROM ugw)),
-         |tok AS (SELECT source, unnest($tokensSql) AS word FROM documents)
+         |tok AS (SELECT source, unnest(${tokensSql("text")}) AS word FROM documents)
          |SELECT source, COUNT(*) AS n_words,
          |  CAST(SUM(enc.n_bpe) AS BIGINT) AS bpe_tokens,
          |  CAST(SUM(ugseg.n_ug) AS BIGINT) AS unigram_tokens,
@@ -3409,7 +3421,7 @@ object TextOps {
          |GROUP BY 1 ORDER BY 1""".stripMargin
     },
     "a_countmin_probe" ->
-      s"""WITH t AS (SELECT doc_id, $tokensSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
          |db AS (
          |  SELECT unnest(list_transform(range(len(toks) - 1),
          |    i -> toks[i+1] || ' ' || toks[i+2])) AS bg
@@ -3429,7 +3441,7 @@ object TextOps {
          |  AND cells.col = ((probes.h * params.a + params.b) % 1000000007) % 64
          |GROUP BY 1, 2 ORDER BY true_cnt DESC, bg ASC""".stripMargin,
     "a_heavy_hitters" ->
-      s"""WITH tok AS (SELECT unnest($tokensSql) AS tok FROM documents)
+      s"""WITH tok AS (SELECT unnest(${tokensSql("text")}) AS tok FROM documents)
          |SELECT tok, COUNT(*) AS cnt FROM tok
          |GROUP BY tok
          |HAVING COUNT(*) > (SELECT COUNT(*) FROM tok) / 200.0
@@ -3443,7 +3455,7 @@ object TextOps {
          |  FROM documents)
          |WHERE rank <= 5 ORDER BY source, rank""".stripMargin,
     "text_ccnet_buckets" ->
-      s"""WITH t AS (SELECT doc_id, lang, $tokensSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, lang, ${tokensSql("text")} AS toks FROM documents),
          |db AS (
          |  SELECT doc_id, lang,
          |    unnest(list_transform(range(len(toks) - 1),
@@ -3469,7 +3481,7 @@ object TextOps {
          |  ROUND(MAX(avg_logprob), 6) AS max_logprob
          |FROM r GROUP BY lang, bucket ORDER BY lang, bucket""".stripMargin,
     "text_dsir_weights" ->
-      s"""WITH t AS (SELECT doc_id, lang, $tokensSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, lang, ${tokensSql("text")} AS toks FROM documents),
          |db AS (
          |  SELECT doc_id, lang,
          |    unnest(list_transform(range(len(toks) - 1),
@@ -3486,13 +3498,13 @@ object TextOps {
          |FROM hb JOIN cnt USING (b)
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "u1_pos_filter" ->
-      s"""WITH t AS (SELECT unnest($tokensSql) AS word FROM documents),
+      s"""WITH t AS (SELECT unnest(${tokensSql("text")}) AS word FROM documents),
          |c AS (
          |  SELECT word,
          |    CASE WHEN word LIKE '%ly' THEN 'adverb'
          |         WHEN word LIKE '%ous' OR word LIKE '%ful'
          |           OR word LIKE '%ive' OR word LIKE '%al' THEN 'adjective'
-         |         WHEN list_contains($swList, word) THEN 'function'
+         |         WHEN ${isStopwordSql("word")} THEN 'function'
          |         ELSE 'noun' END AS pos_class
          |  FROM t)
          |SELECT pos_class, COUNT(*) AS n_tokens,
@@ -3504,7 +3516,7 @@ object TextOps {
          |  SELECT unnest(flatten([tk,
          |    list_transform(tk, x -> x || 's'),
          |    list_transform(tk, x -> x || 'ing')])) AS t
-         |  FROM (SELECT $tokensSql AS tk FROM documents))
+         |  FROM (SELECT ${tokensSql("text")} AS tk FROM documents))
          |WHERE ($lemmaLiteSql) <> t
          |GROUP BY 1, 2 ORDER BY cnt DESC, word ASC LIMIT 50""".stripMargin,
     "pipeline_prep_docs" ->
@@ -3512,7 +3524,7 @@ object TextOps {
          |  SELECT doc_id, lang, ${cleanTextSql(noisySql)} AS ac FROM documents),
          |tokd AS (
          |  SELECT doc_id, lang,
-         |    list_filter(string_split_regex(ac, '\\s+'), t -> len(t) > 0) AS toks
+         |    ${tokensSql("ac")} AS toks
          |  FROM cleaned)
          |SELECT doc_id, lang, len(toks) AS n_words,
          |  array_to_string(list_transform(toks, t -> $lemmaLiteSql), ' ')
@@ -3522,15 +3534,15 @@ object TextOps {
       s"""SELECT doc_id,
          |  list_reduce(
          |    list_prepend(CAST(0 AS BIGINT),
-         |      list_transform($tokensSql, t -> ${graft.ops.DedupOps.polyHashSql("t")})),
+         |      list_transform(${tokensSql("text")}, t -> ${graft.ops.DedupOps.polyHashSql("t")})),
          |    (acc, x) -> (acc * 31 + x) % 1000000007) * 2147483648
          |  + list_reduce(
          |    list_prepend(CAST(0 AS BIGINT),
-         |      list_transform($tokensSql, t -> ${graft.ops.DedupOps.polyHashSql2("t")})),
+         |      list_transform(${tokensSql("text")}, t -> ${graft.ops.DedupOps.polyHashSql2("t")})),
          |    (acc, x) -> (acc * 37 + x) % 1000000009) AS fp
          |FROM documents ORDER BY doc_id""".stripMargin,
     "chunk_documents" ->
-      s"""WITH t AS (SELECT doc_id, $tokensSql AS tk FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS tk FROM documents),
          |c AS (
          |  SELECT doc_id, tk, len(tk) AS n,
          |    unnest(generate_series(0, (len(tk) - 1) // 48)) AS chunk_id
@@ -3542,7 +3554,7 @@ object TextOps {
          |    AS fp
          |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
     "text_ngram_novelty" ->
-      s"""WITH t AS (SELECT doc_id, $tokensSql AS tk FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS tk FROM documents),
          |g AS (
          |  SELECT doc_id,
          |    ${graft.ops.DedupOps.wideHashSql(
@@ -3562,7 +3574,7 @@ object TextOps {
          |GROUP BY 1 ORDER BY 1""".stripMargin,
     "sample_weighted_ares" ->
       s"""WITH base AS (
-         |  SELECT source, doc_id, len($tokensSql) AS w_tok FROM documents),
+         |  SELECT source, doc_id, len(${tokensSql("text")}) AS w_tok FROM documents),
          |k AS (
          |  SELECT source, doc_id, w_tok,
          |    ROUND(-ln((${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")}
@@ -3628,7 +3640,7 @@ object TextOps {
          |FROM dec ORDER BY doc_id""".stripMargin,
     "pack_sequences" ->
       s"""WITH t AS (
-         |  SELECT doc_id, len($tokensSql) AS tok, doc_id % 8 AS bucket
+         |  SELECT doc_id, len(${tokensSql("text")}) AS tok, doc_id % 8 AS bucket
          |  FROM documents),
          |c AS (
          |  SELECT doc_id, tok, bucket,
@@ -3647,8 +3659,8 @@ object TextOps {
          |  SELECT doc_id + 1000000 AS doc_id, text FROM documents
          |  WHERE doc_id % 100 = 0),
          |gated AS (
-         |  SELECT doc_id, text, len($tokensSql) AS n_tok FROM all_docs
-         |  WHERE len($tokensSql) >= 30),
+         |  SELECT doc_id, text, len(${tokensSql("text")}) AS n_tok FROM all_docs
+         |  WHERE len(${tokensSql("text")}) >= 30),
          |deduped AS (
          |  SELECT doc_id, n_tok FROM gated
          |  QUALIFY row_number() OVER (PARTITION BY md5(text)
@@ -3663,7 +3675,7 @@ object TextOps {
     "text_zipf_slope" ->
       s"""WITH f AS (
          |  SELECT word, CAST(COUNT(*) AS BIGINT) AS freq FROM (
-         |    SELECT unnest($tokensSql) AS word FROM documents)
+         |    SELECT unnest(${tokensSql("text")}) AS word FROM documents)
          |  GROUP BY word),
          |rk AS (
          |  SELECT word, freq,
@@ -3699,7 +3711,7 @@ object TextOps {
          |FROM q CROSS JOIN fit WHERE rank <= 10
          |ORDER BY rank""".stripMargin,
     "text_boilerplate_strip" ->
-      s"""WITH t AS (SELECT doc_id, $tokensSql AS tk FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS tk FROM documents),
          |tz AS (SELECT doc_id, tk, len(tk) AS n FROM t),
          |g AS (
          |  SELECT doc_id, n, i AS p,
@@ -3736,7 +3748,7 @@ object TextOps {
          |FROM tz LEFT JOIN cov ON tz.doc_id = cov.doc_id
          |ORDER BY tz.doc_id""".stripMargin,
     "text_heaps_law" ->
-      s"""WITH t AS (SELECT doc_id, $tokensSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
          |mx AS (SELECT MAX(doc_id) AS mx FROM t),
          |fw AS (
          |  SELECT word, MIN(doc_id) AS first_doc FROM (
@@ -3787,7 +3799,7 @@ object TextOps {
          |FROM q CROSS JOIN f2 ORDER BY decile""".stripMargin,
     "corpus_stats_card" ->
       s"""WITH t AS (
-         |  SELECT source, lang, text, len($tokensSql) AS tok FROM documents)
+         |  SELECT source, lang, text, len(${tokensSql("text")}) AS tok FROM documents)
          |SELECT source, lang,
          |  COUNT(*) AS n_docs,
          |  COUNT(DISTINCT md5(text)) AS n_unique,
@@ -3801,12 +3813,12 @@ object TextOps {
       s"""WITH v AS (
          |  SELECT word FROM (
          |    SELECT word, COUNT(*) AS df FROM (
-         |      SELECT DISTINCT doc_id, unnest($tokensSql) AS word
+         |      SELECT DISTINCT doc_id, unnest(${tokensSql("text")}) AS word
          |      FROM documents)
          |    GROUP BY word
          |    HAVING COUNT(*) >= 5
          |    ORDER BY df DESC, word ASC LIMIT 50000)),
-         |tok AS (SELECT source, unnest($tokensSql) AS word FROM documents)
+         |tok AS (SELECT source, unnest(${tokensSql("text")}) AS word FROM documents)
          |SELECT source, n_tokens, n_oov,
          |  ROUND(n_oov / n_tokens, 6) AS oov_rate
          |FROM (
@@ -3853,7 +3865,7 @@ object TextOps {
          |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
     "text_keyword_tag" -> {
       val taxList = KeywordTaxonomy.map(t => s"'$t'").mkString("[", ", ", "]")
-      s"""WITH t AS (SELECT doc_id, $tokensSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
          |e AS (
          |  SELECT doc_id, tag,
          |    len(list_filter(toks, x -> x = tag)) AS hits
@@ -3866,7 +3878,7 @@ object TextOps {
     },
     "text_drift_kl" ->
       s"""WITH tok AS (
-         |  SELECT source, unnest($tokensSql) AS word FROM documents),
+         |  SELECT source, unnest(${tokensSql("text")}) AS word FROM documents),
          |sw AS (SELECT source, word, COUNT(*) AS c_sw FROM tok GROUP BY 1, 2),
          |st AS (
          |  SELECT source, CAST(SUM(c_sw) AS BIGINT) AS n_s
@@ -3890,7 +3902,7 @@ object TextOps {
 
     // parity of the polynomial bigram hash, lag over positional unnest
     "text_watermark_greenlist" ->
-      s"""WITH t AS (SELECT doc_id, $tokensSql AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
          |p AS (
          |  SELECT doc_id, unnest(toks) AS tok,
          |    generate_subscripts(toks, 1) AS pos

@@ -137,31 +137,29 @@ class DedupSpec extends SparkSpec {
     // sf0.001 plants only exact dups (jaccard 1); the second fixture adds
     // partial overlaps on both sides of the gate: docs of 38 shared + u
     // own tokens, j = 36/(36 + 2u) for u = 8, 4, 2 (0.69, 0.82, 0.9)
-    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_verify").toString
-    Seq(8, 4, 2).flatMap { u =>
-      (0 until 10).flatMap { p =>
-        val common = (0 until 38).map(k => s"c${u}p${p}x$k")
-        Seq("l", "r").map(side => (common ++ (0 until u).map(k => s"$side${u}p${p}x$k")).mkString(" "))
-      }
-    }.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("fx"))
-      .withColumn("n_chars", length($"text"))
-      .coalesce(1).write.parquet(s"$dir/documents.parquet")
-    try {
-      for (d <- Seq(sf, dir)) {
-        val q = SparkEntry.queries("dedup_minhash_lsh")(spark, d)
-        val got = q.collect().map(_.toSeq).toSeq
-        assert(got.nonEmpty && got == exploded(d), d)
-        // verification reads the arrays: no shingle-hash explode left
-        assert(q.queryExecution.optimizedPlan.collect {
-          case g: org.apache.spark.sql.catalyst.plans.logical.Generate
-            if g.generator.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Explode] => g
-        }.isEmpty, d)
-      }
-      assert(exploded(dir).map(_(2)).toSet.size > 1) // partial Jaccards verified
-    } finally {
-      graft.ops.Memo.clear()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    withTempDir("graft_lsh_verify") { dir =>
+      Seq(8, 4, 2).flatMap { u =>
+        (0 until 10).flatMap { p =>
+          val common = (0 until 38).map(k => s"c${u}p${p}x$k")
+          Seq("l", "r").map(side => (common ++ (0 until u).map(k => s"$side${u}p${p}x$k")).mkString(" "))
+        }
+      }.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+        .withColumn("lang", lit("en")).withColumn("source", lit("fx"))
+        .withColumn("n_chars", length($"text"))
+        .coalesce(1).write.parquet(s"$dir/documents.parquet")
+      try {
+        for (d <- Seq(sf, dir)) {
+          val q = SparkEntry.queries("dedup_minhash_lsh")(spark, d)
+          val got = q.collect().map(_.toSeq).toSeq
+          assert(got.nonEmpty && got == exploded(d), d)
+          // verification reads the arrays: no shingle-hash explode left
+          assert(q.queryExecution.optimizedPlan.collect {
+            case g: org.apache.spark.sql.catalyst.plans.logical.Generate
+              if g.generator.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Explode] => g
+          }.isEmpty, d)
+        }
+        assert(exploded(dir).map(_(2)).toSet.size > 1) // partial Jaccards verified
+      } finally graft.ops.Memo.clear()
     }
   }
 
@@ -175,38 +173,39 @@ class DedupSpec extends SparkSpec {
     // recall must track the 8-band × 4-row theory p(j) = 1−(1−j⁴)⁸
     // within sampling noise, and the two tails must pin: high-j pairs
     // nearly always caught, j=0.5 pairs missed often.
-    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_pr").toString
-    val us = Seq(18, 12, 8, 4, 2) // u → j = 36/(36+2u)
-    val docs = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    var id = 0L
-    for ((u, bi) <- us.zipWithIndex; p <- 0 until 30) {
-      val tag = s"b${bi}p$p"
-      val common = (0 until 38).map(k => s"c${tag}x$k")
-      val u1 = (0 until u).map(k => s"l${tag}x$k")
-      val u2 = (0 until u).map(k => s"r${tag}x$k")
-      docs += ((id, (common ++ u1).mkString(" "))); id += 1
-      docs += ((id, (common ++ u2).mkString(" "))); id += 1
-    }
-    docs.toSeq.toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("fx"))
-      .withColumn("n_chars", length($"text"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    try {
-      val rows = SparkEntry.queries("dedup_lsh_pr_eval")(spark, dir)
-        .as[(Long, Long, Long, Double, Long, Double)].collect()
-        .map(r => r._1 -> r).toMap
-      def theory(j: Double): Double = 1.0 - math.pow(1.0 - math.pow(j, 4), 8)
-      us.foreach { u =>
-        val j = 36.0 / (36 + 2 * u)
-        val bucket = math.min((j * 10).floor.toLong, 9L)
-        val r = rows(bucket)
-        assert(r._2 >= 30, s"bucket $bucket lost true pairs: ${r._2}")
-        assert(math.abs(r._4 - theory(j)) <= 0.35,
-          s"bucket $bucket recall ${r._4} vs theory ${theory(j)} (j=$j)")
+    withTempDir("graft_lsh_pr") { dir =>
+      val us = Seq(18, 12, 8, 4, 2) // u → j = 36/(36+2u)
+      val docs = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+      var id = 0L
+      for ((u, bi) <- us.zipWithIndex; p <- 0 until 30) {
+        val tag = s"b${bi}p$p"
+        val common = (0 until 38).map(k => s"c${tag}x$k")
+        val u1 = (0 until u).map(k => s"l${tag}x$k")
+        val u2 = (0 until u).map(k => s"r${tag}x$k")
+        docs += ((id, (common ++ u1).mkString(" "))); id += 1
+        docs += ((id, (common ++ u2).mkString(" "))); id += 1
       }
-      assert(rows(9)._4 >= 0.9, s"high-j tail: ${rows(9)._4}")
-      assert(rows(5)._4 <= 0.85, s"low-j tail: ${rows(5)._4}")
-    } finally graft.ops.Memo.clear()
+      docs.toSeq.toDF("doc_id", "text")
+        .withColumn("lang", lit("en")).withColumn("source", lit("fx"))
+        .withColumn("n_chars", length($"text"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      try {
+        val rows = SparkEntry.queries("dedup_lsh_pr_eval")(spark, dir)
+          .as[(Long, Long, Long, Double, Long, Double)].collect()
+          .map(r => r._1 -> r).toMap
+        def theory(j: Double): Double = 1.0 - math.pow(1.0 - math.pow(j, 4), 8)
+        us.foreach { u =>
+          val j = 36.0 / (36 + 2 * u)
+          val bucket = math.min((j * 10).floor.toLong, 9L)
+          val r = rows(bucket)
+          assert(r._2 >= 30, s"bucket $bucket lost true pairs: ${r._2}")
+          assert(math.abs(r._4 - theory(j)) <= 0.35,
+            s"bucket $bucket recall ${r._4} vs theory ${theory(j)} (j=$j)")
+        }
+        assert(rows(9)._4 >= 0.9, s"high-j tail: ${rows(9)._4}")
+        assert(rows(5)._4 <= 0.85, s"low-j tail: ${rows(5)._4}")
+      } finally graft.ops.Memo.clear()
+    }
   }
 
   test("embedding LSH is non-vacuous and recalls the brute-force >=0.9 pairs") {
@@ -243,21 +242,6 @@ class DedupSpec extends SparkSpec {
     assert(out.distinct.length == out.length)
   }
 
-  test("connected components converge on a 200-node chain (pointer jumping)") {
-    // a path graph is the adversarial diameter case: plain min-label
-    // propagation needs 200 iterations; path doubling needs ~8
-    val chain = (0L until 200L).sliding(2).map(w => (w(0), w(1))).toSeq
-    val got = DedupOps.connectedComponents(spark, chain.toDF("d1", "d2"))
-      .as[(Long, Long)].collect().toSet
-    assert(got == (0L until 200L).map(n => (n, 0L)).toSet)
-    // two separate chains resolve to their own minima
-    val two = chain ++ Seq((1000L, 1001L), (1001L, 1002L))
-    val got2 = DedupOps.connectedComponents(spark, two.toDF("d1", "d2"))
-      .as[(Long, Long)].collect().toSet
-    assert(got2 == ((0L until 200L).map(n => (n, 0L)) ++
-      Seq((1000L, 1000L), (1001L, 1000L), (1002L, 1000L))).toSet)
-  }
-
   test("prefix-filtered join is lossless and its index is strictly smaller") {
     // losslessness: PPJoin-style candidates produce EXACTLY the
     // full-inverted-index result at the same threshold
@@ -270,8 +254,7 @@ class DedupSpec extends SparkSpec {
     // a strict subset of the full shingle index
     import org.apache.spark.sql.functions._
     val docs = graft.ops.Tables.documents(spark, sf)
-      .select($"doc_id", filter(split(lower($"text"), "\\s+"),
-        t => length(t) > 0).as("t"))
+      .select($"doc_id", graft.ops.TextOps.tokens($"text").as("t"))
       .select($"doc_id",
         graft.functions.ShingleHashes.poly_shingles($"t").as("xs"))
       .filter(size($"xs") >= 1)
@@ -282,20 +265,19 @@ class DedupSpec extends SparkSpec {
     assert(prefIdx < fullIdx)
   }
 
-  test("large-star/small-star CC matches pointer jumping on adversarial chains") {
+  test("large-star/small-star CC resolves adversarial chains to their minima") {
     // the high-diameter path is exactly where the star algorithm earns
     // its keep: edge rewriting halves the diameter every other round
     val chain = (0L until 200L).sliding(2).map(w => (w(0), w(1))).toSeq
     val got = DedupOps.ccStars(spark, chain.toDF("d1", "d2"))
       .as[(Long, Long)].collect().toSet
     assert(got == (0L until 200L).map(n => (n, 0L)).toSet)
-    // two chains + an isolated edge resolve to their own minima
+    // a second chain (plus a chord inside the first) resolves to its own minimum
     val two = chain ++ Seq((1000L, 1001L), (1001L, 1002L), (7L, 3L))
     val got2 = DedupOps.ccStars(spark, two.toDF("d1", "d2"))
       .as[(Long, Long)].collect().toSet
-    val want2 = DedupOps.connectedComponents(spark, two.toDF("d1", "d2"))
-      .as[(Long, Long)].collect().toSet
-    assert(got2 == want2)
+    assert(got2 == ((0L until 200L).map(n => (n, 0L)) ++
+      Seq((1000L, 1000L), (1001L, 1000L), (1002L, 1000L))).toSet)
     // and the two engine queries agree row for row on the real pairs
     val a = SparkEntry.queries("dedup_cluster_reps")(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -305,9 +287,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("both CC algorithms match union-find on seeded random graphs") {
-    // property sweep: sparse, dense, and multi-component regimes; both
-    // distributed implementations must agree with a local union-find on
-    // every instance
+    // property sweep: sparse, dense, and multi-component regimes; the
+    // distributed kernel must agree with a local union-find on every
+    // instance
     val rnd = new scala.util.Random(42)
     Seq((40, 25), (40, 80), (200, 60)).foreach { case (n, m) =>
       val edges = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
@@ -325,10 +307,7 @@ class DedupSpec extends SparkSpec {
       val want = nodes.map(v => (v, find(v))).toSet
       val df = edges.toDF("d1", "d2")
       val star = DedupOps.ccStars(spark, df).as[(Long, Long)].collect().toSet
-      val jump = DedupOps.connectedComponents(spark, df)
-        .as[(Long, Long)].collect().toSet
       assert(star == want, s"ccStars wrong on n=$n m=$m")
-      assert(jump == want, s"pointer jumping wrong on n=$n m=$m")
     }
   }
 

@@ -39,6 +39,24 @@ class MLSpec extends SparkSpec {
     }
   }
 
+  test("QRound's scalar and Column forms both equal BigDecimal HALF_UP") {
+    import graft.ops.QRound
+    // exact half-integers, values inside and just outside the 1e-5 guard
+    // band, the 1e9 cutoff and beyond, both signs, and zero
+    val base = Seq(0.0, -0.0, 0.5, 1.5, 2.5, 0.49999999999999994, 2.4999999,
+      2.5000001, 2.49999, 2.50001, 2.4999899, 2.5000101, 123456.5,
+      123456.4999999, 999999999.5, 999999999.4999, 1e9 - 0.5, 1e9, 1e9 + 0.5,
+      1e9 + 0.4999, 4503599627370495.5, 1.5e12 + 0.5, 7.0, 7.3, 7.7)
+    val ys = (base ++ base.map(-_)).distinct
+    def exact(y: Double) = BigDecimal.valueOf(y)
+      .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+    ys.foreach(y => assert(QRound.qroundLong(y) == exact(y), s"scalar at $y"))
+    val col = ys.toDF("y").select($"y", QRound.qroundLong($"y").as("q"))
+      .as[(Double, Long)].collect()
+    assert(col.length == ys.length)
+    col.foreach { case (y, q) => assert(q == QRound.qroundLong(y), s"Column at $y") }
+  }
+
   test("LDA doc-topic histogram covers all docs") {
     val total = spark.read.parquet(s"$sf/documents.parquet").count()
     val sum = SparkEntry.queries("u5_lda_doc_topics")(spark, sf)

@@ -16,45 +16,44 @@ import scala.jdk.CollectionConverters._
 class MemoSpec extends SparkSpec {
   import spark.implicits._
 
-  /** A fixture dir holding `documents` and `embeddings` derived from sf:
+  /** Writes `documents` and `embeddings` derived from sf into `dir`:
     * every other embedding (by parity), the documents outside one fifth
     * (doc_id % 5 == parity) re-keyed by `idShift`.
     */
-  private def fixture(parity: Int, idShift: Long): String = {
-    val dir = Files.createTempDirectory("graft_memo").toString
+  private def fixture(dir: String, parity: Int, idShift: Long): Unit = {
     graft.ops.Tables.documents(spark, sf).filter($"doc_id" % 5 =!= parity)
       .withColumn("doc_id", $"doc_id" + idShift)
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     graft.ops.Tables.embeddings(spark, sf).filter($"vec_id" % 2 === parity)
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    dir
   }
 
   private def rows(q: String, dir: String): Seq[Seq[Any]] =
     SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSeq
 
   test("a rewritten input rebuilds both index and per-pass entries") {
-    val a = fixture(0, 0L)
-    val b = fixture(1, 100000L)
-    try {
-      // ml_kmeans reads the k-means centroids (an index entry),
-      // dedup_minhash_lsh the persisted shingle frame, the two report
-      // stages the cluster labels and VADER scores (per-pass entries)
-      val qs = Seq("ml_kmeans", "dedup_minhash_lsh", "pipeline_dedup_corpus",
-        "u3_sentiment_distribution")
-      val onA = qs.map(rows(_, a))
-      val onB = qs.map(rows(_, b))
-      qs.indices.foreach { i =>
-        assert(onA(i).nonEmpty && onA(i) != onB(i), qs(i))
+    withTempDir("graft_memo") { a =>
+      withTempDir("graft_memo") { b =>
+        fixture(a, 0, 0L)
+        fixture(b, 1, 100000L)
+        try {
+          // ml_kmeans reads the k-means centroids (an index entry),
+          // dedup_minhash_lsh the persisted shingle frame, the two report
+          // stages the cluster labels and VADER scores (per-pass entries)
+          val qs = Seq("ml_kmeans", "dedup_minhash_lsh", "pipeline_dedup_corpus",
+            "u3_sentiment_distribution")
+          val onA = qs.map(rows(_, a))
+          val onB = qs.map(rows(_, b))
+          qs.indices.foreach { i =>
+            assert(onA(i).nonEmpty && onA(i) != onB(i), qs(i))
+          }
+          for (t <- Seq("documents", "embeddings")) {
+            FileUtils.deleteDirectory(new File(s"$a/$t.parquet"))
+            FileUtils.copyDirectory(new File(s"$b/$t.parquet"), new File(s"$a/$t.parquet"))
+          }
+          assert(qs.map(rows(_, a)) == onB)
+        } finally Memo.clear()
       }
-      for (t <- Seq("documents", "embeddings")) {
-        FileUtils.deleteDirectory(new File(s"$a/$t.parquet"))
-        FileUtils.copyDirectory(new File(s"$b/$t.parquet"), new File(s"$a/$t.parquet"))
-      }
-      assert(qs.map(rows(_, a)) == onB)
-    } finally {
-      Memo.clear()
-      Seq(a, b).foreach(d => FileUtils.deleteDirectory(new File(d)))
     }
   }
 

@@ -137,43 +137,44 @@ class SimilaritySpec extends SparkSpec {
     // (the skew case the broadcast-term plan must absorb), and the
     // near-dup embeddings stress MMR's redundancy penalty. The ops must
     // return the same k-bounded, fully-ranked, repeatable output.
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew_fx").toString
-    val fill = Array("alpha", "bravo", "charlie", "delta", "echo",
-      "foxtrot", "golf", "hotel", "india", "juliet", "kilo", "lima")
-    val docs = (0L until 600L).map { id =>
-      val (src, text) =
-        if (id < 540) ("dominant",
-          s"breaking market update economy shares ${fill((id % 12).toInt)} " +
-            s"report segment${id % 7} item$id")
-        else (s"minor${id % 4}",
-          s"${fill((id % 12).toInt)} ${fill(((id * 5 + 3) % 12).toInt)} " +
-            s"science culture weather article token$id unique${id * 7}")
-      (id, text, "en", src, text.length.toLong)
-    }
-    docs.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val embs = (0L until 600L).map { id =>
-      val base =
-        if (id < 540) Array.fill(8)(0.9)
-        else Array.tabulate(8)(j => ((id + j) % 5).toDouble / 5.0)
-      val e = base.zipWithIndex.map { case (v, j) =>
-        (v + ((id * 31 + j * 7) % 13).toDouble / 1000.0).toFloat }
-      (id, e.toSeq, (id % 3).toInt)
-    }
-    embs.toDF("vec_id", "embedding", "label")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    Seq("retrieval_rrf_fusion", "retrieval_prf_expansion",
-      "retrieval_mmr_rerank").foreach { n =>
-      val q = SparkEntry.queries(n)
-      val a = q(spark, dir).collect().map(_.toSeq).toSeq
-      val b = q(spark, dir).collect().map(_.toSeq).toSeq
-      assert(a.nonEmpty, s"$n returned nothing on the skewed fixture")
-      assert(a == b, s"$n nondeterministic on the skewed fixture")
-      // k-bounded per query (never corpus-scale), ranks dense from 1
-      a.groupBy(_.head).foreach { case (qd, rs) =>
-        assert(rs.length <= 10, s"$n query $qd: ${rs.length} rows")
-        val ranks = rs.map(_(1).asInstanceOf[Int]).sorted
-        assert(ranks == (1 to rs.length), s"$n query $qd ranks $ranks")
+    withTempDir("graft_skew_fx") { dir =>
+      val fill = Array("alpha", "bravo", "charlie", "delta", "echo",
+        "foxtrot", "golf", "hotel", "india", "juliet", "kilo", "lima")
+      val docs = (0L until 600L).map { id =>
+        val (src, text) =
+          if (id < 540) ("dominant",
+            s"breaking market update economy shares ${fill((id % 12).toInt)} " +
+              s"report segment${id % 7} item$id")
+          else (s"minor${id % 4}",
+            s"${fill((id % 12).toInt)} ${fill(((id * 5 + 3) % 12).toInt)} " +
+              s"science culture weather article token$id unique${id * 7}")
+        (id, text, "en", src, text.length.toLong)
+      }
+      docs.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val embs = (0L until 600L).map { id =>
+        val base =
+          if (id < 540) Array.fill(8)(0.9)
+          else Array.tabulate(8)(j => ((id + j) % 5).toDouble / 5.0)
+        val e = base.zipWithIndex.map { case (v, j) =>
+          (v + ((id * 31 + j * 7) % 13).toDouble / 1000.0).toFloat }
+        (id, e.toSeq, (id % 3).toInt)
+      }
+      embs.toDF("vec_id", "embedding", "label")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      Seq("retrieval_rrf_fusion", "retrieval_prf_expansion",
+        "retrieval_mmr_rerank").foreach { n =>
+        val q = SparkEntry.queries(n)
+        val a = q(spark, dir).collect().map(_.toSeq).toSeq
+        val b = q(spark, dir).collect().map(_.toSeq).toSeq
+        assert(a.nonEmpty, s"$n returned nothing on the skewed fixture")
+        assert(a == b, s"$n nondeterministic on the skewed fixture")
+        // k-bounded per query (never corpus-scale), ranks dense from 1
+        a.groupBy(_.head).foreach { case (qd, rs) =>
+          assert(rs.length <= 10, s"$n query $qd: ${rs.length} rows")
+          val ranks = rs.map(_(1).asInstanceOf[Int]).sorted
+          assert(ranks == (1 to rs.length), s"$n query $qd ranks $ranks")
+        }
       }
     }
   }
@@ -296,22 +297,23 @@ class SimilaritySpec extends SparkSpec {
     // hard negatives must still surface, with NULL margins (the honest
     // answer when no positive exists; an inner join would silently drop
     // the anchor from the training set).
-    val dir = java.nio.file.Files.createTempDirectory("graft_hn_fx").toString
-    val embs = (0L until 300L).map { id =>
-      val e = Array.tabulate(8)(j =>
-        (((id * 31 + j * 7) % 13).toDouble / 13.0 + 0.1).toFloat)
-      (id, e.toSeq, if (id == 0L) 99 else (id % 3).toInt)
-    }
-    embs.toDF("vec_id", "embedding", "label")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val rows = SparkEntry.queries("emb_hard_negatives")(spark, dir).collect()
-    val byAnchor = rows.groupBy(_.getLong(0))
-    assert(byAnchor.keySet == (0L until 20L).toSet, "every anchor answered")
-    byAnchor.foreach { case (q, rs) =>
-      assert(rs.map(_.getInt(1)).sorted.toSeq == (1 to 5), s"anchor $q ranks")
-      val nullMargins = rs.count(_.isNullAt(4))
-      if (q == 0L) assert(nullMargins == 5, s"peerless anchor margins: $rs")
-      else assert(nullMargins == 0, s"anchor $q unexpectedly NULL-margined")
+    withTempDir("graft_hn_fx") { dir =>
+      val embs = (0L until 300L).map { id =>
+        val e = Array.tabulate(8)(j =>
+          (((id * 31 + j * 7) % 13).toDouble / 13.0 + 0.1).toFloat)
+        (id, e.toSeq, if (id == 0L) 99 else (id % 3).toInt)
+      }
+      embs.toDF("vec_id", "embedding", "label")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      val rows = SparkEntry.queries("emb_hard_negatives")(spark, dir).collect()
+      val byAnchor = rows.groupBy(_.getLong(0))
+      assert(byAnchor.keySet == (0L until 20L).toSet, "every anchor answered")
+      byAnchor.foreach { case (q, rs) =>
+        assert(rs.map(_.getInt(1)).sorted.toSeq == (1 to 5), s"anchor $q ranks")
+        val nullMargins = rs.count(_.isNullAt(4))
+        if (q == 0L) assert(nullMargins == 5, s"peerless anchor margins: $rs")
+        else assert(nullMargins == 0, s"anchor $q unexpectedly NULL-margined")
+      }
     }
   }
 

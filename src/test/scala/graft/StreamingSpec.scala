@@ -840,76 +840,77 @@ class StreamingSpec extends SparkSpec {
     // the same sink function again with the last (df, batchId) — the
     // sink's contents must not change by a single row.
     implicit val sqlCtx = spark.sqlContext
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_eo_sink").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_eo_ckpt").toString
-    val stream = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val q = stream.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .writeStream.option("checkpointLocation", ckpt)
-      .foreachBatch(graft.streaming.StreamingOps.idempotentBatchSink(out) _)
-      .start()
-    val (b1, b2) = batchEvents.splitAt(batchEvents.length / 2)
-    try {
-      stream.addData(b1.toSeq); q.processAllAvailable()
-      stream.addData(b2.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    def snapshot() = spark.read.parquet(out)
-      .collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
-    val before = snapshot()
-    // b1 → batch 0, b2 → batch 1 (one batch per addData +
-    // processAllAvailable); the failure-rerun delivers batch 1 AGAIN
-    val replayDf = b2.toSeq
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-    graft.streaming.StreamingOps.idempotentBatchSink(out)(replayDf, 1L)
-    assert(snapshot() == before, "replayed batch changed the sink")
-    // and the sink holds exactly the fed rows — no duplication, no loss
-    assert(before.length == batchEvents.length)
-    val gotIds = before.map(_.head).toSet
-    assert(gotIds == batchEvents.map(_._1: Any).toSet)
+    withTempDir("graft_eo_sink") { out =>
+      withTempDir("graft_eo_ckpt") { ckpt =>
+        val stream = MemoryStream[(Long, Timestamp, Long, String, Double)]
+        val q = stream.toDF()
+          .toDF("event_id", "ts", "user_id", "event_type", "value")
+          .writeStream.option("checkpointLocation", ckpt)
+          .foreachBatch(graft.streaming.StreamingOps.idempotentBatchSink(out) _)
+          .start()
+        val (b1, b2) = batchEvents.splitAt(batchEvents.length / 2)
+        try {
+          stream.addData(b1.toSeq); q.processAllAvailable()
+          stream.addData(b2.toSeq); q.processAllAvailable()
+        } finally q.stop()
+        def snapshot() = spark.read.parquet(out)
+          .collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+        val before = snapshot()
+        // b1 → batch 0, b2 → batch 1 (one batch per addData +
+        // processAllAvailable); the failure-rerun delivers batch 1 AGAIN
+        val replayDf = b2.toSeq
+          .toDF("event_id", "ts", "user_id", "event_type", "value")
+        graft.streaming.StreamingOps.idempotentBatchSink(out)(replayDf, 1L)
+        assert(snapshot() == before, "replayed batch changed the sink")
+        // and the sink holds exactly the fed rows — no duplication, no loss
+        assert(before.length == batchEvents.length)
+        val gotIds = before.map(_.head).toSet
+        assert(gotIds == batchEvents.map(_._1: Any).toSet)
+      }
+    }
   }
 
   test("agg state survives a checkpointed restart (exactly-once recovery)") {
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val stream = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    // (batchId, event_type, running n) rows appended by foreachBatch —
-    // runs on the driver, so a plain buffer is safe
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-    def startQuery() = stream.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .groupBy($"event_type").agg(count(lit(1)).as("n"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-        df.collect().foreach { r =>
-          buf += ((bid, r.getString(0), r.getLong(1)))
-        }
-        ()
-      }.start()
-    val (b1, b2) = batchEvents.splitAt(batchEvents.length / 2)
-    val q1 = startQuery()
-    try { stream.addData(b1.toSeq); q1.processAllAvailable() }
-    finally q1.stop()
-    val committed = buf.map(_._1).toSet
-    assert(committed.nonEmpty)
-    stream.addData(b2.toSeq) // arrives while no query is running
-    val q2 = startQuery()
-    try { q2.processAllAvailable() } finally q2.stop()
-    // recovery, not wholesale replay: new batch ids strictly extend the
-    // committed ones. (foreachBatch is at-least-once — the LAST pre-stop
-    // batch may legally re-run after restart, but it re-runs under an id
-    // ≥ max(committed), so the set difference stays strictly above every
-    // committed id; the final got==want check below is id-agnostic.)
-    val fresh = buf.map(_._1).toSet -- committed
-    assert(fresh.nonEmpty && committed.forall(c => fresh.forall(c < _)))
-    // recovered state + b2 lands on the full-corpus aggregation: the
-    // latest update per type equals the batch groupBy
-    val got = buf.groupBy(_._2).map { case (t, rs) => t -> rs.maxBy(_._1)._3 }
-    val want = batchEvents.groupBy(_._4)
-      .map { case (t, rs) => t -> rs.length.toLong }
-    assert(got == want, s"recovered $got vs batch $want")
+    withTempDir("graft_ckpt") { ckpt =>
+      val stream = MemoryStream[(Long, Timestamp, Long, String, Double)]
+      // (batchId, event_type, running n) rows appended by foreachBatch —
+      // runs on the driver, so a plain buffer is safe
+      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
+      def startQuery() = stream.toDF()
+        .toDF("event_id", "ts", "user_id", "event_type", "value")
+        .groupBy($"event_type").agg(count(lit(1)).as("n"))
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
+          df.collect().foreach { r =>
+            buf += ((bid, r.getString(0), r.getLong(1)))
+          }
+          ()
+        }.start()
+      val (b1, b2) = batchEvents.splitAt(batchEvents.length / 2)
+      val q1 = startQuery()
+      try { stream.addData(b1.toSeq); q1.processAllAvailable() }
+      finally q1.stop()
+      val committed = buf.map(_._1).toSet
+      assert(committed.nonEmpty)
+      stream.addData(b2.toSeq) // arrives while no query is running
+      val q2 = startQuery()
+      try { q2.processAllAvailable() } finally q2.stop()
+      // recovery, not wholesale replay: new batch ids strictly extend the
+      // committed ones. (foreachBatch is at-least-once — the LAST pre-stop
+      // batch may legally re-run after restart, but it re-runs under an id
+      // ≥ max(committed), so the set difference stays strictly above every
+      // committed id; the final got==want check below is id-agnostic.)
+      val fresh = buf.map(_._1).toSet -- committed
+      assert(fresh.nonEmpty && committed.forall(c => fresh.forall(c < _)))
+      // recovered state + b2 lands on the full-corpus aggregation: the
+      // latest update per type equals the batch groupBy
+      val got = buf.groupBy(_._2).map { case (t, rs) => t -> rs.maxBy(_._1)._3 }
+      val want = batchEvents.groupBy(_._4)
+        .map { case (t, rs) => t -> rs.length.toLong }
+      assert(got == want, s"recovered $got vs batch $want")
+    }
   }
 
   test("watermark-dedup survivor state survives a checkpointed restart") {
@@ -920,67 +921,68 @@ class StreamingSpec extends SparkSpec {
     // survivor's timestamp from the checkpoint — a fresh state store
     // would wrongly re-emit it.
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_wmdd").toString
-    def t(h: Int, m: Int = 0): Timestamp =
-      Timestamp.valueOf(f"2024-03-01 $h%02d:$m%02d:00")
-    val stream = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    def startQuery() = stream.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
-        df.select("event_id").collect().foreach(r => buf += ((bid, r.getLong(0))))
-        ()
-      }.start()
-    val q1 = startQuery()
-    try {
-      // A1 survives; A2 is a within-horizon duplicate (expiry 13:00)
-      stream.addData(Seq(
-        (1L, t(12), 1L, "view", 1.0), (2L, t(12, 10), 1L, "view", 1.0)))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    val preBids = buf.map(_._1).toSet
-    assert(buf.map(_._2).toSet == Set(1L))
-    // arrives while the query is down — still inside A1's horizon
-    stream.addData(Seq((3L, t(12, 30), 1L, "view", 1.0)))
-    val q2 = startQuery()
-    try {
-      q2.processAllAvailable()
-      // advance the watermark past 13:00 → A's recovered state expires
-      stream.addData(Seq((90L, t(16), 2L, "click", 1.0)))
-      q2.processAllAvailable()
-      // beyond the horizon: re-emitted as a fresh survivor
-      stream.addData(Seq((4L, t(16, 30), 1L, "view", 1.0)))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    // Set-level survivor check — robust to foreachBatch's AT-least-once
-    // contract (a replayed batch re-emits the same ids, never new ones).
-    val keyA = buf.map(_._2).toSet.intersect(Set(1L, 2L, 3L, 4L))
-    assert(keyA == Set(1L, 4L), s"key-A survivors across restart: $keyA")
-    // foreachBatch is at-least-once, not exactly-once: if stop() raced
-    // the last commit-log write, the restarted query legally re-runs
-    // that batch under its ORIGINAL id from the offset log — those
-    // re-emissions land in preBids and are tolerated by construction.
-    // Batches under NEW ids must never re-emit A1: their offset ranges
-    // are disjoint from the committed prefix (processAllAvailable
-    // drained all pre-stop input), so a re-appearance means survivor
-    // state was rebuilt rather than recovered — including the wholesale
-    // re-read-committed-offsets-under-a-fresh-id regression.
-    val fresh = buf.filterNot(r => preBids.contains(r._1))
-    assert(!fresh.exists(_._2 == 1L), "A1 re-emitted under a new batch id")
-    assert(preBids.forall(c => fresh.forall(c < _._1)))
-    // the batch greedy-chain twin predicts exactly these survivors
-    val rows = Seq((1L, t(12)), (3L, t(12, 30)), (4L, t(16, 30)))
-    var anchor = Long.MinValue
-    val chain = rows.filter { case (_, ts) =>
-      val keep = anchor == Long.MinValue || ts.getTime > anchor + 3600000L
-      if (keep) anchor = ts.getTime
-      keep
-    }.map(_._1).toSet
-    assert(chain == keyA)
+    withTempDir("graft_ckpt_wmdd") { ckpt =>
+      def t(h: Int, m: Int = 0): Timestamp =
+        Timestamp.valueOf(f"2024-03-01 $h%02d:$m%02d:00")
+      val stream = MemoryStream[(Long, Timestamp, Long, String, Double)]
+      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      def startQuery() = stream.toDF()
+        .toDF("event_id", "ts", "user_id", "event_type", "value")
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark("user_id", "event_type")
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
+          df.select("event_id").collect().foreach(r => buf += ((bid, r.getLong(0))))
+          ()
+        }.start()
+      val q1 = startQuery()
+      try {
+        // A1 survives; A2 is a within-horizon duplicate (expiry 13:00)
+        stream.addData(Seq(
+          (1L, t(12), 1L, "view", 1.0), (2L, t(12, 10), 1L, "view", 1.0)))
+        q1.processAllAvailable()
+      } finally q1.stop()
+      val preBids = buf.map(_._1).toSet
+      assert(buf.map(_._2).toSet == Set(1L))
+      // arrives while the query is down — still inside A1's horizon
+      stream.addData(Seq((3L, t(12, 30), 1L, "view", 1.0)))
+      val q2 = startQuery()
+      try {
+        q2.processAllAvailable()
+        // advance the watermark past 13:00 → A's recovered state expires
+        stream.addData(Seq((90L, t(16), 2L, "click", 1.0)))
+        q2.processAllAvailable()
+        // beyond the horizon: re-emitted as a fresh survivor
+        stream.addData(Seq((4L, t(16, 30), 1L, "view", 1.0)))
+        q2.processAllAvailable()
+      } finally q2.stop()
+      // Set-level survivor check — robust to foreachBatch's AT-least-once
+      // contract (a replayed batch re-emits the same ids, never new ones).
+      val keyA = buf.map(_._2).toSet.intersect(Set(1L, 2L, 3L, 4L))
+      assert(keyA == Set(1L, 4L), s"key-A survivors across restart: $keyA")
+      // foreachBatch is at-least-once, not exactly-once: if stop() raced
+      // the last commit-log write, the restarted query legally re-runs
+      // that batch under its ORIGINAL id from the offset log — those
+      // re-emissions land in preBids and are tolerated by construction.
+      // Batches under NEW ids must never re-emit A1: their offset ranges
+      // are disjoint from the committed prefix (processAllAvailable
+      // drained all pre-stop input), so a re-appearance means survivor
+      // state was rebuilt rather than recovered — including the wholesale
+      // re-read-committed-offsets-under-a-fresh-id regression.
+      val fresh = buf.filterNot(r => preBids.contains(r._1))
+      assert(!fresh.exists(_._2 == 1L), "A1 re-emitted under a new batch id")
+      assert(preBids.forall(c => fresh.forall(c < _._1)))
+      // the batch greedy-chain twin predicts exactly these survivors
+      val rows = Seq((1L, t(12)), (3L, t(12, 30)), (4L, t(16, 30)))
+      var anchor = Long.MinValue
+      val chain = rows.filter { case (_, ts) =>
+        val keep = anchor == Long.MinValue || ts.getTime > anchor + 3600000L
+        if (keep) anchor = ts.getTime
+        keep
+      }.map(_._1).toSet
+      assert(chain == keyA)
+    }
   }
 
   test("session-window state survives a checkpointed restart (split session merges)") {
@@ -989,47 +991,48 @@ class StreamingSpec extends SparkSpec {
     // into that session after restart — two sessions (or a lost prefix)
     // means the session state store did not recover.
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_sess").toString
-    def t(h: Int, m: Int = 0): Timestamp =
-      Timestamp.valueOf(f"2024-03-01 $h%02d:$m%02d:00")
-    val stream = MemoryStream[(Long, Timestamp, Long, String, Double)]
-    val buf = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Timestamp, Timestamp, Long)]
-    def startQuery() = stream.toDF()
-      .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .withWatermark("ts", "1 hour")
-      .groupBy(session_window($"ts", "30 minutes").as("sw"), $"user_id")
-      .agg(count(lit(1)).as("n_events"))
-      .select($"user_id", $"sw.start".as("s"), $"sw.end".as("e"), $"n_events")
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        df.collect().foreach { r =>
-          buf += ((r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-            r.getLong(3)))
-        }
-        ()
-      }.start()
-    val q1 = startQuery()
-    try {
-      stream.addData(Seq(
-        (1L, t(12), 1L, "view", 1.0), (2L, t(12, 10), 1L, "view", 1.0)))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // lands inside the open session's 30-min gap while the query is down
-    stream.addData(Seq((3L, t(12, 20), 1L, "view", 1.0)))
-    val q2 = startQuery()
-    try {
-      q2.processAllAvailable()
-      // close the session: watermark 16:00 − 1h = 15:00 > 12:50
-      stream.addData(Seq((9L, t(16), 2L, "click", 1.0)))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val sessA = buf.filter(_._1 == 1L)
-    assert(sessA.length == 1, s"user-1 sessions after restart: $sessA")
-    val (_, s0, e0, n0) = sessA.head
-    assert(s0 == t(12) && e0 == t(12, 50) && n0 == 3L,
-      s"merged session wrong: start $s0 end $e0 n $n0")
+    withTempDir("graft_ckpt_sess") { ckpt =>
+      def t(h: Int, m: Int = 0): Timestamp =
+        Timestamp.valueOf(f"2024-03-01 $h%02d:$m%02d:00")
+      val stream = MemoryStream[(Long, Timestamp, Long, String, Double)]
+      val buf = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Timestamp, Timestamp, Long)]
+      def startQuery() = stream.toDF()
+        .toDF("event_id", "ts", "user_id", "event_type", "value")
+        .withWatermark("ts", "1 hour")
+        .groupBy(session_window($"ts", "30 minutes").as("sw"), $"user_id")
+        .agg(count(lit(1)).as("n_events"))
+        .select($"user_id", $"sw.start".as("s"), $"sw.end".as("e"), $"n_events")
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          df.collect().foreach { r =>
+            buf += ((r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
+              r.getLong(3)))
+          }
+          ()
+        }.start()
+      val q1 = startQuery()
+      try {
+        stream.addData(Seq(
+          (1L, t(12), 1L, "view", 1.0), (2L, t(12, 10), 1L, "view", 1.0)))
+        q1.processAllAvailable()
+      } finally q1.stop()
+      // lands inside the open session's 30-min gap while the query is down
+      stream.addData(Seq((3L, t(12, 20), 1L, "view", 1.0)))
+      val q2 = startQuery()
+      try {
+        q2.processAllAvailable()
+        // close the session: watermark 16:00 − 1h = 15:00 > 12:50
+        stream.addData(Seq((9L, t(16), 2L, "click", 1.0)))
+        q2.processAllAvailable()
+      } finally q2.stop()
+      val sessA = buf.filter(_._1 == 1L)
+      assert(sessA.length == 1, s"user-1 sessions after restart: $sessA")
+      val (_, s0, e0, n0) = sessA.head
+      assert(s0 == t(12) && e0 == t(12, 50) && n0 == 3L,
+        s"merged session wrong: start $s0 end $e0 n $n0")
+    }
   }
 
   test("foreachBatch incremental DiD state equals the batch estimator") {

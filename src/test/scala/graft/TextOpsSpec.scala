@@ -131,27 +131,28 @@ class TextOpsSpec extends SparkSpec {
     // unique docs strips exactly the prefix intervals; a fully unique
     // doc is untouched (sf0.001 plants no exact doc dups, so this
     // property is pinned on a constructed corpus)
-    val dir = java.nio.file.Files.createTempDirectory("graft_boiler").toString
-    val shared = (0 until 10).map(k => s"hdr$k").mkString(" ")
-    val docs = Seq(
-      (0L, (0 until 20).map(k => s"dupa$k").mkString(" ")),
-      (1L, (0 until 20).map(k => s"dupa$k").mkString(" ")),
-      (2L, shared + " " + (0 until 15).map(k => s"tailb$k").mkString(" ")),
-      (3L, shared + " " + (0 until 15).map(k => s"tailc$k").mkString(" ")),
-      (4L, (0 until 20).map(k => s"uniq$k").mkString(" ")))
-    docs.toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("fx"))
-      .withColumn("n_chars", length($"text"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val fx = SparkEntry.queries("text_boilerplate_strip")(spark, dir)
-      .as[(Long, Long, Long, Long, Double)].collect()
-      .map(r => r._1 -> r).toMap
-    assert(fx(0L)._5 == 1.0 && fx(1L)._5 == 1.0, "dup pair not fully covered")
-    // shared 10-token prefix: flagged windows start at p=0..2, union
-    // covers tokens 0..9 (the prefix), nothing of the unique tails
-    assert(fx(2L)._3 == 10L && fx(3L)._3 == 10L,
-      s"prefix strip: ${fx(2L)._3}/${fx(3L)._3}")
-    assert(fx(4L)._3 == 0L, "unique doc stripped")
+    withTempDir("graft_boiler") { dir =>
+      val shared = (0 until 10).map(k => s"hdr$k").mkString(" ")
+      val docs = Seq(
+        (0L, (0 until 20).map(k => s"dupa$k").mkString(" ")),
+        (1L, (0 until 20).map(k => s"dupa$k").mkString(" ")),
+        (2L, shared + " " + (0 until 15).map(k => s"tailb$k").mkString(" ")),
+        (3L, shared + " " + (0 until 15).map(k => s"tailc$k").mkString(" ")),
+        (4L, (0 until 20).map(k => s"uniq$k").mkString(" ")))
+      docs.toDF("doc_id", "text")
+        .withColumn("lang", lit("en")).withColumn("source", lit("fx"))
+        .withColumn("n_chars", length($"text"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val fx = SparkEntry.queries("text_boilerplate_strip")(spark, dir)
+        .as[(Long, Long, Long, Long, Double)].collect()
+        .map(r => r._1 -> r).toMap
+      assert(fx(0L)._5 == 1.0 && fx(1L)._5 == 1.0, "dup pair not fully covered")
+      // shared 10-token prefix: flagged windows start at p=0..2, union
+      // covers tokens 0..9 (the prefix), nothing of the unique tails
+      assert(fx(2L)._3 == 10L && fx(3L)._3 == 10L,
+        s"prefix strip: ${fx(2L)._3}/${fx(3L)._3}")
+      assert(fx(4L)._3 == 0L, "unique doc stripped")
+    }
   }
 
   test("calibration bins partition the NB test split; ECE consistent") {
@@ -982,4 +983,29 @@ class TextOpsSpec extends SparkSpec {
       fx("s_d") == 186.0, s"fixture allocations $fx")
   }
 
+  test("each token rule is written once under src/main, in TextOps") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // Lexicons.scala holds the stopword list itself, not a rule over it
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "Lexicons.scala")
+      .map(p => p.getFileName.toString -> Files.readString(p)).toSeq
+    def sites(pattern: String): Map[String, Int] = sources
+      .map { case (f, src) => f -> pattern.r.findAllMatchIn(src).size }
+      .filter(_._2 > 0).toMap
+    val once = Map("TextOps.scala" -> 1)
+    // the whitespace tokenizer: a Column split(<column>, "\\s+") (the
+    // String.split inside MultimodalOps' mapPartitions takes no column)
+    // and its DuckDB twin
+    assert(sites("""split\([^\n]+, "\\\\s\+"\)""") == once)
+    assert(sites("string_split_regex") == once)
+    // every stopword probe, Column and SQL, reads the list in one place:
+    // no array_contains over an array built from it, no second SQL form
+    assert(sites("""stopwordsEn\b""") == once)
+    assert(sites("stopwordsEnSql") == once)
+    // the content-word filter (length >= 3, not a stopword) and its twin
+    assert(sites(">= 3 && !") == once)
+    assert(sites(">= 3 AND NOT") == once)
+  }
 }
