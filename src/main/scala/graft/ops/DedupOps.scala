@@ -155,15 +155,12 @@ object DedupOps {
     */
   def plantedEmbeddingCorpus(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val base = embeddings(s, d)
-      .withColumn("e", transform($"embedding", x => x.cast("double")))
-      .select($"vec_id", $"e")
+    val base = SimilarityOps.vectors(s, d).select($"vec_id", $"e")
     val planted = base.filter($"vec_id" % 50 === 0)
       .select(($"vec_id" + 100000).as("vec_id"),
         concat(array(element_at($"e", 1) + lit(0.1)),
           slice($"e", 2, SimilarityOps.Dim - 1)).as("e"))
-    base.union(planted)
-      .withColumn("norm", sqrt(graft.functions.VecDot.vec_dot($"e", $"e")))
+    base.union(planted).withColumn("norm", SimilarityOps.l2Norm($"e"))
   }
 
   /** The cached per-doc (doc_id, xs: array<long>) shingle-hash frame.
@@ -1086,9 +1083,7 @@ object DedupOps {
     "dedup_embedding_cosine" -> ((s, d) => {
       import s.implicits._
       val B = 8L
-      val v = embeddings(s, d)
-        .withColumn("e", transform($"embedding", x => x.cast("double")))
-        .withColumn("norm", sqrt(graft.functions.VecDot.vec_dot($"e", $"e")))
+      val v = SimilarityOps.vectors(s, d)
         .select($"vec_id", $"e", $"norm", pmod($"vec_id", lit(B)).as("blk"))
       // ALL B² ordered block pairs, not just i <= j: a pair with v1 < v2
       // but blk(v1) > blk(v2) is only reachable in the (blk(v1), blk(v2))
@@ -1103,7 +1098,7 @@ object DedupOps {
       a.join(broadcast(blockPairs), "b1")
         .join(b, "b2")
         .filter($"v1" < $"v2")
-        .withColumn("dot", graft.functions.VecDot.vec_dot($"e1", $"e2"))
+        .withColumn("dot", SimilarityOps.dot($"e1", $"e2"))
         .withColumn("cosine", round($"dot" / ($"n1" * $"n2"), 6))
         .filter($"cosine" >= 0.45)
         .select("v1", "v2", "cosine")
@@ -1129,25 +1124,22 @@ object DedupOps {
     "dedup_semantic" -> ((s, d) => {
       import s.implicits._
       val Tau = 0.3
-      val base = embeddings(s, d)
-        .withColumn("e", transform($"embedding", x => x.cast("double")))
-        .withColumn("norm", sqrt(graft.functions.VecDot.vec_dot($"e", $"e")))
-        .select($"vec_id", $"label", $"e", $"norm")
+      val base = SimilarityOps.vectors(s, d)
       val cent = base.select($"label", posexplode($"e"))
         .groupBy($"label", $"pos").agg(round(avg($"col"), 6).as("m"))
         .groupBy($"label").agg(
           transform(array_sort(collect_list(struct($"pos", $"m"))),
             x => x.getField("m")).as("c"))
-        .withColumn("cnorm", sqrt(graft.functions.VecDot.vec_dot($"c", $"c")))
+        .withColumn("cnorm", SimilarityOps.l2Norm($"c"))
       val cs = base.join(broadcast(cent), "label")
         .withColumn("cs", round(
-          graft.functions.VecDot.vec_dot($"e", $"c") / ($"norm" * $"cnorm"), 6))
+          SimilarityOps.dot($"e", $"c") / ($"norm" * $"cnorm"), 6))
         .select($"vec_id", $"label", $"e", $"norm", $"cs")
       val a = cs.toDF("v1", "label", "e1", "n1", "cs1")
       val b = cs.toDF("v2", "label", "e2", "n2", "cs2")
       val losers = a.join(b, "label")
         .filter($"v1" < $"v2")
-        .filter(round(graft.functions.VecDot.vec_dot($"e1", $"e2") /
+        .filter(round(SimilarityOps.dot($"e1", $"e2") /
           ($"n1" * $"n2"), 6) >= Tau)
         // keep the lower-centroid-similarity member; on a cs tie keep the
         // lower vec_id (v1 < v2 here, so ties drop v2)
@@ -1213,11 +1205,7 @@ object DedupOps {
     "dedup_embedding_lsh" -> ((s, d) => {
       import s.implicits._
       val corpus = plantedEmbeddingCorpus(s, d)
-      val bucketCols = (0 until SimilarityOps.NumLshTables).map(t =>
-        SimilarityOps.lshBucketFor(SimilarityOps.multiPlanes(t))($"e"))
-      val banded = corpus
-        .select($"vec_id", posexplode(array(bucketCols: _*)))
-        .toDF("vec_id", "tbl", "bucket")
+      val banded = SimilarityOps.multiBuckets(corpus)
       // distinct over the NARROW (v1, v2) key pairs — the wide vector
       // columns re-join afterwards so the dedup shuffle stays small.
       val cands = banded.toDF("v1", "tbl", "bucket")
@@ -1227,7 +1215,7 @@ object DedupOps {
       cands
         .join(corpus.toDF("v1", "e1", "n1"), "v1")
         .join(corpus.toDF("v2", "e2", "n2"), "v2")
-        .withColumn("dot", graft.functions.VecDot.vec_dot($"e1", $"e2"))
+        .withColumn("dot", SimilarityOps.dot($"e1", $"e2"))
         .withColumn("cosine", round($"dot" / ($"n1" * $"n2"), 6))
         .filter($"cosine" >= 0.9)
         .select("v1", "v2", "cosine")
@@ -1895,32 +1883,14 @@ object DedupOps {
          |LEFT JOIN ne ON nm.doc_id = ne.doc_id
          |ORDER BY nm.doc_id""".stripMargin,
     "dedup_embedding_cosine" ->
-      """WITH v AS (
-        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, e,
-        |    sqrt(list_reduce(list_prepend(0.0, list_transform(e, x -> x * x)),
-        |      (a, b) -> a + b)) AS norm
-        |  FROM v)
+      s"""WITH ${SimilarityOps.vectorsSql}
         |SELECT a.vec_id AS v1, b.vec_id AS v2,
-        |  ROUND(list_reduce(list_prepend(0.0,
-        |      list_transform(range(len(a.e)), i -> a.e[i+1] * b.e[i+1])),
-        |    (x, y) -> x + y) / (a.norm * b.norm), 6) AS cosine
+        |  ROUND(${SimilarityOps.dotSql("a.e", "b.e")} / (a.norm * b.norm), 6) AS cosine
         |FROM n a JOIN n b ON a.vec_id < b.vec_id
-        |WHERE list_reduce(list_prepend(0.0,
-        |    list_transform(range(len(a.e)), i -> a.e[i+1] * b.e[i+1])),
-        |  (x, y) -> x + y) / (a.norm * b.norm) >= 0.45
+        |WHERE ${SimilarityOps.dotSql("a.e", "b.e")} / (a.norm * b.norm) >= 0.45
         |ORDER BY v1, v2""".stripMargin,
     "dedup_semantic" ->
-      """WITH v AS (
-        |  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, label, e,
-        |    sqrt(list_reduce(list_prepend(0.0, list_transform(e, x -> x * x)),
-        |      (a, b) -> a + b)) AS norm
-        |  FROM v),
+      s"""WITH ${SimilarityOps.vectorsSql},
         |cm AS (
         |  SELECT label, i, ROUND(AVG(x), 6) AS m FROM (
         |    SELECT label, unnest(e) AS x, generate_subscripts(e, 1) AS i
@@ -1929,28 +1899,22 @@ object DedupOps {
         |cent AS (
         |  SELECT label, list(m ORDER BY i) AS c FROM cm GROUP BY label),
         |centn AS (
-        |  SELECT label, c,
-        |    sqrt(list_reduce(list_prepend(0.0, list_transform(c, x -> x * x)),
-        |      (a, b) -> a + b)) AS cnorm
+        |  SELECT label, c, ${SimilarityOps.l2NormSql("c")} AS cnorm
         |  FROM cent),
         |cs AS (
         |  SELECT vec_id, n.label, e, norm,
-        |    ROUND(list_reduce(list_prepend(0.0,
-        |        list_transform(range(len(e)), i -> e[i+1] * c[i+1])),
-        |      (x, y) -> x + y) / (norm * cnorm), 6) AS cs
+        |    ROUND(${SimilarityOps.dotSql("e", "c")} / (norm * cnorm), 6) AS cs
         |  FROM n JOIN centn ON n.label = centn.label),
         |losers AS (
         |  SELECT DISTINCT CASE WHEN a.cs > b.cs THEN a.vec_id ELSE b.vec_id END AS vec_id
         |  FROM cs a JOIN cs b ON a.label = b.label AND a.vec_id < b.vec_id
-        |  WHERE ROUND(list_reduce(list_prepend(0.0,
-        |      list_transform(range(len(a.e)), i -> a.e[i+1] * b.e[i+1])),
-        |    (x, y) -> x + y) / (a.norm * b.norm), 6) >= 0.3)
+        |  WHERE ROUND(${SimilarityOps.dotSql("a.e", "b.e")} / (a.norm * b.norm), 6) >= 0.3)
         |SELECT l.vec_id AS vec_id, cs.label, cs.cs
         |FROM losers l JOIN cs ON l.vec_id = cs.vec_id
         |ORDER BY cs.label, l.vec_id""".stripMargin,
     "dedup_embedding_lsh" ->
       s"""WITH base AS (
-         |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+         |  SELECT vec_id, ${SimilarityOps.widenedSql("embedding")} AS e
          |  FROM embeddings),
          |corpus AS (
          |  SELECT vec_id, e FROM base
@@ -1958,9 +1922,7 @@ object DedupOps {
          |  SELECT vec_id + 100000, list_concat([e[1] + 0.1], e[2:])
          |  FROM base WHERE vec_id % 50 = 0),
          |n AS (
-         |  SELECT vec_id, e,
-         |    sqrt(list_reduce(list_prepend(0.0, list_transform(e, x -> x * x)),
-         |      (a, b) -> a + b)) AS norm
+         |  SELECT vec_id, e, ${SimilarityOps.l2NormSql("e")} AS norm
          |  FROM corpus),
          |tb AS (
          |${SimilarityOps.multiBucketSql("n")}),

@@ -852,57 +852,15 @@ object MLOps {
   val KmK = 8
   val KmIters = 3
 
-  /** The double-widened embedding corpus the k-means trainer runs on. */
-  private[ops] def kmeansCorpus(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    embeddings(s, d)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("e"))
-  }
-
-  /** Per-centroid squared-L2 + id structs; array_min over this is the
-    * map-side assignment (ties break on centroid id).
-    */
-  private[graft] def kmeansDistArr(cents: Array[(Int, Seq[Double])]): Column = {
-    import org.apache.spark.sql.functions.{col => fcol}
-    require(cents.map(_._1).sorted.sameElements(cents.indices),
-      s"centroid keys must be 0 until ${cents.length}: ${cents.map(_._1).sorted.mkString(",")}")
-    // ONE transform over the k-ordered centroid literal instead of K
-    // unrolled distance trees (round 19, the pqNearestCode pattern):
-    // same zip_with/aggregate fold per centroid, same struct(d, k)
-    // elements — the transform index IS the centroid id because cents'
-    // keys are 0..K-1 by construction (zipWithIndex init, keys
-    // preserved across Lloyd rounds; the require above fails loudly if
-    // a trainer change ever breaks that) — so assignments/orderings are
-    // bit-identical while the expression tree shrinks ~Kx.
-    transform(typedLit(cents.sortBy(_._1).map(_._2)), (c, k) =>
-      struct(aggregate(zip_with(fcol("e"), c, (a, b) => (a - b) * (a - b)),
-        lit(0.0), (acc, x) => acc + x).as("d"), k.as("k")))
-  }
-
-  /** Runs the KmIters Lloyd rounds and returns the trained centroids —
-    * model-scale (K×dim) driver state, 6dp-rounded per round (see
-    * ml_kmeans scaladoc for why rounding makes the trajectory portable).
-    * Shared by ml_kmeans and the IVF index (SimilarityOps
-    * ann_ivf_kmeans_topk); a Memo.index entry.
+  /** The trained k-means centroids: [[SimilarityOps.lloyd]] with one
+    * subspace of width Dim, KmIters rounds. Model-scale (K×dim) driver
+    * state, 6dp-rounded per round (see the ml_kmeans scaladoc for why
+    * rounding makes the trajectory portable). Shared by ml_kmeans and the
+    * IVF indexes in SimilarityOps; a Memo.index entry.
     */
   private[ops] def kmeansCentroids(s: SparkSession, d: String): Array[(Int, Seq[Double])] =
     Memo.index("kmeans", s, d) {
-      import s.implicits._
-      val corpus = kmeansCorpus(s, d)
-      var cents: Array[(Int, Seq[Double])] = corpus.orderBy($"vec_id").limit(KmK)
-        .collect().zipWithIndex
-        .map { case (r, i) => (i, r.getSeq[Double](1)) }
-      for (_ <- 1 to KmIters) {
-        val means = corpus.withColumn("a", array_min(kmeansDistArr(cents)))
-          .select($"a.k".as("cid"), posexplode($"e"))
-          .groupBy($"cid", $"pos").agg(round(avg($"col"), 6).as("m"))
-          .groupBy($"cid").agg(
-            transform(array_sort(collect_list(struct($"pos", $"m"))),
-              x => x.getField("m")).as("c"))
-          .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-        cents = cents.map { case (k, old) => (k, means.getOrElse(k, old)) }
-      }
-      cents
+      SimilarityOps.lloyd(SimilarityOps.vectors(s, d), 1, SimilarityOps.Dim, KmK, KmIters).head
     }
 
   /** Ridge regularizer for ml_ridge_probe, in micro-quantized-feature²
@@ -934,14 +892,14 @@ object MLOps {
     // Output: per-cluster size, inertia, and centroid norm after 3 rounds.
     "ml_kmeans" -> ((s, d) => {
       import s.implicits._
-      val corpus = kmeansCorpus(s, d)
       val cents = kmeansCentroids(s, d)
       def round6(x: Double): Double =
         BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       val cnorms = cents.map { case (k, c) =>
         (k, round6(math.sqrt(c.foldLeft(0.0)((acc, x) => acc + x * x))))
       }.toMap
-      corpus.withColumn("a", array_min(kmeansDistArr(cents)))
+      SimilarityOps.vectors(s, d)
+        .withColumn("a", array_min(SimilarityOps.codeDists(cents, $"e")))
         .select($"a.k".as("cid"), $"a.d".as("d"))
         .groupBy($"cid").agg(count(lit(1)).as("n"), round(sum($"d"), 6).as("inertia"))
         .withColumn("cnorm",
@@ -962,9 +920,9 @@ object MLOps {
     // replays in DuckDB on top of the shared k-means training chain.
     "ml_kmeans_silhouette" -> ((s, d) => {
       import s.implicits._
-      val corpus = kmeansCorpus(s, d)
       val cents = kmeansCentroids(s, d)
-      corpus.withColumn("ds", array_sort(kmeansDistArr(cents)))
+      SimilarityOps.vectors(s, d)
+        .withColumn("ds", array_sort(SimilarityOps.codeDists(cents, $"e")))
         .select($"vec_id",
           element_at($"ds", 1).getField("k").as("cid"),
           element_at($"ds", 1).getField("d").as("a"),
@@ -1311,11 +1269,8 @@ object MLOps {
     // dominate and are map-side; iterations cost nothing.
     "emb_pca_power" -> ((s, d) => {
       import s.implicits._
-      val ex = embeddings(s, d)
-        .select($"vec_id",
-          slice(transform($"embedding", x => x.cast("double")), 1, PcaDim)
-            .as("x"))
-        .select($"vec_id", posexplode($"x"))
+      val ex = SimilarityOps.vectors(s, d)
+        .select($"vec_id", posexplode(slice($"e", 1, PcaDim)))
         .toDF("vec_id", "i", "xi")
       val mu = ex.groupBy($"i")
         .agg(sum(round($"xi" * 1e6, 0).cast("long")).as("zs"),
@@ -2470,32 +2425,19 @@ object MLOps {
        |    FROM tw)
        |  WHERE rk <= $TopWords)""".stripMargin
 
-  /** The kmeans CTE chain (v, c0, per-round d/a/m/c, fin = final
-    * assignments with distances) — shared verbatim by the ml_kmeans
-    * oracle and the IVF-index oracle in SimilarityOps.
-    */
   /** Final-centroid CTE name inside kmeansCtesSql (cid, c list) — for
     * oracles that rank query→centroid distances (the nprobe sweep).
     */
   private[ops] def kmeansFinalCentsCte: String = s"c$KmIters"
 
-  /** Squared-L2 between two DuckDB list expressions, same element-order
-    * fold as the trainer's inline form (and as kmeansDistArr's zip_with
-    * + aggregate on the Spark side).
+  /** The kmeans CTE chain (v, c0, per-round d/a/m/c, fin = final
+    * assignments with distances) — shared verbatim by the ml_kmeans
+    * oracle and the IVF-index oracle in SimilarityOps.
     */
-  private[ops] def kmeansDistSql(a: String, b: String): String =
-    s"""list_reduce(list_prepend(0.0, list_transform(range(len($a)),
-       |      i -> ($a[i+1] - $b[i+1]) * ($a[i+1] - $b[i+1]))),
-       |    (x, y) -> x + y)""".stripMargin
-
   private[ops] val kmeansCtesSql: String = {
-    val fold = (a: String, b: String) =>
-      s"""list_reduce(list_prepend(0.0, list_transform(range(len($a)),
-         |      i -> ($a[i+1] - $b[i+1]) * ($a[i+1] - $b[i+1]))),
-         |    (x, y) -> x + y)""".stripMargin
     val iters = (1 to KmIters).map { t =>
       s"""d$t AS MATERIALIZED (
-         |  SELECT v.vec_id, v.e, c.cid, ${fold("v.e", "c.c")} AS d
+         |  SELECT v.vec_id, v.e, c.cid, ${SimilarityOps.sqDistSql("v.e", "c.c")} AS d
          |  FROM v CROSS JOIN c${t - 1} c),
          |a$t AS MATERIALIZED (
          |  SELECT vec_id, e, cid FROM (
@@ -2514,7 +2456,7 @@ object MLOps {
          |  ON p.cid = n.cid)""".stripMargin
     }.mkString(",\n")
     s"""v AS MATERIALIZED (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+       |  SELECT vec_id, ${SimilarityOps.widenedSql("embedding")} AS e
        |  FROM embeddings),
        |c0 AS MATERIALIZED (
        |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid, e AS c
@@ -2522,9 +2464,9 @@ object MLOps {
        |$iters,
        |fin AS MATERIALIZED (
        |  SELECT vec_id, cid, d FROM (
-       |    SELECT v.vec_id, c.cid, ${fold("v.e", "c.c")} AS d,
+       |    SELECT v.vec_id, c.cid, ${SimilarityOps.sqDistSql("v.e", "c.c")} AS d,
        |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |        ${fold("v.e", "c.c")} ASC, c.cid ASC) AS rn
+       |        ${SimilarityOps.sqDistSql("v.e", "c.c")} ASC, c.cid ASC) AS rn
        |    FROM v CROSS JOIN c$KmIters c) WHERE rn = 1)""".stripMargin
   }
 
@@ -2605,8 +2547,7 @@ object MLOps {
   private val kmeansSql: String =
     s"""WITH $kmeansCtesSql
        |SELECT fin.cid, COUNT(*) AS n, ROUND(SUM(d), 6) AS inertia,
-       |  ANY_VALUE(ROUND(sqrt(list_reduce(list_prepend(0.0,
-       |    list_transform(cc.c, x -> x * x)), (x, y) -> x + y)), 6)) AS cnorm
+       |  ANY_VALUE(ROUND(${SimilarityOps.l2NormSql("cc.c")}, 6)) AS cnorm
        |FROM fin JOIN c$KmIters cc ON fin.cid = cc.cid
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
@@ -2623,14 +2564,10 @@ object MLOps {
 
   val oracles: Map[String, String] = Map(
     "ml_kmeans" -> kmeansSql,
-    "ml_kmeans_silhouette" -> {
-      val fold = (a: String, b: String) =>
-        s"""list_reduce(list_prepend(0.0, list_transform(range(len($a)),
-           |      i -> ($a[i+1] - $b[i+1]) * ($a[i+1] - $b[i+1]))),
-           |    (x, y) -> x + y)""".stripMargin
+    "ml_kmeans_silhouette" ->
       s"""WITH $kmeansCtesSql,
          |dall AS MATERIALIZED (
-         |  SELECT v.vec_id, c.cid, ${fold("v.e", "c.c")} AS d
+         |  SELECT v.vec_id, c.cid, ${SimilarityOps.sqDistSql("v.e", "c.c")} AS d
          |  FROM v CROSS JOIN c$KmIters c),
          |rk AS (
          |  SELECT vec_id, cid, d,
@@ -2650,8 +2587,7 @@ object MLOps {
          |SELECT cid, COUNT(*) AS n,
          |  ROUND(CAST(SUM(sm) AS DOUBLE) / COUNT(*) / 1000000.0, 6)
          |    AS mean_silhouette
-         |FROM sm GROUP BY 1 ORDER BY 1""".stripMargin
-    },
+         |FROM sm GROUP BY 1 ORDER BY 1""".stripMargin,
     "lda_em_topics" -> ldaEmTopicsSql,
     // the distributed treeAggregate fit computes the identical model —
     // one oracle serves both (the differential IS the claim)
@@ -2824,7 +2760,7 @@ object MLOps {
       }.mkString(",\n")
       s"""WITH x AS (
          |  SELECT vec_id,
-         |    list_transform(embedding[1:$PcaDim], e -> CAST(e AS DOUBLE)) AS x
+         |    ${SimilarityOps.widenedSql(s"embedding[1:$PcaDim]")} AS x
          |  FROM embeddings),
          |ex AS (
          |  SELECT vec_id, i, x[i + 1] AS xi

@@ -6,9 +6,14 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 /** The engine's one cache of trained models and pinned frames, keyed on
   * (kind, session, input fingerprint, params). The fingerprint is the
   * input dir plus (relative path, length, mtime) of every file under it,
-  * listed on every lookup, so a dir rewritten in place misses and rebuilds. That first miss also drops the dir's older
-  * entries and unpersists their frames: Spark's cache manager matches
-  * plans by path and would otherwise serve the rebuild the old bytes.
+  * listed on every lookup, so a dir rewritten in place misses and
+  * rebuilds. Every miss also drops each entry of the same session whose
+  * input (dir and file list) differs from the new key's, index and
+  * per-pass alike, and unpersists its frames. So a session holds the
+  * entries of one input at a time: a rewritten dir cannot be served the
+  * old bytes by Spark's cache manager, which matches plans by path, and
+  * a session that moves to a new snapshot dir each day does not keep
+  * every earlier day's frames pinned.
   *
   * Two lifecycles, a policy about what Bench re-times after `clearState`:
   *   - [[index]] survives [[clear]]: trained indexes and the model-selection
@@ -63,7 +68,7 @@ object Memo {
   private def lookup[T](k: Key, perPass: Boolean, build: => T): T =
     entries.getOrElseUpdate(k, {
       entries.foreach { case (o, e) =>
-        if ((o.session eq k.session) && o.dir == k.dir && o.files != k.files &&
+        if ((o.session eq k.session) && (o.dir != k.dir || o.files != k.files) &&
           entries.remove(o, e)) unpersist(e.value)
       }
       Entry(build, perPass)

@@ -140,28 +140,96 @@ object SimilarityOps {
     * driver state, a Memo.index entry.
     */
   private def pqTrain(s: SparkSession, d: String): Array[Array[(Int, Seq[Double])]] =
-    Memo.index("pq_flat", s, d)(pqTrainOn(s, graft.ops.MLOps.kmeansCorpus(s, d)))
+    Memo.index("pq_flat", s, d)(lloyd(vectors(s, d), PqM, PqSubDim, PqK, PqIters))
 
-  /** Trains the M per-subspace codebooks simultaneously — one corpus
-    * pass + one (m, code, pos) shuffle per Lloyd round; codewords round
-    * to 6dp per round so the trajectory is engine-portable. Init: the
-    * K' smallest vec_ids' subvectors. Empty codes keep their previous
-    * codeword. `corpus` must expose (vec_id, e: array<double>) — the raw
-    * embeddings for the flat index, per-cell residuals for IVF-ADC.
+  // ---- the vector primitives: each written once, beside its SQL twin ----
+
+  /** The corpus every vector op reads, (vec_id, label, e, norm): the
+    * embedding widened to double before any arithmetic, and its L2 norm.
+    * Callers select what they need; column pruning drops the rest.
     */
-  private def pqTrainOn(s: SparkSession, corpus: DataFrame): Array[Array[(Int, Seq[Double])]] = {
+  private[ops] def vectors(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val initVecs = corpus.orderBy($"vec_id").limit(PqK).collect()
-      .zipWithIndex.map { case (r, k) => (k, r.getSeq[Double](1)) }
-    var cbs: Array[Array[(Int, Seq[Double])]] = Array.tabulate(PqM)(m =>
-      initVecs.map { case (k, e) =>
-        (k, e.slice(m * PqSubDim, m * PqSubDim + PqSubDim))
-      })
-    for (_ <- 1 to PqIters) {
-      val groups = corpus.select($"vec_id", explode(array((0 until PqM).map { m =>
-          val sub = slice($"e", m * PqSubDim + 1, PqSubDim)
-          struct(lit(m).as("m"),
-            pqNearestCode(cbs(m), sub).as("code"),
+    embeddings(s, d)
+      .select($"vec_id", $"label", transform($"embedding", x => x.cast("double")).as("e"))
+      .withColumn("norm", l2Norm($"e"))
+  }
+
+  private[ops] def widenedSql(embedding: String): String =
+    s"list_transform($embedding, x -> CAST(x AS DOUBLE))"
+
+  /** Codegen'd MAC loop; same fold order as the oracle's list_reduce. */
+  private[ops] def dot(a: Column, b: Column): Column =
+    graft.functions.VecDot.vec_dot(a, b)
+
+  /** The dot product's DuckDB twin over the first `n` elements (all Dim
+    * by default; a prefix length for truncated search).
+    */
+  private[ops] def dotSql(a: String, b: String, n: String = s"$Dim"): String =
+    s"""list_reduce(list_prepend(0.0,
+       |  list_transform(range($n), i -> $a[i+1] * $b[i+1])),
+       |  (x, y) -> x + y)""".stripMargin
+
+  private[ops] def l2Norm(e: Column): Column = sqrt(dot(e, e))
+
+  private[ops] def l2NormSql(e: String): String =
+    s"""sqrt(list_reduce(list_prepend(0.0, list_transform($e, x -> x * x)),
+       |      (a, b) -> a + b))""".stripMargin
+
+  /** Squared L2 distance as a left fold from 0.0 in element order, the
+    * same IEEE sequence in both engines.
+    */
+  private def sqDist(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
+
+  /** [[sqDist]]'s DuckDB twin over the elements of `b`, reading `a` from
+    * offset `aOff` when `a` is a whole vector and `b` one subspace's
+    * codeword.
+    */
+  private[ops] def sqDistSql(a: String, b: String, aOff: String = ""): String = {
+    val ai = if (aOff.isEmpty) s"$a[i+1]" else s"$a[$aOff + i + 1]"
+    s"""list_reduce(list_prepend(0.0, list_transform(range(len($b)),
+       |      i -> ($ai - $b[i+1]) * ($ai - $b[i+1]))),
+       |    (x, y) -> x + y)""".stripMargin
+  }
+
+  /** One (d, k) struct per codeword of `cb`, k ascending, with d the
+    * squared L2 from `v`: `array_min(...).k` is the nearest code (ties to
+    * the lower id), `array_sort` the probe order. ONE transform over the
+    * k-ordered codebook literal instead of K unrolled distance trees, so
+    * the expression tree stays small (128 unrolled aggregate trees
+    * re-optimized every pass were where the ann_pq/ann_ivfpq cost sat).
+    * The transform index is read as the code id, which needs the keys to
+    * be exactly 0 until K; the require makes a gapped codebook fail
+    * instead of mislabelling every code.
+    */
+  private[graft] def codeDists(cb: Array[(Int, Seq[Double])], v: Column): Column = {
+    require(cb.map(_._1).sorted.sameElements(cb.indices),
+      s"codebook keys must be 0 until ${cb.length}: ${cb.map(_._1).sorted.mkString(",")}")
+    transform(typedLit(cb.sortBy(_._1).map(_._2)), (c, k) =>
+      struct(sqDist(v, c).as("d"), k.as("k")))
+  }
+
+  /** Lloyd's k-means over `m` subspaces of width `w` at once: plain
+    * k-means is m = 1, w = Dim; PQ trains its PqM codebooks together.
+    * One corpus pass plus one (m, code, pos) shuffle per round. Init: the
+    * k smallest vec_ids' subvectors. Codewords round to 6dp per round, so
+    * the trajectory is engine-portable; an empty code keeps its previous
+    * codeword. `corpus` exposes (vec_id, e): the raw embeddings for
+    * k-means and the flat PQ index, per-cell residuals for IVF-ADC.
+    */
+  private[ops] def lloyd(corpus: DataFrame, m: Int, w: Int, k: Int, iters: Int)
+      : Array[Array[(Int, Seq[Double])]] = {
+    import corpus.sparkSession.implicits._
+    val c = corpus.select($"vec_id", $"e")
+    val init = c.orderBy($"vec_id").limit(k).collect().map(_.getSeq[Double](1))
+    var cbs = Array.tabulate(m)(j =>
+      init.zipWithIndex.map { case (e, i) => (i, e.slice(j * w, j * w + w)) })
+    for (_ <- 1 to iters) {
+      val groups = c.select(explode(array((0 until m).map { j =>
+          val sub = slice($"e", j * w + 1, w)
+          struct(lit(j).as("m"),
+            array_min(codeDists(cbs(j), sub)).getField("k").as("code"),
             sub.as("sub"))
         }: _*)).as("g"))
         .select($"g.m", $"g.code", posexplode($"g.sub"))
@@ -170,34 +238,29 @@ object SimilarityOps {
           transform(array_sort(collect_list(struct($"pos", $"v"))),
             x => x.getField("v")).as("c"))
         .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2)).toMap
-      cbs = Array.tabulate(PqM)(m => cbs(m).map { case (k, old) =>
-        (k, groups.getOrElse((m, k), old))
+      cbs = Array.tabulate(m)(j => cbs(j).map { case (i, old) =>
+        (i, groups.getOrElse((j, i), old))
       })
     }
     cbs
   }
 
-  /** Nearest-codeword id for one subvector: ONE transform over the
-    * k-ordered codebook literal instead of K' unrolled distance trees.
-    * The argmin arithmetic is unchanged — the same zip_with/aggregate
-    * fold per codeword, the same struct(d, k) array_min with ties to
-    * the smaller k (the transform index IS the codeword id because cbs
-    * is k-ascending, and every site sorts by k anyway) — so assignments
-    * are bit-identical; only the expression tree shrinks ~K'x. That
-    * tree size was where the measured ann_pq/ann_ivfpq cost sat (128
-    * unrolled aggregate trees re-optimized every pass — guide §3.3/§7.3:
-    * planning time itself as the bottleneck). The index-as-id reading
-    * needs the codebook keys to be exactly 0 until K'; the require makes
-    * a gapped codebook fail instead of mislabelling every code.
+  /** The PqM code columns `code_m` of vector column `v`. */
+  private def pqCodes(cbs: Array[Array[(Int, Seq[Double])]], v: Column): Seq[Column] =
+    (0 until PqM).map { m =>
+      array_min(codeDists(cbs(m), slice(v, m * PqSubDim + 1, PqSubDim)))
+        .getField("k").as(s"code_$m")
+    }
+
+  /** ADC distance of query vector `q` to a coded row: per subspace the
+    * squared L2 to the codeword its `code_m` selects, summed in fixed
+    * m-order, so the value is exact in both engines.
     */
-  private[graft] def pqNearestCode(cb: Array[(Int, Seq[Double])], sub: Column): Column = {
-    require(cb.map(_._1).sorted.sameElements(cb.indices),
-      s"codebook keys must be 0 until ${cb.length}: ${cb.map(_._1).sorted.mkString(",")}")
-    array_min(transform(typedLit(cb.sortBy(_._1).map(_._2)), (c, k) =>
-      struct(aggregate(zip_with(sub, c, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x).as("d"), k.as("k"))))
-      .getField("k")
-  }
+  private def adc(cbs: Array[Array[(Int, Seq[Double])]], q: Column): Column =
+    (0 until PqM).map { m =>
+      sqDist(slice(q, m * PqSubDim + 1, PqSubDim),
+        element_at(typedLit(cbs(m).sortBy(_._1).map(_._2)), col(s"code_$m") + 1))
+    }.reduce(_ + _)
 
   /** The trained coarse centroids as one k-ordered literal array —
     * element_at(…, cid+1) is the broadcast centroid lookup both the
@@ -214,9 +277,8 @@ object SimilarityOps {
   private def ivfAssigned(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val cents = graft.ops.MLOps.kmeansCentroids(s, d)
-    graft.ops.MLOps.kmeansCorpus(s, d)
-      .withColumn("cid", array_min(graft.ops.MLOps.kmeansDistArr(cents)).getField("k"))
-      .withColumn("norm", sqrt(graft.functions.VecDot.vec_dot($"e", $"e")))
+    vectors(s, d).select($"vec_id", $"e", $"norm")
+      .withColumn("cid", array_min(codeDists(cents, $"e")).getField("k"))
       .withColumn("re", zip_with($"e", element_at(centArr(s, d), $"cid" + 1),
         (x, c) => x - c))
   }
@@ -230,7 +292,8 @@ object SimilarityOps {
   private def ivfResidualCbs(s: SparkSession, d: String): Array[Array[(Int, Seq[Double])]] =
     Memo.index("pq_ivf_residual", s, d) {
       import s.implicits._
-      pqTrainOn(s, ivfAssigned(s, d).select($"vec_id", $"re".as("e")).localCheckpoint())
+      lloyd(ivfAssigned(s, d).select($"vec_id", $"re".as("e")).localCheckpoint(),
+        PqM, PqSubDim, PqK, PqIters)
     }
 
   /** Deterministic hyperplanes: java.util.Random(42) Gaussians (the LCG and
@@ -264,30 +327,18 @@ object SimilarityOps {
   /** Sign-bucket of a (double) embedding under an arbitrary plane set. */
   def lshBucketFor(planeSet: Array[Array[Double]])(e: Column): Column =
     planeSet.zipWithIndex.map { case (p, j) =>
-      when(graft.functions.VecDot.vec_dot(e, array(p.toIndexedSeq.map(lit): _*)) > 0,
+      when(dot(e, array(p.toIndexedSeq.map(lit): _*)) > 0,
         lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** double-widened embedding + L2 norm. */
-  private def prepared(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    embeddings(s, d)
-      .withColumn("e", transform($"embedding", x => x.cast("double")))
-      .withColumn("norm", sqrt(graft.functions.VecDot.vec_dot($"e", $"e")))
-      .select($"vec_id", $"label", $"e", $"norm")
-  }
-
-  /** Codegen'd MAC loop; same fold order as the oracle's list_reduce. */
-  private def dot(a: Column, b: Column): Column =
-    graft.functions.VecDot.vec_dot(a, b)
-
-  /** 6-bit hyperplane sign bucket of a (double) embedding column. */
-  def lshBucket(e: Column): Column = {
-    val bits = planes.zipWithIndex.map { case (p, j) =>
-      val planeCol = array(p.toIndexedSeq.map(lit): _*)
-      when(dot(e, planeCol) > 0, lit(1L << j)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
+  /** (vec_id, tbl, bucket) rows, one per LSH table: the Spark twin of
+    * [[multiBucketSql]].
+    */
+  private[ops] def multiBuckets(v: DataFrame): DataFrame = {
+    import v.sparkSession.implicits._
+    v.select($"vec_id", posexplode(array((0 until NumLshTables).map(t =>
+        lshBucketFor(multiPlanes(t))($"e")): _*)))
+      .toDF("vec_id", "tbl", "bucket")
   }
 
   private def topkWithin(s: SparkSession, pairs: DataFrame): DataFrame = {
@@ -305,7 +356,7 @@ object SimilarityOps {
     // Exact ANN baseline: top-5 cosine neighbors for the first 20 vectors.
     "ann_cosine_topk" -> ((s, d) => {
       import s.implicits._
-      val v = prepared(s, d)
+      val v = vectors(s, d)
       val q = v.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"e".as("qe"), $"norm".as("qn"))
       val pairs = v.join(broadcast(q), $"vec_id" =!= $"query_id")
@@ -327,7 +378,7 @@ object SimilarityOps {
     // candidate.
     "ann_filtered_topk" -> ((s, d) => {
       import s.implicits._
-      val v = prepared(s, d)
+      val v = vectors(s, d)
       val meta = documents(s, d).select($"doc_id".as("vec_id"), $"lang")
       val q = v.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"e".as("qe"), $"norm".as("qn"))
@@ -359,7 +410,7 @@ object SimilarityOps {
     // (left join) rather than silently dropping the anchor.
     "emb_hard_negatives" -> ((s, d) => {
       import s.implicits._
-      val v = prepared(s, d)
+      val v = vectors(s, d)
       val q = v.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"label".as("qlabel"),
           $"e".as("qe"), $"norm".as("qn"))
@@ -406,7 +457,7 @@ object SimilarityOps {
     // .limit(ShapTop) (TakeOrderedAndProject caps the frame first).
     "ml_knn_shapley" -> ((s, d) => {
       import s.implicits._
-      val v = prepared(s, d)
+      val v = vectors(s, d)
       val q = v.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"label".as("qlabel"),
           $"e".as("qe"), $"norm".as("qn"))
@@ -434,7 +485,7 @@ object SimilarityOps {
     // bucket-restriction semantics.
     "ml_knn_shapley_lsh" -> ((s, d) => {
       import s.implicits._
-      val v = prepared(s, d).withColumn("bucket", lshBucket($"e"))
+      val v = vectors(s, d).withColumn("bucket", lshBucketFor(planes)($"e"))
       val q = v.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"label".as("qlabel"),
           $"e".as("qe"), $"norm".as("qn"), $"bucket".as("qbucket"))
@@ -613,7 +664,7 @@ object SimilarityOps {
       val wl = Window.partitionBy($"qdoc").orderBy(desc("score"), asc("doc_id"))
       val lex = lexScore.withColumn("lr", row_number().over(wl))
         .filter($"lr" <= Depth).select($"qdoc", $"doc_id", $"lr")
-      val v = prepared(s, d)
+      val v = vectors(s, d)
       val qv = v.join(broadcast(qdocs), $"vec_id" === $"qdoc")
         .select($"qdoc", $"e".as("qe"), $"norm".as("qn"))
       val wd = Window.partitionBy($"qdoc").orderBy(desc("cos"), asc("doc_id"))
@@ -645,9 +696,8 @@ object SimilarityOps {
       val PerCluster = ClusterQuota
       val cents = graft.ops.MLOps.kmeansCentroids(s, d)
       val w = Window.partitionBy($"cid").orderBy(asc("h"), asc("vec_id"))
-      graft.ops.MLOps.kmeansCorpus(s, d)
-        .withColumn("cid", array_min(graft.ops.MLOps.kmeansDistArr(cents))
-          .getField("k"))
+      vectors(s, d)
+        .withColumn("cid", array_min(codeDists(cents, $"e")).getField("k"))
         .withColumn("h", graft.functions.PolyHash.poly_hash(
           $"vec_id".cast("string")))
         .withColumn("rk", row_number().over(w))
@@ -676,7 +726,7 @@ object SimilarityOps {
       val Lambda = MmrLambda
       val Depth = FusionDepth
       val Picks = MmrPicks
-      val v = prepared(s, d)
+      val v = vectors(s, d)
       val qdocs = documents(s, d)
         .filter(pmod(graft.functions.PolyHash.poly_hash(
           $"doc_id".cast("string")), lit(50L)) === 0)
@@ -759,7 +809,7 @@ object SimilarityOps {
     // per-candidate min aggregate.
     "sample_coreset_kcenter" -> ((s, d) => {
       import s.implicits._
-      val v = prepared(s, d).localCheckpoint(false) // KcPicks passes + radius
+      val v = vectors(s, d).localCheckpoint(false) // KcPicks passes + radius
       def minDistTo(sel: DataFrame): DataFrame = {
         val selv = v.join(sel.select($"vec_id"), "vec_id")
           .select($"e".as("se"), $"norm".as("sn"))
@@ -805,7 +855,7 @@ object SimilarityOps {
     // dim-bounded.
     "emb_isotropy" -> ((s, d) => {
       import s.implicits._
-      val v = prepared(s, d)
+      val v = vectors(s, d)
       val dims = v.select($"norm", posexplode($"e").as(Seq("dim", "x")))
         .select($"dim",
           round($"x" / $"norm" * 1e9, 0).cast("long").as("xq"))
@@ -826,7 +876,7 @@ object SimilarityOps {
     // 16-bit hyperplane bucket (the approximate scale path).
     "ann_lsh_topk" -> ((s, d) => {
       import s.implicits._
-      val v = prepared(s, d).withColumn("bucket", lshBucket($"e"))
+      val v = vectors(s, d).withColumn("bucket", lshBucketFor(planes)($"e"))
       val q = v.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"e".as("qe"), $"norm".as("qn"),
           $"bucket".as("qbucket"))
@@ -844,11 +894,8 @@ object SimilarityOps {
     // per-table k — see planesFor).
     "ann_lsh_multi_topk" -> ((s, d) => {
       import s.implicits._
-      val v = prepared(s, d)
-      val ids = v.select($"vec_id",
-          posexplode(array((0 until NumLshTables).map(t =>
-            lshBucketFor(multiPlanes(t))($"e")): _*)))
-        .toDF("vec_id", "tbl", "bucket")
+      val v = vectors(s, d)
+      val ids = multiBuckets(v)
       val qIds = ids.filter($"vec_id" < NumQueries)
         .toDF("query_id", "tbl", "bucket")
       val candIds = ids.join(broadcast(qIds), Seq("tbl", "bucket"))
@@ -866,7 +913,7 @@ object SimilarityOps {
     // so the probe scans 1/n_cells of the corpus).
     "ann_ivf_label_topk" -> ((s, d) => {
       import s.implicits._
-      val v = prepared(s, d)
+      val v = vectors(s, d)
       val q = v.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"e".as("qe"), $"norm".as("qn"),
           $"label".as("qlabel"))
@@ -890,9 +937,8 @@ object SimilarityOps {
     "ann_ivf_kmeans_topk" -> ((s, d) => {
       import s.implicits._
       val cents = MLOps.kmeansCentroids(s, d)
-      val assigned = MLOps.kmeansCorpus(s, d)
-        .withColumn("a", array_min(MLOps.kmeansDistArr(cents)))
-        .withColumn("norm", sqrt(graft.functions.VecDot.vec_dot($"e", $"e")))
+      val assigned = vectors(s, d)
+        .withColumn("a", array_min(codeDists(cents, $"e")))
         .select($"vec_id", $"a.k".as("cid"), $"e", $"norm")
       val q = assigned.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"cid", $"e".as("qe"), $"norm".as("qn"))
@@ -918,13 +964,12 @@ object SimilarityOps {
       import s.implicits._
       val cents = MLOps.kmeansCentroids(s, d)
       val probes = Seq(1, 2, 4, 8)
-      val assigned = MLOps.kmeansCorpus(s, d)
-        .withColumn("a", array_min(MLOps.kmeansDistArr(cents)))
-        .withColumn("norm", sqrt(graft.functions.VecDot.vec_dot($"e", $"e")))
+      val assigned = vectors(s, d)
+        .withColumn("a", array_min(codeDists(cents, $"e")))
         .select($"vec_id", $"a.k".as("cid"), $"e", $"norm")
         .localCheckpoint(false)
       val q = assigned.filter($"vec_id" < NumQueries)
-        .withColumn("po", array_sort(MLOps.kmeansDistArr(cents)))
+        .withColumn("po", array_sort(codeDists(cents, $"e")))
         .select($"vec_id".as("query_id"), $"e".as("qe"), $"norm".as("qn"),
           explode(array(probes.map(np => struct(lit(np).as("nprobe"),
             slice($"po", 1, np).getField("k").as("cells"))): _*)).as("p"))
@@ -1020,28 +1065,14 @@ object SimilarityOps {
     "ann_pq_topk" -> ((s, d) => {
       import s.implicits._
       val cbs = pqTrain(s, d)
-      val corpus = graft.ops.MLOps.kmeansCorpus(s, d)
-        .withColumn("norm", sqrt(graft.functions.VecDot.vec_dot($"e", $"e")))
-      def subCol(m: Int): Column = slice($"e", m * PqSubDim + 1, PqSubDim)
-      val codeCols = (0 until PqM).map { m =>
-        pqNearestCode(cbs(m), subCol(m)).as(s"code_$m")
-      }
+      val corpus = vectors(s, d)
       val coded = corpus.select(
-        ($"vec_id" +: $"e".as("e") +: $"norm".as("norm") +: codeCols): _*)
+        ($"vec_id" +: $"e" +: $"norm" +: pqCodes(cbs, $"e")): _*)
       val q = corpus.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"e".as("qe"), $"norm".as("qn"))
-      // ADC: per-subspace fold against the codeword selected by the
-      // corpus row's code, summed in fixed m-order (exact both engines)
-      def qsub(m: Int): Column = slice($"qe", m * PqSubDim + 1, PqSubDim)
-      val adc = (0 until PqM).map { m =>
-        val cw = element_at(
-          typedLit(cbs(m).sortBy(_._1).map(_._2)), col(s"code_$m") + 1)
-        aggregate(zip_with(qsub(m), cw, (x, y) => (x - y) * (x - y)),
-          lit(0.0), (acc, x) => acc + x)
-      }.reduce(_ + _)
       val wA = Window.partitionBy($"query_id").orderBy(asc("adc"), asc("vec_id"))
       val cands = coded.join(broadcast(q), $"vec_id" =!= $"query_id")
-        .withColumn("adc", adc)
+        .withColumn("adc", adc(cbs, $"qe"))
         .withColumn("arank", row_number().over(wA))
         .filter($"arank" <= 2 * TopK)
       val rescored = cands
@@ -1069,32 +1100,21 @@ object SimilarityOps {
       import s.implicits._
       val cents = MLOps.kmeansCentroids(s, d)
       val rcbs = ivfResidualCbs(s, d)
-      val codeCols = (0 until PqM).map { m =>
-        pqNearestCode(rcbs(m), slice($"re", m * PqSubDim + 1, PqSubDim))
-          .as(s"code_$m")
-      }
       val coded = ivfAssigned(s, d).select(
-        ($"vec_id" +: $"cid" +: $"e" +: $"norm" +: codeCols): _*)
+        ($"vec_id" +: $"cid" +: $"e" +: $"norm" +: pqCodes(rcbs, $"re")): _*)
       // query probe: top-nprobe cells by centroid distance (ties cid),
       // with the query's per-cell residual for the ADC
-      val qp = graft.ops.MLOps.kmeansCorpus(s, d)
+      val qp = vectors(s, d)
         .filter($"vec_id" < NumQueries)
-        .withColumn("qn", sqrt(graft.functions.VecDot.vec_dot($"e", $"e")))
-        .select($"vec_id".as("query_id"), $"e".as("qe"), $"qn",
-          explode(slice(array_sort(MLOps.kmeansDistArr(cents)), 1, Nprobe)).as("pr"))
+        .select($"vec_id".as("query_id"), $"e".as("qe"), $"norm".as("qn"),
+          explode(slice(array_sort(codeDists(cents, $"e")), 1, Nprobe)).as("pr"))
         .select($"query_id", $"qe", $"qn", $"pr.k".as("cid"))
         .withColumn("qre", zip_with($"qe", element_at(centArr(s, d), $"cid" + 1),
           (x, c) => x - c))
-      val adc = (0 until PqM).map { m =>
-        val cw = element_at(
-          typedLit(rcbs(m).sortBy(_._1).map(_._2)), col(s"code_$m") + 1)
-        aggregate(zip_with(slice($"qre", m * PqSubDim + 1, PqSubDim), cw,
-          (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-      }.reduce(_ + _)
       val wA = Window.partitionBy($"query_id").orderBy(asc("adc"), asc("vec_id"))
       val cands = coded.join(broadcast(qp), Seq("cid"))
         .filter($"vec_id" =!= $"query_id")
-        .withColumn("adc", adc)
+        .withColumn("adc", adc(rcbs, $"qre"))
         .withColumn("arank", row_number().over(wA))
         .filter($"arank" <= IvfRescoreK)
       topkWithin(s, cands
@@ -1103,7 +1123,7 @@ object SimilarityOps {
 
     "ann_sq8_topk" -> ((s, d) => {
       import s.implicits._
-      val v = prepared(s, d)
+      val v = vectors(s, d)
       val rngRows = v.select(posexplode($"e")).toDF("pos", "x")
         .groupBy($"pos").agg(min($"x").as("lo"), max($"x").as("hi"))
         .orderBy("pos").collect()
@@ -1142,7 +1162,7 @@ object SimilarityOps {
     // the bytes — this query IS the eval that picks d.
     "ann_matryoshka_recall" -> ((s, d) => {
       import s.implicits._
-      val v = prepared(s, d)
+      val v = vectors(s, d)
       val q = v.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"e".as("qe"), $"norm".as("qn"))
       val wF = Window.partitionBy($"query_id").orderBy(desc("cos_full"), asc("vec_id"))
@@ -1152,16 +1172,14 @@ object SimilarityOps {
         .filter($"rank" <= TopK)
         .select($"query_id".as("eq"), $"vec_id".as("ev"))
       val truncDims = Seq(8, 16, 32, 64)
-      def tnorm(c: Column, dd: Column): Column =
-        sqrt(graft.functions.VecDot.vec_dot(slice(c, lit(1), dd), slice(c, lit(1), dd)))
       val wT = Window.partitionBy($"dim", $"query_id")
         .orderBy(desc("cos_t"), asc("vec_id"))
       val trunc = v.join(broadcast(q), $"vec_id" =!= $"query_id")
         .select($"vec_id", $"e", $"query_id", $"qe",
           explode(typedLit(truncDims)).as("dim"))
         .withColumn("cos_t",
-          graft.functions.VecDot.vec_dot(slice($"e", lit(1), $"dim"), slice($"qe", lit(1), $"dim")) /
-            (tnorm($"e", $"dim") * tnorm($"qe", $"dim")))
+          dot(slice($"e", lit(1), $"dim"), slice($"qe", lit(1), $"dim")) /
+            (l2Norm(slice($"e", lit(1), $"dim")) * l2Norm(slice($"qe", lit(1), $"dim"))))
         .withColumn("rank", row_number().over(wT))
         .filter($"rank" <= TopK)
       trunc
@@ -1206,7 +1224,7 @@ object SimilarityOps {
     // the eval rides whatever retriever produced the ranked list.
     "retrieval_ndcg_eval" -> ((s, d) => {
       import s.implicits._
-      val v = prepared(s, d)
+      val v = vectors(s, d)
       val q = v.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"label".as("qlabel"),
           $"e".as("qe"), $"norm".as("qn"))
@@ -1242,8 +1260,8 @@ object SimilarityOps {
     // LSH bucket histogram — the skew diagnostic for the ANN path.
     "ann_lsh_bucket_stats" -> ((s, d) => {
       import s.implicits._
-      prepared(s, d)
-        .withColumn("bucket", lshBucket($"e"))
+      vectors(s, d)
+        .withColumn("bucket", lshBucketFor(planes)($"e"))
         .groupBy($"bucket").agg(count("*").as("n_vectors"))
         .orderBy(desc("n_vectors"), asc("bucket"))
         .limit(100)
@@ -1256,7 +1274,7 @@ object SimilarityOps {
     * relation `pv(vec_id, e)`: cb0 init (K' smallest vec_ids'
     * subvectors) → unrolled Lloyd rounds → paF final assignment →
     * pcodes (vec → 8 codes) and cbl/cba (k-ordered codebook lists the
-    * ADC indexes into). Mirrors pqTrainOn exactly (6dp-rounded
+    * ADC indexes into). Mirrors lloyd exactly (6dp-rounded
     * codewords, ties on code id, empty codes keep their codeword).
     * Shared by the flat-ADC oracle (pv = the raw embeddings) and the
     * IVF-ADC oracle (pv = the per-cell residuals).
@@ -1293,16 +1311,10 @@ object SimilarityOps {
        |cba AS MATERIALIZED (SELECT list(cl ORDER BY m) AS cbs FROM cbl)""".stripMargin
   }
 
-  private def pqFoldSub(eExpr: String, mRef: String, cwExpr: String) =
-    s"""list_reduce(list_prepend(0.0, list_transform(range($PqSubDim),
-       |      i -> ($eExpr[$mRef * $PqSubDim + i + 1] - $cwExpr[i+1]) *
-       |           ($eExpr[$mRef * $PqSubDim + i + 1] - $cwExpr[i+1]))),
-       |    (x, y) -> x + y)""".stripMargin
-
   private def pqAssignCtes(t: String, cbRef: String) =
     s"""pd$t AS MATERIALIZED (
        |  SELECT pv.vec_id, cb.m, cb.k,
-       |    ${pqFoldSub("pv.e", "cb.m", "cb.c")} AS dd
+       |    ${sqDistSql("pv.e", "cb.c", s"cb.m * $PqSubDim")} AS dd
        |  FROM pv CROSS JOIN $cbRef cb),
        |pa$t AS MATERIALIZED (
        |  SELECT vec_id, m, k AS code FROM (
@@ -1316,12 +1328,7 @@ object SimilarityOps {
     */
   private def pqAdcTermsSql(qvec: String): String =
     (0 until PqM).map { m =>
-      s"""(list_reduce(list_prepend(0.0, list_transform(range($PqSubDim),
-         |  i -> ($qvec[${m * PqSubDim} + i + 1] -
-         |        cba.cbs[${m + 1}][c.codes[${m + 1}] + 1][i+1]) *
-         |       ($qvec[${m * PqSubDim} + i + 1] -
-         |        cba.cbs[${m + 1}][c.codes[${m + 1}] + 1][i+1]))),
-         |  (x, y) -> x + y))""".stripMargin
+      s"(${sqDistSql(qvec, s"cba.cbs[${m + 1}][c.codes[${m + 1}] + 1]", s"${m * PqSubDim}")})"
     }.mkString(" +\n")
 
   /** The PQ oracle: training (unrolled Lloyd rounds), final encoding,
@@ -1330,13 +1337,12 @@ object SimilarityOps {
     */
   private lazy val pqSql: String =
     s"""WITH pv AS MATERIALIZED (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+       |  SELECT vec_id, ${widenedSql("embedding")} AS e
        |  FROM embeddings),
        |$pqChainSql,
        |pn AS MATERIALIZED (
        |  SELECT pv.vec_id, pv.e,
-       |    sqrt(list_reduce(list_prepend(0.0, list_transform(pv.e, x -> x * x)),
-       |      (a, b) -> a + b)) AS norm,
+       |    ${l2NormSql("pv.e")} AS norm,
        |    pcodes.codes
        |  FROM pv JOIN pcodes ON pv.vec_id = pcodes.vec_id),
        |adcp AS MATERIALIZED (
@@ -1364,18 +1370,13 @@ object SimilarityOps {
     * query residuals, ADC over the probed cells only, exact rescore.
     * Mirrors ann_ivfpq_topk step for step.
     */
-  private lazy val ivfpqSql: String = {
-    val fold = (a: String, b: String) =>
-      s"""list_reduce(list_prepend(0.0, list_transform(range(len($a)),
-         |      i -> ($a[i+1] - $b[i+1]) * ($a[i+1] - $b[i+1]))),
-         |    (x, y) -> x + y)""".stripMargin
+  private lazy val ivfpqSql: String =
     s"""WITH ${MLOps.kmeansCtesSql},
        |rv AS MATERIALIZED (
        |  SELECT f.vec_id, f.cid,
        |    list_transform(range($Dim), i -> v.e[i+1] - cc.c[i+1]) AS re,
        |    v.e,
-       |    sqrt(list_reduce(list_prepend(0.0, list_transform(v.e, x -> x * x)),
-       |      (a, b) -> a + b)) AS norm
+       |    ${l2NormSql("v.e")} AS norm
        |  FROM fin f
        |  JOIN v ON f.vec_id = v.vec_id
        |  JOIN c${MLOps.KmIters} cc ON f.cid = cc.cid),
@@ -1386,7 +1387,7 @@ object SimilarityOps {
        |  FROM rv JOIN pcodes ON rv.vec_id = pcodes.vec_id),
        |qd AS (
        |  SELECT q.vec_id AS query_id, q.e AS qe, q.norm AS qn, cc.cid,
-       |    ${fold("q.e", "cc.c")} AS d
+       |    ${sqDistSql("q.e", "cc.c")} AS d
        |  FROM (SELECT vec_id, e, norm FROM rv WHERE vec_id < $NumQueries) q
        |  CROSS JOIN c${MLOps.KmIters} cc),
        |qp AS MATERIALIZED (
@@ -1415,7 +1416,6 @@ object SimilarityOps {
       s"""SELECT query_id, vec_id,
          |  ${dotSql("e", "qe")} / (norm * qn) AS cos_exact
          |FROM cands""".stripMargin)}""".stripMargin
-  }
 
   /** Oracle tail of the KNN-Shapley pipeline (rank -> Theorem-1 terms
     * -> suffix sum -> per-point aggregate -> top/bottom report),
@@ -1472,21 +1472,18 @@ object SimilarityOps {
          |FROM (SELECT * FROM top UNION ALL SELECT * FROM bot)
          |ORDER BY bucket, rank""".stripMargin
 
-  private val prepSql =
-    """v AS (
+  /** The `v` and `n` CTEs: the SQL twin of [[vectors]], `n` carrying
+    * (vec_id, label, e, norm).
+    */
+  private[ops] val vectorsSql =
+    s"""v AS (
       |  SELECT vec_id, label,
-      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+      |    ${widenedSql("embedding")} AS e
       |  FROM embeddings),
       |n AS (
       |  SELECT vec_id, label, e,
-      |    sqrt(list_reduce(list_prepend(0.0, list_transform(e, x -> x * x)),
-      |      (a, b) -> a + b)) AS norm
+      |    ${l2NormSql("e")} AS norm
       |  FROM v)""".stripMargin
-
-  private[ops] def dotSql(a: String, b: String): String =
-    s"""list_reduce(list_prepend(0.0,
-       |  list_transform(range($Dim), i -> $a[i+1] * $b[i+1])),
-       |  (x, y) -> x + y)""".stripMargin
 
   /** Bucket expression over a list column, same plane literals as Spark. */
   private[ops] def bucketSqlFor(planeSet: Array[Array[Double]])(e: String): String =
@@ -1494,8 +1491,6 @@ object SimilarityOps {
       val lits = p.mkString("[", ",", "]")
       s"CASE WHEN ${dotSql(e, lits)} > 0 THEN ${1L << j} ELSE 0 END"
     }.mkString("(", " + ", ")")
-
-  private def bucketSql(e: String): String = bucketSqlFor(planes)(e)
 
   /** UNION ALL of per-table (vec_id, tbl, bucket) rows over relation `n`. */
   private[ops] def multiBucketSql(rel: String): String =
@@ -1516,13 +1511,13 @@ object SimilarityOps {
 
   val oracles: Map[String, String] = Map(
     "ann_cosine_topk" ->
-      s"""WITH $prepSql
+      s"""WITH $vectorsSql
          |${topkSql(
         s"""SELECT q.vec_id AS query_id, c.vec_id,
            |  ${dotSql("c.e", "q.e")} / (c.norm * q.norm) AS cos_exact
            |FROM n c JOIN n q ON q.vec_id < $NumQueries AND c.vec_id <> q.vec_id""".stripMargin)}""".stripMargin,
     "emb_hard_negatives" ->
-      s"""WITH $prepSql,
+      s"""WITH $vectorsSql,
          |q AS (
          |  SELECT vec_id AS query_id, label AS qlabel, e AS qe, norm AS qn
          |  FROM n WHERE vec_id < $NumQueries),
@@ -1545,7 +1540,7 @@ object SimilarityOps {
          |WHERE neg.rank <= $TopK
          |ORDER BY neg.query_id, neg.rank""".stripMargin,
     "emb_isotropy" ->
-      s"""WITH $prepSql,
+      s"""WITH $vectorsSql,
          |pos AS (
          |  SELECT norm, e, unnest(range(len(e))) AS dim FROM n),
          |comp AS (
@@ -1584,7 +1579,7 @@ object SimilarityOps {
            |s$r AS (SELECT * FROM s${r - 1} UNION ALL SELECT * FROM p$r)"""
           .stripMargin
       }.mkString(",\n")
-      s"""WITH $prepSql,
+      s"""WITH $vectorsSql,
          |s1 AS (
          |  SELECT 1 AS pick, vec_id, CAST(NULL AS DOUBLE) AS sel_dist
          |  FROM n WHERE vec_id = (SELECT MIN(vec_id) FROM n)),
@@ -1597,7 +1592,7 @@ object SimilarityOps {
          |ORDER BY pick""".stripMargin
     },
     "ml_knn_shapley" ->
-      s"""WITH $prepSql,
+      s"""WITH $vectorsSql,
          |q AS (
          |  SELECT vec_id AS query_id, label AS qlabel, e AS qe, norm AS qn
          |  FROM n WHERE vec_id < $NumQueries),
@@ -1609,8 +1604,8 @@ object SimilarityOps {
          |  FROM tr CROSS JOIN q),
          |$shapleyTailSql""".stripMargin,
     "ml_knn_shapley_lsh" ->
-      s"""WITH $prepSql,
-         |nb AS (SELECT n.*, ${bucketSql("e")} AS bucket FROM n),
+      s"""WITH $vectorsSql,
+         |nb AS (SELECT n.*, ${bucketSqlFor(planes)("e")} AS bucket FROM n),
          |q AS (
          |  SELECT vec_id AS query_id, label AS qlabel, e AS qe, norm AS qn,
          |    bucket AS qbucket
@@ -1624,7 +1619,7 @@ object SimilarityOps {
          |  FROM tr JOIN q ON tr.bucket = q.qbucket),
          |$shapleyTailSql""".stripMargin,
     "ann_filtered_topk" ->
-      s"""WITH $prepSql,
+      s"""WITH $vectorsSql,
          |f AS (
          |  SELECT n.* FROM n JOIN documents d ON n.vec_id = d.doc_id
          |  WHERE d.lang = 'en')
@@ -1756,7 +1751,7 @@ object SimilarityOps {
          |    SELECT qdoc, doc_id, row_number() OVER (PARTITION BY qdoc
          |      ORDER BY score DESC, doc_id ASC) AS lr
          |    FROM sc) WHERE lr <= $FusionDepth),
-         |$prepSql,
+         |$vectorsSql,
          |qv AS (
          |  SELECT qd.qdoc, n.e AS qe, n.norm AS qn
          |  FROM n JOIN qd ON n.vec_id = qd.qdoc),
@@ -1800,7 +1795,7 @@ object SimilarityOps {
            |selcum$r AS (SELECT * FROM selcum${r - 1} UNION ALL SELECT * FROM s$r)"""
           .stripMargin
       }.mkString(",\n")
-      s"""WITH $prepSql,
+      s"""WITH $vectorsSql,
          |qd AS (
          |  SELECT doc_id AS qdoc FROM documents
          |  WHERE ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")}
@@ -1833,15 +1828,15 @@ object SimilarityOps {
          |FROM selcum$MmrPicks ORDER BY query_doc, pick""".stripMargin
     },
     "ann_lsh_topk" ->
-      s"""WITH $prepSql,
-         |b AS (SELECT vec_id, label, e, norm, ${bucketSql("e")} AS bucket FROM n)
+      s"""WITH $vectorsSql,
+         |b AS (SELECT vec_id, label, e, norm, ${bucketSqlFor(planes)("e")} AS bucket FROM n)
          |${topkSql(
         s"""SELECT q.vec_id AS query_id, c.vec_id,
            |  ${dotSql("c.e", "q.e")} / (c.norm * q.norm) AS cos_exact
            |FROM b c JOIN b q ON q.vec_id < $NumQueries
            |  AND c.bucket = q.bucket AND c.vec_id <> q.vec_id""".stripMargin)}""".stripMargin,
     "ann_lsh_multi_topk" ->
-      s"""WITH $prepSql,
+      s"""WITH $vectorsSql,
          |tb AS (
          |${multiBucketSql("n")}),
          |cand AS (
@@ -1855,7 +1850,7 @@ object SimilarityOps {
            |JOIN n c ON cand.vec_id = c.vec_id
            |JOIN n q ON cand.query_id = q.vec_id""".stripMargin)}""".stripMargin,
     "ann_ivf_label_topk" ->
-      s"""WITH $prepSql
+      s"""WITH $vectorsSql
          |${topkSql(
         s"""SELECT q.vec_id AS query_id, c.vec_id,
            |  ${dotSql("c.e", "q.e")} / (c.norm * q.norm) AS cos_exact
@@ -1864,9 +1859,7 @@ object SimilarityOps {
     "ann_ivf_kmeans_topk" ->
       s"""WITH ${MLOps.kmeansCtesSql},
          |nrm AS MATERIALIZED (
-         |  SELECT fin.vec_id, fin.cid, v.e,
-         |    sqrt(list_reduce(list_prepend(0.0, list_transform(v.e, x -> x * x)),
-         |      (a, b) -> a + b)) AS norm
+         |  SELECT fin.vec_id, fin.cid, v.e, ${l2NormSql("v.e")} AS norm
          |  FROM fin JOIN v ON fin.vec_id = v.vec_id)
          |${topkSql(
         s"""SELECT q.vec_id AS query_id, c.vec_id,
@@ -1876,14 +1869,12 @@ object SimilarityOps {
     "ann_ivf_nprobe_sweep" ->
       s"""WITH ${MLOps.kmeansCtesSql},
          |nrm AS MATERIALIZED (
-         |  SELECT fin.vec_id, fin.cid, v.e,
-         |    sqrt(list_reduce(list_prepend(0.0, list_transform(v.e, x -> x * x)),
-         |      (a, b) -> a + b)) AS norm
+         |  SELECT fin.vec_id, fin.cid, v.e, ${l2NormSql("v.e")} AS norm
          |  FROM fin JOIN v ON fin.vec_id = v.vec_id),
          |qp AS (
          |  SELECT v.vec_id AS query_id, c.cid,
          |    row_number() OVER (PARTITION BY v.vec_id
-         |      ORDER BY ${MLOps.kmeansDistSql("v.e", "c.c")} ASC, c.cid ASC)
+         |      ORDER BY ${sqDistSql("v.e", "c.c")} ASC, c.cid ASC)
          |      AS prn
          |  FROM v CROSS JOIN ${MLOps.kmeansFinalCentsCte} c
          |  WHERE v.vec_id < $NumQueries),
@@ -1945,13 +1936,13 @@ object SimilarityOps {
         |  ROUND(MAX(abs(err)), 6) AS max_abs_err
         |FROM r GROUP BY pos ORDER BY pos""".stripMargin,
     "ann_lsh_bucket_stats" ->
-      s"""WITH $prepSql
-         |SELECT ${bucketSql("e")} AS bucket, COUNT(*) AS n_vectors
+      s"""WITH $vectorsSql
+         |SELECT ${bucketSqlFor(planes)("e")} AS bucket, COUNT(*) AS n_vectors
          |FROM n GROUP BY 1 ORDER BY n_vectors DESC, bucket ASC LIMIT 100""".stripMargin,
     "ann_pq_topk" -> pqSql,
     "ann_ivfpq_topk" -> ivfpqSql,
     "ann_matryoshka_recall" ->
-      s"""WITH $prepSql,
+      s"""WITH $vectorsSql,
          |q AS (SELECT vec_id AS query_id, e AS qe, norm AS qn
          |      FROM n WHERE vec_id < $NumQueries),
          |ex AS (
@@ -1966,12 +1957,9 @@ object SimilarityOps {
          |  SELECT dim, query_id, vec_id FROM (
          |    SELECT dd.dim, q.query_id, c.vec_id,
          |      row_number() OVER (PARTITION BY dd.dim, q.query_id ORDER BY
-         |        list_reduce(list_prepend(0.0, list_transform(range(dd.dim),
-         |          i -> c.e[i+1] * q.qe[i+1])), (x, y) -> x + y) /
-         |        (sqrt(list_reduce(list_prepend(0.0,
-         |           list_transform(c.e[1:dd.dim], x -> x * x)), (a, b) -> a + b)) *
-         |         sqrt(list_reduce(list_prepend(0.0,
-         |           list_transform(q.qe[1:dd.dim], x -> x * x)), (a, b) -> a + b)))
+         |        ${dotSql("c.e", "q.qe", "dd.dim")} /
+         |        (${l2NormSql("c.e[1:dd.dim]")} *
+         |         ${l2NormSql("q.qe[1:dd.dim]")})
          |        DESC, c.vec_id ASC) AS rank
          |    FROM n c JOIN q ON c.vec_id <> q.query_id
          |    CROSS JOIN (SELECT unnest([8, 16, 32, 64]) AS dim) dd)
@@ -1985,7 +1973,7 @@ object SimilarityOps {
          |  GROUP BY 1, 2)
          |GROUP BY 1 ORDER BY 1""".stripMargin,
     "ann_sq8_topk" ->
-      s"""WITH $prepSql,
+      s"""WITH $vectorsSql,
          |x AS (
          |  SELECT CAST(i - 1 AS INT) AS pos, CAST(vv AS DOUBLE) AS vv FROM (
          |    SELECT unnest(embedding) AS vv,
@@ -2027,8 +2015,8 @@ object SimilarityOps {
          |WHERE rank <= $TopK
          |ORDER BY query_id, rank""".stripMargin,
     "ann_recall_at_k" ->
-      s"""WITH $prepSql,
-         |b AS (SELECT vec_id, e, norm, ${bucketSql("e")} AS bucket FROM n),
+      s"""WITH $vectorsSql,
+         |b AS (SELECT vec_id, e, norm, ${bucketSqlFor(planes)("e")} AS bucket FROM n),
          |ex AS (
          |  SELECT query_id, vec_id FROM (
          |    SELECT query_id, vec_id,
@@ -2061,7 +2049,7 @@ object SimilarityOps {
          |  ON ex.query_id = ap.query_id AND ex.vec_id = ap.vec_id
          |GROUP BY 1 ORDER BY 1""".stripMargin,
     "retrieval_ndcg_eval" ->
-      s"""WITH $prepSql,
+      s"""WITH $vectorsSql,
          |q AS (
          |  SELECT vec_id AS query_id, label AS qlabel, e AS qe, norm AS qn
          |  FROM n WHERE vec_id < $NumQueries),

@@ -15,15 +15,23 @@ object GenQueriesMd {
     val files = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
     val defs = scala.collection.mutable.Map.empty[String, (String, Int)]
+    // a query bound to a named function (`"name" -> fn,`) resolves to
+    // its first such entry, and only when no lambda entry names it
+    val aliases = scala.collection.mutable.Map.empty[String, (String, Int)]
     val pat = """"([a-z0-9_]+)"\s*->\s*\(\(s, d\)""".r
+    val alias = """"([a-z0-9_]+)"\s*->\s*[a-z]\w*,\s*$""".r
     files.foreach { p =>
       Files.readAllLines(p).asScala.zipWithIndex.foreach { case (l, i) =>
         pat.findFirstMatchIn(l).foreach { m =>
           val name = m.group(1)
           if (!defs.contains(name)) defs(name) = (p.toString, i + 1)
         }
+        alias.findFirstMatchIn(l).foreach { m =>
+          if (!aliases.contains(m.group(1))) aliases(m.group(1)) = (p.toString, i + 1)
+        }
       }
     }
+    aliases.foreach { case (n, at) => if (!defs.contains(n)) defs(n) = at }
     val q = graft.SparkEntry.queries.keySet
     val o = graft.SparkEntry.oracleSql.keySet
     val b1 = graft.SparkEntry.benchQueries.toSet

@@ -278,15 +278,9 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(got2 == ((0L until 200L).map(n => (n, 0L)) ++
       Seq((1000L, 1000L), (1001L, 1000L), (1002L, 1000L))).toSet)
-    // and the two engine queries agree row for row on the real pairs
-    val a = SparkEntry.queries("dedup_cluster_reps")(spark, sf)
-      .collect().map(_.toSeq).toSeq
-    val b = SparkEntry.queries("dedup_cluster_reps_star")(spark, sf)
-      .collect().map(_.toSeq).toSeq
-    assert(a == b && a.nonEmpty)
   }
 
-  test("both CC algorithms match union-find on seeded random graphs") {
+  test("large-star/small-star CC matches union-find on seeded random graphs") {
     // property sweep: sparse, dense, and multi-component regimes; the
     // distributed kernel must agree with a local union-find on every
     // instance
@@ -326,13 +320,17 @@ class DedupSpec extends SparkSpec {
     }
     val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct
     val want = nodes.map(n => (n, find(n))).sortBy(_._1).toSeq
-    val got = SparkEntry.queries("dedup_cluster_reps")(spark, sf)
-      .select($"doc_id", $"cluster_rep").as[(Long, Long)].collect().toSeq
-    assert(got == want)
-    // survivors are exactly the per-cluster minima
-    val survivors = SparkEntry.queries("dedup_cluster_reps")(spark, sf)
-      .filter($"is_survivor").select($"doc_id").as[Long].collect().toSet
-    assert(survivors == want.map(_._2).toSet)
+    assert(want.nonEmpty)
+    // both registered names, each checked against the union-find
+    for (q <- Seq("dedup_cluster_reps", "dedup_cluster_reps_star")) {
+      val got = SparkEntry.queries(q)(spark, sf)
+        .select($"doc_id", $"cluster_rep").as[(Long, Long)].collect().toSeq
+      assert(got == want, q)
+      // survivors are exactly the per-cluster minima
+      val survivors = SparkEntry.queries(q)(spark, sf)
+        .filter($"is_survivor").select($"doc_id").as[Long].collect().toSet
+      assert(survivors == want.map(_._2).toSet, q)
+    }
   }
 
   test("LSH-fed cluster reps equal the exact-pair clustering at the 0.8 gate") {

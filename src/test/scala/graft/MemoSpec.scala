@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.{MLOps, Memo, TextOps}
 import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.storage.StorageLevel
 
@@ -10,8 +11,9 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** graft.ops.Memo: entries are keyed on the files they were built from,
-  * so a rewritten input rebuilds instead of serving a stale model, and
-  * `Memo.clear()` drops exactly the per-pass entries.
+  * so a rewritten input rebuilds instead of serving a stale model, a
+  * session holds one input's entries at a time, and `Memo.clear()` drops
+  * exactly the per-pass entries.
   */
 class MemoSpec extends SparkSpec {
   import spark.implicits._
@@ -53,6 +55,38 @@ class MemoSpec extends SparkSpec {
           }
           assert(qs.map(rows(_, a)) == onB)
         } finally Memo.clear()
+      }
+    }
+  }
+
+  test("a miss on a new snapshot dir drops the older dirs' entries") {
+    withTempDir("graft_memo_day") { d1 =>
+      withTempDir("graft_memo_day") { d2 =>
+        withTempDir("graft_memo_day") { d3 =>
+          val days = Seq(d1, d2, d3)
+          days.foreach(fixture(_, 0, 0L))
+          // the daily DAG's dedup, sentiment and topics stages; ml_kmeans
+          // adds an index entry
+          val stages = Seq("dedup_cluster_reps_lsh", "u3_vader_sentiment",
+            "lda_em_topics_dist", "ml_kmeans")
+          val frameKinds = Seq("shingles", "lsh_clusters", "vader")
+          val kinds: Seq[(String, Seq[Any])] = frameKinds.map(_ -> Nil) ++
+            Seq("lda_em_dist" -> Seq(MLOps.EmK, 0), "kmeans" -> Nil)
+          def held(dir: String): Seq[String] = kinds.collect {
+            case (k, ps) if Memo.contains(k, spark, dir, ps: _*) => k }
+          try {
+            val frames = days.map { day =>
+              stages.foreach(rows(_, day))
+              assert(held(day) == kinds.map(_._1), day)
+              frameKinds.map(k =>
+                Memo.perPass[DataFrame](k, spark, day)(fail(s"$k missed on $day")))
+            }
+            assert(held(d1).isEmpty && held(d2).isEmpty)
+            assert(held(d3) == kinds.map(_._1))
+            frames.take(2).flatten.foreach(f => assert(f.storageLevel == StorageLevel.NONE))
+            frames(2).foreach(f => assert(f.storageLevel != StorageLevel.NONE))
+          } finally Memo.clear()
+        }
       }
     }
   }

@@ -78,17 +78,66 @@ class SimilaritySpec extends SparkSpec {
       exactCos.get((q, n)).foreach(ec => assert(c == ec, s"($q,$n)")) }
   }
 
-  test("argmin helpers reject a gapped codebook instead of mislabelling codes") {
-    // both helpers read the transform index as the code/centroid id, so
+  test("the argmin helper rejects a gapped codebook instead of mislabelling codes") {
+    // codeDists reads the transform index as the code/centroid id, so
     // keys {0, 2} would silently report code 1 for codeword 2
     val gapped = Array(0 -> Seq(0.0, 0.0), 2 -> Seq(1.0, 1.0))
     intercept[IllegalArgumentException](
-      graft.ops.SimilarityOps.pqNearestCode(gapped, col("e")))
-    intercept[IllegalArgumentException](graft.ops.MLOps.kmeansDistArr(gapped))
+      graft.ops.SimilarityOps.codeDists(gapped, col("e")))
     // the contiguous form, in any order, is accepted
     val ok = Array(1 -> Seq(1.0, 1.0), 0 -> Seq(0.0, 0.0))
-    graft.ops.SimilarityOps.pqNearestCode(ok, col("e"))
-    graft.ops.MLOps.kmeansDistArr(ok)
+    graft.ops.SimilarityOps.codeDists(ok, col("e"))
+  }
+
+  test("nearest-code assignment is the brute-force argmin, ties to the lower id") {
+    // small integer coordinates make every distance exact, so ties are
+    // frequent; codewords 5 and 12 are identical (a planted exact tie),
+    // and the codebook arrives in shuffled key order
+    val rnd = new scala.util.Random(7)
+    val words = Array.fill(16)(Seq.fill(4)(rnd.nextInt(3).toDouble))
+    words(12) = words(5)
+    val cb = rnd.shuffle(words.indices.toList).map(k => k -> words(k)).toArray
+    val vecs = (0 until 200).map(i => i -> Seq.fill(4)(rnd.nextInt(4).toDouble)) :+
+      (200 -> words(12))
+    def d2(a: Seq[Double], b: Seq[Double]): Double =
+      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + (x - y) * (x - y) }
+    val want = vecs.map { case (i, v) =>
+      i -> words.indices.minBy(k => (d2(v, words(k)), k)) }.toMap
+    val got = vecs.toDF("id", "e")
+      .select($"id", array_min(graft.ops.SimilarityOps.codeDists(cb, $"e"))
+        .getField("k"))
+      .as[(Int, Int)].collect().toMap
+    assert(got == want)
+    // vector 200 sits on codeword 12, whose first copy wins
+    assert(got(200) == words.indexOf(words(12)) && got(200) <= 5)
+    // the brute force sees ties, so the tie rule is exercised
+    val tied = vecs.count { case (_, v) =>
+      words.map(d2(v, _)).count(_ == words.map(d2(v, _)).min) > 1 }
+    assert(tied > 10, s"only $tied tied vectors")
+  }
+
+  test("each vector rule is written once under src/main, in SimilarityOps") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> Files.readString(p)).toSeq
+    def sites(pattern: String): Map[String, Int] = sources
+      .map { case (f, src) => f -> pattern.r.findAllMatchIn(src).size }
+      .filter(_._2 > 0).toMap
+    val once = Map("SimilarityOps.scala" -> 1)
+    // the embedding widened to double, Column and SQL
+    assert(sites("""transform\([^\n]*x\.cast\("double"\)""") == once)
+    assert(sites("""list_transform\([^\n]*-> CAST\(\w+ AS DOUBLE\)\)""") == once)
+    // the L2 norm: sqrt of the codegen'd self dot, and its SQL fold
+    assert(sites("""sqrt\([\w.]*dot\(""") == once)
+    assert(sites("""x -> x \* x""") == once)
+    // the squared-L2 fold: a zip_with lambda and its SQL list_transform
+    assert(sites("""=> \((\w) - (\w)\) \* \(\1 - \2\)""") == once)
+    assert(sites("""i -> \(""") == once)
+    // the dot product: the codegen'd Column and its SQL fold
+    assert(sites("""VecDot\.vec_dot\(""") == once)
+    assert(sites("""i -> [\w.$]+\[i\+1\] \* """) == once)
   }
 
   test("SQ8 probe rescores its candidates with the exact cosines") {
@@ -368,7 +417,8 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1),
         r.getSeq[Float](2).map(_.toDouble).toArray))
     val buckets = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select($"vec_id", graft.ops.SimilarityOps.lshBucket(
+      .select($"vec_id", graft.ops.SimilarityOps.lshBucketFor(
+        graft.ops.SimilarityOps.planes)(
         transform($"embedding", x => x.cast("double"))).as("b"))
       .as[(Long, Long)].collect().toMap
     def dotf(a: Array[Double], b: Array[Double]): Double =
