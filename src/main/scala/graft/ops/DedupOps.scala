@@ -67,6 +67,22 @@ object DedupOps {
        |    list_transform(string_split($e, ''), c -> CAST(ascii(c) AS BIGINT))),
        |  (acc, c) -> (acc * 131 + c) % $P_POLY)""".stripMargin
 
+  /** The hash-sampled query set of the retrieval evals and the ALS
+    * serving queries: the 10 smallest `key`s of `frame` whose polyHash
+    * of the key's string form is 0 mod 50. Deterministic and replayable
+    * in DuckDB, and one set per key column, so every query over the
+    * same keys samples the same queries.
+    */
+  def hashSample(frame: DataFrame, key: String): DataFrame =
+    frame.filter(pmod(polyHash(col(key).cast("string")), lit(50L)) === 0)
+      .orderBy(col(key)).limit(10)
+
+  /** [[hashSample]]'s DuckDB twin: a SELECT of `cols` from `from`. */
+  def hashSampleSql(cols: String, from: String, key: String): String =
+    s"""SELECT $cols FROM $from
+       |  WHERE ${polyHashSql(s"CAST($key AS VARCHAR)")} % 50 = 0
+       |  ORDER BY $key LIMIT 10""".stripMargin
+
   /** Second independent polynomial (base 137, mod 1e9+9) — the DuckDB
     * twin of graft.functions.PolyHash2.
     */

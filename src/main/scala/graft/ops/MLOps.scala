@@ -893,17 +893,12 @@ object MLOps {
     "ml_kmeans" -> ((s, d) => {
       import s.implicits._
       val cents = kmeansCentroids(s, d)
-      def round6(x: Double): Double =
-        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val cnorms = cents.map { case (k, c) =>
-        (k, round6(math.sqrt(c.foldLeft(0.0)((acc, x) => acc + x * x))))
-      }.toMap
       SimilarityOps.vectors(s, d)
         .withColumn("a", array_min(SimilarityOps.codeDists(cents, $"e")))
         .select($"a.k".as("cid"), $"a.d".as("d"))
         .groupBy($"cid").agg(count(lit(1)).as("n"), round(sum($"d"), 6).as("inertia"))
-        .withColumn("cnorm",
-          element_at(typedLit((0 until KmK).map(cnorms)), $"cid" + 1))
+        .withColumn("cnorm", round(SimilarityOps.l2Norm(
+          element_at(typedLit(cents.sortBy(_._1).map(_._2)), $"cid" + 1)), 6))
         .orderBy("cid")
     }),
 
@@ -1941,16 +1936,7 @@ object MLOps {
       import s.implicits._
       val (r, states) = alsStates(s, d)
       val (users, items) = states.last
-      val qc = users.filter(pmod(graft.functions.PolyHash.poly_hash(
-          $"cust".cast("string")), lit(50L)) === 0)
-        .orderBy($"cust").limit(10)
-      val w = Window.partitionBy($"cust").orderBy(desc("pred_e6"), asc("part"))
-      items.crossJoin(broadcast(qc))
-        .join(r.select($"cust", $"part"), Seq("cust", "part"), "left_anti")
-        .withColumn("pred_e6",
-          round(($"u1" * $"v1" + $"u2" * $"v2") * 1e6, 0).cast("long"))
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 3)
+      alsRecommend(r, users, items, 3)
         .select($"cust", $"rank", $"part", $"pred_e6")
         .orderBy($"cust", $"rank")
     }),
@@ -1969,9 +1955,7 @@ object MLOps {
       import s.implicits._
       val (r, states) = alsStates(s, d)
       val (users, items) = states.last
-      val qc = users.filter(pmod(graft.functions.PolyHash.poly_hash(
-          $"cust".cast("string")), lit(50L)) === 0)
-        .orderBy($"cust").limit(10)
+      val qc = DedupOps.hashSample(users, "cust")
       val rs = r.join(broadcast(qc.select($"cust")), "cust")
       val folded = solve2(alsTerms(rs, items, "part", "cust", "v1", "v2"),
         "cust", "f1", "f2")
@@ -1997,24 +1981,50 @@ object MLOps {
       val iDir = Tables.artifactDir("als_items", d)
       users.write.mode("overwrite").parquet(uDir)
       items.write.mode("overwrite").parquet(iDir)
-      val u2 = s.read.parquet(uDir)
-      val i2 = s.read.parquet(iDir)
-      val qc = u2.filter(pmod(graft.functions.PolyHash.poly_hash(
-          $"cust".cast("string")), lit(50L)) === 0)
-        .orderBy($"cust").limit(10)
-      val w = Window.partitionBy($"cust").orderBy(desc("pred_e6"), asc("part"))
-      i2.crossJoin(broadcast(qc))
-        .join(r.select($"cust", $"part"), Seq("cust", "part"), "left_anti")
-        .withColumn("pred_e6",
-          round(($"u1" * $"v1" + $"u2" * $"v2") * 1e6, 0).cast("long"))
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 1)
+      alsRecommend(r, s.read.parquet(uDir), s.read.parquet(iDir), 1)
         .select($"cust", $"part", $"pred_e6")
         .orderBy($"cust")
     }),
   )
 
   // ---- ALS machinery ----
+
+  /** The top-`depth` unseen parts of each hash-sampled customer under
+    * the factors (`users`, `items`): the sampled users broadcast × the
+    * item factors, anti-joined against the rated (cust, part) pairs of
+    * `r`, ranked by the micro-quantized prediction (ties on part), as
+    * (cust, part, pred_e6, rank).
+    */
+  private def alsRecommend(r: DataFrame, users: DataFrame, items: DataFrame,
+      depth: Int): DataFrame =
+    items.crossJoin(broadcast(DedupOps.hashSample(users, "cust")))
+      .join(r.select(col("cust"), col("part")), Seq("cust", "part"), "left_anti")
+      .withColumn("pred_e6",
+        round((col("u1") * col("v1") + col("u2") * col("v2")) * 1e6, 0).cast("long"))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("cust")).orderBy(desc("pred_e6"), asc("part"))))
+      .filter(col("rank") <= depth)
+      .select(col("cust"), col("part"), col("pred_e6"), col("rank"))
+
+  /** [[alsRecommend]]'s DuckDB twin: the `qc`, `cand` and `rec` CTEs
+    * over the [[alsCte]] factor CTEs of the last alternation.
+    */
+  private def alsRecommendSql(depth: Int): String =
+    s"""qc AS (${DedupOps.hashSampleSql("cust, u1, u2", s"u$AlsIters", "cust")}),
+       |cand AS (
+       |  SELECT qc.cust, v.part,
+       |    CAST(ROUND((qc.u1 * v.v1 + qc.u2 * v.v2) * 1000000.0, 0)
+       |      AS BIGINT) AS pred_e6
+       |  FROM qc CROSS JOIN v$AlsIters v
+       |  WHERE NOT EXISTS (
+       |    SELECT 1 FROM r WHERE r.cust = qc.cust AND r.part = v.part)),
+       |rec AS (
+       |  SELECT cust, part, pred_e6, rank FROM (
+       |    SELECT cust, part, pred_e6,
+       |      row_number() OVER (PARTITION BY cust
+       |        ORDER BY pred_e6 DESC, part ASC) AS rank
+       |    FROM cand)
+       |  WHERE rank <= $depth)""".stripMargin
 
   /** ALS hyper-params: rank is FIXED at 2 (the 2×2 normal equations
     * admit a closed-form solve both engines evaluate identically);
@@ -3322,38 +3332,16 @@ object MLOps {
          |ORDER BY step""".stripMargin
     },
 
-    "ml_als_topk" -> {
-      val K = AlsIters
-      val phc = graft.ops.DedupOps.polyHashSql("CAST(cust AS VARCHAR)")
+    "ml_als_topk" ->
       s"""WITH $alsCte,
-         |qc AS (
-         |  SELECT cust, u1, u2 FROM u$K
-         |  WHERE $phc % 50 = 0
-         |  ORDER BY cust LIMIT 10),
-         |cand AS (
-         |  SELECT qc.cust, v.part,
-         |    CAST(ROUND((qc.u1 * v.v1 + qc.u2 * v.v2) * 1000000.0, 0)
-         |      AS BIGINT) AS pred_e6
-         |  FROM qc CROSS JOIN v$K v
-         |  WHERE NOT EXISTS (
-         |    SELECT 1 FROM r WHERE r.cust = qc.cust AND r.part = v.part))
-         |SELECT cust, rank, part, pred_e6 FROM (
-         |  SELECT cust, part, pred_e6,
-         |    row_number() OVER (PARTITION BY cust
-         |      ORDER BY pred_e6 DESC, part ASC) AS rank
-         |  FROM cand)
-         |WHERE rank <= 3
-         |ORDER BY cust, rank""".stripMargin
-    },
+         |${alsRecommendSql(3)}
+         |SELECT cust, rank, part, pred_e6 FROM rec
+         |ORDER BY cust, rank""".stripMargin,
 
     "ml_als_fold_in" -> {
       val K = AlsIters
-      val phc = graft.ops.DedupOps.polyHashSql("CAST(cust AS VARCHAR)")
       s"""WITH $alsCte,
-         |qc AS (
-         |  SELECT cust, u1, u2 FROM u$K
-         |  WHERE $phc % 50 = 0
-         |  ORDER BY cust LIMIT 10),
+         |qc AS (${DedupOps.hashSampleSql("cust, u1, u2", s"u$K", "cust")}),
          |rs AS (SELECT r.* FROM r JOIN qc USING (cust)),
          |${alsTermsSql("ft", s"v$K", "part", "cust", "v1", "v2", "rs")},
          |${alsSolveSql("f", "ft", "cust", "f1", "f2")}
@@ -3365,29 +3353,11 @@ object MLOps {
 
     // The direct computation — hash equality proves the parquet
     // round-trip of both factor frames is bit-exact.
-    "ml_als_save_load" -> {
-      val K = AlsIters
-      val phc = graft.ops.DedupOps.polyHashSql("CAST(cust AS VARCHAR)")
+    "ml_als_save_load" ->
       s"""WITH $alsCte,
-         |qc AS (
-         |  SELECT cust, u1, u2 FROM u$K
-         |  WHERE $phc % 50 = 0
-         |  ORDER BY cust LIMIT 10),
-         |cand AS (
-         |  SELECT qc.cust, v.part,
-         |    CAST(ROUND((qc.u1 * v.v1 + qc.u2 * v.v2) * 1000000.0, 0)
-         |      AS BIGINT) AS pred_e6
-         |  FROM qc CROSS JOIN v$K v
-         |  WHERE NOT EXISTS (
-         |    SELECT 1 FROM r WHERE r.cust = qc.cust AND r.part = v.part))
-         |SELECT cust, part, pred_e6 FROM (
-         |  SELECT cust, part, pred_e6,
-         |    row_number() OVER (PARTITION BY cust
-         |      ORDER BY pred_e6 DESC, part ASC) AS rank
-         |  FROM cand)
-         |WHERE rank <= 1
-         |ORDER BY cust""".stripMargin
-    },
+         |${alsRecommendSql(1)}
+         |SELECT cust, part, pred_e6 FROM rec
+         |ORDER BY cust""".stripMargin,
   )
 
   /** Shared WITH-body for the ALS oracles: the ratings table, the

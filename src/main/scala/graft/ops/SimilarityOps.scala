@@ -262,12 +262,19 @@ object SimilarityOps {
         element_at(typedLit(cbs(m).sortBy(_._1).map(_._2)), col(s"code_$m") + 1))
     }.reduce(_ + _)
 
-  /** The trained coarse centroids as one k-ordered literal array —
-    * element_at(…, cid+1) is the broadcast centroid lookup both the
-    * residual computation and the query-side probe use.
+  /** The IVF residual e − c(cid) of vector `e` to the trained centroid
+    * of cell `cid` (element_at over the k-ordered centroid literal, a
+    * broadcast lookup): what the residual PQ codes, corpus side and
+    * query side.
     */
-  private def centArr(s: SparkSession, d: String): Column =
-    typedLit(graft.ops.MLOps.kmeansCentroids(s, d).sortBy(_._1).map(_._2))
+  private def residual(s: SparkSession, d: String, e: Column, cid: Column): Column =
+    zip_with(e,
+      element_at(typedLit(MLOps.kmeansCentroids(s, d).sortBy(_._1).map(_._2)), cid + 1),
+      (x, c) => x - c)
+
+  /** [[residual]]'s DuckDB twin, `c` the centroid's vector. */
+  private def residualSql(e: String, c: String): String =
+    s"list_transform(range($Dim), i -> $e[i+1] - $c[i+1])"
 
   /** Corpus assigned to its trained coarse cell (argmin over the k-means
     * centroids, ties on cid) with the per-cell residual re = e − c(cid) —
@@ -279,8 +286,7 @@ object SimilarityOps {
     val cents = graft.ops.MLOps.kmeansCentroids(s, d)
     vectors(s, d).select($"vec_id", $"e", $"norm")
       .withColumn("cid", array_min(codeDists(cents, $"e")).getField("k"))
-      .withColumn("re", zip_with($"e", element_at(centArr(s, d), $"cid" + 1),
-        (x, c) => x - c))
+      .withColumn("re", residual(s, d, $"e", $"cid"))
   }
 
   /** Residual PQ codebooks for the IVF-ADC index: same trainer as the
@@ -613,6 +619,40 @@ object SimilarityOps {
     math.round(w * 1e9)
   }
 
+  /** The dense candidate list of each query doc in `qdocs` (qdoc): its
+    * top-FusionDepth corpus vectors by cosine (ties on vec_id), self
+    * excluded, as (qdoc, vec_id, rel, e, norm, rn). The query side
+    * broadcasts; the corpus streams once.
+    */
+  private def denseCandidates(s: SparkSession, d: String, qdocs: DataFrame): DataFrame = {
+    import s.implicits._
+    val v = vectors(s, d)
+    val qv = v.join(broadcast(qdocs), $"vec_id" === $"qdoc")
+      .select($"qdoc", $"e".as("qe"), $"norm".as("qn"))
+    v.join(broadcast(qv), $"vec_id" =!= $"qdoc")
+      .withColumn("rel", dot($"e", $"qe") / ($"norm" * $"qn"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy($"qdoc").orderBy(desc("rel"), asc("vec_id"))))
+      .filter($"rn" <= FusionDepth)
+      .select($"qdoc", $"vec_id", $"rel", $"e", $"norm", $"rn")
+  }
+
+  /** [[denseCandidates]]'s DuckDB twin: the `qv` and `cand` CTEs over
+    * the [[vectorsSql]] CTE `n` and the query-doc CTE `qd`.
+    */
+  private lazy val denseCandidatesSql: String =
+    s"""qv AS (
+       |  SELECT qd.qdoc, n.e AS qe, n.norm AS qn
+       |  FROM n JOIN qd ON n.vec_id = qd.qdoc),
+       |cand AS (
+       |  SELECT * FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY qdoc
+       |      ORDER BY rel DESC, vec_id ASC) AS rn FROM (
+       |      SELECT qv.qdoc, n.vec_id,
+       |        ${dotSql("n.e", "qv.qe")} / (n.norm * qv.qn) AS rel, n.e, n.norm
+       |      FROM n JOIN qv ON n.vec_id <> qv.qdoc))
+       |  WHERE rn <= $FusionDepth)""".stripMargin
+
   /** The (qdoc, doc_id, lr, dr) two-ranking frame — BM25 lexical top-k
     * and dense cosine top-k per hash-sampled query doc, full-outer
     * joined — shared by retrieval_rrf_fusion and retrieval_rbo_agreement
@@ -621,63 +661,28 @@ object SimilarityOps {
     */
   private def fusionRankFrames(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val Depth = FusionDepth
-      // Pinned: three consumers (query-term extraction, doc lengths, the
-      // term-filtered tf pass) would each re-tokenize the corpus. Lazy —
-      // materializes on the first action, so plan-only construction
-      // (PlanSpec's sweep) stays metadata-only.
-      val t = documents(s, d).select($"doc_id", TextOps.tokens($"text").as("t"))
-        .localCheckpoint(false)
-      val qdocs = documents(s, d)
-        .filter(pmod(graft.functions.PolyHash.poly_hash(
-          $"doc_id".cast("string")), lit(50L)) === 0)
-        .orderBy($"doc_id").limit(10).select($"doc_id".as("qdoc"))
-      val qtf = t.join(broadcast(qdocs), $"doc_id" === $"qdoc")
-        .select($"qdoc", explode($"t").as("word"))
-        .filter(length($"word") >= 4 &&
-          !TextOps.isStopword($"word"))
-        .groupBy($"qdoc", $"word").agg(count(lit(1)).as("qtf"))
-      val wq = Window.partitionBy($"qdoc").orderBy(desc("qtf"), asc("word"))
-      // round 18: ≤3·|queries| rows, two consumers — pin (the PRF fix)
-      val qterms = qtf.withColumn("rk", row_number().over(wq))
-        .filter($"rk" <= 3).select($"qdoc", $"word")
-        .localCheckpoint(false)
-      val dl = t.select($"doc_id", size($"t").as("dl"))
-      val st = dl.agg(count(lit(1)).as("n_docs"), avg($"dl").as("avgdl"))
-      // round 18: hits-scale, but the df aggregate and the scored join
-      // each re-ran the corpus token explode to build it — pin
-      val tf = TextOps.termFilteredTf(t, qterms).localCheckpoint(false)
-      val df_ = tf.groupBy($"word").agg(count(lit(1)).as("df"))
-      val lexScore = tf.join(broadcast(qterms), "word")
-        .join(broadcast(df_), "word")
-        .join(dl, "doc_id")
-        .crossJoin(broadcast(st))
-        .withColumn("dlr", $"dl".cast("double") / $"avgdl")
-        .withColumn("idf",
-          log(($"n_docs" - $"df" + lit(0.5)) / ($"df" + lit(0.5)) + lit(1.0)))
-        .withColumn("w",
-          $"idf" * $"tf" * lit(2.2) /
-            ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dlr")))
-        .withColumn("wm", round($"w" * 1e6, 0).cast("long"))
-        .groupBy($"qdoc", $"doc_id").agg(sum($"wm").as("score"))
-        .filter($"doc_id" =!= $"qdoc")
-      val wl = Window.partitionBy($"qdoc").orderBy(desc("score"), asc("doc_id"))
-      val lex = lexScore.withColumn("lr", row_number().over(wl))
-        .filter($"lr" <= Depth).select($"qdoc", $"doc_id", $"lr")
-      val v = vectors(s, d)
-      val qv = v.join(broadcast(qdocs), $"vec_id" === $"qdoc")
-        .select($"qdoc", $"e".as("qe"), $"norm".as("qn"))
-      val wd = Window.partitionBy($"qdoc").orderBy(desc("cos"), asc("doc_id"))
-      val dense = v.join(broadcast(qv), $"vec_id" =!= $"qdoc")
-        .withColumn("cos", dot($"e", $"qe") / ($"norm" * $"qn"))
-        .select($"qdoc", $"vec_id".as("doc_id"), $"cos")
-        .withColumn("dr", row_number().over(wd))
-        .filter($"dr" <= Depth).select($"qdoc", $"doc_id", $"dr")
-      // round 18: k·Q rows with multiple readers (tau reads it twice in
-      // one query; every consumer re-built both retrieval sides
-      // otherwise) — pin the shared ranking frame itself
-      lex.join(dense, Seq("qdoc", "doc_id"), "full_outer")
-        .localCheckpoint(false)
+    // Pinned: three consumers (query-term extraction, doc lengths, the
+    // term-filtered tf pass) would each re-tokenize the corpus. Lazy —
+    // materializes on the first action, so plan-only construction
+    // (PlanSpec's sweep) stays metadata-only.
+    val t = documents(s, d).select($"doc_id", TextOps.tokens($"text").as("t"))
+      .localCheckpoint(false)
+    val qdocs = DedupOps.hashSample(documents(s, d), "doc_id")
+      .select($"doc_id".as("qdoc"))
+    val qterms = TextOps.queryTerms(t.join(broadcast(qdocs), $"doc_id" === $"qdoc")
+      .select($"qdoc", explode($"t").as("word")))
+    val wl = Window.partitionBy($"qdoc").orderBy(desc("score"), asc("doc_id"))
+    val lex = TextOps.bm25Scores(t, t.select($"doc_id", size($"t").as("dl")),
+        qterms.withColumn("wt", lit(1L)))
+      .withColumn("lr", row_number().over(wl))
+      .filter($"lr" <= FusionDepth).select($"qdoc", $"doc_id", $"lr")
+    val dense = denseCandidates(s, d, qdocs)
+      .select($"qdoc", $"vec_id".as("doc_id"), $"rn".as("dr"))
+    // round 18: k·Q rows with multiple readers (tau reads it twice in
+    // one query; every consumer re-built both retrieval sides
+    // otherwise) — pin the shared ranking frame itself
+    lex.join(dense, Seq("qdoc", "doc_id"), "full_outer")
+      .localCheckpoint(false)
   }
 
   private lazy val queriesTail: Map[String, Q] = Map(
@@ -724,20 +729,10 @@ object SimilarityOps {
     "retrieval_mmr_rerank" -> ((s, d) => {
       import s.implicits._
       val Lambda = MmrLambda
-      val Depth = FusionDepth
       val Picks = MmrPicks
-      val v = vectors(s, d)
-      val qdocs = documents(s, d)
-        .filter(pmod(graft.functions.PolyHash.poly_hash(
-          $"doc_id".cast("string")), lit(50L)) === 0)
-        .orderBy($"doc_id").limit(10).select($"doc_id".as("qdoc"))
-      val qv = v.join(broadcast(qdocs), $"vec_id" === $"qdoc")
-        .select($"qdoc", $"e".as("qe"), $"norm".as("qn"))
-      val wrel = Window.partitionBy($"qdoc").orderBy(desc("rel"), asc("vec_id"))
-      val cand = v.join(broadcast(qv), $"vec_id" =!= $"qdoc")
-        .withColumn("rel", dot($"e", $"qe") / ($"norm" * $"qn"))
-        .withColumn("rn", row_number().over(wrel))
-        .filter($"rn" <= Depth)
+      val qdocs = DedupOps.hashSample(documents(s, d), "doc_id")
+        .select($"doc_id".as("qdoc"))
+      val cand = denseCandidates(s, d, qdocs)
         .select($"qdoc", $"vec_id", $"rel", $"e", $"norm")
         .localCheckpoint(false)
       val ca = cand.select($"qdoc", $"vec_id".as("a"), $"e".as("ea"), $"norm".as("na"))
@@ -1109,8 +1104,7 @@ object SimilarityOps {
         .select($"vec_id".as("query_id"), $"e".as("qe"), $"norm".as("qn"),
           explode(slice(array_sort(codeDists(cents, $"e")), 1, Nprobe)).as("pr"))
         .select($"query_id", $"qe", $"qn", $"pr.k".as("cid"))
-        .withColumn("qre", zip_with($"qe", element_at(centArr(s, d), $"cid" + 1),
-          (x, c) => x - c))
+        .withColumn("qre", residual(s, d, $"qe", $"cid"))
       val wA = Window.partitionBy($"query_id").orderBy(asc("adc"), asc("vec_id"))
       val cands = coded.join(broadcast(qp), Seq("cid"))
         .filter($"vec_id" =!= $"query_id")
@@ -1374,7 +1368,7 @@ object SimilarityOps {
     s"""WITH ${MLOps.kmeansCtesSql},
        |rv AS MATERIALIZED (
        |  SELECT f.vec_id, f.cid,
-       |    list_transform(range($Dim), i -> v.e[i+1] - cc.c[i+1]) AS re,
+       |    ${residualSql("v.e", "cc.c")} AS re,
        |    v.e,
        |    ${l2NormSql("v.e")} AS norm
        |  FROM fin f
@@ -1392,7 +1386,7 @@ object SimilarityOps {
        |  CROSS JOIN c${MLOps.KmIters} cc),
        |qp AS MATERIALIZED (
        |  SELECT t.query_id, t.qe, t.qn, t.cid,
-       |    list_transform(range($Dim), i -> t.qe[i+1] - cc.c[i+1]) AS qre
+       |    ${residualSql("t.qe", "cc.c")} AS qre
        |  FROM (
        |    SELECT query_id, qe, qn, cid FROM (
        |      SELECT query_id, qe, qn, cid,
@@ -1709,59 +1703,19 @@ object SimilarityOps {
     */
   private lazy val fusionRankCtesSql: String =
       s"""t AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS toks FROM documents),
-         |qd AS (
-         |  SELECT doc_id AS qdoc FROM documents
-         |  WHERE ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")}
-         |    % 50 = 0
-         |  ORDER BY doc_id LIMIT 10),
-         |qtok AS (
-         |  SELECT qdoc, word FROM (
-         |    SELECT qd.qdoc, unnest(t.toks) AS word
-         |    FROM t JOIN qd ON t.doc_id = qd.qdoc)
-         |  WHERE len(word) >= 4 AND NOT ${TextOps.isStopwordSql("word")}),
-         |qtf AS (SELECT qdoc, word, COUNT(*) AS qtf FROM qtok GROUP BY 1, 2),
-         |qterms AS (
-         |  SELECT qdoc, word FROM (
-         |    SELECT qdoc, word,
-         |      row_number() OVER (PARTITION BY qdoc
-         |        ORDER BY qtf DESC, word ASC) AS rk
-         |    FROM qtf) WHERE rk <= 3),
-         |dl AS (SELECT doc_id, len(toks) AS dl FROM t),
-         |st AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
-         |tf AS (
-         |  SELECT doc_id, word, COUNT(*) AS tf FROM (
-         |    SELECT doc_id, unnest(toks) AS word FROM t)
-         |  WHERE word IN (SELECT word FROM qterms) GROUP BY 1, 2),
-         |dfx AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY 1),
-         |wtab AS (
-         |  SELECT q.qdoc, tf.doc_id,
-         |    CAST(ROUND((ln((st.n_docs - dfx.df + 0.5) / (dfx.df + 0.5) + 1.0)
-         |      * tf.tf * 2.2 /
-         |      (tf.tf + 1.2 * (0.25 + 0.75 * (CAST(dl.dl AS DOUBLE) / st.avgdl))))
-         |      * 1000000.0) AS BIGINT) AS wm
-         |  FROM tf JOIN qterms q ON tf.word = q.word
-         |  JOIN dfx ON tf.word = dfx.word
-         |  JOIN dl ON tf.doc_id = dl.doc_id
-         |  CROSS JOIN st),
-         |sc AS (
-         |  SELECT qdoc, doc_id, CAST(SUM(wm) AS BIGINT) AS score
-         |  FROM wtab WHERE doc_id <> qdoc GROUP BY 1, 2),
+         |qd AS (${DedupOps.hashSampleSql("doc_id AS qdoc", "documents", "doc_id")}),
+         |${TextOps.queryTermsSql},
+         |${TextOps.bm25StatsSql},
+         |qw AS (SELECT qdoc, word, 1 AS wt FROM qterms),
+         |${TextOps.bm25ScoresSql("sc", "qw")},
          |lex AS (
          |  SELECT qdoc, doc_id, lr FROM (
          |    SELECT qdoc, doc_id, row_number() OVER (PARTITION BY qdoc
          |      ORDER BY score DESC, doc_id ASC) AS lr
          |    FROM sc) WHERE lr <= $FusionDepth),
          |$vectorsSql,
-         |qv AS (
-         |  SELECT qd.qdoc, n.e AS qe, n.norm AS qn
-         |  FROM n JOIN qd ON n.vec_id = qd.qdoc),
-         |dense AS (
-         |  SELECT qdoc, doc_id, dr FROM (
-         |    SELECT qv.qdoc, n.vec_id AS doc_id,
-         |      row_number() OVER (PARTITION BY qv.qdoc
-         |        ORDER BY ${dotSql("n.e", "qv.qe")} / (n.norm * qv.qn) DESC,
-         |          n.vec_id ASC) AS dr
-         |    FROM n JOIN qv ON n.vec_id <> qv.qdoc) WHERE dr <= $FusionDepth)""".stripMargin
+         |$denseCandidatesSql,
+         |dense AS (SELECT qdoc, vec_id AS doc_id, rn AS dr FROM cand)""".stripMargin
 
   private lazy val oraclesTail: Map[String, String] = Map(
     "sample_cluster_balanced" ->
@@ -1796,23 +1750,8 @@ object SimilarityOps {
           .stripMargin
       }.mkString(",\n")
       s"""WITH $vectorsSql,
-         |qd AS (
-         |  SELECT doc_id AS qdoc FROM documents
-         |  WHERE ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")}
-         |    % 50 = 0
-         |  ORDER BY doc_id LIMIT 10),
-         |qv AS (
-         |  SELECT qd.qdoc, n.e AS qe, n.norm AS qn
-         |  FROM n JOIN qd ON n.vec_id = qd.qdoc),
-         |cand0 AS (
-         |  SELECT qv.qdoc, n.vec_id,
-         |    ${dotSql("n.e", "qv.qe")} / (n.norm * qv.qn) AS rel, n.e, n.norm
-         |  FROM n JOIN qv ON n.vec_id <> qv.qdoc),
-         |cand AS (
-         |  SELECT qdoc, vec_id, rel, e, norm FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY qdoc
-         |      ORDER BY rel DESC, vec_id ASC) AS rn FROM cand0)
-         |  WHERE rn <= $FusionDepth),
+         |qd AS (${DedupOps.hashSampleSql("doc_id AS qdoc", "documents", "doc_id")}),
+         |$denseCandidatesSql,
          |p AS (
          |  SELECT a.qdoc, a.vec_id AS a, b.vec_id AS b,
          |    ${dotSql("a.e", "b.e")} / (a.norm * b.norm) AS sim

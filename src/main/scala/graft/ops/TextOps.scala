@@ -326,6 +326,8 @@ object TextOps {
       .localCheckpoint(false)
   }
 
+  // ---- Retrieval rules: each defined once here, with its DuckDB twin ----
+
   /** The BM25-family building block (round 18 — factored out when the
     * per-query copies got pinned behind localCheckpoints): the corpus
     * token stream term-filtered to the query-term set and aggregated to
@@ -343,6 +345,122 @@ object TextOps {
       .join(broadcast(terms.select("word").distinct()), "word")
       .groupBy(col("doc_id"), col("word"))
       .agg(count(lit(1)).as("tf"))
+
+  /** A query term: at least 4 characters and not a stopword (stricter
+    * than [[isContentWord]], so a query keeps its informative words).
+    */
+  private[graft] def isQueryTerm(t: Column): Column =
+    length(t) >= 4 && !isStopword(t)
+
+  /** [[isQueryTerm]] over the DuckDB token `v`. */
+  private[graft] def isQueryTermSql(v: String): String =
+    s"len($v) >= 4 AND NOT ${isStopwordSql(v)}"
+
+  /** Each query doc's query: its top-3 query terms by in-doc count
+    * (ties on word), from the (qdoc, word) token stream of the query
+    * docs. ≤ 3·|queries| rows read by several plans, so pinned.
+    */
+  private[graft] def queryTerms(qtok: DataFrame): DataFrame =
+    qtok.filter(isQueryTerm(col("word")))
+      .groupBy(col("qdoc"), col("word")).agg(count(lit(1)).as("qtf"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("qdoc")).orderBy(desc("qtf"), asc("word"))))
+      .filter(col("rk") <= 3).select(col("qdoc"), col("word"))
+      .localCheckpoint(false)
+
+  /** [[queryTerms]]'s DuckDB twin: the `qterms` (qdoc, word) CTE over the
+    * token CTE `t` and the query-doc CTE `qd`.
+    */
+  private[graft] val queryTermsSql: String =
+    s"""qterms AS (
+       |  SELECT qdoc, word FROM (
+       |    SELECT qdoc, word,
+       |      row_number() OVER (PARTITION BY qdoc
+       |        ORDER BY qtf DESC, word ASC) AS rk
+       |    FROM (
+       |      SELECT qdoc, word, COUNT(*) AS qtf FROM (
+       |        SELECT qd.qdoc, unnest(t.toks) AS word
+       |        FROM t JOIN qd ON t.doc_id = qd.qdoc)
+       |      WHERE ${isQueryTermSql("word")} GROUP BY 1, 2))
+       |  WHERE rk <= 3)""".stripMargin
+
+  /** BM25 (Robertson/Lucene form, k1 = 1.2, b = 0.75) for every row of a
+    * (doc_id, word, tf, …) frame: df counts `tf`'s rows per word, the
+    * corpus stats (n_docs, avgdl) come from the (doc_id, dl) frame, and
+    * the result is `tf`'s columns plus the weight `w` and its
+    * micro-integer `wm` (exact in both engines: the inputs are counts
+    * and an exact avgdl, so per-doc scores are order-free integer sums).
+    * w per (doc, word) does not depend on the query, so callers with a
+    * (qdoc, word) term table join it after this frame.
+    * The tf >= 1 filter is always true (tf is a count) but keeps the df
+    * side consuming the tf value, so its exchange stays the tf side's
+    * and ReuseExchange shares it (see u7_tfidf_top_terms): an un-pinned
+    * tf is built by one corpus pass, not two.
+    */
+  private[graft] def bm25Weights(tf: DataFrame, dl: DataFrame): DataFrame = {
+    val df_ = tf.filter(col("tf") >= 1)
+      .groupBy(col("word")).agg(count(lit(1)).as("df"))
+    val st = dl.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
+    val scored = tf.join(broadcast(df_), "word")
+      .join(dl, "doc_id")
+      .crossJoin(broadcast(st))
+      .withColumn("dlr", col("dl").cast("double") / col("avgdl"))
+      .withColumn("idf",
+        log((col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)) + lit(1.0)))
+      .withColumn("w",
+        col("idf") * col("tf") * lit(2.2) /
+          (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dlr"))))
+    scored.select((tf.columns.map(col) :+ col("w") :+
+      round(col("w") * 1e6, 0).cast("long").as("wm")): _*)
+  }
+
+  /** Each query's BM25 score of every doc but itself, for a (qdoc, word,
+    * wt) term table: Σ wm·wt per (qdoc, doc_id) over the corpus tokens
+    * `t` (doc_id, t) term-filtered to the table's words. The tf table is
+    * hits-scale but read twice (the df aggregate and the scored join),
+    * so it is pinned: one corpus explode per pass.
+    */
+  private[graft] def bm25Scores(t: DataFrame, dl: DataFrame, terms: DataFrame): DataFrame =
+    bm25Weights(termFilteredTf(t, terms).localCheckpoint(false), dl)
+      .join(broadcast(terms), "word")
+      .groupBy(col("qdoc"), col("doc_id")).agg(sum(col("wm") * col("wt")).as("score"))
+      .filter(col("doc_id") =!= col("qdoc"))
+
+  /** [[bm25Weights]]'s corpus stats in DuckDB: the `dl` (doc_id, dl) and
+    * `st` (n_docs, avgdl) CTEs over the token CTE `t`.
+    */
+  private[graft] val bm25StatsSql: String =
+    """dl AS (SELECT doc_id, len(toks) AS dl FROM t),
+      |st AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl)""".stripMargin
+
+  /** [[bm25Weights]]'s DuckDB twin: a SELECT of the tf CTE `tf`'s columns
+    * plus `w` and `wm`, reading the [[bm25StatsSql]] CTEs.
+    */
+  private[graft] def bm25WeightsSql(tf: String): String =
+    s"""SELECT *, CAST(ROUND(w * 1e6, 0) AS BIGINT) AS wm FROM (
+       |  SELECT $tf.*,
+       |    ln((st.n_docs - dfx.df + 0.5) / (dfx.df + 0.5) + 1.0)
+       |      * $tf.tf * 2.2 /
+       |      ($tf.tf + 1.2 * (0.25 + 0.75 * (CAST(dl.dl AS DOUBLE) / st.avgdl))) AS w
+       |  FROM $tf
+       |  JOIN (SELECT word, COUNT(*) AS df FROM $tf GROUP BY word) dfx
+       |    ON $tf.word = dfx.word
+       |  JOIN dl ON $tf.doc_id = dl.doc_id
+       |  CROSS JOIN st)""".stripMargin
+
+  /** [[bm25Scores]]'s DuckDB twin: the CTEs `<out>_tf`, the token CTE
+    * `t` term-filtered to the words of the (qdoc, word, wt) CTE `terms`,
+    * and `out` (qdoc, doc_id, score).
+    */
+  private[graft] def bm25ScoresSql(out: String, terms: String): String =
+    s"""${out}_tf AS (
+       |  SELECT doc_id, word, COUNT(*) AS tf FROM (
+       |    SELECT doc_id, unnest(toks) AS word FROM t)
+       |  WHERE word IN (SELECT word FROM $terms) GROUP BY 1, 2),
+       |$out AS (
+       |  SELECT q.qdoc, w.doc_id, CAST(SUM(w.wm * q.wt) AS BIGINT) AS score
+       |  FROM (${bm25WeightsSql(s"${out}_tf")}) w JOIN $terms q ON w.word = q.word
+       |  WHERE w.doc_id <> q.qdoc GROUP BY 1, 2)""".stripMargin
 
   /** U2 lemmatizer-lite (data_preparation.py:100-119 is WordNet-backed;
     * exact parity is out of scope per SURVEY §7.4 — this is the documented
@@ -920,21 +1038,10 @@ object TextOps {
       val qTerms = Seq("spark", "table", "merge")
       val t = documents(s, d).select($"doc_id", tokens($"text").as("t"))
       val dl = t.select($"doc_id", size($"t").as("dl"))
-      val st = dl.agg(count(lit(1)).as("n_docs"), avg($"dl").as("avgdl"))
       val tf = t.select($"doc_id", explode($"t").as("word"))
         .filter($"word".isin(qTerms: _*))
         .groupBy($"doc_id", $"word").agg(count(lit(1)).as("tf"))
-      val df_ = tf.filter($"tf" >= 1) // always true; enables ReuseExchange — see u7
-        .groupBy($"word").agg(count(lit(1)).as("df"))
-      tf.join(broadcast(df_), "word")
-        .join(dl, "doc_id")
-        .crossJoin(broadcast(st))
-        .withColumn("dlr", $"dl".cast("double") / $"avgdl")
-        .withColumn("idf",
-          log(($"n_docs" - $"df" + lit(0.5)) / ($"df" + lit(0.5)) + lit(1.0)))
-        .withColumn("w",
-          $"idf" * $"tf" * lit(2.2) /
-            ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dlr")))
+      bm25Weights(tf, dl)
         .groupBy($"doc_id").agg(round(sum($"w"), 6).as("bm25"))
         .orderBy(desc("bm25"), asc("doc_id"))
         .limit(15)
@@ -981,21 +1088,9 @@ object TextOps {
         .select($"doc_id", size($"t").as("dl"),
           filter($"t", w => w.isin(qTerms: _*)).as("qt"))
         .localCheckpoint(false)
-      val dl = base.select($"doc_id", $"dl")
-      val st = dl.agg(count(lit(1)).as("n_docs"), avg($"dl").as("avgdl"))
       val tf = base.select($"doc_id", explode($"qt").as("word"))
         .groupBy($"doc_id", $"word").agg(count(lit(1)).as("tf"))
-      val df_ = tf.groupBy($"word").agg(count(lit(1)).as("df"))
-      val wtab = tf.join(broadcast(df_), "word")
-        .join(dl, "doc_id")
-        .crossJoin(broadcast(st))
-        .withColumn("dlr", $"dl".cast("double") / $"avgdl")
-        .withColumn("idf",
-          log(($"n_docs" - $"df" + lit(0.5)) / ($"df" + lit(0.5)) + lit(1.0)))
-        .withColumn("w",
-          $"idf" * $"tf" * lit(2.2) /
-            ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dlr")))
-        .withColumn("wm", round($"w" * 1e6, 0).cast("long"))
+      val wtab = bm25Weights(tf, base.select($"doc_id", $"dl"))
         .select($"doc_id", $"word", $"wm")
         .localCheckpoint(false) // three consumers below share one build
       val ub = wtab.groupBy($"word").agg(max($"wm").as("ub"))
@@ -1048,41 +1143,22 @@ object TextOps {
       // frame — per-doc length + the tokens hitting the ≤30-word query
       // vocabulary (1-row collect_set broadcast; filter-before-explode
       // keeps the identical hit multiset termFilteredTf produced).
-      val qdocs = documents(s, d)
-        .filter(pmod(graft.functions.PolyHash.poly_hash(
-          $"doc_id".cast("string")), lit(50L)) === 0)
-        .orderBy($"doc_id").limit(10).select($"doc_id".as("qdoc"))
-      val qtf = documents(s, d).join(broadcast(qdocs), $"doc_id" === $"qdoc")
-        .select($"qdoc", explode(tokens($"text")).as("word"))
-        .filter(length($"word") >= 4 && !isStopword($"word"))
-        .groupBy($"qdoc", $"word").agg(count(lit(1)).as("qtf"))
-      val wq = Window.partitionBy($"qdoc").orderBy(desc("qtf"), asc("word"))
-      val qterms = qtf.withColumn("rk", row_number().over(wq))
-        .filter($"rk" <= 3).select($"qdoc", $"word")
-        .localCheckpoint(false)
+      val qdocs = DedupOps.hashSample(documents(s, d), "doc_id")
+        .select($"doc_id".as("qdoc"))
+      val qterms = queryTerms(documents(s, d)
+        .join(broadcast(qdocs), $"doc_id" === $"qdoc")
+        .select($"qdoc", explode(tokens($"text")).as("word")))
       val qwords = qterms.select(collect_set($"word").as("qw"))
       val base = documents(s, d).select($"doc_id", tokens($"text").as("t"))
         .crossJoin(broadcast(qwords))
         .select($"doc_id", size($"t").as("dl"),
           filter($"t", w => array_contains($"qw", w)).as("qt"))
         .localCheckpoint(false)
-      val dl = base.select($"doc_id", $"dl")
-      val st = dl.agg(count(lit(1)).as("n_docs"), avg($"dl").as("avgdl"))
       val tf = base.select($"doc_id", explode($"qt").as("word"))
         .groupBy($"doc_id", $"word").agg(count(lit(1)).as("tf"))
         .localCheckpoint(false)
-      val df_ = tf.groupBy($"word").agg(count(lit(1)).as("df"))
-      val scored = tf.join(broadcast(qterms), "word")
-        .join(broadcast(df_), "word")
-        .join(dl, "doc_id")
-        .crossJoin(broadcast(st))
-        .withColumn("dlr", $"dl".cast("double") / $"avgdl")
-        .withColumn("idf",
-          log(($"n_docs" - $"df" + lit(0.5)) / ($"df" + lit(0.5)) + lit(1.0)))
-        .withColumn("w",
-          $"idf" * $"tf" * lit(2.2) /
-            ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dlr")))
-        .withColumn("wm", round($"w" * 1e6, 0).cast("long"))
+      val scored = bm25Weights(tf, base.select($"doc_id", $"dl"))
+        .join(broadcast(qterms), "word")
         .groupBy($"qdoc", $"doc_id").agg(sum($"wm").as("score"))
       val wr = Window.partitionBy($"qdoc").orderBy(desc("score"), asc("doc_id"))
       scored.withColumn("rank", row_number().over(wr))
@@ -1116,54 +1192,20 @@ object TextOps {
       import s.implicits._
       val t = documents(s, d).select($"doc_id", tokens($"text").as("t"))
         .localCheckpoint(false)
-      val qdocs = documents(s, d)
-        .filter(pmod(graft.functions.PolyHash.poly_hash(
-          $"doc_id".cast("string")), lit(50L)) === 0)
-        .orderBy($"doc_id").limit(10).select($"doc_id".as("qdoc"))
-      val qtf = t.join(broadcast(qdocs), $"doc_id" === $"qdoc")
-        .select($"qdoc", explode($"t").as("word"))
-        .filter(length($"word") >= 4 && !isStopword($"word"))
-        .groupBy($"qdoc", $"word").agg(count(lit(1)).as("qtf"))
-      val wq = Window.partitionBy($"qdoc").orderBy(desc("qtf"), asc("word"))
-      // round 18: ≤3·|queries| rows with FIVE consumers (both passes'
-      // term sets + broadcasts + the expansion anti-join), each of which
-      // re-ran the qdoc tokenize/window chain — pin once
-      val qterms = qtf.withColumn("rk", row_number().over(wq))
-        .filter($"rk" <= 3).select($"qdoc", $"word")
-        .localCheckpoint(false)
+      val qdocs = DedupOps.hashSample(documents(s, d), "doc_id")
+        .select($"doc_id".as("qdoc"))
+      // five consumers: both passes' term sets + broadcasts + the
+      // expansion anti-join (queryTerms pins it)
+      val qterms = queryTerms(t.join(broadcast(qdocs), $"doc_id" === $"qdoc")
+        .select($"qdoc", explode($"t").as("word")))
       val dl = t.select($"doc_id", size($"t").as("dl"))
-      val st = dl.agg(count(lit(1)).as("n_docs"), avg($"dl").as("avgdl"))
-      // One weighted-BM25 pass over a (qdoc, word, wt) term table; both
-      // retrieval passes share this shape, differing only in the terms.
-      def pass(terms: DataFrame): DataFrame = {
-        // round 18: pin the term-filtered tf table — it is hits-scale
-        // (≤50 terms), but BOTH consumers below (the df aggregate's
-        // broadcast build and the scored join) re-ran the corpus-wide
-        // token explode to produce it; each pass paid the firehose
-        // twice. One checkpoint = one explode per pass.
-        val tf = termFilteredTf(t, terms).localCheckpoint(false)
-        val df_ = tf.groupBy($"word").agg(count(lit(1)).as("df"))
-        tf.join(broadcast(terms), "word")
-          .join(broadcast(df_), "word")
-          .join(dl, "doc_id")
-          .crossJoin(broadcast(st))
-          .withColumn("dlr", $"dl".cast("double") / $"avgdl")
-          .withColumn("idf",
-            log(($"n_docs" - $"df" + lit(0.5)) / ($"df" + lit(0.5)) + lit(1.0)))
-          .withColumn("w",
-            $"idf" * $"tf" * lit(2.2) /
-              ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dlr")))
-          .withColumn("wm", round($"w" * 1e6, 0).cast("long") * $"wt")
-          .groupBy($"qdoc", $"doc_id").agg(sum($"wm").as("score"))
-          .filter($"doc_id" =!= $"qdoc")
-      }
-      val s1 = pass(qterms.withColumn("wt", lit(1L)))
+      val s1 = bm25Scores(t, dl, qterms.withColumn("wt", lit(1L)))
       val w1 = Window.partitionBy($"qdoc").orderBy(desc("score"), asc("doc_id"))
       val fb = s1.withColumn("rk", row_number().over(w1))
         .filter($"rk" <= 10).select($"qdoc", $"doc_id")
       val expTerms = t.join(broadcast(fb), "doc_id")
         .select($"qdoc", explode($"t").as("word"))
-        .filter(length($"word") >= 4 && !isStopword($"word"))
+        .filter(isQueryTerm($"word"))
         .groupBy($"qdoc", $"word").agg(count(lit(1)).as("ftf"))
         .join(qterms, Seq("qdoc", "word"), "left_anti")
         .withColumn("rk", row_number().over(
@@ -1175,7 +1217,7 @@ object TextOps {
         .localCheckpoint(false)
       val allTerms = qterms.withColumn("wt", lit(2L))
         .union(expTerms.withColumn("wt", lit(1L)))
-      val s2 = pass(allTerms)
+      val s2 = bm25Scores(t, dl, allTerms)
       val expStr = expTerms.groupBy($"qdoc")
         .agg(array_join(array_sort(collect_list($"word")), " ")
           .as("expansion_terms"))
@@ -2840,46 +2882,28 @@ object TextOps {
          |ORDER BY b.doc_id""".stripMargin,
     "text_bm25_topk" ->
       s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
-         |dl AS (SELECT doc_id, len(toks) AS dl FROM t),
-         |st AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
+         |$bm25StatsSql,
          |tf AS (
          |  SELECT doc_id, word, COUNT(*) AS tf FROM (
          |    SELECT doc_id, unnest(toks) AS word FROM t)
          |  WHERE word IN ('spark', 'table', 'merge')
-         |  GROUP BY doc_id, word),
-         |df AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY word),
-         |w AS (
-         |  SELECT tf.doc_id,
-         |    ln(((SELECT n_docs FROM st) - df + 0.5) / (df + 0.5) + 1.0)
-         |      * tf * 2.2
-         |      / (tf + 1.2 * (0.25 + 0.75 * (CAST(dl.dl AS DOUBLE)
-         |          / (SELECT avgdl FROM st)))) AS w
-         |  FROM tf JOIN df USING (word) JOIN dl ON tf.doc_id = dl.doc_id)
-         |SELECT doc_id, ROUND(SUM(w), 6) AS bm25 FROM w
+         |  GROUP BY doc_id, word)
+         |SELECT doc_id, ROUND(SUM(w), 6) AS bm25 FROM (${bm25WeightsSql("tf")})
          |GROUP BY doc_id ORDER BY bm25 DESC, doc_id ASC LIMIT 15""".stripMargin,
     // Deliberately UNPRUNED: scoring every matching doc exhaustively is
     // the ground truth that certifies the engine's MaxScore pruning
     // lossless (micro-integer weights make the equality exact).
     "retrieval_maxscore_topk" ->
       s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
-         |dl AS (SELECT doc_id, len(toks) AS dl FROM t),
-         |st AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
+         |$bm25StatsSql,
          |tf AS (
          |  SELECT doc_id, word, COUNT(*) AS tf FROM (
          |    SELECT doc_id, unnest(toks) AS word FROM t)
          |  WHERE word IN ('spark', 'table', 'merge', 'model', 'stream')
          |  GROUP BY doc_id, word),
-         |df AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY word),
-         |w AS (
-         |  SELECT tf.doc_id,
-         |    CAST(ROUND(
-         |      ln(((SELECT n_docs FROM st) - df + 0.5) / (df + 0.5) + 1.0)
-         |      * tf * 2.2
-         |      / (tf + 1.2 * (0.25 + 0.75 * (CAST(dl.dl AS DOUBLE)
-         |          / (SELECT avgdl FROM st)))) * 1e6, 0) AS BIGINT) AS wm
-         |  FROM tf JOIN df USING (word) JOIN dl ON tf.doc_id = dl.doc_id),
          |s AS (
-         |  SELECT doc_id, CAST(SUM(wm) AS BIGINT) AS score FROM w
+         |  SELECT doc_id, CAST(SUM(wm) AS BIGINT) AS score
+         |  FROM (${bm25WeightsSql("tf")})
          |  GROUP BY doc_id ORDER BY score DESC, doc_id ASC LIMIT 15)
          |SELECT row_number() OVER (ORDER BY score DESC, doc_id ASC) AS rank,
          |  doc_id, score
@@ -2901,43 +2925,17 @@ object TextOps {
          |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "text_bm25_eval" ->
       s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
-         |qd AS (
-         |  SELECT doc_id AS qdoc FROM documents
-         |  WHERE ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")}
-         |    % 50 = 0
-         |  ORDER BY doc_id LIMIT 10),
-         |qtok AS (
-         |  SELECT qdoc, word FROM (
-         |    SELECT qd.qdoc, unnest(t.toks) AS word
-         |    FROM t JOIN qd ON t.doc_id = qd.qdoc)
-         |  WHERE len(word) >= 4 AND NOT ${isStopwordSql("word")}),
-         |qtf AS (SELECT qdoc, word, COUNT(*) AS qtf FROM qtok GROUP BY 1, 2),
-         |qterms AS (
-         |  SELECT qdoc, word FROM (
-         |    SELECT qdoc, word,
-         |      row_number() OVER (PARTITION BY qdoc
-         |        ORDER BY qtf DESC, word ASC) AS rk
-         |    FROM qtf) WHERE rk <= 3),
-         |dl AS (SELECT doc_id, len(toks) AS dl FROM t),
-         |st AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
+         |qd AS (${DedupOps.hashSampleSql("doc_id AS qdoc", "documents", "doc_id")}),
+         |$queryTermsSql,
+         |$bm25StatsSql,
          |tf AS (
          |  SELECT doc_id, word, COUNT(*) AS tf FROM (
          |    SELECT doc_id, unnest(toks) AS word FROM t)
          |  WHERE word IN (SELECT word FROM qterms) GROUP BY 1, 2),
-         |dfx AS (SELECT word, COUNT(*) AS df FROM tf GROUP BY 1),
-         |wtab AS (
-         |  SELECT q.qdoc, tf.doc_id,
-         |    CAST(ROUND((ln((st.n_docs - dfx.df + 0.5) / (dfx.df + 0.5) + 1.0)
-         |      * tf.tf * 2.2 /
-         |      (tf.tf + 1.2 * (0.25 + 0.75 * (CAST(dl.dl AS DOUBLE) / st.avgdl))))
-         |      * 1000000.0) AS BIGINT) AS wm
-         |  FROM tf JOIN qterms q ON tf.word = q.word
-         |  JOIN dfx ON tf.word = dfx.word
-         |  JOIN dl ON tf.doc_id = dl.doc_id
-         |  CROSS JOIN st),
          |sc AS (
-         |  SELECT qdoc, doc_id, CAST(SUM(wm) AS BIGINT) AS score
-         |  FROM wtab GROUP BY 1, 2)
+         |  SELECT q.qdoc, w.doc_id, CAST(SUM(w.wm) AS BIGINT) AS score
+         |  FROM (${bm25WeightsSql("tf")}) w JOIN qterms q ON w.word = q.word
+         |  GROUP BY 1, 2)
          |SELECT query_doc, self_rank,
          |  ROUND(1.0 / self_rank, 6) AS reciprocal_rank
          |FROM (
@@ -2946,58 +2944,27 @@ object TextOps {
          |      ORDER BY score DESC, doc_id ASC) AS self_rank
          |  FROM sc)
          |WHERE doc_id = query_doc ORDER BY query_doc""".stripMargin,
-    // Two full weighted-BM25 passes: tf1/df1/w1 score the original
-    // 3-term queries, fb is each query's top-10 feedback set, ec/exq
-    // mine the 2 expansion terms, tf2/df2/w2 re-score the 5-term
-    // expanded query at integer weights 2·orig + 1·exp.
+    // Two full weighted-BM25 passes: s1 scores the original 3-term
+    // queries, fb is each query's top-10 feedback set, ec/exq mine the
+    // 2 expansion terms, s2 re-scores the 5-term expanded query at
+    // integer weights 2·orig + 1·exp.
     "retrieval_prf_expansion" ->
       s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
-         |qd AS (
-         |  SELECT doc_id AS qdoc FROM documents
-         |  WHERE ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")}
-         |    % 50 = 0
-         |  ORDER BY doc_id LIMIT 10),
-         |qtok AS (
-         |  SELECT qdoc, word FROM (
-         |    SELECT qd.qdoc, unnest(t.toks) AS word
-         |    FROM t JOIN qd ON t.doc_id = qd.qdoc)
-         |  WHERE len(word) >= 4 AND NOT ${isStopwordSql("word")}),
-         |qtf AS (SELECT qdoc, word, COUNT(*) AS qtf FROM qtok GROUP BY 1, 2),
-         |qterms AS (
-         |  SELECT qdoc, word FROM (
-         |    SELECT qdoc, word,
-         |      row_number() OVER (PARTITION BY qdoc
-         |        ORDER BY qtf DESC, word ASC) AS rk
-         |    FROM qtf) WHERE rk <= 3),
-         |dl AS (SELECT doc_id, len(toks) AS dl FROM t),
-         |st AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl),
-         |tok AS (SELECT doc_id, unnest(toks) AS word FROM t),
-         |tf1 AS (
-         |  SELECT doc_id, word, COUNT(*) AS tf FROM tok
-         |  WHERE word IN (SELECT word FROM qterms) GROUP BY 1, 2),
-         |df1 AS (SELECT word, COUNT(*) AS df FROM tf1 GROUP BY 1),
-         |w1 AS (
-         |  SELECT q.qdoc, tf1.doc_id,
-         |    CAST(ROUND((ln((st.n_docs - df1.df + 0.5) / (df1.df + 0.5) + 1.0)
-         |      * tf1.tf * 2.2 /
-         |      (tf1.tf + 1.2 * (0.25 + 0.75 * (CAST(dl.dl AS DOUBLE) / st.avgdl))))
-         |      * 1000000.0) AS BIGINT) AS wm
-         |  FROM tf1 JOIN qterms q ON tf1.word = q.word
-         |  JOIN df1 ON tf1.word = df1.word
-         |  JOIN dl ON tf1.doc_id = dl.doc_id
-         |  CROSS JOIN st),
-         |s1 AS (
-         |  SELECT qdoc, doc_id, CAST(SUM(wm) AS BIGINT) AS score
-         |  FROM w1 WHERE doc_id <> qdoc GROUP BY 1, 2),
+         |qd AS (${DedupOps.hashSampleSql("doc_id AS qdoc", "documents", "doc_id")}),
+         |$queryTermsSql,
+         |$bm25StatsSql,
+         |qw AS (SELECT qdoc, word, 1 AS wt FROM qterms),
+         |${bm25ScoresSql("s1", "qw")},
          |fb AS (
          |  SELECT qdoc, doc_id FROM (
          |    SELECT qdoc, doc_id, row_number() OVER (PARTITION BY qdoc
          |      ORDER BY score DESC, doc_id ASC) AS rk
          |    FROM s1) WHERE rk <= 10),
+         |tok AS (SELECT doc_id, unnest(toks) AS word FROM t),
          |ec AS (
          |  SELECT fb.qdoc, tok.word, COUNT(*) AS ftf
          |  FROM tok JOIN fb ON tok.doc_id = fb.doc_id
-         |  WHERE len(tok.word) >= 4 AND NOT ${isStopwordSql("tok.word")}
+         |  WHERE ${isQueryTermSql("tok.word")}
          |    AND NOT EXISTS (SELECT 1 FROM qterms q
          |      WHERE q.qdoc = fb.qdoc AND q.word = tok.word)
          |  GROUP BY 1, 2),
@@ -3009,23 +2976,7 @@ object TextOps {
          |allt AS (
          |  SELECT qdoc, word, 2 AS wt FROM qterms
          |  UNION ALL SELECT qdoc, word, 1 AS wt FROM exq),
-         |tf2 AS (
-         |  SELECT doc_id, word, COUNT(*) AS tf FROM tok
-         |  WHERE word IN (SELECT word FROM allt) GROUP BY 1, 2),
-         |df2 AS (SELECT word, COUNT(*) AS df FROM tf2 GROUP BY 1),
-         |w2 AS (
-         |  SELECT a.qdoc, tf2.doc_id,
-         |    CAST(ROUND((ln((st.n_docs - df2.df + 0.5) / (df2.df + 0.5) + 1.0)
-         |      * tf2.tf * 2.2 /
-         |      (tf2.tf + 1.2 * (0.25 + 0.75 * (CAST(dl.dl AS DOUBLE) / st.avgdl))))
-         |      * 1000000.0) AS BIGINT) * a.wt AS wm
-         |  FROM tf2 JOIN allt a ON tf2.word = a.word
-         |  JOIN df2 ON tf2.word = df2.word
-         |  JOIN dl ON tf2.doc_id = dl.doc_id
-         |  CROSS JOIN st),
-         |s2 AS (
-         |  SELECT qdoc, doc_id, CAST(SUM(wm) AS BIGINT) AS score
-         |  FROM w2 WHERE doc_id <> qdoc GROUP BY 1, 2),
+         |${bm25ScoresSql("s2", "allt")},
          |es AS (
          |  SELECT qdoc, string_agg(word, ' ' ORDER BY word)
          |    AS expansion_terms

@@ -67,13 +67,16 @@ class PlanSpec extends SparkSpec {
     // the whole exploded corpus on `word`, which is the exact skew
     // disaster a dominant near-dup source triggers (one hot term =
     // one straggler partition carrying most of the corpus).
-    // Round 18: the rrf/prf term-filtered tf tables are now pinned
-    // behind localCheckpoints (one corpus explode per pass instead of
-    // one per consumer), so their FINAL plans show a Scan ExistingRDD
-    // where this join used to be visible. The broadcast property is
-    // pinned on the shared builder itself (every BM25 core goes
-    // through TextOps.termFilteredTf); the no-word-shuffle assertion
-    // still runs on every final plan.
+    // Every BM25 query scores through the one shared scorer,
+    // TextOps.bm25Weights, whose df and query-term joins are broadcast.
+    // Its tf input is built three ways: the rrf/prf passes filter the
+    // exploded corpus with TextOps.termFilteredTf and pin the result
+    // (one corpus explode per pass, so their FINAL plans show a Scan
+    // ExistingRDD where this join used to be visible: the broadcast
+    // property is pinned on that builder itself), maxscore and
+    // bm25_eval filter each doc's token array before the explode, and
+    // text_bm25_topk filters on a literal term list. The
+    // no-word-shuffle assertion runs on every final plan.
     val builderPlan = {
       import org.apache.spark.sql.functions._
       val t = graft.ops.Tables.documents(spark, sf)
@@ -88,7 +91,8 @@ class PlanSpec extends SparkSpec {
     assert("""BroadcastHashJoin \[word#\d+""".r
       .findFirstIn(builderPlan).isDefined,
       s"termFilteredTf: term filter is not a broadcast join\n$builderPlan")
-    Seq("retrieval_rrf_fusion", "retrieval_prf_expansion", "text_bm25_topk")
+    Seq("retrieval_rrf_fusion", "retrieval_prf_expansion", "text_bm25_topk",
+      "text_bm25_eval", "retrieval_maxscore_topk")
       .foreach { n =>
         val p = plan(n)
         assert("""(SortMergeJoin|ShuffledHashJoin) \[word#\d+""".r

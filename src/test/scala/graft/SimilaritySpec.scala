@@ -138,6 +138,9 @@ class SimilaritySpec extends SparkSpec {
     // the dot product: the codegen'd Column and its SQL fold
     assert(sites("""VecDot\.vec_dot\(""") == once)
     assert(sites("""i -> [\w.$]+\[i\+1\] \* """) == once)
+    // the IVF residual e - c(cid): a zip_with lambda and its SQL twin
+    assert(sites("""\((\w), (\w)\) => \1 - \2\b""") == once)
+    assert(sites("""i -> [\w.$]+\[i\+1\] - """) == once)
   }
 
   test("SQ8 probe rescores its candidates with the exact cosines") {

@@ -1008,4 +1008,25 @@ class TextOpsSpec extends SparkSpec {
     assert(sites(">= 3 && !") == once)
     assert(sites(">= 3 AND NOT") == once)
   }
+
+  test("each retrieval rule is written once under src/main") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> Files.readString(p)).toSeq
+    def sites(pattern: String): Map[String, Int] = sources
+      .map { case (f, src) => f -> pattern.r.findAllMatchIn(src).size }
+      .filter(_._2 > 0).toMap
+    // the BM25 term weight (k1 = 1.2, so 2.2 = k1 + 1) and its twin
+    assert(sites("""lit\(2\.2\)""") == Map("TextOps.scala" -> 1))
+    assert(sites("""\* 2\.2\b""") == Map("TextOps.scala" -> 1))
+    // the hash-sampled query set: poly_hash(key) % 50 = 0; DedupOps'
+    // plain `doc_id % 50` planted-corpus filters are another rule
+    assert(sites("""lit\(50L\)\) === 0""") == Map("DedupOps.scala" -> 1))
+    assert(sites("""(?<!_id )% 50 = 0""") == Map("DedupOps.scala" -> 1))
+    // the query-term filter (length >= 4, not a stopword) and its twin
+    assert(sites(">= 4 && !") == Map("TextOps.scala" -> 1))
+    assert(sites(">= 4 AND NOT") == Map("TextOps.scala" -> 1))
+  }
 }
