@@ -128,39 +128,90 @@ object DedupOps {
   /** Tokenize-then-shingle as one Column (convenience for tests). */
   def shingles(c: Column): Column = shinglesFromToks(TextOps.tokens(c))
 
-  private val shinglesSql =
-    s"""list_distinct(list_transform(range(len(toks) - 2),
-       |  i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3]))""".stripMargin
-
-  // Common oracle prelude: per-doc distinct shingle HASHES (docs with ≥3
-  // tokens). Both engines operate on the PACKED hash pair of each
-  // shingle string (round 12 — see ShingleHashes) — identity, set sizes,
-  // and any residual ~2^-60 collisions are identical.
-  private val shingleCte =
-    s"""t AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS toks FROM documents),
-       |sh AS (SELECT doc_id, $shinglesSql AS shs FROM t WHERE len(toks) >= 3),
-       |e0 AS (SELECT doc_id, unnest(shs) AS sh FROM sh),
-       |e AS (SELECT DISTINCT doc_id, ${wideHashSql("sh")} AS sh FROM e0),
+  /** The shingle-hash chain of every shingle oracle, over the docs of
+    * relation `from` (doc_id, text, then the `carry` columns, e.g.
+    * ", side"): t (tokens) → sh (distinct 3-gram strings, docs with ≥ 3
+    * tokens) → e0 (exploded) → e (doc_id, carry..., sh: the distinct
+    * PACKED hash pairs, as ShingleHashes emits them — identity, set sizes
+    * and any residual ~2^-60 collisions are the engine's) → sz (per-doc
+    * set size). [[shingleCte]] is the whole-corpus chain.
+    */
+  private def shingleSql(from: String, carry: String = ""): String =
+    s"""t AS (SELECT doc_id$carry, ${TextOps.tokensSql("text")} AS toks FROM $from),
+       |sh AS (SELECT doc_id$carry, list_distinct(list_transform(range(len(toks) - 2),
+       |  i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS shs
+       |  FROM t WHERE len(toks) >= 3),
+       |e0 AS (SELECT doc_id$carry, unnest(shs) AS sh FROM sh),
+       |e AS (SELECT DISTINCT doc_id$carry, ${wideHashSql("sh")} AS sh FROM e0),
        |sz AS (SELECT doc_id, COUNT(*) AS sz FROM e GROUP BY doc_id)""".stripMargin
 
-  /** Exact Jaccard over candidate pairs given an exploded (doc_id, sh)
-    * table; candidates = pairs sharing ≥1 shingle.
+  private val shingleCte = shingleSql("documents")
+
+  /** The near-duplicate gate of both engines: a pair is a near-dup when
+    * its Jaccard ROUNDED to 6 dp reaches the gate. The rounded and the
+    * exact ratio select the same pairs on every input this engine sees:
+    * for integer |A∩B| and |A∪B| below a gate p/q the gap is at least
+    * 1/(q·|A∪B|), so rounding can lift a pair over the gate only once the
+    * union reaches 200,000 shingles (400,000 at 0.8). One rule, stated
+    * once, keeps the pair sets and the oracles identical anyway.
     */
-  private def jaccardPairs(s: SparkSession, e: DataFrame, sizes: DataFrame,
-      threshold: Double): DataFrame = {
+  val JaccardGate = 0.8
+
+  /** The rounded Jaccard |A∩B| / |A∪B| from the intersection and both
+    * set sizes (see [[JaccardGate]]).
+    */
+  def jaccard(inter: Column, s1: Column, s2: Column): Column =
+    round(inter / (s1 + s2 - inter), 6)
+
+  /** [[jaccard]]'s DuckDB twin over columns `inter`, `s1`, `s2`. */
+  private def jaccardSql(inter: String = "inter", s1: String = "s1",
+      s2: String = "s2"): String =
+    s"ROUND($inter * 1.0 / ($s1 + $s2 - $inter), 6)"
+
+  /** (d1 < d2, inter, s1, s2) for every doc pair sharing ≥ 1 shingle:
+    * the exploded self-join on the hash, the per-pair count and both set
+    * sizes. The enumerating form (no candidate list given); the pair
+    * generators verify given candidates through [[verifyCandidates]].
+    */
+  private def sharedShinglePairs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val e1 = e.toDF("d1", "sh")
-    val e2 = e.toDF("d2", "sh")
-    e1.join(e2, "sh").filter($"d1" < $"d2")
+    val (e, sizes) = explodedShingles(s, d)
+    e.toDF("d1", "sh").join(e.toDF("d2", "sh"), "sh").filter($"d1" < $"d2")
       .groupBy($"d1", $"d2").agg(count("*").as("inter"))
       .join(sizes.toDF("d1", "s1"), "d1")
       .join(sizes.toDF("d2", "s2"), "d2")
-      .withColumn("jaccard",
-        round($"inter" / ($"s1" + $"s2" - $"inter"), 6))
-      .filter($"jaccard" >= threshold)
+  }
+
+  /** (d1, d2, jaccard) pairs with jaccard ≥ `gate` from a (d1, d2,
+    * inter, s1, s2) frame, ordered by pair.
+    */
+  private def gated(pairs: DataFrame, gate: Double): DataFrame =
+    pairs
+      .withColumn("jaccard", jaccard(col("inter"), col("s1"), col("s2")))
+      .filter(col("jaccard") >= gate)
       .select("d1", "d2", "jaccard")
       .orderBy("d1", "d2")
-  }
+
+  /** [[sharedShinglePairs]]' DuckDB twin (needs [[shingleSql]]'s `e` and
+    * `sz`): the CTE `pairs(d1, d2, inter, s1, s2)`.
+    */
+  private val pairsSql =
+    """pairs AS (
+      |  SELECT d1, d2, inter, sa.sz AS s1, sb.sz AS s2 FROM (
+      |    SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
+      |    FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
+      |    GROUP BY 1, 2) p
+      |  JOIN sz sa ON d1 = sa.doc_id
+      |  JOIN sz sb ON d2 = sb.doc_id)""".stripMargin
+
+  /** [[gated]]'s DuckDB twin: [[pairsSql]], then `name(d1, d2, jaccard)`
+    * holding the pairs at or above `gate`.
+    */
+  private def jaccardPairsSql(name: String, gate: Double): String =
+    s"""$pairsSql,
+       |$name AS (
+       |  SELECT d1, d2, ${jaccardSql()} AS jaccard FROM pairs
+       |  WHERE ${jaccardSql()} >= $gate)""".stripMargin
 
   /** Embedding corpus with planted near-duplicates: every 50th vector
     * re-keyed +100000 with dim 0 bumped by +0.1. On a unit-norm corpus the
@@ -179,29 +230,31 @@ object DedupOps {
     base.union(planted).withColumn("norm", SimilarityOps.l2Norm($"e"))
   }
 
-  /** The cached per-doc (doc_id, xs: array<long>) shingle-hash frame.
-    * Persisted: it feeds 4-6 plan branches (candidate sides, sizes,
-    * signatures); without a materialization boundary Spark re-reads and
-    * re-shingles the corpus per branch — the multi-consumer fan-out
-    * pattern SURVEY §3.1 calls for caching. One Memo.perPass entry per
-    * sfDir, shared by ngram_jaccard, minhash_lsh and levenshtein_verify.
-    * Tokenization sits in its own Project (materialized attribute), then
-    * the codegen'd ShingleHashes expression emits distinct hashes in one
-    * pass — shingle strings never materialize.
+  /** The persisted (doc_id, carry..., xs: array<long>) shingle-hash
+    * frame of the docs in `docs` (doc_id, text, carry...): repartitioned
+    * to the session width (single-file corpus: fan out before the CPU
+    * work), tokenized in its own Project (a materialized attribute), then
+    * the codegen'd ShingleHashes expression emits the distinct hashes in
+    * one pass — shingle strings never materialize. Docs without a shingle
+    * (fewer than 3 tokens) are dropped. Persisted: it feeds 3-6 plan
+    * branches (candidate sides, sizes, signatures), and without a
+    * materialization boundary Spark re-reads and re-shingles per branch.
     */
-  private def shingleFrame(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    Memo.perPass("shingles", s, d) {
-      val par = s.sparkContext.defaultParallelism
-      documents(s, d)
-        .repartition(par) // single-file corpus: fan out before the CPU work
-        .select($"doc_id", TextOps.tokens($"text").as("t"))   // tokenization Project
-        .select($"doc_id",
-          graft.functions.ShingleHashes.poly_shingles($"t").as("xs"))
-        .filter(size($"xs") >= 1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  private def shingleHashes(docs: DataFrame, carry: String*): DataFrame = {
+    val keys = ("doc_id" +: carry).map(col)
+    docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+      .select(keys :+ TextOps.tokens(col("text")).as("t"): _*)
+      .select(keys :+
+        graft.functions.ShingleHashes.poly_shingles(col("t")).as("xs"): _*)
+      .filter(size(col("xs")) >= 1)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
+
+  /** The corpus's [[shingleHashes]] frame: one Memo.perPass entry per
+    * sfDir, shared by every shingle op of a pass.
+    */
+  private def shingleFrame(s: SparkSession, d: String): DataFrame =
+    Memo.perPass("shingles", s, d)(shingleHashes(documents(s, d)))
 
   /** The corpus/incoming split of dedup_incremental and
     * stream_lsh_incremental: every 10th doc arrives in the incoming batch,
@@ -219,14 +272,8 @@ object DedupOps {
       .union(corpus.filter($"doc_id" % 25 === 7)
         .select(($"doc_id" + 2000000).as("doc_id"), $"text"))
     val sh = Memo.perPass("shingles_incremental", s, d) {
-      corpus.withColumn("side", lit("old"))
-        .union(incoming.withColumn("side", lit("new")))
-        .repartition(s.sparkContext.defaultParallelism)
-        .select($"doc_id", $"side", TextOps.tokens($"text").as("t"))
-        .select($"doc_id", $"side",
-          graft.functions.ShingleHashes.poly_shingles($"t").as("xs"))
-        .filter(size($"xs") >= 1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      shingleHashes(corpus.withColumn("side", lit("old"))
+        .union(incoming.withColumn("side", lit("new"))), "side")
     }
     val bands = lshBands(sh, "doc_id", "side")
     val cands = bands.filter($"side" === "new")
@@ -236,6 +283,34 @@ object DedupOps {
       .select("d_new", "d_old").distinct()
     (incoming, sh, cands)
   }
+
+  /** [[incrementalCandidates]]' split in DuckDB: `corpus`, `incoming`
+    * and `all_docs(doc_id, text, side)`.
+    */
+  private val incrementalSplitSql =
+    """corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0),
+      |incoming AS (
+      |  SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0
+      |  UNION ALL
+      |  SELECT doc_id + 2000000 AS doc_id, text FROM corpus WHERE doc_id % 25 = 7),
+      |all_docs AS (
+      |  SELECT doc_id, text, 'old' AS side FROM corpus
+      |  UNION ALL
+      |  SELECT doc_id, text, 'new' AS side FROM incoming)""".stripMargin
+
+  /** [[incrementalCandidates]] in DuckDB: the split, its side-aware
+    * shingle and band chains, and `cands(d_new, d_old)`, the distinct new
+    * × old pairs sharing a band (the probe, not the d1 < d2 self-join).
+    */
+  private lazy val incrementalCandidatesSql =
+    s"""$incrementalSplitSql,
+       |${shingleSql("all_docs", ", side")},
+       |${lshBandsSql(", side")},
+       |cands AS (
+       |  SELECT DISTINCT n.doc_id AS d_new, o.doc_id AS d_old
+       |  FROM bands n JOIN bands o
+       |    ON n.band = o.band AND n.key = o.key
+       |    AND n.side = 'new' AND o.side = 'old')""".stripMargin
 
   /** (keys..., band, key): the NumBands MinHash band keys of each row's
     * `xs` shingle hashes, RowsPerBand signature values joined per band.
@@ -251,10 +326,47 @@ object DedupOps {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
   }
 
+  /** [[lshBands]]' DuckDB twin over [[shingleSql]]'s `e` (with the same
+    * `carry` columns): xs → seeds (the permutation constants) → sig (the
+    * 32 permutation minima) → bands(doc_id, carry..., band, key).
+    */
+  private def lshBandsSql(carry: String = ""): String =
+    s"""xs AS (SELECT doc_id$carry, sh AS x FROM e),
+       |seeds(i, a, b) AS (VALUES ${permSeeds.zipWithIndex
+      .map { case ((a, b), i) => s"($i,$a,$b)" }.mkString(",")}),
+       |sig AS (
+       |  SELECT doc_id$carry, i, MIN((a * (x % $P_PERM) + b) % $P_PERM) AS h
+       |  FROM xs CROSS JOIN seeds
+       |  GROUP BY doc_id$carry, i),
+       |bands AS (
+       |  SELECT doc_id$carry, i // $RowsPerBand AS band,
+       |    string_agg(CAST(h AS VARCHAR), '_' ORDER BY i) AS key
+       |  FROM sig GROUP BY doc_id$carry, i // $RowsPerBand)""".stripMargin
+
+  /** The distinct (d1 < d2) doc pairs of a shingle-hash frame sharing at
+    * least one LSH band. The distinct is REQUIRED, not an optimization: a
+    * pair colliding in k bands appears k times and would be verified and
+    * emitted k×.
+    */
+  private def bandPairs(sh: DataFrame): DataFrame = {
+    val sig = lshBands(sh, "doc_id")
+    sig.toDF("d1", "band", "key")
+      .join(sig.toDF("d2", "band", "key"), Seq("band", "key"))
+      .filter(col("d1") < col("d2"))
+      .select("d1", "d2").distinct()
+  }
+
+  /** [[bandPairs]]' DuckDB twin over [[lshBandsSql]]'s `bands`. */
+  private val bandPairsSql =
+    s"""cands AS (
+       |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
+       |  FROM bands a JOIN bands b
+       |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)""".stripMargin
+
   /** (doc_id, sh: long hash) exploded shingle hashes + per-doc set sizes:
     * the form of the ops that ENUMERATE shared-shingle pairs or probe
-    * single hashes (ngram_jaccard and the pr_eval/gate_sweep ground
-    * truth via jaccardPairs, containment, prefix_filter, the contamination
+    * single hashes ([[sharedShinglePairs]]: ngram_jaccard, containment,
+    * the pr_eval/gate_sweep ground truth; prefix_filter, the contamination
     * probes). Verifying an already-generated candidate list reads the
     * cached arrays instead ([[verifyCandidates]]).
     */
@@ -281,6 +393,23 @@ object DedupOps {
         size(array_intersect(col("x1"), col("x2"))).as("inter"),
         size(col("x1")).as("s1"), size(col("x2")).as("s2"))
   }
+
+  /** [[verifyCandidates]]' DuckDB twin, gated: over a `cands(a, b)` CTE
+    * and [[shingleSql]]'s `e`/`sz`, `inter` counts |A∩B| per pair and
+    * `lshverified(a, b, jaccard)` keeps the pairs at the gate.
+    */
+  private def verifiedSql(a: String, b: String): String =
+    s"""inter AS (
+       |  SELECT $a, $b, COUNT(*) AS inter
+       |  FROM cands JOIN e e1 ON e1.doc_id = $a
+       |             JOIN e e2 ON e2.doc_id = $b AND e1.sh = e2.sh
+       |  GROUP BY $a, $b),
+       |lshverified AS (
+       |  SELECT $a, $b, ${jaccardSql("inter", "sa.sz", "sb.sz")} AS jaccard
+       |  FROM inter
+       |  JOIN sz sa ON $a = sa.doc_id
+       |  JOIN sz sb ON $b = sb.doc_id
+       |  WHERE ${jaccardSql("inter", "sa.sz", "sb.sz")} >= $JaccardGate)""".stripMargin
 
   /** Connected components over an undirected pair list (d1, d2): returns
     * (node, component-min label) for every node in a non-self pair. The
@@ -365,6 +494,21 @@ object DedupOps {
       .select($"node", coalesce($"lbl", $"node").as("lbl"))
   }
 
+  /** [[ccStars]]' DuckDB twin: the recursive transitive closure over the
+    * (d1, d2) pairs of CTE `pairs`, ending in `cc<suffix>(doc_id,
+    * cluster_rep)` (component-min labels of every node in a pair). Its
+    * caller opens the WITH RECURSIVE.
+    */
+  private def closureSql(pairs: String, suffix: String = ""): String =
+    s"""ed$suffix AS (SELECT d1 AS a, d2 AS b FROM $pairs
+       |  UNION SELECT d2, d1 FROM $pairs),
+       |reach$suffix(a, b) AS (
+       |  SELECT a, b FROM ed$suffix UNION SELECT a, a FROM ed$suffix
+       |  UNION
+       |  SELECT r.a, e2.b FROM reach$suffix r JOIN ed$suffix e2 ON r.b = e2.a),
+       |cc$suffix AS (
+       |  SELECT a AS doc_id, MIN(b) AS cluster_rep FROM reach$suffix GROUP BY a)""".stripMargin
+
   /** The split-leakage report over an arbitrary near-dup pair list
     * (d1, d2): recompute each member's train/val/test assignment from
     * the stable id (split_train_test's hash rule — no join against a
@@ -374,11 +518,6 @@ object DedupOps {
     */
   private def leakageAudit(s: SparkSession, pairs: DataFrame): DataFrame = {
     import s.implicits._
-    def splitOf(c: Column): Column = {
-      val bucket = pmod(
-        graft.functions.PolyHash.poly_hash(c.cast("string")), lit(10L))
-      when(bucket < 8, "train").when(bucket === 8, "val").otherwise("test")
-    }
     pairs
       .withColumn("s1", splitOf($"d1"))
       .withColumn("s2", splitOf($"d2"))
@@ -386,6 +525,84 @@ object DedupOps {
       .withColumn("leaks", $"s1" =!= $"s2")
       .orderBy("s1", "s2")
   }
+
+  /** The deterministic train/val/test split of a stable id: 80/10/10 by
+    * polyHash(id) mod 10 — split_train_test's assignment, recomputed by
+    * the leakage audits.
+    */
+  def splitOf(c: Column): Column = {
+    val bucket = pmod(polyHash(c.cast("string")), lit(10L))
+    when(bucket < 8, "train").when(bucket === 8, "val").otherwise("test")
+  }
+
+  /** [[splitOf]]'s DuckDB twin. */
+  def splitSql(c: String): String =
+    s"""CASE WHEN ${polyHashSql(s"CAST($c AS VARCHAR)")} % 10 < 8 THEN 'train'
+       |     WHEN ${polyHashSql(s"CAST($c AS VARCHAR)")} % 10 = 8 THEN 'val'
+       |     ELSE 'test' END""".stripMargin
+
+  /** The planted exact-dup fixture: the corpus's (doc_id, text) plus a
+    * copy of every 100th doc re-keyed +1000000, so an exact dedup
+    * provably removes rows. Real doc_ids stay under 1e6 (through the
+    * 100× scale corpus); a larger corpus bumps the offset here.
+    */
+  def plantedDups(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val docs = documents(s, d).select($"doc_id", $"text")
+    docs.union(docs.filter($"doc_id" % 100 === 0)
+      .select(($"doc_id" + 1000000).as("doc_id"), $"text"))
+  }
+
+  /** [[plantedDups]]' DuckDB twin: the CTE `all_docs(doc_id, text)`. */
+  lazy val plantedDupsSql =
+    """all_docs AS (
+      |  SELECT doc_id, text FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 1000000 AS doc_id, text FROM documents
+      |  WHERE doc_id % 100 = 0)""".stripMargin
+
+  /** The planted half-doc fixture of the substring ops: every doc's
+    * (doc_id, tk) tokens plus, for every 50th doc, its first half re-keyed
+    * +2000000 (all of its windows exist in the source doc).
+    */
+  private def halfDocs(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val tokd = documents(s, d).select($"doc_id", TextOps.tokens($"text").as("tk"))
+    tokd.union(tokd.filter($"doc_id" % 50 === 0)
+      .select(($"doc_id" + 2000000).as("doc_id"),
+        slice($"tk", lit(1), floor(size($"tk") / 2).cast("int")).as("tk")))
+  }
+
+  /** [[halfDocs]]' DuckDB twin: `t`, `h0` and `a(doc_id, tk)`. */
+  private val halfDocsSql =
+    s"""t AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS tk FROM documents),
+       |h0 AS (
+       |  SELECT doc_id + 2000000 AS doc_id, tk[1:len(tk)//2] AS tk
+       |  FROM t WHERE doc_id % 50 = 0),
+       |a AS (SELECT * FROM t UNION ALL SELECT * FROM h0)""".stripMargin
+
+  /** The exact verifier's near-dup pairs with the 60-char text prefix of
+    * each side (d1, d2, p1, p2): the candidate set of the edit-distance
+    * layers, never pairwise over the corpus.
+    */
+  private def prefixPairs(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val pairs = queries("dedup_ngram_jaccard")(s, d).select($"d1", $"d2")
+    val prefixes = documents(s, d)
+      .select($"doc_id", substring($"text", 1, 60).as("prefix"))
+    pairs
+      .join(prefixes.toDF("d1", "p1"), "d1")
+      .join(prefixes.toDF("d2", "p2"), "d2")
+  }
+
+  /** [[prefixPairs]]' DuckDB twin: ends in `pp(d1, d2, p1, p2)`. */
+  private lazy val prefixPairsSql =
+    s"""$shingleCte,
+       |${jaccardPairsSql("jac", JaccardGate)},
+       |pre AS (SELECT doc_id, substr(text, 1, 60) AS prefix FROM documents),
+       |pp AS (
+       |  SELECT d1, d2, a.prefix AS p1, b.prefix AS p2
+       |  FROM jac JOIN pre a ON d1 = a.doc_id JOIN pre b ON d2 = b.doc_id)""".stripMargin
 
   /** Cluster labels over the exact verifier's >= 0.8 pairs. */
   private val exactPairClusterReps: Q = (s, d) => {
@@ -403,12 +620,8 @@ object DedupOps {
     // dedup provably removes rows.
     "dedup_exact" -> ((s, d) => {
       import s.implicits._
-      val docs = documents(s, d).select($"doc_id", $"text")
-      val dupes = docs.filter($"doc_id" % 100 === 0)
-        .select(($"doc_id" + 1000000).as("doc_id"), $"text")
-      val all = docs.union(dupes)
       val w = Window.partitionBy($"h").orderBy($"doc_id".asc)
-      all.withColumn("h", md5($"text"))
+      plantedDups(s, d).withColumn("h", md5($"text"))
         .withColumn("rn", row_number().over(w))
         .filter($"rn" === 1)
         .select($"doc_id", $"h")
@@ -428,11 +641,8 @@ object DedupOps {
     // pick; nothing pairwise.
     "corpus_softdedup_weights" -> ((s, d) => {
       import s.implicits._
-      val docs = documents(s, d).select($"doc_id", $"text")
-      val dupes = docs.filter($"doc_id" % 100 === 0)
-        .select(($"doc_id" + 1000000).as("doc_id"), $"text")
       val wc = Window.partitionBy($"h")
-      docs.union(dupes)
+      plantedDups(s, d)
         .withColumn("h", md5($"text"))
         .withColumn("n_dups", count(lit(1)).over(wc))
         .select($"doc_id", $"n_dups",
@@ -451,10 +661,7 @@ object DedupOps {
     // 10-token chunks (the corpus has no newlines; same fixed
     // segmentation family as chunk_documents). Same planted-dup fixture
     // as dedup_exact, so cross-doc duplicate paragraphs exist at every
-    // SF and the dup copies drain to empty (the +1e6 re-key shares the
-    // fixture-wide contract that real doc_ids stay under 1e6 — holds
-    // through the 100× scale corpus; a larger corpus bumps the offset
-    // in every fixture op together). Scale: explode is map-only
+    // SF and the dup copies drain to empty. Scale: explode is map-only
     // (×n_tokens/10); the survivor pick is ONE shuffle of the chunk
     // table on its hash (the CCNet shuffle — linear in corpus tokens),
     // reassembly is one groupBy(doc_id); nothing pairwise. The window
@@ -463,10 +670,7 @@ object DedupOps {
     "dedup_paragraph_exact" -> ((s, d) => {
       import s.implicits._
       val P = 10
-      val docs = documents(s, d).select($"doc_id", $"text")
-      val all = docs.union(docs.filter($"doc_id" % 100 === 0)
-        .select(($"doc_id" + 1000000).as("doc_id"), $"text"))
-      val paras = all
+      val paras = plantedDups(s, d)
         .select($"doc_id", TextOps.tokens($"text").as("tk"))
         .withColumn("n", size($"tk"))
         .filter($"n" >= 1)
@@ -491,10 +695,7 @@ object DedupOps {
 
     // N-gram (3-shingle) Jaccard near-dup — exact verifier: candidates from
     // shared shingles, then inter/union ≥ 0.8.
-    "dedup_ngram_jaccard" -> ((s, d) => {
-      val (e, sizes) = explodedShingles(s, d)
-      jaccardPairs(s, e, sizes, 0.8)
-    }),
+    "dedup_ngram_jaccard" -> ((s, d) => gated(sharedShinglePairs(s, d), JaccardGate)),
 
     // DIRECTIONAL containment (Broder's containment coefficient
     // |A∩B|/|A|): catches quote-expansion / syndication near-dups where
@@ -503,19 +704,15 @@ object DedupOps {
     // does not). Shares the exact-verifier posture of ngram_jaccard:
     // candidates come from shared shingles, so it's the recall oracle
     // for the LSH paths, not a corpus-wide pass. Both directions of an
-    // asymmetric pair emit independently; jaccard rides along to show
-    // the gap.
+    // asymmetric pair emit independently (the d1 < d2 enumeration and
+    // its mirror); jaccard rides along to show the gap.
     "dedup_containment" -> ((s, d) => {
       import s.implicits._
-      val (e, sizes) = explodedShingles(s, d)
-      e.toDF("d1", "sh").join(e.toDF("d2", "sh"), "sh")
-        .filter($"d1" =!= $"d2")
-        .groupBy($"d1", $"d2").agg(count(lit(1)).as("inter"))
-        .join(sizes.toDF("d1", "s1"), "d1")
-        .join(sizes.toDF("d2", "s2"), "d2")
+      val pairs = sharedShinglePairs(s, d)
+      pairs.unionByName(pairs.select($"d2".as("d1"), $"d1".as("d2"), $"inter",
+          $"s2".as("s1"), $"s1".as("s2")))
         .withColumn("containment", round($"inter" / $"s1", 6))
-        .withColumn("jaccard",
-          round($"inter" / ($"s1" + $"s2" - $"inter"), 6))
+        .withColumn("jaccard", jaccard($"inter", $"s1", $"s2"))
         .filter($"containment" >= 0.9)
         .select($"d1", $"d2", $"inter", $"s1", $"s2",
           $"containment", $"jaccard")
@@ -532,13 +729,13 @@ object DedupOps {
     // the inverted index shrinks to each doc's rare tail — corpus-wide
     // boilerplate shingles (the df² blowup of a full-index join) never
     // generate a candidate, the same discipline LSH gets probabilistically
-    // but here with an exact-threshold guarantee. Verification re-joins
-    // full shingle sets against the bounded candidate list only.
+    // but here with an exact-threshold guarantee. Verification reads the
+    // cached shingle arrays of the bounded candidate list only.
     // DedupSpec asserts output equality with the full-index join and
     // that the prefix index is strictly smaller.
     "dedup_prefix_filter" -> ((s, d) => {
       import s.implicits._
-      val T = 0.8
+      val T = JaccardGate
       val (e, sizes) = explodedShingles(s, d)
       val dfs = e.groupBy($"sh").agg(count(lit(1)).as("df"))
       val wDoc = Window.partitionBy($"doc_id").orderBy($"df".asc, $"sh".asc)
@@ -549,18 +746,7 @@ object DedupOps {
         .select($"doc_id", $"sh")
       val cands = pref.toDF("d1", "sh").join(pref.toDF("d2", "sh"), "sh")
         .filter($"d1" < $"d2").select($"d1", $"d2").distinct()
-      val inter = cands
-        .join(e.toDF("d1", "sh"), "d1")
-        .join(e.toDF("d2", "sh"), Seq("d2", "sh"))
-        .groupBy($"d1", $"d2").agg(count(lit(1)).as("inter"))
-      inter
-        .join(sizes.toDF("d1", "s1"), "d1")
-        .join(sizes.toDF("d2", "s2"), "d2")
-        .withColumn("jaccard",
-          round($"inter" / ($"s1" + $"s2" - $"inter"), 6))
-        .filter($"jaccard" >= T)
-        .select("d1", "d2", "jaccard")
-        .orderBy("d1", "d2")
+      gated(verifyCandidates(cands, shingleFrame(s, d)), T)
     }),
 
     // MinHash + banded LSH: 32 permutation-hash minima per doc, 8 bands ×
@@ -579,20 +765,8 @@ object DedupOps {
     // consider inlining it into the 32 band-key element_ats, and it only
     // declines because custom expressions are non-cheap.
     "dedup_minhash_lsh" -> ((s, d) => {
-      import s.implicits._
       val sh = shingleFrame(s, d)
-      val sig = lshBands(sh, "doc_id")
-      val cands = sig.toDF("d1", "band", "key")
-        .join(sig.toDF("d2", "band", "key"), Seq("band", "key"))
-        .filter($"d1" < $"d2")
-        // distinct is REQUIRED, not an optimization: a pair colliding in
-        // k bands appears k times and would be verified and emitted k×.
-        .select("d1", "d2").distinct()
-      verifyCandidates(cands, sh)
-        .withColumn("jaccard", round($"inter" / ($"s1" + $"s2" - $"inter"), 6))
-        .filter($"jaccard" >= 0.8)
-        .select("d1", "d2", "jaccard")
-        .orderBy("d1", "d2")
+      gated(verifyCandidates(bandPairs(sh), sh), JaccardGate)
     }),
 
     // LSH tuning eval — the empirical S-curve check run before trusting
@@ -612,13 +786,8 @@ object DedupOps {
     // recall oracle here; the production path stays banded.
     "dedup_lsh_pr_eval" -> ((s, d) => {
       import s.implicits._
-      val (e, sizes) = explodedShingles(s, d)
-      val truth = jaccardPairs(s, e, sizes, 0.5)
-      val sig = lshBands(shingleFrame(s, d), "doc_id")
-      val cands = sig.toDF("d1", "band", "key")
-        .join(sig.toDF("d2", "band", "key"), Seq("band", "key"))
-        .filter($"d1" < $"d2")
-        .select("d1", "d2").distinct()
+      val truth = gated(sharedShinglePairs(s, d), 0.5)
+      val cands = bandPairs(shingleFrame(s, d))
       // round 18: `cands` (band-collision join) and `marked` (the whole
       // exact-verifier chain) each had TWO consumers — the recall
       // buckets and the precision row — so the corpus-scale truth and
@@ -635,7 +804,7 @@ object DedupOps {
         .withColumn("recall",
           round($"n_caught" / $"n_true".cast("double"), 6))
       val overall = candsP.agg(count(lit(1)).as("n_cand"))
-        .crossJoin(marked.filter($"jaccard" >= 0.8)
+        .crossJoin(marked.filter($"jaccard" >= JaccardGate)
           .agg(sum($"hit").as("n_gate_hits")))
         .withColumn("precision_at_gate",
           round($"n_gate_hits" / $"n_cand".cast("double"), 6))
@@ -661,7 +830,7 @@ object DedupOps {
       import s.implicits._
       val (incoming, sh, cands) = incrementalCandidates(s, d)
       val matches = verifyCandidates(cands, sh)
-        .filter($"inter" / ($"s1" + $"s2" - $"inter") >= 0.8d)
+        .filter(jaccard($"inter", $"s1", $"s2") >= JaccardGate)
         .groupBy($"d_new")
         .agg(count(lit(1)).as("n_matches"), min($"d_old").as("first_match"))
       incoming.select($"doc_id")
@@ -707,12 +876,7 @@ object DedupOps {
     // the corpus — distance ops only run on the candidate set).
     "dedup_levenshtein_verify" -> ((s, d) => {
       import s.implicits._
-      val pairs = queries("dedup_ngram_jaccard")(s, d).select($"d1", $"d2")
-      val prefixes = documents(s, d)
-        .select($"doc_id", substring($"text", 1, 60).as("prefix"))
-      pairs
-        .join(prefixes.toDF("d1", "p1"), "d1")
-        .join(prefixes.toDF("d2", "p2"), "d2")
+      prefixPairs(s, d)
         .select($"d1", $"d2", levenshtein($"p1", $"p2").as("edit_distance"))
         .orderBy("d1", "d2")
     }),
@@ -726,12 +890,7 @@ object DedupOps {
     // slower).
     "dedup_levenshtein_gate" -> ((s, d) => {
       import s.implicits._
-      val pairs = queries("dedup_ngram_jaccard")(s, d).select($"d1", $"d2")
-      val prefixes = documents(s, d)
-        .select($"doc_id", substring($"text", 1, 60).as("prefix"))
-      pairs
-        .join(prefixes.toDF("d1", "p1"), "d1")
-        .join(prefixes.toDF("d2", "p2"), "d2")
+      prefixPairs(s, d)
         .filter(levenshtein($"p1", $"p2") <= 15)
         .select($"d1", $"d2")
         .orderBy("d1", "d2")
@@ -894,12 +1053,10 @@ object DedupOps {
     // pass at the lowered 0.5 base (the pr_eval posture — at 100 TB this
     // runs on a sampled stratum; the production path stays banded), then
     // per-gate filters + CC on the (tiny, ∝ dup density) pair lists. The
-    // oracle replays three recursive-CTE closures, one per gate. Gate
-    // compares on the ROUNDED 6dp jaccard in both engines.
+    // oracle replays three recursive-CTE closures, one per gate.
     "dedup_gate_sweep" -> ((s, d) => {
       import s.implicits._
-      val (e, sizes) = explodedShingles(s, d)
-      val base = jaccardPairs(s, e, sizes, 0.5).localCheckpoint(false)
+      val base = gated(sharedShinglePairs(s, d), 0.5).localCheckpoint(false)
       Seq(0.7, 0.8, 0.9).map { g =>
         val pairs = base.filter($"jaccard" >= g).select($"d1", $"d2")
         val cc = ccStars(s, pairs).toDF("doc_id", "rep")
@@ -933,13 +1090,9 @@ object DedupOps {
     "dedup_substring_spans" -> ((s, d) => {
       import s.implicits._
       val W = 20
-      val tokd = documents(s, d).select($"doc_id", TextOps.tokens($"text").as("tk"))
-      val halves = tokd.filter($"doc_id" % 50 === 0)
-        .select(($"doc_id" + 2000000).as("doc_id"),
-          slice($"tk", lit(1), floor(size($"tk") / 2).cast("int")).as("tk"))
       // tk is an attribute in its own Project before the HOF consumes it
       // (interpreted-HOF re-eval trap)
-      val wins = tokd.union(halves)
+      val wins = halfDocs(s, d)
         .withColumn("n", size($"tk"))
         .filter($"n" >= W)
         .select($"doc_id", explode(
@@ -993,14 +1146,10 @@ object DedupOps {
     "dedup_substring_exact" -> ((s, d) => {
       import s.implicits._
       val W = 20
-      val tokd = documents(s, d).select($"doc_id", TextOps.tokens($"text").as("tk"))
-      val halves = tokd.filter($"doc_id" % 50 === 0)
-        .select(($"doc_id" + 2000000).as("doc_id"),
-          slice($"tk", lit(1), floor(size($"tk") / 2).cast("int")).as("tk"))
       // checkpoint the window firehose: the df-bound aggregate and both
       // sides of the pair join consume it — lazy, the tokenize+hash pass
       // would run three times
-      val wins = tokd.union(halves)
+      val wins = halfDocs(s, d)
         .withColumn("n", size($"tk"))
         .filter($"n" >= W)
         .select($"doc_id", posexplode(
@@ -1323,100 +1472,48 @@ object DedupOps {
         .groupBy($"src_a", $"src_b").agg(count(lit(1)).as("n_shared"))
         .join(broadcast(sizes.toDF("src_a", "s1")), "src_a")
         .join(broadcast(sizes.toDF("src_b", "s2")), "src_b")
-        .withColumn("jaccard",
-          round($"n_shared" / ($"s1" + $"s2" - $"n_shared"), 6))
+        .withColumn("jaccard", jaccard($"n_shared", $"s1", $"s2"))
         .select($"src_a", $"src_b", $"n_shared", $"jaccard")
         .orderBy("src_a", "src_b")
     }),
   )
 
-  private val jaccardSql =
-    s"""pairs AS (
-       |  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-       |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT d1, d2,
-       |  ROUND(inter * 1.0 / (sa.sz + sb.sz - inter), 6) AS jaccard
-       |FROM pairs
-       |JOIN sz sa ON d1 = sa.doc_id
-       |JOIN sz sb ON d2 = sb.doc_id
-       |WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.8
-       |ORDER BY d1, d2""".stripMargin
+  /** The exact verifier's >= 0.8 pairs, ordered: the oracle of
+    * dedup_ngram_jaccard and of the lossless prefix-filtered join.
+    */
+  private lazy val ngramJaccardSql =
+    s"""WITH $shingleCte,
+       |${jaccardPairsSql("jp", JaccardGate)}
+       |SELECT d1, d2, jaccard FROM jp ORDER BY d1, d2""".stripMargin
 
   /** Transitive closure over the >=0.8-Jaccard pairs with min-label
     * components — the oracle of dedup_cluster_reps and its _star name.
     */
-  private val clusterRepsSql =
+  private lazy val clusterRepsSql =
     s"""WITH RECURSIVE $shingleCte,
-       |jp AS (
-       |  SELECT d1, d2 FROM (
-       |    SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-       |    FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-       |    GROUP BY 1, 2) p
-       |  JOIN sz sa ON d1 = sa.doc_id
-       |  JOIN sz sb ON d2 = sb.doc_id
-       |  WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.8),
-       |ed AS (SELECT d1 AS a, d2 AS b FROM jp UNION SELECT d2, d1 FROM jp),
-       |reach(a, b) AS (
-       |  SELECT a, b FROM ed UNION SELECT a, a FROM ed
-       |  UNION
-       |  SELECT r.a, e2.b FROM reach r JOIN ed e2 ON r.b = e2.a)
-       |SELECT a AS doc_id, MIN(b) AS cluster_rep,
-       |  (a = MIN(b)) AS is_survivor
-       |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin
+       |${jaccardPairsSql("jp", JaccardGate)},
+       |${closureSql("jp")}
+       |SELECT doc_id, cluster_rep, (doc_id = cluster_rep) AS is_survivor
+       |FROM cc ORDER BY doc_id""".stripMargin
 
-  /** Shared DuckDB CTE chain for the MinHash/banded-LSH verified-pair
-    * generator (assumes shingleCte's `e`/`sz` are in scope upstream):
-    * xs → seeds → sig → bands → cands → inter → lshverified(d1, d2,
-    * jaccard ≥ 0.8). Used by the dedup_minhash_lsh oracle and the
-    * LSH-fed cluster oracle below; dedup_lsh_pr_eval keeps its own copy
-    * because it interleaves the lowered-threshold truth CTEs.
+  /** The banded-LSH verified pairs in DuckDB, ending in `lshverified(d1,
+    * d2, jaccard)`: the shingle chain, the band chain, the d1 < d2 band
+    * collisions and the gated verify.
     */
   private lazy val minhashPairCtes =
-    s"""xs AS (SELECT doc_id, sh AS x FROM e),
-       |seeds(i, a, b) AS (VALUES ${permSeeds.zipWithIndex
-      .map { case ((a, b), i) => s"($i,$a,$b)" }.mkString(",")}),
-       |sig AS (
-       |  SELECT doc_id, i, MIN((a * (x % $P_PERM) + b) % $P_PERM) AS h
-       |  FROM xs CROSS JOIN seeds
-       |  GROUP BY doc_id, i),
-       |bands AS (
-       |  SELECT doc_id, i // $RowsPerBand AS band,
-       |    string_agg(CAST(h AS VARCHAR), '_' ORDER BY i) AS key
-       |  FROM sig GROUP BY doc_id, i // $RowsPerBand),
-       |cands AS (
-       |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-       |inter AS (
-       |  SELECT d1, d2, COUNT(*) AS inter
-       |  FROM cands JOIN e e1 ON e1.doc_id = d1
-       |             JOIN e e2 ON e2.doc_id = d2 AND e1.sh = e2.sh
-       |  GROUP BY d1, d2),
-       |lshverified AS (
-       |  SELECT d1, d2,
-       |    ROUND(inter * 1.0 / (sa.sz + sb.sz - inter), 6) AS jaccard
-       |  FROM inter
-       |  JOIN sz sa ON d1 = sa.doc_id
-       |  JOIN sz sb ON d2 = sb.doc_id
-       |  WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.8)""".stripMargin
+    s"""$shingleCte,
+       |${lshBandsSql()},
+       |$bandPairsSql,
+       |${verifiedSql("d1", "d2")}""".stripMargin
 
   val oracles: Map[String, String] = Map(
     "dedup_exact" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-        |  WHERE doc_id % 100 = 0)
+      s"""WITH $plantedDupsSql
         |SELECT doc_id, md5(text) AS h FROM all_docs
         |QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id ASC) = 1
         |ORDER BY doc_id""".stripMargin,
     "corpus_softdedup_weights" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-        |  WHERE doc_id % 100 = 0),
+      s"""WITH $plantedDupsSql,
         |h AS (SELECT doc_id, md5(text) AS h FROM all_docs),
         |c AS (SELECT h, CAST(COUNT(*) AS BIGINT) AS n_dups
         |  FROM h GROUP BY 1)
@@ -1426,11 +1523,7 @@ object DedupOps {
     // COALESCE on the kept-text aggregate: a fully-drained doc keeps ''
     // (Spark's concat_ws over an empty array), not NULL
     "dedup_paragraph_exact" ->
-      s"""WITH all_docs AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-         |  WHERE doc_id % 100 = 0),
+      s"""WITH $plantedDupsSql,
          |t AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS tk FROM all_docs),
          |c AS (
          |  SELECT doc_id, tk, len(tk) AS n,
@@ -1451,63 +1544,39 @@ object DedupOps {
          |  COALESCE(string_agg(ptxt, ' ' ORDER BY pid)
          |    FILTER (WHERE rn = 1), '') AS kept_text
          |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
-    "dedup_ngram_jaccard" ->
-      s"WITH $shingleCte,\n$jaccardSql",
+    "dedup_ngram_jaccard" -> ngramJaccardSql,
+    // every d1 < d2 pair and its mirror
     "dedup_containment" ->
       s"""WITH $shingleCte,
+         |$pairsSql,
          |pr AS (
-         |  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-         |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id <> b.doc_id
-         |  GROUP BY 1, 2),
+         |  SELECT d1, d2, inter, s1, s2 FROM pairs
+         |  UNION ALL SELECT d2, d1, inter, s2, s1 FROM pairs),
          |jc AS (
-         |  SELECT d1, d2, inter, z1.sz AS s1, z2.sz AS s2,
-         |    ROUND(inter / z1.sz, 6) AS containment,
-         |    ROUND(inter / (z1.sz + z2.sz - inter), 6) AS jaccard
-         |  FROM pr
-         |  JOIN sz z1 ON d1 = z1.doc_id
-         |  JOIN sz z2 ON d2 = z2.doc_id)
+         |  SELECT d1, d2, inter, s1, s2,
+         |    ROUND(inter / s1, 6) AS containment, ${jaccardSql()} AS jaccard
+         |  FROM pr)
          |SELECT d1, d2, inter, s1, s2, containment, jaccard
          |FROM jc WHERE containment >= 0.9 ORDER BY d1, d2""".stripMargin,
     // prefix filtering is lossless at the declared threshold, so the
     // full-index twin is the oracle for the PPJoin-style path too
-    "dedup_prefix_filter" ->
-      s"WITH $shingleCte,\n$jaccardSql",
+    "dedup_prefix_filter" -> ngramJaccardSql,
     "dedup_levenshtein_verify" ->
-      s"""WITH $shingleCte,
-         |jac AS (
-         |  SELECT d1, d2 FROM (
-         |    SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-         |    FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |    GROUP BY 1, 2) p
-         |  JOIN sz sa ON d1 = sa.doc_id
-         |  JOIN sz sb ON d2 = sb.doc_id
-         |  WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.8),
-         |pre AS (SELECT doc_id, substr(text, 1, 60) AS prefix FROM documents)
-         |SELECT d1, d2, levenshtein(a.prefix, b.prefix) AS edit_distance
-         |FROM jac JOIN pre a ON d1 = a.doc_id JOIN pre b ON d2 = b.doc_id
-         |ORDER BY d1, d2""".stripMargin,
+      s"""WITH $prefixPairsSql
+         |SELECT d1, d2, levenshtein(p1, p2) AS edit_distance
+         |FROM pp ORDER BY d1, d2""".stripMargin,
     "dedup_minhash_lsh" ->
-      s"""WITH $shingleCte,
-         |$minhashPairCtes
+      s"""WITH $minhashPairCtes
          |SELECT d1, d2, jaccard FROM lshverified ORDER BY d1, d2""".stripMargin,
     // Per-source survivor report over the same LSH-fed clustering: the
     // cluster CTEs below + a left join from documents + a per-source
     // rollup. 4-dp percentage mirrors the engine's round(x, 4).
     "pipeline_dedup_corpus" ->
-      s"""WITH RECURSIVE $shingleCte,
-         |$minhashPairCtes,
-         |ed AS (SELECT d1 AS a, d2 AS b FROM lshverified
-         |       UNION SELECT d2, d1 FROM lshverified),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM ed UNION SELECT a, a FROM ed
-         |  UNION
-         |  SELECT r.a, e2.b FROM reach r JOIN ed e2 ON r.b = e2.a),
-         |cc AS (
-         |  SELECT a AS doc_id, (a = MIN(b)) AS is_survivor
-         |  FROM reach GROUP BY a),
+      s"""WITH RECURSIVE $minhashPairCtes,
+         |${closureSql("lshverified")},
          |k AS (
          |  SELECT d.source,
-         |    COALESCE(cc.is_survivor, TRUE) AS kept
+         |    COALESCE(cc.doc_id = cc.cluster_rep, TRUE) AS kept
          |  FROM documents d LEFT JOIN cc ON d.doc_id = cc.doc_id)
          |SELECT source, COUNT(*) AS n_docs,
          |  CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
@@ -1520,48 +1589,17 @@ object DedupOps {
     // transitive closure as clusterRepsSql, but seeded from the MinHash
     // CTE chain above instead of the exact shared-shingle verifier.
     "dedup_cluster_reps_lsh" ->
-      s"""WITH RECURSIVE $shingleCte,
-         |$minhashPairCtes,
-         |ed AS (SELECT d1 AS a, d2 AS b FROM lshverified
-         |       UNION SELECT d2, d1 FROM lshverified),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM ed UNION SELECT a, a FROM ed
-         |  UNION
-         |  SELECT r.a, e2.b FROM reach r JOIN ed e2 ON r.b = e2.a)
-         |SELECT a AS doc_id, MIN(b) AS cluster_rep,
-         |  (a = MIN(b)) AS is_survivor
-         |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
+      s"""WITH RECURSIVE $minhashPairCtes,
+         |${closureSql("lshverified")}
+         |SELECT doc_id, cluster_rep, (doc_id = cluster_rep) AS is_survivor
+         |FROM cc ORDER BY doc_id""".stripMargin,
     // Same signature/band CTEs as the minhash oracle; truth at the
-    // lowered 0.5 threshold, filtered on the ROUNDED jaccard to match
-    // the engine exactly.
+    // lowered 0.5 threshold.
     "dedup_lsh_pr_eval" ->
       s"""WITH $shingleCte,
-         |truth0 AS (
-         |  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-         |  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2),
-         |truth AS (
-         |  SELECT d1, d2,
-         |    ROUND(inter * 1.0 / (sa.sz + sb.sz - inter), 6) AS jaccard
-         |  FROM truth0
-         |  JOIN sz sa ON d1 = sa.doc_id
-         |  JOIN sz sb ON d2 = sb.doc_id
-         |  WHERE ROUND(inter * 1.0 / (sa.sz + sb.sz - inter), 6) >= 0.5),
-         |xs AS (SELECT doc_id, sh AS x FROM e),
-         |seeds(i, a, b) AS (VALUES ${permSeeds.zipWithIndex
-        .map { case ((a, b), i) => s"($i,$a,$b)" }.mkString(",")}),
-         |sig AS (
-         |  SELECT doc_id, i, MIN((a * (x % $P_PERM) + b) % $P_PERM) AS h
-         |  FROM xs CROSS JOIN seeds
-         |  GROUP BY doc_id, i),
-         |bands AS (
-         |  SELECT doc_id, i // $RowsPerBand AS band,
-         |    string_agg(CAST(h AS VARCHAR), '_' ORDER BY i) AS key
-         |  FROM sig GROUP BY doc_id, i // $RowsPerBand),
-         |cands AS (
-         |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
+         |${jaccardPairsSql("truth", 0.5)},
+         |${lshBandsSql()},
+         |$bandPairsSql,
          |mk AS (
          |  SELECT truth.d1, truth.d2, truth.jaccard,
          |    CASE WHEN cands.d1 IS NOT NULL THEN 1 ELSE 0 END AS hit
@@ -1574,7 +1612,7 @@ object DedupOps {
          |  FROM mk GROUP BY 1),
          |ov AS (
          |  SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM cands) AS n_cand,
-         |    (SELECT CAST(SUM(hit) AS BIGINT) FROM mk WHERE jaccard >= 0.8)
+         |    (SELECT CAST(SUM(hit) AS BIGINT) FROM mk WHERE jaccard >= $JaccardGate)
          |      AS n_gate_hits)
          |SELECT bucket, n_true, n_caught,
          |  ROUND(n_caught * 1.0 / n_true, 6) AS recall, n_cand,
@@ -1602,98 +1640,22 @@ object DedupOps {
          |GROUP BY 1, 2 HAVING COUNT(*) >= 3
          |ORDER BY d1, d2""".stripMargin,
     "dedup_levenshtein_gate" ->
-      s"""WITH $shingleCte,
-         |jac AS (
-         |  SELECT d1, d2 FROM (
-         |    SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-         |    FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |    GROUP BY 1, 2) p
-         |  JOIN sz sa ON d1 = sa.doc_id
-         |  JOIN sz sb ON d2 = sb.doc_id
-         |  WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.8),
-         |pre AS (SELECT doc_id, substr(text, 1, 60) AS prefix FROM documents)
-         |SELECT d1, d2
-         |FROM jac JOIN pre a ON d1 = a.doc_id JOIN pre b ON d2 = b.doc_id
-         |WHERE levenshtein(a.prefix, b.prefix) <= 15
+      s"""WITH $prefixPairsSql
+         |SELECT d1, d2 FROM pp WHERE levenshtein(p1, p2) <= 15
          |ORDER BY d1, d2""".stripMargin,
     "dedup_incremental" ->
-      s"""WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0),
-         |incoming AS (
-         |  SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 2000000 AS doc_id, text FROM corpus WHERE doc_id % 25 = 7),
-         |all_docs AS (
-         |  SELECT doc_id, text, 'old' AS side FROM corpus
-         |  UNION ALL
-         |  SELECT doc_id, text, 'new' AS side FROM incoming),
-         |t AS (SELECT doc_id, side,
-         |  ${TextOps.tokensSql("text")} AS toks
-         |  FROM all_docs),
-         |shg AS (SELECT doc_id, side, $shinglesSql AS shs FROM t WHERE len(toks) >= 3),
-         |e0 AS (SELECT doc_id, side, unnest(shs) AS sh FROM shg),
-         |e AS (SELECT DISTINCT doc_id, side, ${wideHashSql("sh")} AS sh FROM e0),
-         |sz AS (SELECT doc_id, COUNT(*) AS sz FROM e GROUP BY doc_id),
-         |seeds(i, a, b) AS (VALUES ${permSeeds.zipWithIndex
-        .map { case ((a, b), i) => s"($i,$a,$b)" }.mkString(",")}),
-         |sig AS (
-         |  SELECT doc_id, side, i, MIN((a * (sh % $P_PERM) + b) % $P_PERM) AS h
-         |  FROM e CROSS JOIN seeds GROUP BY doc_id, side, i),
-         |bands AS (
-         |  SELECT doc_id, side, i // $RowsPerBand AS band,
-         |    string_agg(CAST(h AS VARCHAR), '_' ORDER BY i) AS key
-         |  FROM sig GROUP BY doc_id, side, i // $RowsPerBand),
-         |cands AS (
-         |  SELECT DISTINCT n.doc_id AS d_new, o.doc_id AS d_old
-         |  FROM bands n JOIN bands o
-         |    ON n.band = o.band AND n.key = o.key
-         |    AND n.side = 'new' AND o.side = 'old'),
-         |inter AS (
-         |  SELECT d_new, d_old, COUNT(*) AS inter
-         |  FROM cands JOIN e e1 ON e1.doc_id = d_new
-         |             JOIN e e2 ON e2.doc_id = d_old AND e1.sh = e2.sh
-         |  GROUP BY d_new, d_old),
+      s"""WITH $incrementalCandidatesSql,
+         |${verifiedSql("d_new", "d_old")},
          |m AS (
          |  SELECT d_new, COUNT(*) AS n_matches, MIN(d_old) AS first_match
-         |  FROM inter
-         |  JOIN sz sa ON d_new = sa.doc_id
-         |  JOIN sz sb ON d_old = sb.doc_id
-         |  WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.8
-         |  GROUP BY d_new)
+         |  FROM lshverified GROUP BY d_new)
          |SELECT i.doc_id,
          |  CASE WHEN m.d_new IS NULL THEN 'novel' ELSE 'dup' END AS status,
          |  COALESCE(n_matches, 0) AS n_matches, first_match
          |FROM incoming i LEFT JOIN m ON i.doc_id = m.d_new
          |ORDER BY i.doc_id""".stripMargin,
     "stream_lsh_incremental" ->
-      s"""WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 0),
-         |incoming AS (
-         |  SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 2000000 AS doc_id, text FROM corpus WHERE doc_id % 25 = 7),
-         |all_docs AS (
-         |  SELECT doc_id, text, 'old' AS side FROM corpus
-         |  UNION ALL
-         |  SELECT doc_id, text, 'new' AS side FROM incoming),
-         |t AS (SELECT doc_id, side,
-         |  ${TextOps.tokensSql("text")} AS toks
-         |  FROM all_docs),
-         |shg AS (SELECT doc_id, side, $shinglesSql AS shs FROM t WHERE len(toks) >= 3),
-         |e0 AS (SELECT doc_id, side, unnest(shs) AS sh FROM shg),
-         |e AS (SELECT DISTINCT doc_id, side, ${wideHashSql("sh")} AS sh FROM e0),
-         |seeds(i, a, b) AS (VALUES ${permSeeds.zipWithIndex
-        .map { case ((a, b), i) => s"($i,$a,$b)" }.mkString(",")}),
-         |sig AS (
-         |  SELECT doc_id, side, i, MIN((a * (sh % $P_PERM) + b) % $P_PERM) AS h
-         |  FROM e CROSS JOIN seeds GROUP BY doc_id, side, i),
-         |bands AS (
-         |  SELECT doc_id, side, i // $RowsPerBand AS band,
-         |    string_agg(CAST(h AS VARCHAR), '_' ORDER BY i) AS key
-         |  FROM sig GROUP BY doc_id, side, i // $RowsPerBand),
-         |cands AS (
-         |  SELECT DISTINCT n.doc_id AS d_new, o.doc_id AS d_old
-         |  FROM bands n JOIN bands o
-         |    ON n.band = o.band AND n.key = o.key
-         |    AND n.side = 'new' AND o.side = 'old'),
+      s"""WITH $incrementalCandidatesSql,
          |m AS (
          |  SELECT d_new, COUNT(*) AS n_hit_docs, MIN(d_old) AS first_hit
          |  FROM cands GROUP BY d_new)
@@ -1737,73 +1699,38 @@ object DedupOps {
          |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
          |WHERE bit_count(xor(a.h, b.h)) <= 2
          |ORDER BY d1, d2""".stripMargin,
-    "split_leakage_audit" -> {
-      def splitSql(c: String) =
-        s"""CASE WHEN ${polyHashSql(s"CAST($c AS VARCHAR)")} % 10 < 8 THEN 'train'
-           |     WHEN ${polyHashSql(s"CAST($c AS VARCHAR)")} % 10 = 8 THEN 'val'
-           |     ELSE 'test' END""".stripMargin
+    "split_leakage_audit" ->
       s"""WITH $shingleCte,
-         |jp AS (
-         |  SELECT d1, d2 FROM (
-         |    SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-         |    FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |    GROUP BY 1, 2) p
-         |  JOIN sz sa ON d1 = sa.doc_id
-         |  JOIN sz sb ON d2 = sb.doc_id
-         |  WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.8),
+         |${jaccardPairsSql("jp", JaccardGate)},
          |sp AS (
          |  SELECT ${splitSql("d1")} AS s1, ${splitSql("d2")} AS s2 FROM jp)
          |SELECT s1, s2, COUNT(*) AS n_pairs, (s1 <> s2) AS leaks
-         |FROM sp GROUP BY s1, s2 ORDER BY s1, s2""".stripMargin
-    },
+         |FROM sp GROUP BY s1, s2 ORDER BY s1, s2""".stripMargin,
     // Same report CTEs over the banded-LSH verified pair list (the
     // MinHash signature/band/verify chain the minhash oracle uses).
-    "split_leakage_audit_lsh" -> {
-      def splitSql(c: String) =
-        s"""CASE WHEN ${polyHashSql(s"CAST($c AS VARCHAR)")} % 10 < 8 THEN 'train'
-           |     WHEN ${polyHashSql(s"CAST($c AS VARCHAR)")} % 10 = 8 THEN 'val'
-           |     ELSE 'test' END""".stripMargin
-      s"""WITH $shingleCte,
-         |$minhashPairCtes,
+    "split_leakage_audit_lsh" ->
+      s"""WITH $minhashPairCtes,
          |sp AS (
          |  SELECT ${splitSql("d1")} AS s1, ${splitSql("d2")} AS s2
          |  FROM lshverified)
          |SELECT s1, s2, COUNT(*) AS n_pairs, (s1 <> s2) AS leaks
-         |FROM sp GROUP BY s1, s2 ORDER BY s1, s2""".stripMargin
-    },
+         |FROM sp GROUP BY s1, s2 ORDER BY s1, s2""".stripMargin,
     "dedup_gate_sweep" -> {
       val gateBlocks = Seq("0.7", "0.8", "0.9").map { g =>
         val t = g.replace(".", "")
         s"""jp$t AS (
            |  SELECT d1, d2 FROM jall WHERE jaccard >= $g),
-           |ed$t AS (SELECT d1 AS a, d2 AS b FROM jp$t
-           |         UNION SELECT d2, d1 FROM jp$t),
-           |reach$t(a, b) AS (
-           |  SELECT a, b FROM ed$t UNION SELECT a, a FROM ed$t
-           |  UNION
-           |  SELECT r.a, e2.b FROM reach$t r JOIN ed$t e2 ON r.b = e2.a),
-           |cc$t AS (
-           |  SELECT a AS doc_id, MIN(b) AS rep FROM reach$t GROUP BY a),
+           |${closureSql(s"jp$t", t)},
            |row$t AS (
            |  SELECT CAST($g AS DOUBLE) AS gate,
            |    (SELECT CAST(COUNT(*) AS BIGINT) FROM jp$t) AS n_pairs,
            |    CAST(COUNT(*) AS BIGINT) AS n_docs_in_clusters,
-           |    CAST(SUM(CASE WHEN doc_id <> rep THEN 1 ELSE 0 END)
+           |    CAST(SUM(CASE WHEN doc_id <> cluster_rep THEN 1 ELSE 0 END)
            |      AS BIGINT) AS n_removed
            |  FROM cc$t)""".stripMargin
       }.mkString(",\n")
       s"""WITH RECURSIVE $shingleCte,
-         |jall AS (
-         |  SELECT d1, d2, jaccard FROM (
-         |    SELECT d1, d2,
-         |      ROUND(inter * 1.0 / (sa.sz + sb.sz - inter), 6) AS jaccard
-         |    FROM (
-         |      SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-         |      FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-         |      GROUP BY 1, 2) p
-         |    JOIN sz sa ON d1 = sa.doc_id
-         |    JOIN sz sb ON d2 = sb.doc_id)
-         |  WHERE jaccard >= 0.5),
+         |${jaccardPairsSql("jall", 0.5)},
          |$gateBlocks
          |SELECT * FROM row07 UNION ALL SELECT * FROM row08
          |UNION ALL SELECT * FROM row09
@@ -1812,11 +1739,7 @@ object DedupOps {
     "dedup_cluster_reps" -> clusterRepsSql,
     "dedup_cluster_reps_star" -> clusterRepsSql,
     "dedup_substring_spans" ->
-      s"""WITH t AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS tk FROM documents),
-         |h0 AS (
-         |  SELECT doc_id + 2000000 AS doc_id, tk[1:len(tk)//2] AS tk
-         |  FROM t WHERE doc_id % 50 = 0),
-         |a AS (SELECT * FROM t UNION ALL SELECT * FROM h0),
+      s"""WITH $halfDocsSql,
          |w AS (
          |  SELECT doc_id,
          |    unnest(list_transform(generate_series(1, len(tk) - 19),
@@ -1831,11 +1754,7 @@ object DedupOps {
          |  ROUND(n_shared * 1.0 / n_windows, 6) AS shared_ratio
          |FROM pd JOIN fd USING (doc_id) ORDER BY doc_id""".stripMargin,
     "dedup_substring_exact" ->
-      s"""WITH t AS (SELECT doc_id, ${TextOps.tokensSql("text")} AS tk FROM documents),
-         |h0 AS (
-         |  SELECT doc_id + 2000000 AS doc_id, tk[1:len(tk)//2] AS tk
-         |  FROM t WHERE doc_id % 50 = 0),
-         |a AS (SELECT * FROM t UNION ALL SELECT * FROM h0),
+      s"""WITH $halfDocsSql,
          |w AS MATERIALIZED (
          |  SELECT doc_id, i AS p,
          |    ${wideHashSql("array_to_string(tk[(i+1):(i+20)], ' ')")} AS h

@@ -1339,13 +1339,11 @@ object TextOps {
     // Deterministic train/val/test split (training-pipeline staple):
     // assignment is a pure function of the stable document key — split
     // membership survives reruns, repartitions, and engine changes, unlike
-    // randomSplit. 80/10/10 via poly_hash(doc_id) mod 10.
+    // randomSplit. 80/10/10 via poly_hash(doc_id) mod 10 (DedupOps.splitOf).
     "split_train_test" -> ((s, d) => {
       import s.implicits._
-      val bucket = pmod(graft.functions.PolyHash.poly_hash($"doc_id".cast("string")), lit(10L))
       documents(s, d)
-        .withColumn("split",
-          when(bucket < 8, "train").when(bucket === 8, "val").otherwise("test"))
+        .withColumn("split", DedupOps.splitOf($"doc_id"))
         .groupBy($"split")
         .agg(count(lit(1)).as("n_docs"), round(avg($"n_chars"), 6).as("avg_chars"))
         .orderBy("split")
@@ -2276,10 +2274,7 @@ object TextOps {
     // oracle-checked operator it composes.
     "pipeline_pretrain_corpus" -> ((s, d) => {
       import s.implicits._
-      val base = documents(s, d).select($"doc_id", $"text")
-      val dupes = base.filter($"doc_id" % 100 === 0)
-        .select(($"doc_id" + 1000000).as("doc_id"), $"text")
-      val gated = base.union(dupes)
+      val gated = DedupOps.plantedDups(s, d)
         .select($"doc_id", $"text", size(tokens($"text")).as("n_tok"))
         .filter($"n_tok" >= 30)
       val w = Window.partitionBy(md5($"text")).orderBy($"doc_id".asc)
@@ -3200,14 +3195,9 @@ object TextOps {
          |JOIN uni c2 ON split_part(bg, ' ', -1) = c2.w
          |ORDER BY score DESC, w1 ASC, w2 ASC LIMIT 20""".stripMargin,
     "split_train_test" ->
-      s"""WITH b AS (
-         |  SELECT n_chars,
-         |    ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")} % 10 AS bucket
-         |  FROM documents)
-         |SELECT CASE WHEN bucket < 8 THEN 'train'
-         |            WHEN bucket = 8 THEN 'val' ELSE 'test' END AS split,
+      s"""SELECT ${DedupOps.splitSql("doc_id")} AS split,
          |  COUNT(*) AS n_docs, ROUND(AVG(n_chars), 6) AS avg_chars
-         |FROM b GROUP BY 1 ORDER BY split""".stripMargin,
+         |FROM documents GROUP BY 1 ORDER BY split""".stripMargin,
     "stratified_sample" ->
       s"""SELECT lang, COUNT(*) AS n_sampled FROM documents
          |WHERE ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")} % 10 < 2
@@ -3604,11 +3594,7 @@ object TextOps {
          |  MAX(doc_id) AS last_doc
          |FROM c GROUP BY 1, 2 ORDER BY bucket, seq""".stripMargin,
     "pipeline_pretrain_corpus" ->
-      s"""WITH all_docs AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000 AS doc_id, text FROM documents
-         |  WHERE doc_id % 100 = 0),
+      s"""WITH ${DedupOps.plantedDupsSql},
          |gated AS (
          |  SELECT doc_id, text, len(${tokensSql("text")}) AS n_tok FROM all_docs
          |  WHERE len(${tokensSql("text")}) >= 30),

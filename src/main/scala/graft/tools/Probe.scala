@@ -26,9 +26,18 @@ import graft.{Bench, GraftSession, SparkEntry}
   * Usage: runMain graft.tools.Probe <subcommand> <args...>
   */
 object Probe {
-  /** The one plan formatter (also DumpPlans'). */
+  /** The one plan formatter (also DumpPlans'), reproducible across runs
+    * and checkouts: a JVM lambda's class and identity
+    * (`Ops$$$Lambda$5111/0x…@4ad0465c`) print as `$$Lambda`, an exchange's
+    * session-global `plan_id` (it moves with whatever planned before) as
+    * `plan_id=N`, and a path under the working directory relative to it
+    * (`file:./…`).
+    */
   def formattedPlan(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
+      .replaceAll("""\$\$Lambda[^@\s,\]]*@\p{XDigit}+""", "\\$\\$Lambda")
+      .replaceAll("""\[plan_id=\d+\]""", "[plan_id=N]")
+      .replace(s"file:${Paths.get("").toAbsolutePath}/", "file:./")
 
   private def matching(nameRegex: String): Seq[String] =
     SparkEntry.queries.keys.toSeq.sorted.filter(_.matches(nameRegex))

@@ -537,6 +537,100 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("each near-dup rule is written once under src/main") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> Files.readString(p)).toSeq
+    def sites(pattern: String): Map[String, Int] = sources
+      .map { case (f, src) => f -> pattern.r.findAllMatchIn(src).size }
+      .filter(_._2 > 0).toMap
+    val once = Map("DedupOps.scala" -> 1)
+    // SQL: the shingle-hash chain, the MinHash band chain, the d1 < d2
+    // band self-join and the new x old probe, the exact shared-shingle
+    // pair table, the candidate verify, the recursive closure (with or
+    // without a name suffix), the corpus/incoming split, the fixtures,
+    // the hash split and the edit-distance prefix
+    assert(sites("unnest\\(shs\\)") == once)
+    assert(sites("""seeds\(i, a, b\)""") == once)
+    assert(sites("""a\.key = b\.key AND a\.doc_id < b\.doc_id""") == once)
+    assert(sites("""n\.side = 'new' AND o\.side = 'old'""") == once)
+    assert(sites("""a\.sh = b\.sh AND a\.doc_id <""") == once)
+    assert(sites("""e1\.sh = e2\.sh""") == once)
+    assert(sites("""reach(\$\w+)?\(a, b\)""") == once)
+    assert(sites("""doc_id % 25 = 7""") == once)
+    assert(sites("""\+ 1000000 AS doc_id""") == once)
+    assert(sites("""tk\[1:len\(tk\)//2\]""") == once)
+    assert(sites("""% 10 < 8 THEN 'train'""") == once)
+    assert(sites("""substr\(text, 1, 60\)""") == once)
+    // one Jaccard ratio per engine, and every gate compares it rounded
+    assert(sites("""ROUND\(\$?inter \* 1\.0 / """) == once)
+    assert(sites("""(?<!ROUND\(\$?)\$?inter \* 1\.0 / """).isEmpty)
+    assert(sites("""(\$"s1"|(?<![\w$."])s1) \+ (\$"s2"|s2) - """) == once)
+    // Spark: the shingle-hash frame build, the band self-join, the
+    // fixtures, the hash split and the prefix frame
+    assert(sites("""ShingleHashes\.poly_shingles\(""") == once)
+    assert(sites("""\.toDF\("d1", "band", "key"\)""") == once)
+    assert(sites(""""doc_id" \+ 1000000""") == once)
+    assert(sites("""floor\(size\(\$"tk"\) / 2\)""") == once)
+    assert(sites("""when\(bucket < 8, "train"\)""") == once)
+    assert(sites("""substring\(\$"text", 1, 60\)""") == once)
+  }
+
+  test("degenerate inputs pass through the shared near-dup rules") {
+    // shingle-less docs (empty, whitespace, 1 and 2 tokens: below the
+    // 3-token shingle floor), three byte-identical docs and two ordinary
+    // ones; then a single-row table
+    val same = "the quick brown fox jumps over the lazy dog by the river"
+    val docs = Seq(1L -> "", 2L -> "   \t ", 3L -> "alpha", 4L -> "alpha beta",
+      12L -> same, 7L -> same, 9L -> same,
+      5L -> "markets rallied on friday as oil prices fell sharply again",
+      6L -> "the council approved a new budget for local schools today")
+    val shingleLess = Set(1L, 2L, 3L, 4L)
+    val dups = Set(7L, 9L, 12L)
+    val pairQueries = Seq("dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_prefix_filter")
+    def write(dir: String, rows: Seq[(Long, String)]): Unit =
+      rows.toDF("doc_id", "text")
+        .withColumn("lang", lit("en"))
+        .withColumn("source", when($"doc_id" % 2 === 0, "a").otherwise("b"))
+        .withColumn("n_chars", length($"text").cast("long"))
+        .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    def run(dir: String): Map[String, Seq[org.apache.spark.sql.Row]] =
+      (pairQueries ++ Seq("dedup_containment", "dedup_cluster_reps_lsh",
+        "pipeline_dedup_corpus"))
+        .map(q => q -> SparkEntry.queries(q)(spark, dir).collect().toSeq).toMap
+    try {
+      withTempDir("graft_dedup_degenerate") { dir =>
+        write(dir, docs)
+        val out = run(dir)
+        for (q <- pairQueries)
+          assert(out(q).map(r => (r.getLong(0), r.getLong(1))).toSet ==
+            Set((7L, 9L), (7L, 12L), (9L, 12L)), q)
+        val contained = out("dedup_containment").map(r => (r.getLong(0), r.getLong(1)))
+        assert(contained.toSet == (for (a <- dups; b <- dups if a != b) yield (a, b)))
+        assert(contained.flatMap(p => Seq(p._1, p._2)).toSet.intersect(shingleLess).isEmpty)
+        val reps = out("dedup_cluster_reps_lsh")
+          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+        assert(reps.toSet == dups.map(d => (d, 7L, d == 7L)))
+        // every doc is reported, shingle-less ones kept: only 9 and 12 go
+        val report = out("pipeline_dedup_corpus")
+        assert(report.map(_.getAs[Long]("n_docs")).sum == docs.size)
+        assert(report.map(_.getAs[Long]("n_removed")).sum == 2L)
+        assert(report.map(_.getAs[Long]("n_kept")).sum == docs.size - 2L)
+      }
+      withTempDir("graft_dedup_single") { dir =>
+        write(dir, Seq(42L -> same))
+        val out = run(dir)
+        for (q <- pairQueries ++ Seq("dedup_containment", "dedup_cluster_reps_lsh"))
+          assert(out(q).isEmpty, q)
+        val report = out("pipeline_dedup_corpus")
+        assert(report.map(r => (r.getAs[Long]("n_docs"), r.getAs[Long]("n_kept"),
+          r.getAs[Long]("n_removed"))) == Seq((1L, 1L, 0L)))
+      }
+    } finally graft.ops.Memo.clear()
+  }
+
   test("paragraph dedup: dup copies drain, originals keep every chunk once") {
     val rows = SparkEntry.queries("dedup_paragraph_exact")(spark, sf)
       .as[(Long, Long, Long, String)].collect()

@@ -10,6 +10,22 @@ class PlanSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  test("the plan formatter prints no lambda identity, plan id or checkout path") {
+    import spark.implicits._
+    // a parquet dir under the working directory, as artifact-writing
+    // queries make, and a typed map whose plan names its JVM lambda
+    val dir = s"target/tmp/planspec_formatter_${ProcessHandle.current().pid()}"
+    try {
+      Seq(1L, 2L).toDF("x").write.mode("overwrite").parquet(dir)
+      val p = graft.tools.Probe.formattedPlan(
+        spark.read.parquet(dir).as[Long].map(_ + 1L).toDF().repartition(2))
+      assert(p.contains("$$Lambda") && !p.matches("(?s).*\\$\\$Lambda[^\\s,]*@.*"), p)
+      assert(p.contains("[plan_id=N]") && !p.matches("(?s).*plan_id=\\d.*"), p)
+      assert(p.contains(s"file:./$dir"), p)
+      assert(!p.contains(java.nio.file.Paths.get("").toAbsolutePath.toString), p)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("projection pushdown: s2 scan reads only the selected columns") {
     val p = plan("s2_projected_scan")
     assert(p.contains("ReadSchema: struct<doc_id:bigint,lang:string,n_chars:bigint>"), p)
