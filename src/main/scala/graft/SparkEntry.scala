@@ -25,6 +25,15 @@ object SparkEntry {
       MultimodalOps.queries ++ GraphOps.queries ++
       graft.streaming.StreamingOps.queries ++ FuzzQueries.queries
 
+  /** Query-name selection for Verify and the tools: a name is selected
+    * when `nameRegex` matches anywhere in it (an unanchored search, so
+    * `dedup_` selects every dedup query; anchor with ^ and $).
+    */
+  def nameFilter(nameRegex: String): String => Boolean = {
+    val r = nameRegex.r
+    name => r.findFirstIn(name).isDefined
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */

@@ -5,13 +5,16 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional third arg: regex over query names, for fast local
-    // iteration on a subset (the driver always runs the full map).
-    val nameFilter = if (args.length > 2) args(2) else ".*"
+    // Optional third arg: regex searched for in query names
+    // (SparkEntry.nameFilter), for fast local iteration on a subset.
+    val nameRegex = if (args.length > 2) args(2) else ".*"
+    val keep = SparkEntry.nameFilter(nameRegex)
+    val selected = SparkEntry.queries.filter { case (name, _) => keep(name) }
+    println(s"[verify] filter '$nameRegex' selects ${selected.size}/${SparkEntry.queries.size} queries")
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.filter(_._1.matches(nameFilter)).foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -37,14 +40,15 @@ object Verify {
     // Trailing one-line summary so a partial outage is visible in a tail
     // capture (round 9's 51 missing queries only showed as per-query
     // stderr lines buried mid-log).
-    val total = SparkEntry.queries.count(_._1.matches(nameFilter))
+    val total = selected.size
     println(s"[verify] dumped ${total - failed.size}/$total" +
       (if (failed.isEmpty) ", 0 failed"
        else s", ${failed.size} FAILED: ${failed.sorted.mkString(",")}"))
     spark.stop()
     // Every dump and the oracle file are written first, so a partial run
     // still leaves everything that did succeed; the exit code is what a
-    // script or CI step checks.
-    if (failed.nonEmpty) sys.exit(1)
+    // script or CI step checks. A filter that selects nothing is a
+    // failed run too (a mistyped name would otherwise pass silently).
+    if (failed.nonEmpty || selected.isEmpty) sys.exit(1)
   }
 }

@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication suite for the training-data pipeline (north-star M9,
   * SURVEY.md §7.1/§7.4): exact hash-dedup, n-gram Jaccard, MinHash+LSH,
@@ -412,87 +415,117 @@ object DedupOps {
        |  WHERE ${jaccardSql("inter", "sa.sz", "sb.sz")} >= $JaccardGate)""".stripMargin
 
   /** Connected components over an undirected pair list (d1, d2): returns
-    * (node, component-min label) for every node in a non-self pair. The
+    * (node, lbl) with lbl the component minimum, for every node in a
+    * non-self pair: long ids, nullable when an input column is. The
     * engine's one CC kernel: alternating LARGE-STAR / SMALL-STAR rounds
     * (Kiveris et al. 2014, "Connected Components in MapReduce and
-    * Beyond"). Min-label propagation with pointer jumping needs
-    * O(diameter) label-relax rounds before the doubling kicks in and
-    * keeps a full |V| label table live per round; the star algorithm
-    * rewrites the EDGE set itself and provably converges in O(log² n)
-    * rounds on ANY topology, skewed components included. Each round is
-    * two self-contained map-reduce steps:
+    * Beyond"), which rewrite the EDGE set itself and provably converge
+    * in O(log² n) rounds on ANY topology, skewed components included
+    * (min-label propagation needs O(diameter) rounds and a full |V|
+    * label table per round). Edges are stored oriented, u > v:
     *   large-star: every node attaches its strictly-larger neighbors to
-    *     the minimum of its closed neighborhood (each undirected edge is
-    *     processed from its smaller endpoint — connectivity-preserving);
-    *   small-star: every node attaches its smaller-or-equal neighbors
-    *     and itself to the minimum of the smaller neighborhood.
-    * Both are one groupBy(min) + one equi-join on the candidate-scale
-    * edge list; at convergence the edges ARE the component stars
-    * (node → component-min), so labels read off without a closure pass.
+    *     the minimum of its closed neighborhood;
+    *   small-star: every node attaches its smaller neighbors and itself
+    *     to the minimum of those neighbors.
+    * The edge set is a star forest — each component one star centred on
+    * its minimum, so labels read off without a closure pass — exactly
+    * when no node is both a child and a parent and no child has two
+    * parents. That test is exact and runs on the per-node neighborhoods
+    * the next large-star reads anyway.
+    *
+    * The rounds are a fixed-plan RDD kernel: the oriented edge list
+    * leaves Catalyst once, every shuffle runs under one
+    * HashPartitioner(defaultParallelism), and the labels become a
+    * DataFrame once, at the end. A round is two shuffles (the
+    * small-star grouping of the large-star output, then the per-node
+    * neighborhoods, persisted) and ONE job: the count of nodes still
+    * outside a star, which is also the convergence test. So the loop
+    * costs rounds + 1 jobs (the +1 tests the input edge set) and builds
+    * no Catalyst plan — a DataFrame round re-analyzed and re-optimized
+    * its join chain on the driver, and AQE submitted one job per
+    * exchange. The neighborhoods are O(|E|) and stay distributed; one
+    * count per round reaches the driver.
     */
-  def ccStars(s: SparkSession, pairs: DataFrame): DataFrame = {
+  def ccStars(s: SparkSession, pairs: DataFrame): DataFrame = ccStarRounds(s, pairs)._1
+
+  /** [[ccStars]] and the number of large/small-star rounds it ran. */
+  private[graft] def ccStarRounds(s: SparkSession, pairs: DataFrame): (DataFrame, Int) = {
     import s.implicits._
-    // checkpoint the INPUT once: the candidate-pair producer is often a
-    // whole LSH/shingle pipeline, and deriving nodes + edges from a lazy
-    // frame would run it once per derivation. Round 19: LAZY (the r18
-    // harmonic/hyperball rationale) — first use materializes; eager cost
-    // one extra driver job round-trip per checkpoint.
-    val p = pairs.toDF("d1", "d2").filter($"d1" =!= $"d2")
-      .localCheckpoint(false)
-    val nodes = p.select($"d1".as("node"))
-      .union(p.select($"d2".as("node"))).distinct()
-    // orientation invariant: u > v on every stored edge
-    var edges = p
+    val p = pairs.toDF("d1", "d2")
+    val oriented = p.filter($"d1" =!= $"d2")
       .select(greatest($"d1", $"d2").as("u"), least($"d1", $"d2").as("v"))
-      .distinct().localCheckpoint(false)
-    var changed = 1L
-    var iters = 0
-    while (changed > 0 && iters < 50) {
-      val sym = edges.select($"u".as("x"), $"v".as("y"))
-        .union(edges.select($"v".as("x"), $"u".as("y")))
-      val mLarge = sym.groupBy($"x").agg(min($"y").as("mn"))
-        .select($"x", least($"mn", $"x").as("m"))
-      // (y, m_x) for y > x: each edge re-emitted from its smaller
-      // endpoint, pointed at that endpoint's closed-neighborhood min;
-      // y > x >= m, so the u > v orientation is preserved for free.
-      // Round 18: no .distinct() here — mSmall's min and the final
-      // distinct are both multiplicity-insensitive, |large| is bounded
-      // by the edge count either way, and dropping it removes one full
-      // exchange+dedup per round (set semantics unchanged).
-      val large = sym.filter($"y" > $"x").join(mLarge, "x")
-        .select($"y".as("u"), $"m".as("v"))
-      val mSmall = large.groupBy($"u").agg(min($"v").as("m"))
-      val small = large.join(mSmall, "u")
-        .select($"v".as("node"), $"m")
-        .union(mSmall.select($"u".as("node"), $"m"))
-        .filter($"node" =!= $"m")
-        .select($"node".as("u"), $"m".as("v"))
-        .distinct()
-      // converged ⟺ the small-star output is the same edge set. Round
-      // 18: checkpoint the MERGED full-outer frame once — `changed` and
-      // the next round's edge set are both filters over this cache, so
-      // the round runs one materialization + one cached-count instead
-      // of a checkpoint job plus a second join job re-reading both
-      // sides (the |AΔB| = 2|A∪B|−|A|−|B| form cost three). Round 19:
-      // the checkpoint is LAZY, so the `changed` count below IS the
-      // materialization — one driver job per round, not two.
-      val merged = small.withColumn("sflag", lit(1))
-        .join(edges.withColumn("eflag", lit(1)), Seq("u", "v"), "full")
-        .localCheckpoint(false)
-      changed = merged.filter($"sflag".isNull || $"eflag".isNull).count()
-      edges = merged.filter($"sflag" === 1).select($"u", $"v")
-      iters += 1
+    val nullable = p.schema.exists(_.nullable)
+    val part = new HashPartitioner(s.sparkContext.defaultParallelism)
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    var stars = starsOf(oriented.as[(Long, Long)].rdd, part).persist(level)
+    var open = stars.filter(_._2.open).count()
+    var rounds = 0
+    while (open > 0 && rounds < 50) {
+      val next = starsOf(smallStar(largeStar(stars), part), part).persist(level)
+      open = next.filter(_._2.open).count()
+      stars.unpersist(blocking = false)
+      stars = next
+      rounds += 1
     }
     // O(log² n) convergence means the cap can only be hit by a broken
     // invariant (orientation, min-propagation); returning a non-star
     // edge set would silently emit duplicate (node,label) rows, so make
     // it a loud failure rather than a fallback.
-    if (changed > 0)
+    if (open > 0) {
+      stars.unpersist(blocking = false)
       throw new IllegalStateException(
-        s"ccStars failed to converge after $iters rounds ($changed edges still changing)")
-    nodes.join(edges.toDF("node", "lbl"), Seq("node"), "left")
-      .select($"node", coalesce($"lbl", $"node").as("lbl"))
+        s"ccStars failed to converge after $rounds rounds ($open nodes outside a star)")
+    }
+    // the labels read the last round's shuffle output again rather than
+    // keep the per-node cache alive past the call
+    stars.unpersist(blocking = false)
+    val labels = stars.map { case (x, st) => Row(x, math.min(x, st.minP)) }
+    (s.createDataFrame(labels, StructType(Seq(
+      StructField("node", LongType, nullable), StructField("lbl", LongType, nullable)))),
+      rounds)
   }
+
+  /** One node's neighborhood in the oriented edge set: the smallest and
+    * largest parent (smaller neighbor; Long.MaxValue / MinValue when it
+    * has none) and its distinct children (larger neighbors).
+    */
+  private final case class Star(minP: Long, maxP: Long, kids: Array[Long]) {
+    /** Not yet a leaf or a centre of a star: a parent plus a second
+      * parent or a child. */
+    def open: Boolean = minP != Long.MaxValue && (minP != maxP || kids.nonEmpty)
+  }
+
+  /** Per-node neighborhoods of oriented edges (u > v), duplicates
+    * allowed: one shuffle. */
+  private def starsOf(edges: RDD[(Long, Long)], part: Partitioner): RDD[(Long, Star)] =
+    edges.flatMap { case (u, v) => Iterator((u, v), (v, u)) }
+      .groupByKey(part)
+      .map { case (x, nbrs) =>
+        var minP = Long.MaxValue
+        var maxP = Long.MinValue
+        val kids = Array.newBuilder[Long]
+        nbrs.foreach { y =>
+          if (y < x) { minP = math.min(minP, y); maxP = math.max(maxP, y) }
+          else kids += y
+        }
+        (x, Star(minP, maxP, kids.result().distinct))
+      }
+
+  /** Large-star: each child y of x re-attaches to min(x, x's parents) —
+    * y > x >= that minimum, so the u > v orientation holds for free. */
+  private def largeStar(stars: RDD[(Long, Star)]): RDD[(Long, Long)] =
+    stars.flatMap { case (x, st) =>
+      val m = math.min(x, st.minP)
+      st.kids.iterator.map(y => (y, m))
+    }
+
+  /** Small-star: each node u and its smaller neighbors re-attach to the
+    * least of those neighbors: one shuffle. */
+  private def smallStar(large: RDD[(Long, Long)], part: Partitioner): RDD[(Long, Long)] =
+    large.groupByKey(part).flatMap { case (u, vs) =>
+      val m = vs.min
+      Iterator((u, m)) ++ vs.iterator.filter(_ != m).distinct.map(v => (v, m))
+    }
 
   /** [[ccStars]]' DuckDB twin: the recursive transitive closure over the
     * (d1, d2) pairs of CTE `pairs`, ending in `cc<suffix>(doc_id,

@@ -5,6 +5,7 @@ import org.apache.spark.ml.feature.CountVectorizerModel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** ML layer (SURVEY §2.10 U5/U6/U8, §7.1 M7): CountVectorizer bag-of-words,
   * seeded LDA topic modeling (reference: Gensim LdaModel k=12/32/auto,
@@ -51,15 +52,16 @@ object MLOps {
   val ScanKs = Seq(2, 4, 6)
 
   /** Each doc's content words (TextOps.isContentWord), as the LDA input
-    * column (+ source for the relational topic derivation).
+    * column (+ source for the relational topic derivation), spread
+    * round-robin over the cores.
     */
-  private def docTokens(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    documents(s, d)
-      .repartition(s.sparkContext.defaultParallelism)
-      .select($"doc_id", $"source",
-        filter(TextOps.tokens($"text"), t => TextOps.isContentWord(t)).as("toks"))
-  }
+  private def docTokens(s: SparkSession, d: String): DataFrame =
+    contentTokens(documents(s, d).repartition(s.sparkContext.defaultParallelism))
+
+  /** (doc_id, source, toks) of each row of `docs`. */
+  private def contentTokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("source"),
+      filter(TextOps.tokens(col("text")), t => TextOps.isContentWord(t)).as("toks"))
 
   /** Deterministic vectorizer: CountVectorizer.fit breaks corpus-count
     * ties arbitrarily (vocab order — and therefore every downstream LDA
@@ -529,22 +531,38 @@ object MLOps {
     * collected): the EM twin demonstrates the DISTRIBUTED trainer shape.
     */
   private def emCounts(s: SparkSession, d: String): DataFrame = {
+    val pair = emPairs(s, d)
+    pair.join(broadcast(emVocab(pair)), "word")
+      .select("doc_id", "word", "n")
+  }
+
+  /** The pinned (doc_id, word, n) token-count aggregate both EM fits
+    * read. Round 18: ONE pinned aggregate feeds both the vocabulary (tf
+    * = Σ n; df = rows per word — same values the groupBy+countDistinct
+    * produced, without the Expand doubling the token shuffle) and the
+    * counts. The old form tokenized and exploded the corpus twice —
+    * once for the vocab aggregate, once for the counts join. The docs
+    * are tokenized in the scan's own tasks, not spread round-robin
+    * first: the aggregate's hash exchange spreads the counts, and the
+    * raw text is not shuffled (nor its exchange run as one more job).
+    */
+  private def emPairs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val toks = docTokens(s, d).select($"doc_id", explode($"toks").as("word"))
-    // Round 18: ONE pinned (doc_id, word) aggregate feeds both the
-    // vocabulary (tf = Σ n; df = rows per word — same values the
-    // groupBy+countDistinct produced, without the Expand doubling the
-    // token shuffle) and the returned counts. The old form tokenized
-    // and exploded the corpus twice — once for the vocab aggregate,
-    // once for the counts join.
-    val pair = toks.groupBy($"doc_id", $"word").agg(count(lit(1)).as("n"))
+    contentTokens(documents(s, d)).select($"doc_id", explode($"toks").as("word"))
+      .groupBy($"doc_id", $"word").agg(count(lit(1)).as("n"))
       .localCheckpoint(false)
-    val vocab = pair.groupBy($"word")
+  }
+
+  /** The EM vocabulary rule over [[emPairs]]: the words in at least 5
+    * docs, the 50,000 largest by tf (Σ n) desc, word asc.
+    */
+  private def emVocab(pair: DataFrame): DataFrame = {
+    import pair.sparkSession.implicits._
+    pair.groupBy($"word")
       .agg(sum($"n").as("tf"), count(lit(1)).as("df"))
       .filter($"df" >= 5)
       .orderBy(desc("tf"), asc("word")).limit(50000)
       .select("word")
-    pair.join(broadcast(vocab), "word").select($"doc_id", $"word", $"n")
   }
 
   /** Fixed-iteration seeded MAP-EM for LDA (the smoothed-EM member of the
@@ -689,8 +707,8 @@ object MLOps {
     * statistics tree-reduced"). Same MAP-EM math as [[ldaEmState]] —
     * identical init, E-step, micro-quantization, and smoothing — but
     * executed in the imperative treeAggregate shape MLlib's own
-    * distributed trainers use: the corpus stays partitioned however it
-    * arrives; each round broadcasts φ (the K×V model, the ONLY global
+    * distributed trainers use: the docs are hash-partitioned on doc_id
+    * (`parts` wide, default the core count); each round broadcasts φ (the K×V model, the ONLY global
     * state), computes per-doc responsibilities locally (θ is per-doc
     * state carried WITH the doc — never shuffled, never collected), and
     * tree-reduces the word×topic sufficient statistics as exact longs.
@@ -699,38 +717,49 @@ object MLOps {
     * == fit(7 parts) == the relational trainer's φ, and the query's
     * oracle is ldaEmTopicsSql itself (three-way differential:
     * treeAggregate fit == relational EM == DuckDB replay). The vocab
-    * index is the one collected object (cap-bounded ≤ 50k by emCounts'
+    * index is the one collected object (cap-bounded ≤ 50k by emVocab's
     * vocabulary limit — model-scale state, K×V longs ≈ 1.6 MB at the
     * cap, the same class as every LDA implementation's φ matrix).
-    * Nothing in this path pins to one task: with P input partitions the
+    * Nothing in this path pins to one task: with P partitions the
     * E-step runs P-wide and the reduce is a tree.
+    *
+    * Jobs: the setup is the pinned counts' one exchange and the
+    * vocabulary collect ([[emVocab]], the rule the relational trainer
+    * broadcast-joins); the per-doc (wordIdx, n) arrays are an RDD whose
+    * shuffle runs inside round 1's job, and each round is exactly one
+    * treeAggregate job. The loop is RDD code over driver arrays, so no
+    * Catalyst plan is built or re-optimized inside it and no AQE stage
+    * becomes a job of its own: EmIters + 4 jobs per fit (MLSpec pins
+    * it; the 4 are the documents footer read, the counts' exchange and
+    * the collect's exchange and result).
     */
   def ldaEmPhiDist(s: SparkSession, d: String, k: Int = EmK,
                    parts: Int = 0): Array[(String, Array[Double])] =
     Memo.perPass("lda_em_dist", s, d, k, parts) {
       import s.implicits._
-      val dw = emCounts(s, d)
-      // the one collected object: the cap-bounded vocabulary, sorted on
-      // the driver (model-scale, ≤ 50k words) rather than by a sampled
-      // range sort, so the index layout is deterministic. φ per word does
-      // not depend on that layout: seeds hash the word, sums are exact.
-      val vocab: Array[String] = dw.select($"word").distinct()
-        .as[String].collect().sorted
+      // the setup is two passes over the pinned token counts: the
+      // vocabulary collect, and the per-doc arrays, whose shuffle runs
+      // inside round 1's job
+      val pair = emPairs(s, d)
+      // the one collected object: the cap-bounded vocabulary (model-
+      // scale, ≤ 50k words), sorted on the driver so the index layout is
+      // deterministic. φ per word does not depend on that layout: seeds
+      // hash the word, sums are exact.
+      val vocab: Array[String] = emVocab(pair).as[String].collect().sorted
       val v = vocab.length
       val idx: Map[String, Int] = vocab.zipWithIndex.toMap
       val idxB = s.sparkContext.broadcast(idx)
-      // docs as (wordIdx, n) arrays + their per-doc θ state; list order
-      // within a doc is irrelevant (every downstream sum is exact-long
-      // and per-(word, k) terms are independent), so collect_list is safe
-      val base = dw.groupBy($"doc_id")
-        .agg(collect_list(struct($"word", $"n")).as("ws"))
-        .as[(Long, Seq[(String, Long)])]
-        .rdd.map { case (_, ws) =>
-          (ws.map { case (w, n) => (idxB.value(w), n) }.toArray,
-            Array.fill(k)(1.0 / k))
-        }
+      // docs as (wordIdx, n) arrays + their per-doc θ state, hash-
+      // partitioned on doc_id `parts` wide (default: the core count).
+      // List order within a doc is irrelevant (every downstream sum is
+      // exact-long and per-(word, k) terms are independent).
+      val part = new org.apache.spark.HashPartitioner(
+        if (parts > 0) parts else s.sparkContext.defaultParallelism)
+      var docs = pair.as[(Long, String, Long)].rdd
+        .flatMap { case (doc, w, n) => idxB.value.get(w).map(i => (doc, (i, n))) }
+        .groupByKey(part)
+        .map { case (_, ws) => (ws.toArray, Array.fill(k)(1.0 / k)) }
       // persisted, not counted: round 1's pass is its first materialization
-      var docs = if (parts > 0) base.repartition(parts) else base
       docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // φ init: the exact hash recurrence ldaEmState uses, evaluated
       // driver-side over the same vocabulary (per-topic normalization
@@ -956,18 +985,26 @@ object MLOps {
     // EM == DuckDB replay) is the proof the fallback computes the same
     // model; MLSpec additionally pins partition-count invariance
     // (fit at 1 partition == fit at 7).
+    // The fit's φ is model-scale driver state, so the ranking (TopWords
+    // per topic by p desc, word asc in Spark's UTF-8 byte order) runs on
+    // the driver too, and the rows are emitted in (topic_id, rank) order
+    // as ONE local partition: writing the table is one job.
     "lda_em_topics_dist" -> ((s, d) => {
       import s.implicits._
       val phi = ldaEmPhiDist(s, d)
-      val w = Window.partitionBy($"k").orderBy(desc("p"), asc("word"))
-      phi.toSeq.flatMap { case (word, ps) =>
-        ps.zipWithIndex.map { case (p, j) => (word, j, p) }
-      }.toDF("word", "k", "p")
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= TopWords)
-        .select($"k".cast("int").as("topic_id"), $"rank", $"word",
-          round($"p", 6).as("weight"))
-        .orderBy("topic_id", "rank")
+      val byPDescWordAsc = Ordering.fromLessThan[(String, Double)] {
+        case ((w1, p1), (w2, p2)) =>
+          val c = java.lang.Double.compare(p2, p1)
+          c < 0 || c == 0 && UTF8String.fromString(w1)
+            .compareTo(UTF8String.fromString(w2)) < 0
+      }
+      (0 until EmK).flatMap { j =>
+        phi.map { case (word, ps) => (word, ps(j)) }.sorted(byPDescWordAsc)
+          .take(TopWords).zipWithIndex
+          .map { case ((word, p), r) => (j, r + 1, word, p) }
+      }.toDF("topic_id", "rank", "word", "p")
+        .select($"topic_id", $"rank", $"word", round($"p", 6).as("weight"))
+        .coalesce(1)
     }),
 
     // U5+A7 twin (oracle-checked): per-doc dominant topic from the

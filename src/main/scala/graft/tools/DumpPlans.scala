@@ -6,6 +6,13 @@ import java.nio.file.{Files, Paths}
   * with the properties PlanSpec asserts, as reviewable evidence.
   */
 object DumpPlans {
+  /** Short hash of a whole formatted plan: the sections keep 40 detail
+    * lines, so a change past them still shows as a new hash.
+    */
+  def planHash(plan: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(plan.getBytes("UTF-8")).take(6).map(b => f"${b & 0xff}%02x").mkString
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val spark = graft.GraftSession.local(4)
@@ -116,6 +123,10 @@ object DumpPlans {
         "GMM EM trainer: per-round corpus pass with 1-row parameter broadcast; sufficient-statistic shuffle carries 7 quantized longs; checkpointed state",
       "j_scd2_pointintime" ->
         "Point-in-time lookup: pre-filtered probe side, custkey equi-join with the interval predicate as a residual — no nested loop",
+      "dedup_cluster_reps_lsh" ->
+        "Cluster reps over LSH pairs: star-CC rounds run as a fixed-plan RDD kernel, so the plan is one scan of the persisted labels plus the output sort",
+      "lda_em_topics_dist" ->
+        "Distributed EM topics: the model-scale phi is ranked on the driver; the plan is one local partition of K x TopWords rows",
     )
     val sb = new StringBuilder
     sb.append("# Flagship physical plans (`explain(\"formatted\")`)\n\n")
@@ -123,7 +134,7 @@ object DumpPlans {
     sb.append("PlanSpec asserts the load-bearing properties; this file is the human-readable evidence.\n")
     flagships.foreach { case (name, note) =>
       val plan = Probe.formattedPlan(graft.SparkEntry.queries(name)(spark, sfDir))
-      sb.append(s"\n## $name\n\n$note\n\n```\n")
+      sb.append(s"\n## $name\n\n$note\n\nPlan hash: `${planHash(plan)}` (the whole plan)\n\n```\n")
       // keep the tree; drop the verbose per-node detail past 120 lines
       val (tree, detail) = plan.linesIterator.toSeq.span(!_.startsWith("(1) Scan"))
       sb.append((tree ++ detail.take(40)).mkString("\n"))

@@ -1,6 +1,7 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
   SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,15 +15,18 @@ import graft.{Bench, GraftSession, SparkEntry}
   *       default 2) for every matching query, heaviest first — finds and
   *       reproduces slow queries without the whole bench run
   *   jobs <query> [sfDir]  per-job wall time, run-stage count, task
-  *       count, single-task stages and call site of one pass (after a
-  *       warm-up and clearState), and the driver gap (wall minus the job
-  *       sum: planning and driver loops)
+  *       count, single-task stages, SQL execution id (`sql=N`, or `rdd`
+  *       for a job no query submitted) and call site of one pass (after
+  *       a warm-up and clearState), and the driver gap (wall minus the
+  *       job sum: planning and driver loops)
   *   plans <nameRegex> <outDir> [sfDir]  `explain("formatted")` of every
   *       matching query into <outDir>/<name>.txt (the plans/rNN evidence)
   *   calib  the Bench calibration probe alone (six fresh-JVM passes)
   *
-  * sfDir defaults to SPARK_GRAFT_SF_DIR, the dataset Bench times; the
-  * width comes from SPARK_GRAFT_CPUS, as in Bench.
+  * nameRegex selects every query whose name it matches anywhere (an
+  * unanchored search, as in Verify). sfDir defaults to
+  * SPARK_GRAFT_SF_DIR, the dataset Bench times; the width comes from
+  * SPARK_GRAFT_CPUS, as in Bench.
   * Usage: runMain graft.tools.Probe <subcommand> <args...>
   */
 object Probe {
@@ -30,17 +34,20 @@ object Probe {
     * and checkouts: a JVM lambda's class and identity
     * (`Ops$$$Lambda$5111/0x…@4ad0465c`) print as `$$Lambda`, an exchange's
     * session-global `plan_id` (it moves with whatever planned before) as
-    * `plan_id=N`, and a path under the working directory relative to it
-    * (`file:./…`).
+    * `plan_id=N`, an RDD's session-global id and its call site's line
+    * (`MapPartitionsRDD[460] at localCheckpoint at MLOps.scala:650`) as
+    * `RDD[N]` and the file alone, and a path under the working directory
+    * relative to it (`file:./…`).
     */
   def formattedPlan(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
       .replaceAll("""\$\$Lambda[^@\s,\]]*@\p{XDigit}+""", "\\$\\$Lambda")
       .replaceAll("""\[plan_id=\d+\]""", "[plan_id=N]")
+      .replaceAll("""RDD\[\d+\] at (\w+) at (\w+\.scala):\d+""", "RDD[N] at $1 at $2")
       .replace(s"file:${Paths.get("").toAbsolutePath}/", "file:./")
 
   private def matching(nameRegex: String): Seq[String] =
-    SparkEntry.queries.keys.toSeq.sorted.filter(_.matches(nameRegex))
+    SparkEntry.queries.keys.toSeq.sorted.filter(SparkEntry.nameFilter(nameRegex))
 
   def main(args: Array[String]): Unit = {
     def sf(rest: List[String]) = rest.headOption.orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
@@ -75,35 +82,39 @@ object Probe {
   private def jobs(spark: SparkSession, name: String, sfDir: String): Unit = {
     Bench.warmUp(spark, Seq(name), sfDir) // the pass pays planning, not first-call JIT
     Bench.clearState(spark)
-    // per job: start time, call site (its result stage's name), stage
-    // ids; per run stage: its task count (a job also lists the stages it
-    // skipped, which never complete)
-    val starts = scala.collection.concurrent.TrieMap.empty[Int, (Long, String, Seq[Int])]
+    // per job: start time, call site (its result stage's name), the SQL
+    // execution it belongs to (`rdd` for a job no query submitted) and
+    // stage ids; per run stage: its task count (a job also lists the
+    // stages it skipped, which never complete)
+    val starts = scala.collection.concurrent.TrieMap.empty[Int, (Long, String, String, Seq[Int])]
     val stageTasks = scala.collection.concurrent.TrieMap.empty[Int, Int]
-    val rows = scala.collection.mutable.ListBuffer.empty[(Int, Double, String, Seq[Int])]
+    val rows = scala.collection.mutable.ListBuffer.empty[(Int, Double, String, String, Seq[Int])]
     val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts(e.jobId) = (e.time, e.stageInfos.maxBy(_.stageId).name, e.stageIds)
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val exec = Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        starts(e.jobId) = (e.time, e.stageInfos.maxBy(_.stageId).name,
+          exec.fold("rdd")("sql=" + _), e.stageIds)
+      }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         stageTasks(e.stageInfo.stageId) = e.stageInfo.numTasks
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        starts.remove(e.jobId).foreach { case (t0, site, stages) =>
-          rows += ((e.jobId, (e.time - t0) / 1e3, site, stages.flatMap(stageTasks.get)))
+        starts.remove(e.jobId).foreach { case (t0, site, exec, stages) =>
+          rows += ((e.jobId, (e.time - t0) / 1e3, site, exec, stages.flatMap(stageTasks.get)))
         }
     }
     spark.sparkContext.addSparkListener(l)
     val t0 = System.nanoTime()
     SparkEntry.queries(name)(spark, sfDir).count()
     val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(500) // let the listener bus deliver the last job end
+    ListenerBus.drain(spark.sparkContext) // every job end delivered
     spark.sparkContext.removeSparkListener(l)
     val sorted = rows.sortBy(_._1)
-    sorted.foreach { case (id, s, site, tasks) =>
+    sorted.foreach { case (id, s, site, exec, tasks) =>
       println(f"[probe] job $id%4d  $s%7.3f s  stages=${tasks.size}%2d tasks=${tasks.sum}%4d " +
-        f"single-task=${tasks.count(_ == 1)}%2d  ${site.take(60)}")
+        f"single-task=${tasks.count(_ == 1)}%2d  $exec%-7s ${site.take(60)}")
     }
     val jobSum = sorted.map(_._2).sum
-    val tasks = sorted.flatMap(_._4)
+    val tasks = sorted.flatMap(_._5)
     println(f"[probe] TOTAL jobs=${sorted.size} stages=${tasks.size} tasks=${tasks.sum} " +
       f"single-task=${tasks.count(_ == 1)} jobSum=$jobSum%.3f wall=$wall%.3f (gap=${wall - jobSum}%.3f = planning/driver)")
   }

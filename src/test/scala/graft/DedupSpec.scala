@@ -280,6 +280,38 @@ class DedupSpec extends SparkSpec {
       Seq((1000L, 1000L), (1001L, 1000L), (1002L, 1000L))).toSet)
   }
 
+  test("star-CC submits one job per round on the 200-node chain") {
+    // the rounds are a fixed-plan RDD kernel: one count per round (the
+    // convergence test), plus c = 2 — the star test of the input edge
+    // set and the collect of the labels. The local input plans no
+    // exchange, so turning it into the edge RDD submits nothing.
+    val chain = (0L until 200L).sliding(2).map(w => (w(0), w(1))).toSeq.toDF("d1", "d2")
+    val ((labels, rounds), jobs) = countJobs {
+      val (cc, r) = DedupOps.ccStarRounds(spark, chain)
+      (cc.as[(Long, Long)].collect().toSet, r)
+    }
+    assert(labels == (0L until 200L).map(n => (n, 0L)).toSet)
+    assert(rounds > 1, "a 200-node chain is no star forest")
+    assert(jobs == rounds + 2, s"$jobs jobs for $rounds rounds")
+  }
+
+  test("star-CC labels and schema do not depend on the input's partitioning") {
+    val rnd = new scala.util.Random(7)
+    val edges = (0L until 200L).sliding(2).map(w => (w(0), w(1))).toSeq ++
+      Seq.fill(150)((rnd.nextInt(400).toLong, rnd.nextInt(400).toLong))
+    val df = edges.toDF("d1", "d2")
+    val Seq(one, seven) = Seq(1, 7).map(n =>
+      DedupOps.ccStars(spark, df.repartition(n)).as[(Long, Long)].collect().toSet)
+    assert(one == seven && one.nonEmpty)
+    // names, types and nullability follow the input ids
+    import org.apache.spark.sql.types._
+    def schema(nullable: Boolean) = StructType(Seq(
+      StructField("node", LongType, nullable), StructField("lbl", LongType, nullable)))
+    assert(DedupOps.ccStars(spark, df).schema == schema(false))
+    val opt = Seq((Option(1L), Option(2L)), (None, Option(3L))).toDF("d1", "d2")
+    assert(DedupOps.ccStars(spark, opt).schema == schema(true))
+  }
+
   test("large-star/small-star CC matches union-find on seeded random graphs") {
     // property sweep: sparse, dense, and multi-component regimes; the
     // distributed kernel must agree with a local union-find on every

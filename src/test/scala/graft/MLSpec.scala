@@ -39,6 +39,17 @@ class MLSpec extends SparkSpec {
     }
   }
 
+  test("distributed EM fit runs one job per round plus a fixed setup") {
+    // a fresh Memo key (3 partitions) so the fit is built here. c = 4:
+    // the documents footer read, the exchange of the pinned token
+    // counts, and the vocabulary collect (its exchange and its result);
+    // the per-doc arrays are shuffled inside round 1's job.
+    import graft.ops.MLOps.{EmIters, EmK, ldaEmPhiDist}
+    val (phi, jobs) = countJobs(ldaEmPhiDist(spark, sf, EmK, 3))
+    assert(phi.nonEmpty)
+    assert(jobs == EmIters + 4, s"$jobs jobs for $EmIters rounds")
+  }
+
   test("QRound's scalar and Column forms both equal BigDecimal HALF_UP") {
     import graft.ops.QRound
     // exact half-integers, values inside and just outside the 1e-5 guard

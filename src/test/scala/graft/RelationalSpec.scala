@@ -398,6 +398,17 @@ class RelationalSpec extends SparkSpec {
     assert(missing.isEmpty)
   }
 
+  test("every oracle SQL string is fully initialized") {
+    // an object-initialization cycle between two query modules
+    // interpolates a not-yet-set val as the word `null` (an oracle that
+    // reads `WITH null, …`): every oracle is a string, and none holds a
+    // bare lowercase `null` word
+    val bad = SparkEntry.oracleSql.collect {
+      case (name, sql) if sql == null || raw"\bnull\b".r.findFirstIn(sql).isDefined => name
+    }
+    assert(bad.isEmpty, s"uninitialized fragments in: ${bad.toSeq.sorted.mkString(", ")}")
+  }
+
   test("bench queries are all declared") {
     assert(SparkEntry.benchQueries.forall(SparkEntry.queries.contains))
   }
