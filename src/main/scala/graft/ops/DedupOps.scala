@@ -430,21 +430,28 @@ object DedupOps {
     * The edge set is a star forest — each component one star centred on
     * its minimum, so labels read off without a closure pass — exactly
     * when no node is both a child and a parent and no child has two
-    * parents. That test is exact and runs on the per-node neighborhoods
-    * the next large-star reads anyway.
+    * parents. That test is exact and runs on the per-node summaries the
+    * next large-star reads anyway.
     *
     * The rounds are a fixed-plan RDD kernel: the oriented edge list
     * leaves Catalyst once, every shuffle runs under one
     * HashPartitioner(defaultParallelism), and the labels become a
-    * DataFrame once, at the end. A round is two shuffles (the
-    * small-star grouping of the large-star output, then the per-node
-    * neighborhoods, persisted) and ONE job: the count of nodes still
-    * outside a star, which is also the convergence test. So the loop
-    * costs rounds + 1 jobs (the +1 tests the input edge set) and builds
-    * no Catalyst plan — a DataFrame round re-analyzed and re-optimized
-    * its join chain on the driver, and AQE submitted one job per
-    * exchange. The neighborhoods are O(|E|) and stay distributed; one
-    * count per round reaches the driver.
+    * DataFrame once, at the end. The state is the adjacency: every
+    * distinct edge stored once under each endpoint, partitioned by that
+    * endpoint. A round is two shuffles (the small-star input keyed by
+    * its child, then the deduplicating adjacency shuffle) and ONE job:
+    * the count of nodes still outside a star, which is also the
+    * convergence test and materializes the round's local checkpoint. So
+    * the loop costs rounds + 1 jobs (the +1 tests the input edge set)
+    * and builds no Catalyst plan: a DataFrame round re-analyzed and
+    * re-optimized its join chain on the driver, and AQE submitted one
+    * job per exchange. No per-node neighbor list is ever built, so a
+    * component's centre costs what any node costs: each partition
+    * streams its edges past a map of O(1) per-node summaries (smallest
+    * and largest parent, has-a-child), and the map-side-combined dedup
+    * spills like any aggregation. The checkpoint cuts each round's
+    * lineage, so earlier rounds' shuffle files can be cleaned; one count
+    * per round reaches the driver.
     */
   def ccStars(s: SparkSession, pairs: DataFrame): DataFrame = ccStarRounds(s, pairs)._1
 
@@ -456,15 +463,15 @@ object DedupOps {
       .select(greatest($"d1", $"d2").as("u"), least($"d1", $"d2").as("v"))
     val nullable = p.schema.exists(_.nullable)
     val part = new HashPartitioner(s.sparkContext.defaultParallelism)
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var stars = starsOf(oriented.as[(Long, Long)].rdd, part).persist(level)
-    var open = stars.filter(_._2.open).count()
+    var adj = adjacency(oriented.as[(Long, Long)].rdd, part)
+    var open = openNodes(adj)
     var rounds = 0
     while (open > 0 && rounds < 50) {
-      val next = starsOf(smallStar(largeStar(stars), part), part).persist(level)
-      open = next.filter(_._2.open).count()
-      stars.unpersist(blocking = false)
-      stars = next
+      val next = adjacency(smallStar(largeStar(adj), part), part)
+      open = openNodes(next)
+      // `next` is checkpointed now, so nothing reads this round's input
+      adj.unpersist(blocking = false)
+      adj = next
       rounds += 1
     }
     // O(log² n) convergence means the cap can only be hit by a broken
@@ -472,60 +479,87 @@ object DedupOps {
     // edge set would silently emit duplicate (node,label) rows, so make
     // it a loud failure rather than a fallback.
     if (open > 0) {
-      stars.unpersist(blocking = false)
+      adj.unpersist(blocking = false)
       throw new IllegalStateException(
         s"ccStars failed to converge after $rounds rounds ($open nodes outside a star)")
     }
-    // the labels read the last round's shuffle output again rather than
-    // keep the per-node cache alive past the call
-    stars.unpersist(blocking = false)
-    val labels = stars.map { case (x, st) => Row(x, math.min(x, st.minP)) }
+    // the labels read the last round's checkpoint, which lives as long
+    // as the frame's lineage does
+    val labels = adj.mapPartitions(it =>
+      starsOf(it).iterator.map { case (x, st) => Row(x, math.min(x, st.minP)) })
     (s.createDataFrame(labels, StructType(Seq(
       StructField("node", LongType, nullable), StructField("lbl", LongType, nullable)))),
       rounds)
   }
 
-  /** One node's neighborhood in the oriented edge set: the smallest and
+  /** One node's summary in the oriented edge set: its smallest and
     * largest parent (smaller neighbor; Long.MaxValue / MinValue when it
-    * has none) and its distinct children (larger neighbors).
+    * has none) and whether it has a child (larger neighbor).
     */
-  private final case class Star(minP: Long, maxP: Long, kids: Array[Long]) {
+  private final class Star(var minP: Long, var maxP: Long, var hasKid: Boolean) {
     /** Not yet a leaf or a centre of a star: a parent plus a second
       * parent or a child. */
-    def open: Boolean = minP != Long.MaxValue && (minP != maxP || kids.nonEmpty)
+    def open: Boolean = minP != Long.MaxValue && (minP != maxP || hasKid)
   }
 
-  /** Per-node neighborhoods of oriented edges (u > v), duplicates
-    * allowed: one shuffle. */
-  private def starsOf(edges: RDD[(Long, Long)], part: Partitioner): RDD[(Long, Star)] =
-    edges.flatMap { case (u, v) => Iterator((u, v), (v, u)) }
-      .groupByKey(part)
-      .map { case (x, nbrs) =>
-        var minP = Long.MaxValue
-        var maxP = Long.MinValue
-        val kids = Array.newBuilder[Long]
-        nbrs.foreach { y =>
-          if (y < x) { minP = math.min(minP, y); maxP = math.max(maxP, y) }
-          else kids += y
-        }
-        (x, Star(minP, maxP, kids.result().distinct))
-      }
+  /** Places an (x, y) adjacency entry by its node x. */
+  private final class ByNode(part: Partitioner) extends Partitioner {
+    def numPartitions: Int = part.numPartitions
+    def getPartition(key: Any): Int = part.getPartition(key.asInstanceOf[(Long, Long)]._1)
+  }
+
+  /** The adjacency of oriented edges (u > v, duplicates allowed): each
+    * distinct edge as (u, v) and (v, u), partitioned by its first node
+    * under `part` — one map-side-combined shuffle — and locally
+    * checkpointed, so the next action materializes it and cuts the
+    * lineage behind it.
+    */
+  private def adjacency(edges: RDD[(Long, Long)], part: Partitioner): RDD[(Long, Long)] =
+    edges.flatMap { case (u, v) => Iterator(((u, v), ()), ((v, u), ())) }
+      .reduceByKey(new ByNode(part), (a, _) => a)
+      .map(_._1)
+      .localCheckpoint()
+
+  /** The summaries of the nodes of one adjacency partition. */
+  private def starsOf(adj: Iterator[(Long, Long)]): scala.collection.mutable.LongMap[Star] = {
+    val stars = scala.collection.mutable.LongMap.empty[Star]
+    adj.foreach { case (x, y) =>
+      val st = stars.getOrElseUpdate(x, new Star(Long.MaxValue, Long.MinValue, false))
+      if (y < x) { st.minP = math.min(st.minP, y); st.maxP = math.max(st.maxP, y) }
+      else st.hasKid = true
+    }
+    stars
+  }
+
+  /** The star-forest test: how many nodes are outside a star. */
+  private def openNodes(adj: RDD[(Long, Long)]): Long =
+    adj.mapPartitions(it => starsOf(it).valuesIterator.filter(_.open)).count()
 
   /** Large-star: each child y of x re-attaches to min(x, x's parents) —
-    * y > x >= that minimum, so the u > v orientation holds for free. */
-  private def largeStar(stars: RDD[(Long, Star)]): RDD[(Long, Long)] =
-    stars.flatMap { case (x, st) =>
-      val m = math.min(x, st.minP)
-      st.kids.iterator.map(y => (y, m))
+    * y > x >= that minimum, so the u > v orientation holds for free.
+    * Each partition streams its child entries past its summary map. */
+  private def largeStar(adj: RDD[(Long, Long)]): RDD[(Long, Long)] =
+    adj.zipPartitions(adj.mapPartitions(it => Iterator.single(starsOf(it)))) { (es, sts) =>
+      val stars = sts.next()
+      es.collect { case (x, y) if y > x => (y, math.min(x, stars(x).minP)) }
     }
 
   /** Small-star: each node u and its smaller neighbors re-attach to the
-    * least of those neighbors: one shuffle. */
-  private def smallStar(large: RDD[(Long, Long)], part: Partitioner): RDD[(Long, Long)] =
-    large.groupByKey(part).flatMap { case (u, vs) =>
-      val m = vs.min
-      Iterator((u, m)) ++ vs.iterator.filter(_ != m).distinct.map(v => (v, m))
+    * least of those neighbors m — edge (u, m) stays, every other (u, v)
+    * becomes (v, m): one shuffle by u, whose partitions are read twice,
+    * for the per-node minima and for the edge stream. */
+  private def smallStar(large: RDD[(Long, Long)], part: Partitioner): RDD[(Long, Long)] = {
+    val byChild = large.partitionBy(part)
+    val mins = byChild.mapPartitions { it =>
+      val m = scala.collection.mutable.LongMap.empty[Long]
+      it.foreach { case (u, v) => if (m.getOrElse(u, Long.MaxValue) > v) m(u) = v }
+      Iterator.single(m)
     }
+    byChild.zipPartitions(mins) { (es, ms) =>
+      val m = ms.next()
+      es.map { case (u, v) => val mu = m(u); if (v == mu) (u, mu) else (v, mu) }
+    }
+  }
 
   /** [[ccStars]]' DuckDB twin: the recursive transitive closure over the
     * (d1, d2) pairs of CTE `pairs`, ending in `cc<suffix>(doc_id,

@@ -531,27 +531,23 @@ object MLOps {
     * collected): the EM twin demonstrates the DISTRIBUTED trainer shape.
     */
   private def emCounts(s: SparkSession, d: String): DataFrame = {
-    val pair = emPairs(s, d)
+    val pair = emPairs(docTokens(s, d))
     pair.join(broadcast(emVocab(pair)), "word")
       .select("doc_id", "word", "n")
   }
 
-  /** The pinned (doc_id, word, n) token-count aggregate both EM fits
-    * read. Round 18: ONE pinned aggregate feeds both the vocabulary (tf
-    * = Σ n; df = rows per word — same values the groupBy+countDistinct
-    * produced, without the Expand doubling the token shuffle) and the
-    * counts. The old form tokenized and exploded the corpus twice —
-    * once for the vocab aggregate, once for the counts join. The docs
-    * are tokenized in the scan's own tasks, not spread round-robin
-    * first: the aggregate's hash exchange spreads the counts, and the
-    * raw text is not shuffled (nor its exchange run as one more job).
+  /** The pinned (doc_id, word, n) token-count aggregate of a (doc_id,
+    * toks) frame, which both EM fits read. Round 18: ONE pinned
+    * aggregate feeds both the vocabulary (tf = Σ n; df = rows per word —
+    * same values the groupBy+countDistinct produced, without the Expand
+    * doubling the token shuffle) and the counts. The old form tokenized
+    * and exploded the corpus twice — once for the vocab aggregate, once
+    * for the counts join.
     */
-  private def emPairs(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    contentTokens(documents(s, d)).select($"doc_id", explode($"toks").as("word"))
-      .groupBy($"doc_id", $"word").agg(count(lit(1)).as("n"))
+  private def emPairs(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"), explode(col("toks")).as("word"))
+      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("n"))
       .localCheckpoint(false)
-  }
 
   /** The EM vocabulary rule over [[emPairs]]: the words in at least 5
     * docs, the 50,000 largest by tf (Σ n) desc, word asc.
@@ -739,8 +735,12 @@ object MLOps {
       import s.implicits._
       // the setup is two passes over the pinned token counts: the
       // vocabulary collect, and the per-doc arrays, whose shuffle runs
-      // inside round 1's job
-      val pair = emPairs(s, d)
+      // inside round 1's job. The docs are tokenized in the scan's own
+      // tasks, not spread round-robin first as for the relational
+      // trainer: that exchange would be one more AQE job in front of
+      // the fit, while the aggregate's hash exchange already spreads
+      // the counts the rounds read.
+      val pair = emPairs(contentTokens(documents(s, d)))
       // the one collected object: the cap-bounded vocabulary (model-
       // scale, ≤ 50k words), sorted on the driver so the index layout is
       // deterministic. φ per word does not depend on that layout: seeds

@@ -312,6 +312,18 @@ class DedupSpec extends SparkSpec {
     assert(DedupOps.ccStars(spark, opt).schema == schema(true))
   }
 
+  test("star-CC resolves a clique and a high-degree hub") {
+    // the skewed shapes: every node of a 60-clique is everyone's
+    // neighbor, and a hub above 3000 leaves has every leaf as a parent
+    // until small-star re-attaches them all to the least leaf
+    val clique = for (a <- 0L until 60L; b <- (a + 1) until 60L) yield (b, a)
+    val hub = (10000L until 13000L).map(x => (20000L, x))
+    val got = DedupOps.ccStars(spark, (clique ++ hub).toDF("d1", "d2"))
+      .as[(Long, Long)].collect().toSet
+    assert(got == ((0L until 60L).map(n => (n, 0L)) ++
+      (10000L until 13000L).map(n => (n, 10000L)) :+ ((20000L, 10000L))).toSet)
+  }
+
   test("large-star/small-star CC matches union-find on seeded random graphs") {
     // property sweep: sparse, dense, and multi-component regimes; the
     // distributed kernel must agree with a local union-find on every
