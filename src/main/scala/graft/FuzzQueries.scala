@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Ranking.{topK, topKSql}
 
 /** Differential fuzz surface over the relational core.
   *
@@ -536,15 +537,11 @@ object FuzzQueries {
 
   private def sparkWinQuery(sh: WinShape)(s: SparkSession,
                                           d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     var ev = graft.ops.Tables.events(s, d)
     sh.preds.foreach(p => ev = ev.filter(sparkPred(p)))
     val cnt = ev.groupBy(sparkKey(sh.outer), sparkKey(sh.inner))
       .agg(count(lit(1)).as("n"))
-    val w = Window.partitionBy(col(sh.outer.name))
-      .orderBy(col("n").desc, col(sh.inner.name).asc)
-    cnt.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= sh.k)
+    topK(cnt, Seq(col(sh.outer.name)), Seq(col("n").desc, col(sh.inner.name).asc), sh.k, Some("rk"))
       .orderBy(col(sh.outer.name), col("rk"))
   }
 
@@ -999,11 +996,8 @@ object FuzzQueries {
        |    COUNT(*) AS n
        |  FROM events$where
        |  GROUP BY 1, 2)
-       |SELECT ${sh.outer.name}, ${sh.inner.name}, n, rk FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY ${sh.outer.name}
-       |    ORDER BY n DESC, ${sh.inner.name} ASC) AS rk
-       |  FROM cnt)
-       |WHERE rk <= ${sh.k}
+       |SELECT ${sh.outer.name}, ${sh.inner.name}, n, rk
+       |FROM (${topKSql("cnt", Seq(sh.outer.name), Seq("n DESC", s"${sh.inner.name} ASC"), sh.k, Some("rk"))})
        |ORDER BY ${sh.outer.name}, rk""".stripMargin
   }
 

@@ -12,8 +12,10 @@ import scala.collection.mutable.ArrayBuffer
   * which is already per-partition top-k — but it is driver-merged and only
   * works as the terminal operator. An Aggregator composes: per-GROUP top-k
   * inside a groupBy, k·P rows across the shuffle instead of a per-group
-  * sort, usable mid-pipeline. This is the pattern for "top-k neighbors per
-  * query vector" at 100 TB.
+  * sort, usable mid-pipeline. The engine's top-k rule is
+  * [[graft.ops.Ranking.topK]]; this aggregator is its deliberate
+  * alternate form behind `o2_topk_aggregator` and
+  * `o4_topk_aggregator_per_group`.
   */
 class TopK(k: Int)
     extends Aggregator[(Long, Long), ArrayBuffer[(Long, Long)], Seq[(Long, Long)]] {

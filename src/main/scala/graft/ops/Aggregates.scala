@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import Ranking.{topK, topKSql}
 
 /** Aggregation + window + time-bucketing core. Covers SURVEY.md §2.4 A1-A8,
   * §2.5 W1-W3, §2.8 F15-F29 (date/json/bucketing/histogram), §2.9 batch
@@ -199,11 +200,8 @@ object Aggregates {
     // (row_number over count desc — deterministic tie-break by type).
     "a7_user_top_event" -> ((s, d) => {
       import s.implicits._
-      val w = Window.partitionBy($"user_id").orderBy(desc("cnt"), asc("event_type"))
-      events(s, d)
-        .groupBy($"user_id", $"event_type").agg(count("*").as("cnt"))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1).drop("rn")
+      topK(events(s, d).groupBy($"user_id", $"event_type").agg(count("*").as("cnt")),
+        Seq($"user_id"), Seq(desc("cnt"), asc("event_type")), 1, None)
         .orderBy("user_id")
     }),
 
@@ -225,12 +223,10 @@ object Aggregates {
           ($"l_extendedprice".cast("decimal(12,2)") *
             (lit(1).cast("decimal(12,2)") - $"l_discount".cast("decimal(4,2)"))).as("r"))
         .groupBy($"l_suppkey").agg(sum($"r").as("rev"))
-      val w = Window.partitionBy($"n_name").orderBy(desc("rev"), asc("s_suppkey"))
-      supplier(s, d)
+      val ranked = supplier(s, d)
         .join(broadcast(nation(s, d)), $"s_nationkey" === $"n_nationkey")
         .join(rev, $"s_suppkey" === $"l_suppkey", "left")
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 3)
+      topK(ranked, Seq($"n_name"), Seq(desc("rev"), asc("s_suppkey")), 3, Some("rank"))
         .select($"n_name", $"rank", $"s_suppkey", $"s_name",
           round($"rev".cast("double"), 2).as("revenue"))
         .orderBy("n_name", "rank")
@@ -980,10 +976,7 @@ object Aggregates {
         .agg(count(lit(1)).as("n"), sum($"y").as("sy"))
       val scored = cum.join(broadcast(g), "event_type")
         .withColumn("snum", $"n" * $"cy" - $"t" * $"sy") // n·S_t, exact
-      val wPick = Window.partitionBy($"event_type")
-        .orderBy(abs($"snum").desc, $"day".asc)
-      scored.withColumn("rk", row_number().over(wPick))
-        .filter($"rk" === 1)
+      topK(scored, Seq($"event_type"), Seq(abs($"snum").desc, $"day".asc), 1, None)
         .select($"event_type", $"day".as("cp_day"), $"n".as("n_days"),
           round(abs($"snum") / $"n".cast("double"), 6).as("cusum_peak"))
         .orderBy("event_type")
@@ -3123,10 +3116,10 @@ object Aggregates {
       s"""SELECT CAST(ts AS DATE) AS day, $pivotCols
          |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
     "a7_user_top_event" ->
-      """SELECT user_id, event_type, cnt FROM (
-        |  SELECT user_id, event_type, COUNT(*) AS cnt FROM events GROUP BY 1, 2)
-        |QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY cnt DESC, event_type ASC) = 1
-        |ORDER BY user_id""".stripMargin,
+      s"""SELECT user_id, event_type, cnt FROM (${topKSql(
+        "(SELECT user_id, event_type, COUNT(*) AS cnt FROM events GROUP BY 1, 2)",
+        Seq("user_id"), Seq("cnt DESC", "event_type ASC"), 1, None)})
+         |ORDER BY user_id""".stripMargin,
     "a8_top_order" ->
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
         |ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 1""".stripMargin,
@@ -3217,7 +3210,7 @@ object Aggregates {
     // earliest-day tie-break, and only the final peak rescale touches
     // doubles — identical rounding on both sides.
     "a_cusum_changepoint" ->
-      """WITH daily AS (
+      s"""WITH daily AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS y
         |  FROM events GROUP BY 1, 2),
         |c AS (
@@ -3232,14 +3225,10 @@ object Aggregates {
         |s AS (
         |  SELECT c.event_type, day, n, n * cy - t * sy AS snum
         |  FROM c JOIN g ON c.event_type = g.event_type),
-        |p AS (
-        |  SELECT event_type, day, n, snum,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY ABS(snum) DESC, day ASC) AS rk
-        |  FROM s)
+        |p AS (${topKSql("s", Seq("event_type"), Seq("ABS(snum) DESC", "day ASC"), 1, None)})
         |SELECT event_type, day AS cp_day, n AS n_days,
         |  ROUND(ABS(snum) / CAST(n AS DOUBLE), 6) AS cusum_peak
-        |FROM p WHERE rk = 1 ORDER BY event_type""".stripMargin,
+        |FROM p ORDER BY event_type""".stripMargin,
     // Property oracle for the built-in sketches (see the query scaladoc):
     // n and exact distinct replay exactly; the three TRUEs assert the
     // HLL++ 5% bound and the GK rank guarantee at ε = 1/10000.
@@ -3398,20 +3387,18 @@ object Aggregates {
         |             RANGE BETWEEN 63 PRECEDING AND CURRENT ROW)
         |ORDER BY event_type, day""".stripMargin,
     "w1_top_suppliers_per_nation" ->
-      """WITH rev AS (
+      s"""WITH rev AS (
         |  SELECT l_suppkey,
         |    SUM(CAST(l_extendedprice AS DECIMAL(12,2)) *
         |        (CAST(1 AS DECIMAL(12,2)) - CAST(l_discount AS DECIMAL(4,2)))) AS rev
         |  FROM lineitem GROUP BY 1)
         |SELECT n_name, rank, s_suppkey, s_name,
         |  ROUND(CAST(rev AS DOUBLE), 2) AS revenue
-        |FROM (
-        |  SELECT n_name, s_suppkey, s_name, rev,
-        |    row_number() OVER (PARTITION BY n_name ORDER BY rev DESC, s_suppkey ASC) AS rank
-        |  FROM supplier
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  LEFT JOIN rev ON s_suppkey = l_suppkey)
-        |WHERE rank <= 3
+        |FROM (${topKSql(
+          """(SELECT n_name, s_suppkey, s_name, rev FROM supplier
+            |  JOIN nation ON s_nationkey = n_nationkey
+            |  LEFT JOIN rev ON s_suppkey = l_suppkey)""".stripMargin,
+          Seq("n_name"), Seq("rev DESC", "s_suppkey ASC"), 3, Some("rank"))})
         |ORDER BY n_name, rank""".stripMargin,
     "w_running_daily_purchases" ->
       """SELECT day, n, CAST(SUM(n) OVER (ORDER BY day

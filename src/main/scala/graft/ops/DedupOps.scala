@@ -5,6 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import Ranking.{topK, topKSql}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication suite for the training-data pipeline (north-star M9,
@@ -687,10 +688,8 @@ object DedupOps {
     // dedup provably removes rows.
     "dedup_exact" -> ((s, d) => {
       import s.implicits._
-      val w = Window.partitionBy($"h").orderBy($"doc_id".asc)
-      plantedDups(s, d).withColumn("h", md5($"text"))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
+      topK(plantedDups(s, d).withColumn("h", md5($"text")),
+          Seq($"h"), Seq($"doc_id".asc), 1, None)
         .select($"doc_id", $"h")
         .orderBy("doc_id")
     }),
@@ -805,11 +804,8 @@ object DedupOps {
       val T = JaccardGate
       val (e, sizes) = explodedShingles(s, d)
       val dfs = e.groupBy($"sh").agg(count(lit(1)).as("df"))
-      val wDoc = Window.partitionBy($"doc_id").orderBy($"df".asc, $"sh".asc)
-      val pref = e.join(dfs, "sh")
-        .join(sizes.toDF("doc_id", "sz"), "doc_id")
-        .withColumn("rk", row_number().over(wDoc))
-        .filter($"rk" <= $"sz" - ceil(lit(T) * $"sz") + 1)
+      val pref = topK(e.join(dfs, "sh").join(sizes.toDF("doc_id", "sz"), "doc_id"),
+          Seq($"doc_id"), Seq($"df".asc, $"sh".asc), $"sz" - ceil(lit(T) * $"sz") + 1, None)
         .select($"doc_id", $"sh")
       val cands = pref.toDF("d1", "sh").join(pref.toDF("d2", "sh"), "sh")
         .filter($"d1" < $"d2").select($"d1", $"d2").distinct()
@@ -1241,11 +1237,8 @@ object DedupOps {
         .groupBy($"d1", $"d2", $"diag", $"isl")
         .agg(count(lit(1)).as("nwin"), min($"p1").as("s1"), min($"p2").as("s2"))
         .withColumn("span_tokens", $"nwin" + (W - 1))
-      val wPair = Window.partitionBy($"d1", $"d2")
-        .orderBy(desc("span_tokens"), asc("s1"), asc("s2"))
-      runs
-        .withColumn("rk", row_number().over(wPair))
-        .filter($"rk" === 1 && $"span_tokens" >= W + 5)
+      topK(runs, Seq($"d1", $"d2"), Seq(desc("span_tokens"), asc("s1"), asc("s2")), 1, None)
+        .filter($"span_tokens" >= W + 5)
         .select($"d1", $"d2", $"span_tokens",
           $"s1".as("d1_start"), $"s2".as("d2_start"))
         .orderBy("d1", "d2")
@@ -1576,8 +1569,8 @@ object DedupOps {
   val oracles: Map[String, String] = Map(
     "dedup_exact" ->
       s"""WITH $plantedDupsSql
-        |SELECT doc_id, md5(text) AS h FROM all_docs
-        |QUALIFY row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id ASC) = 1
+        |SELECT doc_id, h FROM (${topKSql("(SELECT doc_id, md5(text) AS h FROM all_docs)",
+          Seq("h"), Seq("doc_id ASC"), 1, None)})
         |ORDER BY doc_id""".stripMargin,
     "corpus_softdedup_weights" ->
       s"""WITH $plantedDupsSql,
@@ -1841,12 +1834,9 @@ object DedupOps {
          |  FROM (SELECT *, p1 - row_number() OVER (
          |          PARTITION BY d1, d2, diag ORDER BY p1) AS isl FROM m)
          |  GROUP BY 1, 2, 3, 4)
-         |SELECT d1, d2, span_tokens, d1_start, d2_start FROM (
-         |  SELECT d1, d2, span_tokens, s1 AS d1_start, s2 AS d2_start,
-         |    row_number() OVER (PARTITION BY d1, d2
-         |      ORDER BY span_tokens DESC, s1 ASC, s2 ASC) AS rk
-         |  FROM runs)
-         |WHERE rk = 1 AND span_tokens >= 25
+         |SELECT d1, d2, span_tokens, s1 AS d1_start, s2 AS d2_start
+         |FROM (${topKSql("runs", Seq("d1", "d2"), Seq("span_tokens DESC", "s1 ASC", "s2 ASC"), 1, None)})
+         |WHERE span_tokens >= 25
          |ORDER BY d1, d2""".stripMargin,
     "dedup_contamination" ->
       s"""WITH $shingleCte,

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import Ranking.{topK, topKSql}
 
 /** Graph analytics over the customer→supplier trade network — the
   * iterative-join family a training-data pipeline needs for link-graph
@@ -150,9 +151,8 @@ object GraphOps {
       for (_ <- 1 to Iterations) {
         val neigh = und.join(lab, $"b" === $"node")
           .groupBy($"a", $"label").agg(count(lit(1)).as("c"))
-        val w = Window.partitionBy($"a").orderBy(desc("c"), asc("label"))
-        val newLab = neigh.withColumn("rn", row_number().over(w))
-          .filter($"rn" === 1).select($"a".as("node2"), $"label".as("newl"))
+        val newLab = topK(neigh, Seq($"a"), Seq(desc("c"), asc("label")), 1, None)
+          .select($"a".as("node2"), $"label".as("newl"))
         lab = lab.join(newLab, $"node" === $"node2", "left")
           .select($"node", coalesce($"newl", $"label").as("label"))
       }
@@ -644,6 +644,21 @@ object GraphOps {
        |  SELECT a, b FROM core UNION ALL SELECT b AS a, a AS b FROM core)"""
       .stripMargin
 
+  /** The LPA rounds `l1` … `l$Iterations` over `und` from `l0`: each node
+    * takes its neighbors' most frequent label, ties to the smallest (the
+    * graph_lpa_communities loop), shared by the LPA and modularity oracles.
+    */
+  private val lpaRoundsSql = (1 to Iterations).map { i =>
+    val counts = s"""(SELECT und.a, prev.label, COUNT(*) AS c
+                    |    FROM und JOIN l${i - 1} prev ON und.b = prev.node GROUP BY 1, 2)""".stripMargin
+    s"""l$i AS MATERIALIZED (
+       |  SELECT l.node, COALESCE(nl.newl, l.label) AS label
+       |  FROM l${i - 1} l LEFT JOIN (
+       |    SELECT a AS node, label AS newl
+       |    FROM (${topKSql(counts, Seq("a"), Seq("c DESC", "label ASC"), 1, None)})
+       |  ) nl ON l.node = nl.node)""".stripMargin
+  }.mkString(",\n")
+
   private val pagerankSql: String = {
     val iters = (1 to Iterations).map { i =>
       s"""pr$i AS (
@@ -862,23 +877,9 @@ object GraphOps {
          |ORDER BY hb_harmonic DESC, n_name ASC""".stripMargin
     },
     "graph_lpa_communities" -> {
-      val rounds = (1 to Iterations).map { i =>
-        s"""l$i AS MATERIALIZED (
-           |  SELECT l.node, COALESCE(nl.newl, l.label) AS label
-           |  FROM l${i - 1} l LEFT JOIN (
-           |    SELECT a AS node, label AS newl FROM (
-           |      SELECT a, label,
-           |        row_number() OVER (PARTITION BY a
-           |          ORDER BY c DESC, label ASC) AS rn
-           |      FROM (
-           |        SELECT und.a, prev.label, COUNT(*) AS c
-           |        FROM und JOIN l${i - 1} prev ON und.b = prev.node
-           |        GROUP BY 1, 2))
-           |    WHERE rn = 1) nl ON l.node = nl.node)""".stripMargin
-      }.mkString(",\n")
       s"""WITH $undCoreCteSql,
          |l0 AS (SELECT n_nationkey AS node, n_nationkey AS label FROM nation),
-         |$rounds
+         |$lpaRoundsSql
          |SELECT n_name, l$Iterations.label AS community
          |FROM nation JOIN l$Iterations ON n_nationkey = l$Iterations.node
          |ORDER BY community, n_name""".stripMargin
@@ -887,23 +888,9 @@ object GraphOps {
     // exact-long modularity arithmetic (q terms micro-quantized before
     // the cross-community sum, mirroring the engine)
     "graph_modularity" -> {
-      val rounds = (1 to Iterations).map { i =>
-        s"""l$i AS MATERIALIZED (
-           |  SELECT l.node, COALESCE(nl.newl, l.label) AS label
-           |  FROM l${i - 1} l LEFT JOIN (
-           |    SELECT a AS node, label AS newl FROM (
-           |      SELECT a, label,
-           |        row_number() OVER (PARTITION BY a
-           |          ORDER BY c DESC, label ASC) AS rn
-           |      FROM (
-           |        SELECT und.a, prev.label, COUNT(*) AS c
-           |        FROM und JOIN l${i - 1} prev ON und.b = prev.node
-           |        GROUP BY 1, 2))
-           |    WHERE rn = 1) nl ON l.node = nl.node)""".stripMargin
-      }.mkString(",\n")
       s"""WITH $undCoreCteSql,
          |l0 AS (SELECT n_nationkey AS node, n_nationkey AS label FROM nation),
-         |$rounds,
+         |$lpaRoundsSql,
          |nl AS (SELECT node, label AS community FROM l$Iterations),
          |wc AS (
          |  SELECT und.a, und.b, la.community AS ca, lb.community AS cb

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
+import Ranking.{topK, topKSql}
 
 /** ML layer (SURVEY §2.10 U5/U6/U8, §7.1 M7): CountVectorizer bag-of-words,
   * seeded LDA topic modeling (reference: Gensim LdaModel k=12/32/auto,
@@ -471,13 +472,38 @@ object MLOps {
     */
   private def sourceTopics(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val w = Window.partitionBy($"source").orderBy(desc("cnt"), asc("word"))
-    docTokens(s, d)
+    val counts = docTokens(s, d)
       .select($"source", explode($"toks").as("word"))
       .groupBy($"source", $"word").agg(count(lit(1)).as("cnt"))
-      .withColumn("rk", row_number().over(w))
-      .filter($"rk" <= TopWords)
+    topK(counts, Seq($"source"), Seq(desc("cnt"), asc("word")), TopWords, None)
       .select($"source".as("topic"), $"word")
+  }
+
+  /** Each topic's TopWords words of a φ frame (word, ph), by p desc, word
+    * asc: (word, k, p, rank) — the reference's ranked top words per topic
+    * (topic_modeling.py:29-40).
+    */
+  private def topWords(phi: DataFrame): DataFrame = {
+    import phi.sparkSession.implicits._
+    topK(phi.select($"word", posexplode($"ph")).toDF("word", "k", "p"),
+      Seq($"k"), Seq(desc("p"), asc("word")), TopWords, Some("rank"))
+  }
+
+  /** The ranked topic table (topic_id, rank, word, weight) of a φ frame. */
+  private def topicTable(phi: DataFrame): DataFrame = {
+    import phi.sparkSession.implicits._
+    topWords(phi)
+      .select($"k".cast("int").as("topic_id"), $"rank", $"word", round($"p", 6).as("weight"))
+      .orderBy("topic_id", "rank")
+  }
+
+  /** Each doc's dominant topic of a θ frame (doc_id, th), ties to the
+    * lower topic id: (doc_id, k, p).
+    */
+  private def mainTopics(theta: DataFrame): DataFrame = {
+    import theta.sparkSession.implicits._
+    topK(theta.select($"doc_id", posexplode($"th")).toDF("doc_id", "k", "p"),
+      Seq($"doc_id"), Seq(desc("p"), asc("k")), 1, None)
   }
 
   /** Mean c_v coherence per candidate k over the LDA scan (a Memo.index
@@ -965,17 +991,7 @@ object MLOps {
     // U5 twin (oracle-checked): topic top-words from the relational
     // MAP-EM trainer — the u5_lda_topics shape with a DuckDB-replayable
     // training loop (see ldaEmState for the exactness argument).
-    "lda_em_topics" -> ((s, d) => {
-      import s.implicits._
-      val (phi, _) = ldaEmState(s, d)
-      val w = Window.partitionBy($"k").orderBy(desc("p"), asc("word"))
-      phi.select($"word", posexplode($"ph")).toDF("word", "k", "p")
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= TopWords)
-        .select($"k".cast("int").as("topic_id"), $"rank", $"word",
-          round($"p", 6).as("weight"))
-        .orderBy("topic_id", "rank")
-    }),
+    "lda_em_topics" -> ((s, d) => topicTable(ldaEmState(s, d)._1)),
 
     // The DISTRIBUTED-FIT fallback as a first-class query (round 17 —
     // see ldaEmPhiDist): the same ranked topic table as lda_em_topics,
@@ -1012,11 +1028,7 @@ object MLOps {
     // the u5_lda_doc_topics shape. Ties break on the lower topic id.
     "lda_em_doc_topics" -> ((s, d) => {
       import s.implicits._
-      val (_, theta) = ldaEmState(s, d)
-      val w = Window.partitionBy($"doc_id").orderBy(desc("p"), asc("k"))
-      theta.select($"doc_id", posexplode($"th")).toDF("doc_id", "k", "p")
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
+      mainTopics(ldaEmState(s, d)._2)
         .groupBy($"k".cast("int").as("main_topic"))
         .agg(count(lit(1)).as("n_docs"))
         .orderBy("main_topic")
@@ -1031,11 +1043,7 @@ object MLOps {
     // whole train→score pipeline against the oracle.
     "lda_em_coherence" -> ((s, d) => {
       import s.implicits._
-      val (phi, _) = ldaEmState(s, d)
-      val w = Window.partitionBy($"k").orderBy(desc("p"), asc("word"))
-      val topics = phi.select($"word", posexplode($"ph")).toDF("word", "k", "p")
-        .withColumn("rk", row_number().over(w))
-        .filter($"rk" <= TopWords)
+      val topics = topWords(ldaEmState(s, d)._1)
         .select($"k".cast("string").as("topic"), $"word")
       npmiPairs(s, d, topics)
         .groupBy($"topic")
@@ -1057,14 +1065,7 @@ object MLOps {
       val (phi, _) = ldaEmState(s, d)
       val path = Tables.artifactDir("lda_em_model", d)
       phi.select($"word", $"ph").write.mode("overwrite").parquet(path)
-      val re = s.read.parquet(path)
-      val w = Window.partitionBy($"k").orderBy(desc("p"), asc("word"))
-      re.select($"word", posexplode($"ph")).toDF("word", "k", "p")
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= TopWords)
-        .select($"k".cast("int").as("topic_id"), $"rank", $"word",
-          round($"p", 6).as("weight"))
-        .orderBy("topic_id", "rank")
+      topicTable(s.read.parquet(path))
     }),
 
     // §3.1 fan-out TWIN (oracle-checked): the pipeline_topic_fanout shape
@@ -1078,10 +1079,7 @@ object MLOps {
       val configs = Seq(("fixed_large", 6), ("fixed_small", EmK))
       emFitConcurrently(s, d, configs.map(_._2))
       configs.map { case (name, k) =>
-        val (_, theta) = ldaEmState(s, d, k)
-        val w = Window.partitionBy($"doc_id").orderBy(desc("p"), asc("k"))
-        val r = theta.select($"doc_id", posexplode($"th")).toDF("doc_id", "k", "p")
-          .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
+        val r = mainTopics(ldaEmState(s, d, k)._2)
           .agg(countDistinct($"k").as("u"), count(lit(1)).as("n"))
           .collect().head
         (name, k, r.getLong(0), r.getLong(1))
@@ -1203,11 +1201,7 @@ object MLOps {
     // scorer replay in one DuckDB query).
     "lda_em_cv" -> ((s, d) => {
       import s.implicits._
-      val (phi, _) = ldaEmState(s, d)
-      val w = Window.partitionBy($"k").orderBy(desc("p"), asc("word"))
-      val topics = phi.select($"word", posexplode($"ph")).toDF("word", "k", "p")
-        .withColumn("rk", row_number().over(w))
-        .filter($"rk" <= TopWords)
+      val topics = topWords(ldaEmState(s, d)._1)
         .select($"k".cast("string").as("topic"), $"word")
       cvCoherence(s, topics, docTokens(s, d).select($"doc_id", $"toks"))
     }),
@@ -1229,11 +1223,7 @@ object MLOps {
       val toks = docTokens(s, d).select($"doc_id", $"toks")
       emFitConcurrently(s, d, ScanKs)
       val tagged = ScanKs.map { k =>
-        val (phi, _) = ldaEmState(s, d, k)
-        val w = Window.partitionBy($"k").orderBy(desc("p"), asc("word"))
-        phi.select($"word", posexplode($"ph")).toDF("word", "k", "p")
-          .withColumn("rk", row_number().over(w))
-          .filter($"rk" <= TopWords)
+        topWords(ldaEmState(s, d, k)._1)
           .select(concat(lit(s"$k#"), $"k".cast("string")).as("topic"), $"word")
       }.reduce(_ union _)
       cvPhiByK(s, tagged, toks).orderBy("k")
@@ -2034,13 +2024,11 @@ object MLOps {
     */
   private def alsRecommend(r: DataFrame, users: DataFrame, items: DataFrame,
       depth: Int): DataFrame =
-    items.crossJoin(broadcast(DedupOps.hashSample(users, "cust")))
-      .join(r.select(col("cust"), col("part")), Seq("cust", "part"), "left_anti")
-      .withColumn("pred_e6",
-        round((col("u1") * col("v1") + col("u2") * col("v2")) * 1e6, 0).cast("long"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("cust")).orderBy(desc("pred_e6"), asc("part"))))
-      .filter(col("rank") <= depth)
+    topK(items.crossJoin(broadcast(DedupOps.hashSample(users, "cust")))
+        .join(r.select(col("cust"), col("part")), Seq("cust", "part"), "left_anti")
+        .withColumn("pred_e6",
+          round((col("u1") * col("v1") + col("u2") * col("v2")) * 1e6, 0).cast("long")),
+      Seq(col("cust")), Seq(desc("pred_e6"), asc("part")), depth, Some("rank"))
       .select(col("cust"), col("part"), col("pred_e6"), col("rank"))
 
   /** [[alsRecommend]]'s DuckDB twin: the `qc`, `cand` and `rec` CTEs
@@ -2055,13 +2043,8 @@ object MLOps {
        |  FROM qc CROSS JOIN v$AlsIters v
        |  WHERE NOT EXISTS (
        |    SELECT 1 FROM r WHERE r.cust = qc.cust AND r.part = v.part)),
-       |rec AS (
-       |  SELECT cust, part, pred_e6, rank FROM (
-       |    SELECT cust, part, pred_e6,
-       |      row_number() OVER (PARTITION BY cust
-       |        ORDER BY pred_e6 DESC, part ASC) AS rank
-       |    FROM cand)
-       |  WHERE rank <= $depth)""".stripMargin
+       |rec AS (${topKSql("cand", Seq("cust"), Seq("pred_e6 DESC", "part ASC"), depth, Some("rank"))})"""
+      .stripMargin
 
   /** ALS hyper-params: rank is FIXED at 2 (the 2×2 normal equations
     * admit a closed-form solve both engines evaluate identically);
@@ -2292,6 +2275,26 @@ object MLOps {
 
   // ---- oracle SQL (NPMI queries only — the LDA fits are rows-only) ----
 
+  /** The `topics` CTE over `tw(source, word, cnt)`: [[sourceTopics]]'
+    * DuckDB twin.
+    */
+  private def sourceTopicsSql: String =
+    s"""topics AS (
+       |  SELECT source AS topic, word
+       |  FROM (${topKSql("tw", Seq("source"), Seq("cnt DESC", "word ASC"), TopWords, None)}))""".stripMargin
+
+  /** [[topWords]]' DuckDB twin over the φ CTE `ph` (k, word, p). */
+  private def topWordsSql(ph: String): String =
+    topKSql(ph, Seq("k"), Seq("p DESC", "word ASC"), TopWords, Some("rank"))
+
+  /** The CTE `name` of string-keyed topics (topic, word) from the φ CTE `ph`. */
+  private def topicWordsCte(name: String, ph: String): String =
+    s"$name AS (SELECT CAST(k AS VARCHAR) AS topic, word FROM (${topWordsSql(ph)}))"
+
+  /** [[mainTopics]]' DuckDB twin over the θ CTE `th` (doc_id, k, p). */
+  private def mainTopicsSql(th: String): String =
+    topKSql(th, Seq("doc_id"), Seq("p DESC", "k ASC"), 1, None)
+
   /** Shared NPMI prelude over the relational source topics. */
   private val npmiCte =
     s"""tok AS (
@@ -2299,12 +2302,7 @@ object MLOps {
        |    SELECT doc_id, source, unnest(${TextOps.tokensSql("text")}) AS word FROM documents)
        |  WHERE ${TextOps.isContentWordSql("word")}),
        |tw AS (SELECT source, word, COUNT(*) AS cnt FROM tok GROUP BY source, word),
-       |topics AS (
-       |  SELECT source AS topic, word FROM (
-       |    SELECT source, word,
-       |      row_number() OVER (PARTITION BY source ORDER BY cnt DESC, word ASC) AS rk
-       |    FROM tw)
-       |  WHERE rk <= $TopWords),
+       |$sourceTopicsSql,
        |inc AS (
        |  SELECT DISTINCT word, doc_id FROM tok
        |  WHERE word IN (SELECT word FROM topics)),
@@ -2343,12 +2341,7 @@ object MLOps {
        |  FROM documents),
        |tok AS (SELECT doc_id, source, unnest(toks) AS word FROM ft),
        |tw AS (SELECT source, word, COUNT(*) AS cnt FROM tok GROUP BY source, word),
-       |topics AS (
-       |  SELECT source AS topic, word FROM (
-       |    SELECT source, word,
-       |      row_number() OVER (PARTITION BY source ORDER BY cnt DESC, word ASC) AS rk
-       |    FROM tw)
-       |  WHERE rk <= $TopWords),
+       |$sourceTopicsSql,
        |seg AS (
        |  SELECT CAST(doc_id AS VARCHAR) || '#' || CAST((i - 1) // 10 AS VARCHAR) AS unit,
        |    word
@@ -2465,12 +2458,7 @@ object MLOps {
        |tw AS (
        |  SELECT source, word, COUNT(*) AS cnt FROM (
        |    SELECT source, unnest(toks) AS word FROM ft) GROUP BY 1, 2),
-       |topics AS (
-       |  SELECT source AS topic, word FROM (
-       |    SELECT source, word,
-       |      row_number() OVER (PARTITION BY source ORDER BY cnt DESC, word ASC) AS rk
-       |    FROM tw)
-       |  WHERE rk <= $TopWords)""".stripMargin
+       |$sourceTopicsSql""".stripMargin
 
   /** Final-centroid CTE name inside kmeansCtesSql (cid, c list) — for
     * oracles that rank query→centroid distances (the nprobe sweep).
@@ -2487,10 +2475,8 @@ object MLOps {
          |  SELECT v.vec_id, v.e, c.cid, ${SimilarityOps.sqDistSql("v.e", "c.c")} AS d
          |  FROM v CROSS JOIN c${t - 1} c),
          |a$t AS MATERIALIZED (
-         |  SELECT vec_id, e, cid FROM (
-         |    SELECT vec_id, e, cid,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY d ASC, cid ASC) AS rn
-         |    FROM d$t) WHERE rn = 1),
+         |  SELECT vec_id, e, cid
+         |  FROM (${topKSql(s"d$t", Seq("vec_id"), Seq("d ASC", "cid ASC"), 1, None)})),
          |m$t AS MATERIALIZED (
          |  SELECT cid, i, ROUND(AVG(x), 6) AS m FROM (
          |    SELECT cid, unnest(e) AS x, generate_subscripts(e, 1) AS i
@@ -2509,12 +2495,10 @@ object MLOps {
        |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid, e AS c
        |  FROM (SELECT vec_id, e FROM v ORDER BY vec_id LIMIT $KmK)),
        |$iters,
-       |fin AS MATERIALIZED (
-       |  SELECT vec_id, cid, d FROM (
-       |    SELECT v.vec_id, c.cid, ${SimilarityOps.sqDistSql("v.e", "c.c")} AS d,
-       |      row_number() OVER (PARTITION BY v.vec_id ORDER BY
-       |        ${SimilarityOps.sqDistSql("v.e", "c.c")} ASC, c.cid ASC) AS rn
-       |    FROM v CROSS JOIN c$KmIters c) WHERE rn = 1)""".stripMargin
+       |fin AS MATERIALIZED (${topKSql(
+         s"""(SELECT v.vec_id, c.cid, ${SimilarityOps.sqDistSql("v.e", "c.c")} AS d
+            |  FROM v CROSS JOIN c$KmIters c)""".stripMargin,
+         Seq("vec_id"), Seq("d ASC", "cid ASC"), 1, None)})""".stripMargin
   }
 
   /** The EM-LDA CTE chain, unrolled EmIters times — shared by the
@@ -2600,13 +2584,8 @@ object MLOps {
 
   private val ldaEmTopicsSql =
     s"""WITH $ldaEmCtesSql
-       |SELECT topic_id, rank, word, weight FROM (
-       |  SELECT CAST(k AS INT) AS topic_id,
-       |    row_number() OVER (PARTITION BY k ORDER BY p DESC, word ASC)
-       |      AS rank,
-       |    word, ROUND(p, 6) AS weight
-       |  FROM ph$EmIters)
-       |WHERE rank <= $TopWords
+       |SELECT CAST(k AS INT) AS topic_id, rank, word, ROUND(p, 6) AS weight
+       |FROM (${topWordsSql(s"ph$EmIters")})
        |ORDER BY topic_id, rank""".stripMargin
 
   val oracles: Map[String, String] = Map(
@@ -2644,19 +2623,12 @@ object MLOps {
     "lda_em_save_load" -> ldaEmTopicsSql,
     "lda_em_doc_topics" ->
       s"""WITH $ldaEmCtesSql
-         |SELECT main_topic, COUNT(*) AS n_docs FROM (
-         |  SELECT doc_id, CAST(k AS INT) AS main_topic,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY p DESC, k ASC)
-         |      AS rn
-         |  FROM th$EmIters)
-         |WHERE rn = 1 GROUP BY 1 ORDER BY 1""".stripMargin,
+         |SELECT CAST(k AS INT) AS main_topic, COUNT(*) AS n_docs
+         |FROM (${mainTopicsSql(s"th$EmIters")})
+         |GROUP BY 1 ORDER BY 1""".stripMargin,
     "lda_em_fanout" -> {
       def hist(pfx: String) =
-        s"""SELECT COUNT(DISTINCT mk) AS u, COUNT(*) AS n FROM (
-           |  SELECT doc_id, k AS mk, row_number() OVER (
-           |    PARTITION BY doc_id ORDER BY p DESC, k ASC) AS rn
-           |  FROM ${pfx}th$EmIters)
-           |WHERE rn = 1""".stripMargin
+        s"SELECT COUNT(DISTINCT k) AS u, COUNT(*) AS n FROM (${mainTopicsSql(s"${pfx}th$EmIters")})"
       s"""WITH ${ldaEmCtes(EmK, "a")},
          |${ldaEmCtes(6, "b")},
          |ha AS (${hist("a")}),
@@ -2672,13 +2644,7 @@ object MLOps {
     // docTokens definition the Spark-side npmiPairs uses)
     "lda_em_coherence" ->
       s"""WITH $ldaEmCtesSql,
-         |topics AS (
-         |  SELECT CAST(k AS VARCHAR) AS topic, word FROM (
-         |    SELECT k, word,
-         |      row_number() OVER (PARTITION BY k ORDER BY p DESC, word ASC)
-         |        AS rk
-         |    FROM ph$EmIters)
-         |  WHERE rk <= $TopWords),
+         |${topicWordsCte("topics", s"ph$EmIters")},
          |inc AS (
          |  SELECT DISTINCT word, doc_id FROM tok
          |  WHERE word IN (SELECT word FROM topics)),
@@ -2736,13 +2702,7 @@ object MLOps {
          |$cvSelectSql""".stripMargin,
     "lda_em_cv" ->
       s"""WITH $ldaEmCtesSql,
-         |topics AS (
-         |  SELECT CAST(k AS VARCHAR) AS topic, word FROM (
-         |    SELECT k, word,
-         |      row_number() OVER (PARTITION BY k ORDER BY p DESC, word ASC)
-         |        AS rk
-         |    FROM ph$EmIters)
-         |  WHERE rk <= $TopWords),
+         |${topicWordsCte("topics", s"ph$EmIters")},
          |ft AS (
          |  SELECT doc_id,
          |    list_filter(${TextOps.tokensSql("text")},
@@ -2757,15 +2717,8 @@ object MLOps {
     // side's global SUM(phiq)/COUNT — a single integer division.
     "lda_em_scan" -> {
       val chains = ScanKs.map(k => ldaEmCtes(k, s"s$k")).mkString(",\n")
-      val topicCtes = ScanKs.map { k =>
-        s"""s${k}topics AS (
-           |  SELECT CAST(k AS VARCHAR) AS topic, word FROM (
-           |    SELECT k, word,
-           |      row_number() OVER (PARTITION BY k ORDER BY p DESC, word ASC)
-           |        AS rk
-           |    FROM s${k}ph$EmIters)
-           |  WHERE rk <= $TopWords)""".stripMargin
-      }.mkString(",\n")
+      val topicCtes = ScanKs.map(k => topicWordsCte(s"s${k}topics", s"s${k}ph$EmIters"))
+        .mkString(",\n")
       val bodies = ScanKs.map(k => cvBody(s"c$k", "ft", s"s${k}topics"))
         .mkString(",\n")
       val selects = ScanKs.map { k =>

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import Ranking.{topK, topKSql}
 
 /** Relational core: scans, predicates, projections, sorts/limits, dedup,
   * set ops, joins. Covers SURVEY.md §2.1 S1-S4/S7, §2.2 P1-P10, §2.3 J1-J4,
@@ -224,12 +225,8 @@ object Relational {
     // One shuffle on the key; survivor choice is reproducible.
     "d1_dedup_first_per_user" -> ((s, d) => {
       import s.implicits._
-      val w = Window.partitionBy($"user_id").orderBy($"ts".asc, $"event_id".asc)
-      events(s, d)
-        .select($"user_id", $"event_id", $"ts", $"event_type")
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
-        .drop("rn")
+      topK(events(s, d).select($"user_id", $"event_id", $"ts", $"event_type"),
+          Seq($"user_id"), Seq($"ts".asc, $"event_id".asc), 1, None)
         .orderBy("user_id")
     }),
 
@@ -919,9 +916,9 @@ object Relational {
     "d4_distinct_langs" ->
       "SELECT DISTINCT lang FROM documents ORDER BY lang",
     "d1_dedup_first_per_user" ->
-      """SELECT user_id, event_id, ts, event_type FROM events
-        |QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) = 1
-        |ORDER BY user_id""".stripMargin,
+      s"""SELECT user_id, event_id, ts, event_type
+         |FROM (${topKSql("events", Seq("user_id"), Seq("ts ASC", "event_id ASC"), 1, None)})
+         |ORDER BY user_id""".stripMargin,
     "d2_antijoin_new_keys" ->
       """WITH cut AS (SELECT date_trunc('day', MAX(ts)) AS c FROM events),
         |  keyed AS (SELECT event_id, user_id, ts,
@@ -1092,23 +1089,17 @@ object Relational {
         |  COUNT(*) AS n
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
     "o2_topk_aggregator" ->
-      """SELECT row_number() OVER (ORDER BY n_chars DESC, doc_id ASC) AS rank,
-        |  doc_id, n_chars
-        |FROM documents ORDER BY n_chars DESC, doc_id ASC LIMIT 15""".stripMargin,
+      s"""SELECT rank, doc_id, n_chars
+         |FROM (${topKSql("documents", Nil, Seq("n_chars DESC", "doc_id ASC"), 15, Some("rank"))})
+         |ORDER BY rank""".stripMargin,
     "o4_topk_aggregator_per_group" ->
-      """SELECT source, rank, doc_id, n_chars FROM (
-        |  SELECT source, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY n_chars DESC, doc_id ASC) AS rank
-        |  FROM documents)
-        |WHERE rank <= 3 ORDER BY source, rank""".stripMargin,
+      s"""SELECT source, rank, doc_id, n_chars
+         |FROM (${topKSql("documents", Seq("source"), Seq("n_chars DESC", "doc_id ASC"), 3, Some("rank"))})
+         |ORDER BY source, rank""".stripMargin,
     "o4_group_topk_exec" ->
-      """SELECT source, lang, doc_id, n_chars FROM (
-        |  SELECT source, lang, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY source, lang
-        |      ORDER BY n_chars DESC, doc_id ASC) AS rn
-        |  FROM documents)
-        |WHERE rn <= 2 ORDER BY source, lang, doc_id""".stripMargin,
+      s"""SELECT source, lang, doc_id, n_chars
+         |FROM (${topKSql("documents", Seq("source", "lang"), Seq("n_chars DESC", "doc_id ASC"), 2, None)})
+         |ORDER BY source, lang, doc_id""".stripMargin,
     "j_left_order_line_counts" ->
       """SELECT o_orderkey, COUNT(l_linenumber) AS n_lines
         |FROM orders LEFT JOIN lineitem ON o_orderkey = l_orderkey

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import Ranking.{topK, topKSql}
 
 /** Similarity search over the embeddings table (north-star M9, SURVEY §7.4):
   * brute-force cosine top-k as the exact baseline, random-hyperplane LSH
@@ -349,10 +350,7 @@ object SimilarityOps {
 
   private def topkWithin(s: SparkSession, pairs: DataFrame): DataFrame = {
     import s.implicits._
-    val w = Window.partitionBy($"query_id").orderBy(desc("cos_exact"), asc("vec_id"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter($"rank" <= TopK)
+    topK(pairs, Seq($"query_id"), Seq(desc("cos_exact"), asc("vec_id")), TopK, Some("rank"))
       .select($"query_id", $"rank", $"vec_id".as("neighbor_id"),
         round($"cos_exact", 6).as("cosine"))
       .orderBy("query_id", "rank")
@@ -424,11 +422,8 @@ object SimilarityOps {
         .withColumn("cos_exact", dot($"e", $"qe") / ($"norm" * $"qn"))
       val bestPos = scored.filter($"label" === $"qlabel")
         .groupBy($"query_id").agg(max($"cos_exact").as("best_pos"))
-      val w = Window.partitionBy($"query_id")
-        .orderBy(desc("cos_exact"), asc("vec_id"))
-      scored.filter($"label" =!= $"qlabel")
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= TopK)
+      topK(scored.filter($"label" =!= $"qlabel"),
+          Seq($"query_id"), Seq(desc("cos_exact"), asc("vec_id")), TopK, Some("rank"))
         .join(broadcast(bestPos), Seq("query_id"), "left")
         .select($"query_id", $"rank", $"vec_id".as("negative_id"),
           round($"cos_exact", 6).as("cosine"),
@@ -521,13 +516,11 @@ object SimilarityOps {
     // fusion, which is rank-arithmetic on k·Q rows.
     "retrieval_rrf_fusion" -> ((s, d) => {
       import s.implicits._
-      fusionRankFrames(s, d)
+      val fused = fusionRankFrames(s, d)
         .withColumn("rrf",
           coalesce(lit(1.0) / (lit(RrfC) + $"lr"), lit(0.0)) +
             coalesce(lit(1.0) / (lit(RrfC) + $"dr"), lit(0.0)))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy($"qdoc").orderBy(desc("rrf"), asc("doc_id"))))
-        .filter($"rank" <= TopK)
+      topK(fused, Seq($"qdoc"), Seq(desc("rrf"), asc("doc_id")), TopK, Some("rank"))
         .select($"qdoc".as("query_doc"), $"rank", $"doc_id",
           round($"rrf", 6).as("rrf_score"))
         .orderBy("query_doc", "rank")
@@ -629,11 +622,9 @@ object SimilarityOps {
     val v = vectors(s, d)
     val qv = v.join(broadcast(qdocs), $"vec_id" === $"qdoc")
       .select($"qdoc", $"e".as("qe"), $"norm".as("qn"))
-    v.join(broadcast(qv), $"vec_id" =!= $"qdoc")
+    val scored = v.join(broadcast(qv), $"vec_id" =!= $"qdoc")
       .withColumn("rel", dot($"e", $"qe") / ($"norm" * $"qn"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy($"qdoc").orderBy(desc("rel"), asc("vec_id"))))
-      .filter($"rn" <= FusionDepth)
+    topK(scored, Seq($"qdoc"), Seq(desc("rel"), asc("vec_id")), FusionDepth, Some("rn"))
       .select($"qdoc", $"vec_id", $"rel", $"e", $"norm", $"rn")
   }
 
@@ -644,14 +635,11 @@ object SimilarityOps {
     s"""qv AS (
        |  SELECT qd.qdoc, n.e AS qe, n.norm AS qn
        |  FROM n JOIN qd ON n.vec_id = qd.qdoc),
-       |cand AS (
-       |  SELECT * FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY qdoc
-       |      ORDER BY rel DESC, vec_id ASC) AS rn FROM (
-       |      SELECT qv.qdoc, n.vec_id,
-       |        ${dotSql("n.e", "qv.qe")} / (n.norm * qv.qn) AS rel, n.e, n.norm
-       |      FROM n JOIN qv ON n.vec_id <> qv.qdoc))
-       |  WHERE rn <= $FusionDepth)""".stripMargin
+       |cand AS (${topKSql(
+         s"""(SELECT qv.qdoc, n.vec_id,
+            |    ${dotSql("n.e", "qv.qe")} / (n.norm * qv.qn) AS rel, n.e, n.norm
+            |  FROM n JOIN qv ON n.vec_id <> qv.qdoc)""".stripMargin,
+         Seq("qdoc"), Seq("rel DESC", "vec_id ASC"), FusionDepth, Some("rn"))})""".stripMargin
 
   /** The (qdoc, doc_id, lr, dr) two-ranking frame — BM25 lexical top-k
     * and dense cosine top-k per hash-sampled query doc, full-outer
@@ -671,11 +659,10 @@ object SimilarityOps {
       .select($"doc_id".as("qdoc"))
     val qterms = TextOps.queryTerms(t.join(broadcast(qdocs), $"doc_id" === $"qdoc")
       .select($"qdoc", explode($"t").as("word")))
-    val wl = Window.partitionBy($"qdoc").orderBy(desc("score"), asc("doc_id"))
-    val lex = TextOps.bm25Scores(t, t.select($"doc_id", size($"t").as("dl")),
-        qterms.withColumn("wt", lit(1L)))
-      .withColumn("lr", row_number().over(wl))
-      .filter($"lr" <= FusionDepth).select($"qdoc", $"doc_id", $"lr")
+    val lex = topK(TextOps.bm25Scores(t, t.select($"doc_id", size($"t").as("dl")),
+        qterms.withColumn("wt", lit(1L))),
+      Seq($"qdoc"), Seq(desc("score"), asc("doc_id")), FusionDepth, Some("lr"))
+      .select($"qdoc", $"doc_id", $"lr")
     val dense = denseCandidates(s, d, qdocs)
       .select($"qdoc", $"vec_id".as("doc_id"), $"rn".as("dr"))
     // round 18: k·Q rows with multiple readers (tau reads it twice in
@@ -693,20 +680,16 @@ object SimilarityOps {
     // order is the polynomial hash of vec_id — a deterministic
     // pseudo-random draw that replays in the oracle (same posture as
     // every sample_* query). Scale: assignment is map-only against the
-    // broadcast centroid literals; the per-cluster quota is one bounded
-    // window (k·quota output rows) — swap in the bounded-state
-    // TopKAggregator if cluster cardinality ever skews the sort.
+    // broadcast centroid literals; the per-cluster quota is one topK
+    // (k·quota output rows).
     "sample_cluster_balanced" -> ((s, d) => {
       import s.implicits._
-      val PerCluster = ClusterQuota
       val cents = graft.ops.MLOps.kmeansCentroids(s, d)
-      val w = Window.partitionBy($"cid").orderBy(asc("h"), asc("vec_id"))
-      vectors(s, d)
+      val hashed = vectors(s, d)
         .withColumn("cid", array_min(codeDists(cents, $"e")).getField("k"))
         .withColumn("h", graft.functions.PolyHash.poly_hash(
           $"vec_id".cast("string")))
-        .withColumn("rk", row_number().over(w))
-        .filter($"rk" <= PerCluster)
+      topK(hashed, Seq($"cid"), Seq(asc("h"), asc("vec_id")), ClusterQuota, Some("rk"))
         .select($"cid", $"rk", $"vec_id")
         .orderBy("cid", "rk")
     }),
@@ -970,21 +953,18 @@ object SimilarityOps {
             slice($"po", 1, np).getField("k").as("cells"))): _*)).as("p"))
         .select($"query_id", $"qe", $"qn", $"p.nprobe".as("nprobe"),
           explode($"p.cells").as("cid"))
-      val wnp = Window.partitionBy($"nprobe", $"query_id")
-        .orderBy(desc("cos"), asc("vec_id"))
-      val approx = assigned.join(broadcast(q), Seq("cid"))
-        .filter($"vec_id" =!= $"query_id")
-        .withColumn("cos", dot($"e", $"qe") / ($"norm" * $"qn"))
-        .withColumn("rk", row_number().over(wnp))
-        .filter($"rk" <= TopK)
+      val byCos = Seq(desc("cos"), asc("vec_id"))
+      val approx = topK(assigned.join(broadcast(q), Seq("cid"))
+          .filter($"vec_id" =!= $"query_id")
+          .withColumn("cos", dot($"e", $"qe") / ($"norm" * $"qn")),
+        Seq($"nprobe", $"query_id"), byCos, TopK, None)
         .select($"nprobe", $"query_id", $"vec_id".as("neighbor_id"),
           lit(1L).as("hit"))
       val qx = assigned.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"e".as("qe"), $"norm".as("qn"))
-      val wx = Window.partitionBy($"query_id").orderBy(desc("cos"), asc("vec_id"))
-      val exact = assigned.join(broadcast(qx), $"vec_id" =!= $"query_id")
-        .withColumn("cos", dot($"e", $"qe") / ($"norm" * $"qn"))
-        .withColumn("rk", row_number().over(wx)).filter($"rk" <= TopK)
+      val exact = topK(assigned.join(broadcast(qx), $"vec_id" =!= $"query_id")
+          .withColumn("cos", dot($"e", $"qe") / ($"norm" * $"qn")),
+        Seq($"query_id"), byCos, TopK, None)
         .select($"query_id", $"vec_id".as("neighbor_id"))
       exact.crossJoin(broadcast(probes.toDF("nprobe")))
         .join(approx, Seq("nprobe", "query_id", "neighbor_id"), "left")
@@ -1065,11 +1045,9 @@ object SimilarityOps {
         ($"vec_id" +: $"e" +: $"norm" +: pqCodes(cbs, $"e")): _*)
       val q = corpus.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"e".as("qe"), $"norm".as("qn"))
-      val wA = Window.partitionBy($"query_id").orderBy(asc("adc"), asc("vec_id"))
-      val cands = coded.join(broadcast(q), $"vec_id" =!= $"query_id")
-        .withColumn("adc", adc(cbs, $"qe"))
-        .withColumn("arank", row_number().over(wA))
-        .filter($"arank" <= 2 * TopK)
+      val cands = topK(coded.join(broadcast(q), $"vec_id" =!= $"query_id")
+          .withColumn("adc", adc(cbs, $"qe")),
+        Seq($"query_id"), Seq(asc("adc"), asc("vec_id")), 2 * TopK, None)
       val rescored = cands
         .withColumn("cos_exact", dot($"e", $"qe") / ($"norm" * $"qn"))
       topkWithin(s, rescored)
@@ -1105,12 +1083,10 @@ object SimilarityOps {
           explode(slice(array_sort(codeDists(cents, $"e")), 1, Nprobe)).as("pr"))
         .select($"query_id", $"qe", $"qn", $"pr.k".as("cid"))
         .withColumn("qre", residual(s, d, $"qe", $"cid"))
-      val wA = Window.partitionBy($"query_id").orderBy(asc("adc"), asc("vec_id"))
-      val cands = coded.join(broadcast(qp), Seq("cid"))
-        .filter($"vec_id" =!= $"query_id")
-        .withColumn("adc", adc(rcbs, $"qre"))
-        .withColumn("arank", row_number().over(wA))
-        .filter($"arank" <= IvfRescoreK)
+      val cands = topK(coded.join(broadcast(qp), Seq("cid"))
+          .filter($"vec_id" =!= $"query_id")
+          .withColumn("adc", adc(rcbs, $"qre")),
+        Seq($"query_id"), Seq(asc("adc"), asc("vec_id")), IvfRescoreK, None)
       topkWithin(s, cands
         .withColumn("cos_exact", dot($"e", $"qe") / ($"norm" * $"qn")))
     }),
@@ -1136,10 +1112,7 @@ object SimilarityOps {
           $"dqe".as("qdqe"))
       val approx = qv.join(broadcast(q), $"vec_id" =!= $"query_id")
         .withColumn("approx", dot($"dqe", $"qdqe"))
-      val wA = Window.partitionBy($"query_id")
-        .orderBy(desc("approx"), asc("vec_id"))
-      val cands = approx.withColumn("arank", row_number().over(wA))
-        .filter($"arank" <= 2 * TopK)
+      val cands = topK(approx, Seq($"query_id"), Seq(desc("approx"), asc("vec_id")), 2 * TopK, None)
       val rescored = cands
         .withColumn("cos_exact", dot($"e", $"qe") / ($"norm" * $"qn"))
       topkWithin(s, rescored)
@@ -1159,23 +1132,18 @@ object SimilarityOps {
       val v = vectors(s, d)
       val q = v.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"e".as("qe"), $"norm".as("qn"))
-      val wF = Window.partitionBy($"query_id").orderBy(desc("cos_full"), asc("vec_id"))
-      val exact = v.join(broadcast(q), $"vec_id" =!= $"query_id")
-        .withColumn("cos_full", dot($"e", $"qe") / ($"norm" * $"qn"))
-        .withColumn("rank", row_number().over(wF))
-        .filter($"rank" <= TopK)
+      val exact = topK(v.join(broadcast(q), $"vec_id" =!= $"query_id")
+          .withColumn("cos_full", dot($"e", $"qe") / ($"norm" * $"qn")),
+        Seq($"query_id"), Seq(desc("cos_full"), asc("vec_id")), TopK, None)
         .select($"query_id".as("eq"), $"vec_id".as("ev"))
       val truncDims = Seq(8, 16, 32, 64)
-      val wT = Window.partitionBy($"dim", $"query_id")
-        .orderBy(desc("cos_t"), asc("vec_id"))
-      val trunc = v.join(broadcast(q), $"vec_id" =!= $"query_id")
-        .select($"vec_id", $"e", $"query_id", $"qe",
-          explode(typedLit(truncDims)).as("dim"))
-        .withColumn("cos_t",
-          dot(slice($"e", lit(1), $"dim"), slice($"qe", lit(1), $"dim")) /
-            (l2Norm(slice($"e", lit(1), $"dim")) * l2Norm(slice($"qe", lit(1), $"dim"))))
-        .withColumn("rank", row_number().over(wT))
-        .filter($"rank" <= TopK)
+      val trunc = topK(v.join(broadcast(q), $"vec_id" =!= $"query_id")
+          .select($"vec_id", $"e", $"query_id", $"qe",
+            explode(typedLit(truncDims)).as("dim"))
+          .withColumn("cos_t",
+            dot(slice($"e", lit(1), $"dim"), slice($"qe", lit(1), $"dim")) /
+              (l2Norm(slice($"e", lit(1), $"dim")) * l2Norm(slice($"qe", lit(1), $"dim")))),
+        Seq($"dim", $"query_id"), Seq(desc("cos_t"), asc("vec_id")), TopK, None)
       trunc
         .join(exact, $"query_id" === $"eq" && $"vec_id" === $"ev", "left")
         .groupBy($"dim", $"query_id")
@@ -1224,10 +1192,8 @@ object SimilarityOps {
           $"e".as("qe"), $"norm".as("qn"))
       val pairs = v.join(broadcast(q), $"vec_id" =!= $"query_id")
         .withColumn("cos_exact", dot($"e", $"qe") / ($"norm" * $"qn"))
-      val w = Window.partitionBy($"query_id")
-        .orderBy(desc("cos_exact"), asc("vec_id"))
-      val hits = pairs.withColumn("rank", row_number().over(w))
-        .filter($"rank" <= NdcgK)
+      val hits = topK(pairs, Seq($"query_id"), Seq(desc("cos_exact"), asc("vec_id")), NdcgK,
+          Some("rank"))
         .withColumn("gain_e6",
           when($"label" === $"qlabel",
             round(lit(1e6) / log2($"rank" + 1), 0).cast("long"))
@@ -1311,10 +1277,8 @@ object SimilarityOps {
        |    ${sqDistSql("pv.e", "cb.c", s"cb.m * $PqSubDim")} AS dd
        |  FROM pv CROSS JOIN $cbRef cb),
        |pa$t AS MATERIALIZED (
-       |  SELECT vec_id, m, k AS code FROM (
-       |    SELECT vec_id, m, k,
-       |      row_number() OVER (PARTITION BY vec_id, m ORDER BY dd ASC, k ASC) AS rn
-       |    FROM pd$t) WHERE rn = 1)""".stripMargin
+       |  SELECT vec_id, m, k AS code
+       |  FROM (${topKSql(s"pd$t", Seq("vec_id", "m"), Seq("dd ASC", "k ASC"), 1, None)}))""".stripMargin
 
   /** Fixed-order 8-term ADC sum against `cba`, with the query-side
     * vector expression parameterized (`q.qe` for the flat scan, `q.qre`
@@ -1347,15 +1311,19 @@ object SimilarityOps {
        |              FROM pn WHERE vec_id < $NumQueries) q
        |  CROSS JOIN cba
        |  WHERE c.vec_id <> q.query_id),
-       |cands AS MATERIALIZED (
-       |  SELECT vec_id, query_id, e, norm, qe, qn FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY adc ASC, vec_id ASC) AS arank
-       |    FROM adcp) WHERE arank <= ${2 * TopK})
-       |${topkSql(
-      s"""SELECT query_id, vec_id,
-         |  ${dotSql("e", "qe")} / (norm * qn) AS cos_exact
-         |FROM cands""".stripMargin)}""".stripMargin
+       |${adcRescoreSql(2 * TopK)}""".stripMargin
+
+  /** The ADC scan's tail over `adcp` (vec_id, query_id, e, norm, qe, qn,
+    * adc): each query's top-`k` candidates by ADC distance (ties on
+    * vec_id), rescored by exact cosine — the shared ann_pq_topk /
+    * ann_ivfpq_topk search step.
+    */
+  private def adcRescoreSql(k: Int): String =
+    s"""cands AS MATERIALIZED (
+       |  SELECT vec_id, query_id, e, norm, qe, qn
+       |  FROM (${topKSql("adcp", Seq("query_id"), Seq("adc ASC", "vec_id ASC"), k, None)}))
+       |${topkWithinSql(s"SELECT query_id, vec_id, ${dotSql("e", "qe")} / (norm * qn) AS cos_exact FROM cands")}"""
+      .stripMargin
 
   /** The IVF-ADC oracle: the FULL composed lifecycle — k-means coarse
     * training (kmeansCtesSql, shared with ml_kmeans/ann_ivf_kmeans),
@@ -1388,11 +1356,8 @@ object SimilarityOps {
        |  SELECT t.query_id, t.qe, t.qn, t.cid,
        |    ${residualSql("t.qe", "cc.c")} AS qre
        |  FROM (
-       |    SELECT query_id, qe, qn, cid FROM (
-       |      SELECT query_id, qe, qn, cid,
-       |        row_number() OVER (PARTITION BY query_id
-       |          ORDER BY d ASC, cid ASC) AS rn
-       |      FROM qd) WHERE rn <= $Nprobe) t
+       |    SELECT query_id, qe, qn, cid
+       |    FROM (${topKSql("qd", Seq("query_id"), Seq("d ASC", "cid ASC"), Nprobe, None)})) t
        |  JOIN c${MLOps.KmIters} cc ON t.cid = cc.cid),
        |adcp AS MATERIALIZED (
        |  SELECT c.vec_id, q.query_id, c.e, c.norm, q.qe, q.qn,
@@ -1401,15 +1366,7 @@ object SimilarityOps {
        |  JOIN qp q ON c.cid = q.cid
        |  CROSS JOIN cba
        |  WHERE c.vec_id <> q.query_id),
-       |cands AS MATERIALIZED (
-       |  SELECT vec_id, query_id, e, norm, qe, qn FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY adc ASC, vec_id ASC) AS arank
-       |    FROM adcp) WHERE arank <= $IvfRescoreK)
-       |${topkSql(
-      s"""SELECT query_id, vec_id,
-         |  ${dotSql("e", "qe")} / (norm * qn) AS cos_exact
-         |FROM cands""".stripMargin)}""".stripMargin
+       |${adcRescoreSql(IvfRescoreK)}""".stripMargin
 
   /** Oracle tail of the KNN-Shapley pipeline (rank -> Theorem-1 terms
     * -> suffix sum -> per-point aggregate -> top/bottom report),
@@ -1492,21 +1449,25 @@ object SimilarityOps {
       s"SELECT vec_id, $t AS tbl, ${bucketSqlFor(multiPlanes(t))("e")} AS bucket FROM $rel"
     }.mkString("\nUNION ALL\n")
 
-  private def topkSql(pairsFrom: String): String =
+  /** [[topkWithin]]'s DuckDB twin over the (query_id, vec_id, cos_exact)
+    * SELECT `pairsFrom`.
+    */
+  private def topkWithinSql(pairsFrom: String): String =
     s"""SELECT query_id, rank, vec_id AS neighbor_id,
        |  ROUND(cos_exact, 6) AS cosine
-       |FROM (
-       |  SELECT query_id, vec_id, cos_exact,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos_exact DESC, vec_id ASC) AS rank
-       |  FROM ($pairsFrom))
-       |WHERE rank <= $TopK
+       |FROM (${topKSql(s"($pairsFrom)", Seq("query_id"), Seq("cos_exact DESC", "vec_id ASC"), TopK, Some("rank"))})
        |ORDER BY query_id, rank""".stripMargin
+
+  /** Each query's top-TopK (query_id, vec_id) by cos_exact, ties on vec_id,
+    * over the (query_id, vec_id, cos_exact) relation `pairs`.
+    */
+  private def neighborIdsSql(pairs: String): String =
+    s"SELECT query_id, vec_id FROM (${topKSql(pairs, Seq("query_id"), Seq("cos_exact DESC", "vec_id ASC"), TopK, None)})"
 
   val oracles: Map[String, String] = Map(
     "ann_cosine_topk" ->
       s"""WITH $vectorsSql
-         |${topkSql(
+         |${topkWithinSql(
         s"""SELECT q.vec_id AS query_id, c.vec_id,
            |  ${dotSql("c.e", "q.e")} / (c.norm * q.norm) AS cos_exact
            |FROM n c JOIN n q ON q.vec_id < $NumQueries AND c.vec_id <> q.vec_id""".stripMargin)}""".stripMargin,
@@ -1522,16 +1483,12 @@ object SimilarityOps {
          |bp AS (
          |  SELECT query_id, MAX(cos_exact) AS best_pos
          |  FROM sc WHERE label = qlabel GROUP BY 1),
-         |neg AS (
-         |  SELECT query_id, vec_id, cos_exact,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos_exact DESC, vec_id ASC) AS rank
-         |  FROM sc WHERE label <> qlabel)
+         |neg AS (${topKSql("(SELECT query_id, vec_id, cos_exact FROM sc WHERE label <> qlabel)",
+           Seq("query_id"), Seq("cos_exact DESC", "vec_id ASC"), TopK, Some("rank"))})
          |SELECT neg.query_id, neg.rank, neg.vec_id AS negative_id,
          |  ROUND(neg.cos_exact, 6) AS cosine,
          |  ROUND(bp.best_pos - neg.cos_exact, 6) AS margin
          |FROM neg LEFT JOIN bp ON neg.query_id = bp.query_id
-         |WHERE neg.rank <= $TopK
          |ORDER BY neg.query_id, neg.rank""".stripMargin,
     "emb_isotropy" ->
       s"""WITH $vectorsSql,
@@ -1617,7 +1574,7 @@ object SimilarityOps {
          |f AS (
          |  SELECT n.* FROM n JOIN documents d ON n.vec_id = d.doc_id
          |  WHERE d.lang = 'en')
-         |${topkSql(
+         |${topkWithinSql(
         s"""SELECT q.vec_id AS query_id, c.vec_id,
            |  ${dotSql("c.e", "q.e")} / (c.norm * q.norm) AS cos_exact
            |FROM f c JOIN n q ON q.vec_id < $NumQueries AND c.vec_id <> q.vec_id""".stripMargin)}""".stripMargin,
@@ -1630,11 +1587,8 @@ object SimilarityOps {
          |      + COALESCE(1.0 / ($RrfC + de.dr), 0.0) AS rrf
          |  FROM lex l FULL OUTER JOIN dense de
          |    ON l.qdoc = de.qdoc AND l.doc_id = de.doc_id)
-         |SELECT query_doc, rank, doc_id, ROUND(rrf, 6) AS rrf_score FROM (
-         |  SELECT qdoc AS query_doc, doc_id, rrf,
-         |    row_number() OVER (PARTITION BY qdoc
-         |      ORDER BY rrf DESC, doc_id ASC) AS rank
-         |  FROM fused) WHERE rank <= $TopK
+         |SELECT qdoc AS query_doc, rank, doc_id, ROUND(rrf, 6) AS rrf_score
+         |FROM (${topKSql("fused", Seq("qdoc"), Seq("rrf DESC", "doc_id ASC"), TopK, Some("rank"))})
          |ORDER BY query_doc, rank""".stripMargin,
 
     // same two ranking lists, the injected W[max(lr,dr)] ladder summed
@@ -1709,10 +1663,8 @@ object SimilarityOps {
          |qw AS (SELECT qdoc, word, 1 AS wt FROM qterms),
          |${TextOps.bm25ScoresSql("sc", "qw")},
          |lex AS (
-         |  SELECT qdoc, doc_id, lr FROM (
-         |    SELECT qdoc, doc_id, row_number() OVER (PARTITION BY qdoc
-         |      ORDER BY score DESC, doc_id ASC) AS lr
-         |    FROM sc) WHERE lr <= $FusionDepth),
+         |  SELECT qdoc, doc_id, lr
+         |  FROM (${topKSql("sc", Seq("qdoc"), Seq("score DESC", "doc_id ASC"), FusionDepth, Some("lr"))})),
          |$vectorsSql,
          |$denseCandidatesSql,
          |dense AS (SELECT qdoc, vec_id AS doc_id, rn AS dr FROM cand)""".stripMargin
@@ -1720,13 +1672,10 @@ object SimilarityOps {
   private lazy val oraclesTail: Map[String, String] = Map(
     "sample_cluster_balanced" ->
       s"""WITH ${graft.ops.MLOps.kmeansCtesSql}
-         |SELECT cid, rk, vec_id FROM (
-         |  SELECT fin.cid, fin.vec_id,
-         |    row_number() OVER (PARTITION BY fin.cid
-         |      ORDER BY ${graft.ops.DedupOps.polyHashSql("CAST(fin.vec_id AS VARCHAR)")} ASC,
-         |        fin.vec_id ASC) AS rk
-         |  FROM fin)
-         |WHERE rk <= $ClusterQuota ORDER BY cid, rk""".stripMargin,
+         |SELECT cid, rk, vec_id FROM (${topKSql(
+           s"(SELECT cid, vec_id, ${graft.ops.DedupOps.polyHashSql("CAST(vec_id AS VARCHAR)")} AS h FROM fin)",
+           Seq("cid"), Seq("h ASC", "vec_id ASC"), ClusterQuota, Some("rk"))})
+         |ORDER BY cid, rk""".stripMargin,
     // Greedy MMR unrolled: m$r = max-sim of every candidate against the
     // selected set, s$r = the round's argmax pick, selcum$r = running
     // selection. Mirrors the Spark loop round for round.
@@ -1737,15 +1686,12 @@ object SimilarityOps {
            |  FROM p JOIN selcum${r - 1} s ON p.qdoc = s.qdoc AND p.b = s.vec_id
            |  GROUP BY 1, 2),
            |s$r AS (
-           |  SELECT qdoc, vec_id, $r AS pick FROM (
-           |    SELECT c.qdoc, c.vec_id,
-           |      row_number() OVER (PARTITION BY c.qdoc
-           |        ORDER BY $MmrLambda * c.rel - ${1 - MmrLambda} * m.ms DESC,
-           |          c.vec_id ASC) AS rn
-           |    FROM cand c JOIN m$r m ON c.qdoc = m.qdoc AND c.vec_id = m.vec_id
-           |    WHERE NOT EXISTS (SELECT 1 FROM selcum${r - 1} x
-           |      WHERE x.qdoc = c.qdoc AND x.vec_id = c.vec_id))
-           |  WHERE rn = 1),
+           |  SELECT qdoc, vec_id, $r AS pick FROM (${topKSql(
+             s"""(SELECT c.qdoc, c.vec_id, $MmrLambda * c.rel - ${1 - MmrLambda} * m.ms AS mmr
+                |  FROM cand c JOIN m$r m ON c.qdoc = m.qdoc AND c.vec_id = m.vec_id
+                |  WHERE NOT EXISTS (SELECT 1 FROM selcum${r - 1} x
+                |    WHERE x.qdoc = c.qdoc AND x.vec_id = c.vec_id))""".stripMargin,
+             Seq("qdoc"), Seq("mmr DESC", "vec_id ASC"), 1, None)})),
            |selcum$r AS (SELECT * FROM selcum${r - 1} UNION ALL SELECT * FROM s$r)"""
           .stripMargin
       }.mkString(",\n")
@@ -1757,10 +1703,8 @@ object SimilarityOps {
          |    ${dotSql("a.e", "b.e")} / (a.norm * b.norm) AS sim
          |  FROM cand a JOIN cand b ON a.qdoc = b.qdoc AND a.vec_id <> b.vec_id),
          |s1 AS (
-         |  SELECT qdoc, vec_id, 1 AS pick FROM (
-         |    SELECT qdoc, vec_id, row_number() OVER (PARTITION BY qdoc
-         |      ORDER BY rel DESC, vec_id ASC) AS rn FROM cand)
-         |  WHERE rn = 1),
+         |  SELECT qdoc, vec_id, 1 AS pick
+         |  FROM (${topKSql("cand", Seq("qdoc"), Seq("rel DESC", "vec_id ASC"), 1, None)})),
          |selcum1 AS (SELECT * FROM s1),
          |$rounds
          |SELECT qdoc AS query_doc, pick, vec_id AS doc_id
@@ -1769,7 +1713,7 @@ object SimilarityOps {
     "ann_lsh_topk" ->
       s"""WITH $vectorsSql,
          |b AS (SELECT vec_id, label, e, norm, ${bucketSqlFor(planes)("e")} AS bucket FROM n)
-         |${topkSql(
+         |${topkWithinSql(
         s"""SELECT q.vec_id AS query_id, c.vec_id,
            |  ${dotSql("c.e", "q.e")} / (c.norm * q.norm) AS cos_exact
            |FROM b c JOIN b q ON q.vec_id < $NumQueries
@@ -1782,7 +1726,7 @@ object SimilarityOps {
          |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id
          |  FROM tb c JOIN tb q ON c.tbl = q.tbl AND c.bucket = q.bucket
          |  WHERE q.vec_id < $NumQueries AND c.vec_id <> q.vec_id)
-         |${topkSql(
+         |${topkWithinSql(
         s"""SELECT cand.query_id, cand.vec_id,
            |  ${dotSql("c.e", "q.e")} / (c.norm * q.norm) AS cos_exact
            |FROM cand
@@ -1790,7 +1734,7 @@ object SimilarityOps {
            |JOIN n q ON cand.query_id = q.vec_id""".stripMargin)}""".stripMargin,
     "ann_ivf_label_topk" ->
       s"""WITH $vectorsSql
-         |${topkSql(
+         |${topkWithinSql(
         s"""SELECT q.vec_id AS query_id, c.vec_id,
            |  ${dotSql("c.e", "q.e")} / (c.norm * q.norm) AS cos_exact
            |FROM n c JOIN n q ON q.vec_id < $NumQueries
@@ -1800,7 +1744,7 @@ object SimilarityOps {
          |nrm AS MATERIALIZED (
          |  SELECT fin.vec_id, fin.cid, v.e, ${l2NormSql("v.e")} AS norm
          |  FROM fin JOIN v ON fin.vec_id = v.vec_id)
-         |${topkSql(
+         |${topkWithinSql(
         s"""SELECT q.vec_id AS query_id, c.vec_id,
            |  ${dotSql("c.e", "q.e")} / (c.norm * q.norm) AS cos_exact
            |FROM nrm c JOIN nrm q ON q.vec_id < $NumQueries
@@ -1828,19 +1772,12 @@ object SimilarityOps {
          |  JOIN nrm q ON q.vec_id = p.query_id
          |  WHERE c.vec_id <> p.query_id),
          |appr AS (
-         |  SELECT nprobe, query_id, vec_id FROM (
-         |    SELECT nprobe, query_id, vec_id, row_number() OVER (
-         |      PARTITION BY nprobe, query_id
-         |      ORDER BY cos DESC, vec_id ASC) AS rk
-         |    FROM cand) WHERE rk <= $TopK),
-         |ex AS (
-         |  SELECT query_id, vec_id FROM (
-         |    SELECT q.vec_id AS query_id, c.vec_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY ${dotSql("c.e", "q.e")} / (c.norm * q.norm) DESC,
-         |          c.vec_id ASC) AS rk
-         |    FROM nrm c JOIN nrm q ON q.vec_id < $NumQueries
-         |      AND c.vec_id <> q.vec_id) WHERE rk <= $TopK)
+         |  SELECT nprobe, query_id, vec_id
+         |  FROM (${topKSql("cand", Seq("nprobe", "query_id"), Seq("cos DESC", "vec_id ASC"), TopK, None)})),
+         |ex AS (${neighborIdsSql(
+           s"""(SELECT q.vec_id AS query_id, c.vec_id,
+              |    ${dotSql("c.e", "q.e")} / (c.norm * q.norm) AS cos_exact
+              |  FROM nrm c JOIN nrm q ON q.vec_id < $NumQueries AND c.vec_id <> q.vec_id)""".stripMargin)})
          |SELECT np.nprobe, COUNT(*) AS n_pairs,
          |  CAST(SUM(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END)
          |    AS BIGINT) AS n_hit,
@@ -1884,25 +1821,17 @@ object SimilarityOps {
       s"""WITH $vectorsSql,
          |q AS (SELECT vec_id AS query_id, e AS qe, norm AS qn
          |      FROM n WHERE vec_id < $NumQueries),
-         |ex AS (
-         |  SELECT query_id, vec_id FROM (
-         |    SELECT q.query_id, c.vec_id,
-         |      row_number() OVER (PARTITION BY q.query_id ORDER BY
-         |        ${dotSql("c.e", "q.qe")} / (c.norm * q.qn) DESC,
-         |        c.vec_id ASC) AS rank
-         |    FROM n c JOIN q ON c.vec_id <> q.query_id)
-         |  WHERE rank <= $TopK),
+         |ex AS (${neighborIdsSql(
+           s"""(SELECT q.query_id, c.vec_id, ${dotSql("c.e", "q.qe")} / (c.norm * q.qn) AS cos_exact
+              |  FROM n c JOIN q ON c.vec_id <> q.query_id)""".stripMargin)}),
          |tr AS (
-         |  SELECT dim, query_id, vec_id FROM (
-         |    SELECT dd.dim, q.query_id, c.vec_id,
-         |      row_number() OVER (PARTITION BY dd.dim, q.query_id ORDER BY
-         |        ${dotSql("c.e", "q.qe", "dd.dim")} /
-         |        (${l2NormSql("c.e[1:dd.dim]")} *
-         |         ${l2NormSql("q.qe[1:dd.dim]")})
-         |        DESC, c.vec_id ASC) AS rank
-         |    FROM n c JOIN q ON c.vec_id <> q.query_id
-         |    CROSS JOIN (SELECT unnest([8, 16, 32, 64]) AS dim) dd)
-         |  WHERE rank <= $TopK)
+         |  SELECT dim, query_id, vec_id FROM (${topKSql(
+           s"""(SELECT dd.dim, q.query_id, c.vec_id,
+              |    ${dotSql("c.e", "q.qe", "dd.dim")} /
+              |    (${l2NormSql("c.e[1:dd.dim]")} * ${l2NormSql("q.qe[1:dd.dim]")}) AS cos_t
+              |  FROM n c JOIN q ON c.vec_id <> q.query_id
+              |  CROSS JOIN (SELECT unnest([8, 16, 32, 64]) AS dim) dd)""".stripMargin,
+           Seq("dim", "query_id"), Seq("cos_t DESC", "vec_id ASC"), TopK, None)}))
          |SELECT dim, ROUND(AVG(r), 6) AS recall_at_5 FROM (
          |  SELECT tr.dim, tr.query_id,
          |    CAST(SUM(CASE WHEN ex.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
@@ -1936,49 +1865,22 @@ object SimilarityOps {
          |    ${dotSql("c.dqe", "q.dqe")} AS approx
          |  FROM dq c JOIN dq q ON q.vec_id < $NumQueries AND c.vec_id <> q.vec_id),
          |cand AS (
-         |  SELECT query_id, vec_id, ce, cn, qe2, qn FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY query_id
-         |      ORDER BY approx DESC, vec_id ASC) AS arank
-         |    FROM ap)
-         |  WHERE arank <= ${2 * TopK})
-         |SELECT query_id, rank, vec_id AS neighbor_id,
-         |  ROUND(cos_exact, 6) AS cosine
-         |FROM (
-         |  SELECT query_id, vec_id, cos_exact,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos_exact DESC, vec_id ASC) AS rank
-         |  FROM (
-         |    SELECT query_id, vec_id,
-         |      ${dotSql("ce", "qe2")} / (cn * qn) AS cos_exact
-         |    FROM cand))
-         |WHERE rank <= $TopK
-         |ORDER BY query_id, rank""".stripMargin,
+         |  SELECT query_id, vec_id, ce, cn, qe2, qn
+         |  FROM (${topKSql("ap", Seq("query_id"), Seq("approx DESC", "vec_id ASC"), 2 * TopK, None)}))
+         |${topkWithinSql(s"SELECT query_id, vec_id, ${dotSql("ce", "qe2")} / (cn * qn) AS cos_exact FROM cand")}"""
+        .stripMargin,
     "ann_recall_at_k" ->
       s"""WITH $vectorsSql,
          |b AS (SELECT vec_id, e, norm, ${bucketSqlFor(planes)("e")} AS bucket FROM n),
-         |ex AS (
-         |  SELECT query_id, vec_id FROM (
-         |    SELECT query_id, vec_id,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY cos_exact DESC, vec_id ASC) AS rank
-         |    FROM (
-         |      SELECT q.vec_id AS query_id, c.vec_id,
-         |        ${dotSql("c.e", "q.e")} / (c.norm * q.norm) AS cos_exact
-         |      FROM n c JOIN n q
-         |        ON q.vec_id < $NumQueries AND c.vec_id <> q.vec_id))
-         |  WHERE rank <= $TopK),
-         |ap AS (
-         |  SELECT query_id, vec_id FROM (
-         |    SELECT query_id, vec_id,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY cos_exact DESC, vec_id ASC) AS rank
-         |    FROM (
-         |      SELECT q.vec_id AS query_id, c.vec_id,
-         |        ${dotSql("c.e", "q.e")} / (c.norm * q.norm) AS cos_exact
-         |      FROM b c JOIN b q
-         |        ON q.vec_id < $NumQueries
-         |        AND c.bucket = q.bucket AND c.vec_id <> q.vec_id))
-         |  WHERE rank <= $TopK)
+         |ex AS (${neighborIdsSql(
+           s"""(SELECT q.vec_id AS query_id, c.vec_id,
+              |    ${dotSql("c.e", "q.e")} / (c.norm * q.norm) AS cos_exact
+              |  FROM n c JOIN n q ON q.vec_id < $NumQueries AND c.vec_id <> q.vec_id)""".stripMargin)}),
+         |ap AS (${neighborIdsSql(
+           s"""(SELECT q.vec_id AS query_id, c.vec_id,
+              |    ${dotSql("c.e", "q.e")} / (c.norm * q.norm) AS cos_exact
+              |  FROM b c JOIN b q ON q.vec_id < $NumQueries
+              |    AND c.bucket = q.bucket AND c.vec_id <> q.vec_id)""".stripMargin)})
          |SELECT ex.query_id, COUNT(*) AS k,
          |  CAST(SUM(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_hit,
@@ -1992,21 +1894,18 @@ object SimilarityOps {
          |q AS (
          |  SELECT vec_id AS query_id, label AS qlabel, e AS qe, norm AS qn
          |  FROM n WHERE vec_id < $NumQueries),
-         |ranked AS (
-         |  SELECT query_id, qlabel, vec_id, label,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cos_exact DESC, vec_id ASC) AS rank
-         |  FROM (
-         |    SELECT q.query_id, q.qlabel, c.vec_id, c.label,
-         |      ${dotSql("c.e", "q.qe")} / (c.norm * q.qn) AS cos_exact
-         |    FROM n c JOIN q ON c.vec_id <> q.query_id)),
+         |ranked AS (${topKSql(
+           s"""(SELECT q.query_id, q.qlabel, c.vec_id, c.label,
+              |    ${dotSql("c.e", "q.qe")} / (c.norm * q.qn) AS cos_exact
+              |  FROM n c JOIN q ON c.vec_id <> q.query_id)""".stripMargin,
+           Seq("query_id"), Seq("cos_exact DESC", "vec_id ASC"), NdcgK, Some("rank"))}),
          |hits AS (
          |  SELECT query_id,
          |    CASE WHEN label = qlabel
          |      THEN CAST(ROUND(1e6 / log2(rank + 1), 0) AS BIGINT)
          |      ELSE 0 END AS gain_e6,
          |    CASE WHEN label = qlabel THEN 1 ELSE 0 END AS r
-         |  FROM ranked WHERE rank <= $NdcgK),
+         |  FROM ranked),
          |dcg AS (
          |  SELECT query_id, CAST(SUM(gain_e6) AS BIGINT) AS dcg_e6,
          |    CAST(SUM(r) AS BIGINT) AS n_rel_at_k

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Lexicons
+import Ranking.{topK, topKSql}
 
 /** Text analytics layer. Covers SURVEY.md §2.8 F1-F12/F28, §2.4 A10-A11,
   * §2.10 U3 (VADER-style scoring) and U7 (TF-IDF), plus the
@@ -240,6 +241,24 @@ object TextOps {
        |  LEFT JOIN dc ON dom.doc_id = dc.doc_id
        |    AND dom.pred_cand = dc.pred_cand)""".stripMargin
 
+  /** [[calibBins]]' oracle prelude up to the argmax: [[nbScoredCtes]],
+    * then `soft` (the max-shift nano softmax terms), `den` (their per-doc
+    * sum) and `pr` (each doc's top prediction).
+    */
+  private lazy val calibPredSql: String =
+    s"""$nbScoredCtes,
+       |mx AS (SELECT doc_id, MAX(score) AS smax FROM sc GROUP BY 1),
+       |soft AS (
+       |  SELECT sc.doc_id, sc.true_lang, sc.pred_cand, sc.score,
+       |    CAST(ROUND(exp(CAST(sc.score - mx.smax AS DOUBLE) / 1e6)
+       |      * 1e9, 0) AS BIGINT) AS nano
+       |  FROM sc JOIN mx ON sc.doc_id = mx.doc_id),
+       |den AS (
+       |  SELECT doc_id, CAST(SUM(nano) AS BIGINT) AS dn
+       |  FROM soft GROUP BY 1),
+       |pr AS (${topKSql("soft", Seq("doc_id"), Seq("score DESC", "pred_cand ASC"), 1, None)})"""
+      .stripMargin
+
   /** The 10-bin confidence/accuracy table behind ml_calibration_bins
     * and ml_isotonic_calibration: softmax the NB scores per doc (the
     * max-shift nano-integer device), take the top prediction's
@@ -258,10 +277,7 @@ object TextOps {
       // round 18: den and the argmax row both read it — pin once
       .localCheckpoint(false)
     val den = soft.groupBy($"doc_id").agg(sum($"nano").as("dn"))
-    val wp = Window.partitionBy($"doc_id")
-      .orderBy(desc("score"), asc("pred_cand"))
-    val pred = soft.withColumn("rn", row_number().over(wp))
-      .filter($"rn" === 1)
+    val pred = topK(soft, Seq($"doc_id"), Seq(desc("score"), asc("pred_cand")), 1, None)
       .join(den, "doc_id")
       .withColumn("conf", lit(1e9) / $"dn")
       .select(
@@ -361,11 +377,10 @@ object TextOps {
     * docs. ≤ 3·|queries| rows read by several plans, so pinned.
     */
   private[graft] def queryTerms(qtok: DataFrame): DataFrame =
-    qtok.filter(isQueryTerm(col("word")))
-      .groupBy(col("qdoc"), col("word")).agg(count(lit(1)).as("qtf"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("qdoc")).orderBy(desc("qtf"), asc("word"))))
-      .filter(col("rk") <= 3).select(col("qdoc"), col("word"))
+    topK(qtok.filter(isQueryTerm(col("word")))
+        .groupBy(col("qdoc"), col("word")).agg(count(lit(1)).as("qtf")),
+      Seq(col("qdoc")), Seq(desc("qtf"), asc("word")), 3, None)
+      .select(col("qdoc"), col("word"))
       .localCheckpoint(false)
 
   /** [[queryTerms]]'s DuckDB twin: the `qterms` (qdoc, word) CTE over the
@@ -373,16 +388,12 @@ object TextOps {
     */
   private[graft] val queryTermsSql: String =
     s"""qterms AS (
-       |  SELECT qdoc, word FROM (
-       |    SELECT qdoc, word,
-       |      row_number() OVER (PARTITION BY qdoc
-       |        ORDER BY qtf DESC, word ASC) AS rk
-       |    FROM (
-       |      SELECT qdoc, word, COUNT(*) AS qtf FROM (
-       |        SELECT qd.qdoc, unnest(t.toks) AS word
-       |        FROM t JOIN qd ON t.doc_id = qd.qdoc)
-       |      WHERE ${isQueryTermSql("word")} GROUP BY 1, 2))
-       |  WHERE rk <= 3)""".stripMargin
+       |  SELECT qdoc, word FROM (${topKSql(
+         s"""(SELECT qdoc, word, COUNT(*) AS qtf FROM (
+            |    SELECT qd.qdoc, unnest(t.toks) AS word
+            |    FROM t JOIN qd ON t.doc_id = qd.qdoc)
+            |  WHERE ${isQueryTermSql("word")} GROUP BY 1, 2)""".stripMargin,
+         Seq("qdoc"), Seq("qtf DESC", "word ASC"), 3, None)}))""".stripMargin
 
   /** BM25 (Robertson/Lucene form, k1 = 1.2, b = 0.75) for every row of a
     * (doc_id, word, tf, …) frame: df counts `tf`'s rows per word, the
@@ -522,7 +533,7 @@ object TextOps {
     * keeping best(pos) = max_j best(pos-j)·p(piece(pos-j+1..pos)).
     * State is an array of (ns, seg) structs where ns = NEGATED score, so
     * array_sort's (ns asc, seg asc) struct order IS the (score desc,
-    * seg asc) tie-break the oracle's row_number uses; negation commutes
+    * seg asc) tie-break the oracle's topKSql uses; negation commutes
     * exactly with positive multiplication, so magnitudes stay
     * bit-identical to the oracle's un-negated products. Returns the
     * final (ns, seg) struct; seg carries a leading space.
@@ -548,6 +559,19 @@ object TextOps {
           array_sort(filter(array(cands: _*), c => c.isNotNull)), 1)))
       },
       state => element_at(state, length(word) + 1))
+  }
+
+  /** The model table of a trained unigram vocab (piece, cnt) with its
+    * total count: the top UgTrainTopN pieces as (rank, piece, piece_len,
+    * cnt, prob). The vocab is model-scale driver state, so the global
+    * rank runs over a row-bounded frame.
+    */
+  private def ugModelTable(vocab: DataFrame, total: Long): DataFrame = {
+    import vocab.sparkSession.implicits._
+    topK(vocab, Nil, Seq(desc("cnt"), asc("piece")), UgTrainTopN, Some("rank"))
+      .select($"rank", $"piece", length($"piece").as("piece_len"), $"cnt",
+        round($"cnt".cast("double") / lit(total).cast("double"), 6).as("prob"))
+      .orderBy("rank")
   }
 
   /** Fixed-iteration hard-EM unigram training (Kudo 2018's trainer with
@@ -628,12 +652,8 @@ object TextOps {
              |    WHERE len(s.word) >= $t""".stripMargin
         }.mkString("\n    UNION ALL\n")
         s"""ug${r}p$t AS MATERIALIZED (
-           |  SELECT word, freq, score, seg FROM (
-           |    SELECT word, freq, score, seg,
-           |      row_number() OVER (PARTITION BY word
-           |        ORDER BY score DESC, seg ASC) AS rn
-           |    FROM (
-           |$branches)) WHERE rn = 1)""".stripMargin
+           |  SELECT word, freq, score, seg FROM (${topKSql(s"(\n$branches)",
+             Seq("word"), Seq("score DESC", "seg ASC"), 1, None)}))""".stripMargin
       }.mkString(",\n")
       val fins = (1 to WL).map(t =>
         s"  SELECT word, freq, seg FROM ug${r}p$t WHERE len(word) = $t")
@@ -692,13 +712,10 @@ object TextOps {
 
   private lazy val ugTrainSql: String =
     s"""WITH ${ugCtesSql(UgEmRounds)}
-       |SELECT rank, piece, piece_len, cnt, prob FROM (
-       |  SELECT row_number() OVER (ORDER BY c DESC, piece ASC) AS rank,
-       |    piece, len(piece) AS piece_len, c AS cnt,
-       |    ROUND(CAST(c AS DOUBLE) / (SELECT t FROM ugt$UgEmRounds), 6)
-       |      AS prob
-       |  FROM ugvb$UgEmRounds)
-       |WHERE rank <= $UgTrainTopN ORDER BY rank""".stripMargin
+       |SELECT rank, piece, len(piece) AS piece_len, c AS cnt,
+       |  ROUND(CAST(c AS DOUBLE) / (SELECT t FROM ugt$UgEmRounds), 6) AS prob
+       |FROM (${topKSql(s"ugvb$UgEmRounds", Nil, Seq("c DESC", "piece ASC"), UgTrainTopN, Some("rank"))})
+       |ORDER BY rank""".stripMargin
 
   /** The BPE training CTE chain (w, s0, per-round p/b/s) — shared by the
     * text_bpe_merges and text_bpe_encode oracles. MATERIALIZED is
@@ -900,8 +917,7 @@ object TextOps {
       val hits = tok.join(broadcast(lw), "word")
         .groupBy($"doc_id", $"cand_lang")
         .agg(count("*").as("hits"), max($"n_tok").as("n_tok"))
-      val w = Window.partitionBy($"doc_id").orderBy(desc("hits"), asc("cand_lang"))
-      val best = hits.withColumn("rn", row_number().over(w)).filter($"rn" === 1)
+      val best = topK(hits, Seq($"doc_id"), Seq(desc("hits"), asc("cand_lang")), 1, None)
       docs.select($"doc_id")
         .join(best, Seq("doc_id"), "left")
         .withColumn("pred_lang", coalesce($"cand_lang", lit("und")))
@@ -1200,17 +1216,15 @@ object TextOps {
         .select($"qdoc", explode($"t").as("word")))
       val dl = t.select($"doc_id", size($"t").as("dl"))
       val s1 = bm25Scores(t, dl, qterms.withColumn("wt", lit(1L)))
-      val w1 = Window.partitionBy($"qdoc").orderBy(desc("score"), asc("doc_id"))
-      val fb = s1.withColumn("rk", row_number().over(w1))
-        .filter($"rk" <= 10).select($"qdoc", $"doc_id")
-      val expTerms = t.join(broadcast(fb), "doc_id")
+      val byScore = Seq(desc("score"), asc("doc_id"))
+      val fb = topK(s1, Seq($"qdoc"), byScore, 10, None).select($"qdoc", $"doc_id")
+      val feedback = t.join(broadcast(fb), "doc_id")
         .select($"qdoc", explode($"t").as("word"))
         .filter(isQueryTerm($"word"))
         .groupBy($"qdoc", $"word").agg(count(lit(1)).as("ftf"))
         .join(qterms, Seq("qdoc", "word"), "left_anti")
-        .withColumn("rk", row_number().over(
-          Window.partitionBy($"qdoc").orderBy(desc("ftf"), asc("word"))))
-        .filter($"rk" <= 2).select($"qdoc", $"word")
+      val expTerms = topK(feedback, Seq($"qdoc"), Seq(desc("ftf"), asc("word")), 2, None)
+        .select($"qdoc", $"word")
         // round 18: ≤2·|queries| rows consumed by THREE plans (the
         // pass-2 term set, its broadcast distinct, and the report
         // string) — pin once instead of re-mining the feedback docs
@@ -1221,8 +1235,7 @@ object TextOps {
       val expStr = expTerms.groupBy($"qdoc")
         .agg(array_join(array_sort(collect_list($"word")), " ")
           .as("expansion_terms"))
-      s2.withColumn("rank", row_number().over(w1))
-        .filter($"rank" <= 5)
+      topK(s2, Seq($"qdoc"), byScore, 5, Some("rank"))
         .join(broadcast(expStr), Seq("qdoc"), "left")
         .select($"qdoc".as("query_doc"), $"rank", $"doc_id", $"score",
           coalesce($"expansion_terms", lit("")).as("expansion_terms"))
@@ -1565,13 +1578,7 @@ object TextOps {
     "text_unigram_train" -> ((s, d) => {
       import s.implicits._
       val (vocab, total) = unigramModel(s, d)
-      vocab.toDF("piece", "cnt")
-        .withColumn("rank", row_number().over(
-          Window.orderBy(desc("cnt"), asc("piece"))))
-        .filter($"rank" <= UgTrainTopN)
-        .select($"rank", $"piece", length($"piece").as("piece_len"), $"cnt",
-          round($"cnt".cast("double") / lit(total).cast("double"), 6).as("prob"))
-        .orderBy("rank")
+      ugModelTable(vocab.toDF("piece", "cnt"), total)
     }),
 
     // S11-family artifact round-trip for the unigram model: the trained
@@ -1585,13 +1592,7 @@ object TextOps {
       val (vocab, total) = unigramModel(s, d)
       val path = Tables.artifactDir("unigram_model", d)
       vocab.toDF("piece", "cnt").write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(desc("cnt"), asc("piece"))))
-        .filter($"rank" <= UgTrainTopN)
-        .select($"rank", $"piece", length($"piece").as("piece_len"), $"cnt",
-          round($"cnt".cast("double") / lit(total).cast("double"), 6).as("prob"))
-        .orderBy("rank")
+      ugModelTable(s.read.parquet(path), total)
     }),
 
     // UNIGRAM-LM ENCODING: Viterbi-segment the word table under the
@@ -1605,13 +1606,11 @@ object TextOps {
       import s.implicits._
       val (vocab, total) = unigramModel(s, d)
       val probs = vocab.map { case (pc, c) => (pc, c.toDouble / total) }
-      ugWords(s, d)
+      val segs = ugWords(s, d)
         .withColumn("st", ugViterbi($"word", probs))
         .select($"word", $"freq", ltrim($"st".getField("seg")).as("seg"))
         .filter(length($"word") >= UgEncodeMinLen)
-        .withColumn("rk", row_number().over(
-          Window.orderBy(desc("freq"), asc("word"))))
-        .filter($"rk" <= UgEncodeTopN)
+      topK(segs, Nil, Seq(desc("freq"), asc("word")), UgEncodeTopN, None)
         .select($"word", $"freq", size(split($"seg", " ")).as("n_pieces"), $"seg")
         .orderBy("word")
     }),
@@ -1703,19 +1702,13 @@ object TextOps {
     // id IS a uniform draw (the hash is equidistributed over ids), but
     // unlike reservoir sampling with rand() it survives reruns,
     // repartitions, and engine swaps — the oracle proves it by re-deriving
-    // the identical sample in DuckDB. The window form here is fine because
-    // k≪group size; the bounded-state scale path for huge groups is the
-    // same TopK aggregator o4 demonstrates (smallest-k = top-k on the
-    // negated key).
+    // the identical sample in DuckDB. Selection is one per-source topK.
     "sample_group_hash_topk" -> ((s, d) => {
       import s.implicits._
       val h = pmod(graft.functions.PolyHash.poly_hash($"doc_id".cast("string")),
         lit(1000000L))
-      val w = Window.partitionBy($"source").orderBy($"h".asc, $"doc_id".asc)
-      documents(s, d)
-        .select($"source", $"doc_id", h.as("h"))
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= 5)
+      topK(documents(s, d).select($"source", $"doc_id", h.as("h")),
+          Seq($"source"), Seq($"h".asc, $"doc_id".asc), 5, Some("rank"))
         .select($"source", $"rank", $"doc_id")
         .orderBy("source", "rank")
     }),
@@ -1959,11 +1952,7 @@ object TextOps {
     // per-doc integer aggregate — no corpus-sized broadcast.
     "text_nb_classifier" -> ((s, d) => {
       import s.implicits._
-      val w = Window.partitionBy($"doc_id")
-        .orderBy(desc("score"), asc("pred_cand"))
-      nbScored(s, d)
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
+      topK(nbScored(s, d), Seq($"doc_id"), Seq(desc("score"), asc("pred_cand")), 1, None)
         .groupBy($"true_lang", $"pred_cand")
         .agg(count(lit(1)).as("n_docs"))
         .select($"true_lang", $"pred_cand".as("pred_lang"), $"n_docs")
@@ -2246,8 +2235,7 @@ object TextOps {
     // repartition-stable and the oracle replays it; keys are rounded to
     // 9dp before ranking (ties → doc_id) so a cross-engine ln() ulp
     // can't flip the selection boundary. Weight = token count. Scale:
-    // key assignment is map-side; selection is one per-stratum top-m —
-    // the GroupTopK physical operator's exact shape (plans/GroupTopK).
+    // key assignment is map-side; selection is one per-stratum topK.
     "sample_weighted_ares" -> ((s, d) => {
       import s.implicits._
       val M = 10
@@ -2256,10 +2244,8 @@ object TextOps {
         .filter($"w_tok" >= 1)
       val u = (graft.functions.PolyHash.poly_hash($"doc_id".cast("string")) + 1)
         .cast("double") / lit(1000000008.0)
-      val w = Window.partitionBy($"source").orderBy($"ekey".asc, $"doc_id".asc)
-      base.withColumn("ekey", round(-log(u) / $"w_tok", 9))
-        .withColumn("pick", row_number().over(w))
-        .filter($"pick" <= M)
+      topK(base.withColumn("ekey", round(-log(u) / $"w_tok", 9)),
+          Seq($"source"), Seq($"ekey".asc, $"doc_id".asc), M, Some("pick"))
         .select($"source", $"pick", $"doc_id", $"w_tok", $"ekey")
         .orderBy("source", "pick")
     }),
@@ -2277,9 +2263,7 @@ object TextOps {
       val gated = DedupOps.plantedDups(s, d)
         .select($"doc_id", $"text", size(tokens($"text")).as("n_tok"))
         .filter($"n_tok" >= 30)
-      val w = Window.partitionBy(md5($"text")).orderBy($"doc_id".asc)
-      val deduped = gated
-        .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
+      val deduped = topK(gated, Seq(md5($"text")), Seq($"doc_id".asc), 1, None)
       val sampled = deduped.filter(
         pmod(graft.functions.PolyHash.poly_hash($"doc_id".cast("string")),
           lit(1000)) < 800)
@@ -2773,10 +2757,7 @@ object TextOps {
          |hits AS (
          |  SELECT doc_id, cand_lang, COUNT(*) AS hits
          |  FROM tok JOIN lw USING (word) GROUP BY doc_id, cand_lang),
-         |best AS (
-         |  SELECT doc_id, cand_lang, hits FROM hits
-         |  QUALIFY row_number() OVER (PARTITION BY doc_id
-         |    ORDER BY hits DESC, cand_lang ASC) = 1)
+         |best AS (${topKSql("hits", Seq("doc_id"), Seq("hits DESC", "cand_lang ASC"), 1, None)})
          |SELECT d.doc_id, COALESCE(cand_lang, 'und') AS pred_lang,
          |  ROUND(COALESCE(CAST(hits AS DOUBLE) / n_tok, 0), 6) AS confidence
          |FROM documents d
@@ -2951,10 +2932,8 @@ object TextOps {
          |qw AS (SELECT qdoc, word, 1 AS wt FROM qterms),
          |${bm25ScoresSql("s1", "qw")},
          |fb AS (
-         |  SELECT qdoc, doc_id FROM (
-         |    SELECT qdoc, doc_id, row_number() OVER (PARTITION BY qdoc
-         |      ORDER BY score DESC, doc_id ASC) AS rk
-         |    FROM s1) WHERE rk <= 10),
+         |  SELECT qdoc, doc_id
+         |  FROM (${topKSql("s1", Seq("qdoc"), Seq("score DESC", "doc_id ASC"), 10, None)})),
          |tok AS (SELECT doc_id, unnest(toks) AS word FROM t),
          |ec AS (
          |  SELECT fb.qdoc, tok.word, COUNT(*) AS ftf
@@ -2964,10 +2943,8 @@ object TextOps {
          |      WHERE q.qdoc = fb.qdoc AND q.word = tok.word)
          |  GROUP BY 1, 2),
          |exq AS (
-         |  SELECT qdoc, word FROM (
-         |    SELECT qdoc, word, row_number() OVER (PARTITION BY qdoc
-         |      ORDER BY ftf DESC, word ASC) AS rk
-         |    FROM ec) WHERE rk <= 2),
+         |  SELECT qdoc, word
+         |  FROM (${topKSql("ec", Seq("qdoc"), Seq("ftf DESC", "word ASC"), 2, None)})),
          |allt AS (
          |  SELECT qdoc, word, 2 AS wt FROM qterms
          |  UNION ALL SELECT qdoc, word, 1 AS wt FROM exq),
@@ -2978,45 +2955,24 @@ object TextOps {
          |  FROM exq GROUP BY qdoc)
          |SELECT r.qdoc AS query_doc, r.rank, r.doc_id, r.score,
          |  COALESCE(es.expansion_terms, '') AS expansion_terms
-         |FROM (
-         |  SELECT qdoc, doc_id, score, row_number() OVER (PARTITION BY qdoc
-         |    ORDER BY score DESC, doc_id ASC) AS rank
-         |  FROM s2) r
+         |FROM (${topKSql("s2", Seq("qdoc"), Seq("score DESC", "doc_id ASC"), 5, Some("rank"))}) r
          |LEFT JOIN es ON r.qdoc = es.qdoc
-         |WHERE r.rank <= 5 ORDER BY query_doc, rank""".stripMargin,
+         |ORDER BY query_doc, rank""".stripMargin,
     "text_nb_classifier" ->
       s"""WITH $nbScoredCtes
-         |SELECT true_lang, pred_cand AS pred_lang, COUNT(*) AS n_docs FROM (
-         |  SELECT doc_id, true_lang, pred_cand,
-         |    row_number() OVER (PARTITION BY doc_id
-         |      ORDER BY score DESC, pred_cand ASC) AS rn
-         |  FROM sc) WHERE rn = 1
+         |SELECT true_lang, pred_cand AS pred_lang, COUNT(*) AS n_docs
+         |FROM (${topKSql("sc", Seq("doc_id"), Seq("score DESC", "pred_cand ASC"), 1, None)})
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // Shares the nb-score CTEs; the softmax replay mirrors the engine's
-    // max-shift nano-integer quantization exactly.
+    // The softmax replay mirrors the engine's max-shift nano-integer
+    // quantization exactly.
     "ml_calibration_bins" ->
-      s"""WITH $nbScoredCtes,
-         |mx AS (SELECT doc_id, MAX(score) AS smax FROM sc GROUP BY 1),
-         |soft AS (
-         |  SELECT sc.doc_id, sc.true_lang, sc.pred_cand, sc.score,
-         |    CAST(ROUND(exp(CAST(sc.score - mx.smax AS DOUBLE) / 1e6)
-         |      * 1e9, 0) AS BIGINT) AS nano
-         |  FROM sc JOIN mx ON sc.doc_id = mx.doc_id),
-         |den AS (
-         |  SELECT doc_id, CAST(SUM(nano) AS BIGINT) AS dn
-         |  FROM soft GROUP BY 1),
-         |pr AS (
-         |  SELECT doc_id, true_lang, pred_cand,
-         |    row_number() OVER (PARTITION BY doc_id
-         |      ORDER BY score DESC, pred_cand ASC) AS rn
-         |  FROM soft),
+      s"""WITH $calibPredSql,
          |pz AS (
          |  SELECT CASE WHEN pr.true_lang = pr.pred_cand THEN 1 ELSE 0 END
          |      AS ok,
          |    LEAST(CAST(FLOOR((1e9 / dn) * 10) AS BIGINT) + 1, 10) AS bin,
          |    CAST(ROUND((1e9 / dn) * 1e6, 0) AS BIGINT) AS confm
-         |  FROM pr JOIN den ON pr.doc_id = den.doc_id
-         |  WHERE pr.rn = 1),
+         |  FROM pr JOIN den ON pr.doc_id = den.doc_id),
          |bins AS (
          |  SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |    CAST(SUM(confm) AS BIGINT) AS sconf,
@@ -3034,27 +2990,12 @@ object TextOps {
     // Same bins CTEs as ml_calibration_bins; the minimax PAV tail runs
     // on the fixed 10-bin frame.
     "ml_isotonic_calibration" ->
-      s"""WITH $nbScoredCtes,
-         |mx AS (SELECT doc_id, MAX(score) AS smax FROM sc GROUP BY 1),
-         |soft AS (
-         |  SELECT sc.doc_id, sc.true_lang, sc.pred_cand, sc.score,
-         |    CAST(ROUND(exp(CAST(sc.score - mx.smax AS DOUBLE) / 1e6)
-         |      * 1e9, 0) AS BIGINT) AS nano
-         |  FROM sc JOIN mx ON sc.doc_id = mx.doc_id),
-         |den AS (
-         |  SELECT doc_id, CAST(SUM(nano) AS BIGINT) AS dn
-         |  FROM soft GROUP BY 1),
-         |pr AS (
-         |  SELECT doc_id, true_lang, pred_cand,
-         |    row_number() OVER (PARTITION BY doc_id
-         |      ORDER BY score DESC, pred_cand ASC) AS rn
-         |  FROM soft),
+      s"""WITH $calibPredSql,
          |pz AS (
          |  SELECT CASE WHEN pr.true_lang = pr.pred_cand THEN 1 ELSE 0 END
          |      AS ok,
          |    LEAST(CAST(FLOOR((1e9 / dn) * 10) AS BIGINT) + 1, 10) AS bin
-         |  FROM pr JOIN den ON pr.doc_id = den.doc_id
-         |  WHERE pr.rn = 1),
+         |  FROM pr JOIN den ON pr.doc_id = den.doc_id),
          |bins AS (
          |  SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |    CAST(SUM(ok) AS BIGINT) AS n_correct
@@ -3299,14 +3240,12 @@ object TextOps {
     "text_unigram_save_load" -> ugTrainSql,
     "text_unigram_encode" ->
       s"""WITH ${ugCtesSql(UgEmRounds + 1)}
-         |SELECT word, freq, n_pieces, seg FROM (
-         |  SELECT word, freq,
-         |    len(string_split(trim(seg), ' ')) AS n_pieces,
-         |    trim(seg) AS seg,
-         |    row_number() OVER (ORDER BY freq DESC, word ASC) AS rk
-         |  FROM ugfin${UgEmRounds + 1}
-         |  WHERE len(word) >= $UgEncodeMinLen)
-         |WHERE rk <= $UgEncodeTopN ORDER BY word""".stripMargin,
+         |SELECT word, freq, n_pieces, seg FROM (${topKSql(
+           s"""(SELECT word, freq, len(string_split(trim(seg), ' ')) AS n_pieces,
+              |    trim(seg) AS seg
+              |  FROM ugfin${UgEmRounds + 1} WHERE len(word) >= $UgEncodeMinLen)""".stripMargin,
+           Nil, Seq("freq DESC", "word ASC"), UgEncodeTopN, None)})
+         |ORDER BY word""".stripMargin,
     "text_bpe_encode" -> {
       // the encoder covers EVERY distinct word (the freq>=2 guard prunes
       // the TRAINING table only), so the merges replay here as nested
@@ -3388,13 +3327,12 @@ object TextOps {
          |HAVING COUNT(*) > (SELECT COUNT(*) FROM tok) / 200.0
          |ORDER BY cnt DESC, tok ASC""".stripMargin,
     "sample_group_hash_topk" ->
-      s"""SELECT source, rank, doc_id FROM (
-         |  SELECT source, doc_id,
-         |    row_number() OVER (PARTITION BY source ORDER BY
-         |      ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")} % 1000000 ASC,
-         |      doc_id ASC) AS rank
-         |  FROM documents)
-         |WHERE rank <= 5 ORDER BY source, rank""".stripMargin,
+      s"""SELECT source, rank, doc_id FROM (${topKSql(
+           s"""(SELECT source, doc_id,
+              |    ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")} % 1000000 AS h
+              |  FROM documents)""".stripMargin,
+           Seq("source"), Seq("h ASC", "doc_id ASC"), 5, Some("rank"))})
+         |ORDER BY source, rank""".stripMargin,
     "text_ccnet_buckets" ->
       s"""WITH t AS (SELECT doc_id, lang, ${tokensSql("text")} AS toks FROM documents),
          |db AS (
@@ -3521,12 +3459,9 @@ object TextOps {
          |    ROUND(-ln((${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")}
          |        + 1) / 1000000008.0) / w_tok, 9) AS ekey
          |  FROM base WHERE w_tok >= 1),
-         |r AS (
-         |  SELECT *, row_number() OVER (PARTITION BY source
-         |    ORDER BY ekey ASC, doc_id ASC) AS pick
-         |  FROM k)
+         |r AS (${topKSql("k", Seq("source"), Seq("ekey ASC", "doc_id ASC"), 10, Some("pick"))})
          |SELECT source, pick, doc_id, w_tok, ekey
-         |FROM r WHERE pick <= 10 ORDER BY source, pick""".stripMargin,
+         |FROM r ORDER BY source, pick""".stripMargin,
     "corpus_mixture_sample" ->
       s"""WITH t AS (
          |  SELECT source, doc_id,
@@ -3598,10 +3533,7 @@ object TextOps {
          |gated AS (
          |  SELECT doc_id, text, len(${tokensSql("text")}) AS n_tok FROM all_docs
          |  WHERE len(${tokensSql("text")}) >= 30),
-         |deduped AS (
-         |  SELECT doc_id, n_tok FROM gated
-         |  QUALIFY row_number() OVER (PARTITION BY md5(text)
-         |    ORDER BY doc_id ASC) = 1),
+         |deduped AS (${topKSql("gated", Seq("md5(text)"), Seq("doc_id ASC"), 1, None)}),
          |sampled AS (
          |  SELECT doc_id, n_tok FROM deduped
          |  WHERE ${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")} % 1000 < 800)
@@ -3614,11 +3546,7 @@ object TextOps {
          |  SELECT word, CAST(COUNT(*) AS BIGINT) AS freq FROM (
          |    SELECT unnest(${tokensSql("text")}) AS word FROM documents)
          |  GROUP BY word),
-         |rk AS (
-         |  SELECT word, freq,
-         |    CAST(row_number() OVER (ORDER BY freq DESC, word ASC)
-         |      AS BIGINT) AS rank
-         |  FROM f QUALIFY rank <= 10000),
+         |rk AS (${topKSql("f", Nil, Seq("freq DESC", "word ASC"), 10000, Some("rank"))}),
          |q AS (
          |  SELECT rank, word, freq,
          |    CAST(ROUND(ln(CAST(rank AS DOUBLE)) * 1e6, 0) AS BIGINT) AS xq,

@@ -131,12 +131,12 @@ case class GroupTopKExec(
   }
 }
 
-/** Column-name API over [[GroupTopKPlan]]. Kept deliberately as an
-  * explicit operator (not an optimizer rewrite of window top-k queries):
-  * Spark 3.5+ already prunes the window form via InferWindowGroupLimit,
-  * so pattern-stealing it would mostly shadow a built-in; the value of
-  * this node is the sort-free, rank-free whole-operator path you opt
-  * into when the rank column isn't wanted.
+/** Column-name API over [[GroupTopKPlan]]. The engine's top-k rule is
+  * [[graft.ops.Ranking.topK]] (the window form, which Spark prunes via
+  * InferWindowGroupLimit); this operator is its deliberate alternate
+  * form behind `o4_group_topk_exec`: sort-free and rank-free. It is not
+  * an optimizer rewrite of window top-k queries, which would mostly
+  * shadow that built-in.
   */
 object GroupTopK {
   /** Top-k rows per group under (col, descending?) orderings with all

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.Tables
+import graft.ops.Ranking.{topK, topKSql}
 
 /** Time-windowed / incremental semantics (SURVEY §2.9, §7.1 M8).
   *
@@ -55,11 +56,7 @@ object StreamingOps {
     // key; state per key is one row, bounded by the watermark at scale.
     "stream_dedup_keys" -> ((s, d) => {
       import s.implicits._
-      val w = Window.partitionBy($"user_id", $"event_type")
-        .orderBy($"ts".asc, $"event_id".asc)
-      events(s, d)
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
+      topK(events(s, d), Seq($"user_id", $"event_type"), Seq($"ts".asc, $"event_id".asc), 1, None)
         .select($"user_id", $"event_type",
           $"event_id".as("first_event_id"), $"ts".as("first_ts"))
         .orderBy("user_id", "event_type")
@@ -589,11 +586,9 @@ object StreamingOps {
         |FROM s GROUP BY user_id, sid
         |ORDER BY user_id, session_start""".stripMargin,
     "stream_dedup_keys" ->
-      """SELECT user_id, event_type, event_id AS first_event_id, ts AS first_ts
-        |FROM events
-        |QUALIFY row_number() OVER (PARTITION BY user_id, event_type
-        |  ORDER BY ts ASC, event_id ASC) = 1
-        |ORDER BY user_id, event_type""".stripMargin,
+      s"""SELECT user_id, event_type, event_id AS first_event_id, ts AS first_ts
+         |FROM (${topKSql("events", Seq("user_id", "event_type"), Seq("ts ASC", "event_id ASC"), 1, None)})
+         |ORDER BY user_id, event_type""".stripMargin,
     "stream_user_transitions" ->
       """WITH o AS (
         |  SELECT event_type,

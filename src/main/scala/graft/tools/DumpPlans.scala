@@ -74,7 +74,7 @@ object DumpPlans {
       "dedup_substring_exact" ->
         "Exact substring spans: checkpointed window firehose, df-bounded pair join, gaps-and-islands diagonal runs",
       "sample_weighted_ares" ->
-        "Weighted WOR sample: map-side exponential keys, one per-stratum rank window (GroupTopK shape)",
+        "Weighted WOR sample: map-side exponential keys, one per-stratum topK",
       "dedup_bloom_contamination" ->
         "Bloom decontamination: <=4096-row broadcast bit table, map-side probe, count-k conjunction, one doc aggregate",
       "ann_ivfpq_topk" ->

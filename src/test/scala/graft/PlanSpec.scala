@@ -318,6 +318,90 @@ class PlanSpec extends SparkSpec {
         " boundedness argument")
   }
 
+  /** Every unpartitioned window written under src/main — a
+    * `Window.orderBy` with no `partitionBy`, or a global `topK` with
+    * `keys = Nil` — as (file, the trimmed text of its line, the query it
+    * serves). Why that query's input is row-bounded is its
+    * [[unpartitionedWindowBounded]] entry.
+    */
+  private val unpartitionedSites: Seq[(String, String, String)] = Seq(
+    ("Aggregates.scala",
+      """val w = Window.orderBy($"day").rowsBetween(Window.unboundedPreceding, Window.currentRow)""",
+      "w_running_daily_purchases"),
+    ("Aggregates.scala", """val w = Window.orderBy($"day")""", "w_day_over_day_delta"),
+    ("Aggregates.scala", """max($"bmax").over(Window.orderBy(desc("bkt"))""", "a_pareto_front"),
+    ("Aggregates.scala", """val wRank = Window.orderBy(desc("abs_t"), asc("type_a"), asc("type_b"))""",
+      "a_bh_fdr"),
+    ("Aggregates.scala", """val w = Window.orderBy($"day")""", "privacy_dp_accounting"),
+    ("Aggregates.scala", """val w = Window.orderBy($"bin")""", "privacy_dp_quantile"),
+    ("Aggregates.scala", """val w = Window.orderBy($"day")""", "a_sprt_monitor"),
+    ("Aggregates.scala", """val wPrev = Window.orderBy($"dur")""", "a_survival_km"),
+    ("Aggregates.scala", """val wCum = Window.orderBy($"dur")""", "a_survival_km"),
+    ("Aggregates.scala", """val wCum = Window.orderBy($"bkt")""", "a_gini_concentration"),
+    ("Aggregates.scala", """val w = Window.orderBy($"vm")""", "a_mann_whitney_arms"),
+    ("MLOps.scala", """val wc = Window.orderBy($"bin")""", "ml_decision_stump"),
+    ("SimilarityOps.scala",
+      """.withColumn("rank", row_number().over(Window.orderBy(ord: _*)))""", "ml_knn_shapley"),
+    ("TextOps.scala",
+      """topK(vocab, Nil, Seq(desc("cnt"), asc("piece")), UgTrainTopN, Some("rank"))""",
+      "text_unigram_train"),
+    ("TextOps.scala", """val wub = Window.orderBy(asc("ub"), asc("word"))""",
+      "retrieval_maxscore_topk"),
+    ("TextOps.scala", """Window.orderBy(desc("score"), asc("doc_id"))))""",
+      "retrieval_maxscore_topk"),
+    ("TextOps.scala",
+      """topK(segs, Nil, Seq(desc("freq"), asc("word")), UgEncodeTopN, None)""",
+      "text_unigram_encode"),
+    ("TextOps.scala", """val wc = Window.orderBy($"bin")""", "ml_isotonic_calibration"),
+    ("TextOps.scala", """.withColumn("cum", sum($"cb").over(Window.orderBy($"alpha_m")""",
+      "ml_conformal_split"),
+    ("TextOps.scala", """val wAsc = Window.orderBy($"cap".asc, $"source".asc)""",
+      "corpus_unimax_weights"),
+    ("TextOps.scala", """val w = Window.orderBy($"b")""", "text_heaps_law"),
+    ("TextOps.scala", """val wb = Window.orderBy($"bin").rowsBetween(Window.unboundedPreceding, -1)""",
+      "corpus_curriculum_phases"),
+  )
+
+  test("every unpartitioned window under src/main is audited") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    // the second top-level argument of a topK( call starting at `i`
+    def keysArg(src: String, i: Int): String = {
+      var depth = 0
+      val commas = (i until src.length).iterator.map { j =>
+        src(j) match {
+          case '(' | '[' => depth += 1
+          case ')' | ']' => depth -= 1
+          case _ =>
+        }
+        (j, depth == 1 && src(j) == ',')
+      }.filter(_._2).map(_._1).take(2).toSeq
+      src.substring(commas(0) + 1, commas(1)).trim
+    }
+    val sites = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString).flatMap { p =>
+        val src = Files.readString(p)
+        val lines = src.linesIterator.toIndexedSeq
+        val lineStarts = lines.scanLeft(0)(_ + _.length + 1)
+        def lineAt(i: Int) = lines(lineStarts.lastIndexWhere(_ <= i)).trim
+        val windows = lines.map(_.trim)
+          .filter(l => l.contains("Window.orderBy(") && !l.startsWith("//") && !l.startsWith("*"))
+        val globalTopK = "(?<!\\w)(?<!GroupTopK\\.)topK\\(".r.findAllMatchIn(src).map(_.start)
+          .filter(i => keysArg(src, i + 4) == "Nil").map(lineAt)
+        (windows ++ globalTopK).map(p.getFileName.toString -> _)
+      }
+    val audited = unpartitionedSites.groupBy(e => (e._1, e._2)).map { case (k, v) => k -> v.size }
+    val found = sites.groupBy(identity).map { case (k, v) => k -> v.size }
+    val unaudited = found.filter { case (site, n) => n > audited.getOrElse(site, 0) }
+    assert(unaudited.isEmpty,
+      s"unpartitioned window or global topK not in unpartitionedSites: $unaudited — give it" +
+        " a partition key, or add it with its query and a row-bound argument")
+    val stale = audited.filter { case (site, n) => found.getOrElse(site, 0) != n }
+    assert(stale.isEmpty, s"unpartitionedSites entries with no matching site: $stale")
+    val unbounded = unpartitionedSites.map(_._3).filterNot(unpartitionedWindowBounded.contains)
+    assert(unbounded.isEmpty, s"sites whose query has no row-bound argument: $unbounded")
+  }
+
   test("no unintended cartesian or nested-loop joins across the suite") {
     val offenders = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(nonEquiIntended)
