@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Ranking.{topK, topKSql}
+import graft.ops.QRound.{qroundLong, qroundLongSql}
 
 /** Differential fuzz surface over the relational core.
   *
@@ -511,17 +512,21 @@ object FuzzQueries {
         .cast("long")
     case KUserBucket(m) => col("user_id") % lit(m)
     case KValBucket(w)  =>
-      expr(s"cast(round(value * 1e6, 0) as bigint) div $w")
+      expr(s"${qroundLongSql("value * 1e6")} div $w")
   }).as(k.name)
+
+  /** `value` as an exact micro long, the quantity every micro aggregate
+    * sums. */
+  private def valueMicro: Column = qroundLong(col("value") * 1e6)
 
   private def sparkAgg(a: Agg): Column = a match {
     case CountAll => count(lit(1)).as("n")
     case SumMicro =>
-      sum(expr("cast(round(value * 1e6, 0) as bigint)")).as("sum_micro")
+      sum(valueMicro).as("sum_micro")
     case MinMicro =>
-      min(expr("cast(round(value * 1e6, 0) as bigint)")).as("min_micro")
+      min(valueMicro).as("min_micro")
     case MaxMicro =>
-      max(expr("cast(round(value * 1e6, 0) as bigint)")).as("max_micro")
+      max(valueMicro).as("max_micro")
     case NUsers => countDistinct(col("user_id")).as("n_users")
   }
 
@@ -589,7 +594,7 @@ object FuzzQueries {
     sh.preds.foreach(p => ev = ev.filter(sparkPred(p)))
     val metric =
       if (sh.sumMetric)
-        sum(expr("cast(round(value * 1e6, 0) as bigint)")).as("x")
+        sum(valueMicro).as("x")
       else count(lit(1)).cast("long").as("x")
     val daily = ev.groupBy(sparkKey(sh.part), to_date(col("ts")).as("day"))
       .agg(metric)
@@ -620,7 +625,7 @@ object FuzzQueries {
     }).as("w")
     val aggs = count(lit(1)).as("n") +:
       (if (sh.sumMetric)
-        Seq(sum(expr("cast(round(value * 1e6, 0) as bigint)")).as("sum_micro"))
+        Seq(sum(valueMicro).as("sum_micro"))
       else Nil)
     val out = ev.groupBy(winCol +: sh.key.map(sparkKey).toSeq: _*)
       .agg(aggs.head, aggs.tail: _*)
@@ -818,7 +823,7 @@ object FuzzQueries {
     val joined = anchors.join(others, cond,
       if (sh.anti) "left_anti" else "left_semi")
     val aggs = Seq(count(lit(1)).as("n"),
-      sum(expr("cast(round(value * 1e6, 0) as bigint)")).as("sum_micro"))
+      sum(valueMicro).as("sum_micro"))
     if (sh.byDay)
       joined.groupBy(to_date(col("ts")).as("day"))
         .agg(aggs.head, aggs.tail: _*).orderBy("day")
@@ -841,7 +846,7 @@ object FuzzQueries {
       if (sh.byDay) ("CAST(e.ts AS DATE) AS day,\n  ", "\nGROUP BY 1 ORDER BY 1")
       else ("", "")
     s"""SELECT $keyOut${""}COUNT(*) AS n,
-       |  CAST(SUM(CAST(ROUND(e.value * 1e6, 0) AS BIGINT)) AS BIGINT)
+       |  CAST(SUM(${qroundLongSql("e.value * 1e6")}) AS BIGINT)
        |    AS sum_micro
        |FROM events e
        |WHERE e.event_type = '${sh.anchor}'$predSql
@@ -915,14 +920,14 @@ object FuzzQueries {
   private def sparkJAgg(a: JAgg): Column = a match {
     case JCount => count(lit(1)).as("n")
     case JSumQty =>
-      sum(expr("cast(round(l_quantity * 1e6, 0) as bigint)"))
+      sum(qroundLong(col("l_quantity") * 1e6))
         .as("sum_qty_micro")
     case JRevenue =>
-      sum(expr(
-        "cast(round(l_extendedprice * (1.0 - l_discount) * 1e6, 0) as bigint)"))
+      sum(qroundLong(
+        col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 1e6))
         .as("revenue_micro")
     case JMaxPrice =>
-      max(expr("cast(round(o_totalprice * 1e6, 0) as bigint)"))
+      max(qroundLong(col("o_totalprice") * 1e6))
         .as("max_price_micro")
     case JNCust => countDistinct(col("o_custkey")).as("n_cust")
   }
@@ -960,16 +965,16 @@ object FuzzQueries {
       "CAST((datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) + 4) % 7" +
         " AS BIGINT)"
     case KUserBucket(m) => s"user_id % $m"
-    case KValBucket(w)  => s"CAST(ROUND(value * 1e6, 0) AS BIGINT) // $w"
+    case KValBucket(w)  => s"${qroundLongSql("value * 1e6")} // $w"
   }
 
   private def sqlAgg(a: Agg): String = a match {
     case CountAll => "COUNT(*) AS n"
     case SumMicro =>
-      "CAST(SUM(CAST(ROUND(value * 1e6, 0) AS BIGINT)) AS BIGINT)" +
+      s"CAST(SUM(${qroundLongSql("value * 1e6")}) AS BIGINT)" +
         " AS sum_micro"
-    case MinMicro => "MIN(CAST(ROUND(value * 1e6, 0) AS BIGINT)) AS min_micro"
-    case MaxMicro => "MAX(CAST(ROUND(value * 1e6, 0) AS BIGINT)) AS max_micro"
+    case MinMicro => s"MIN(${qroundLongSql("value * 1e6")}) AS min_micro"
+    case MaxMicro => s"MAX(${qroundLongSql("value * 1e6")}) AS max_micro"
     case NUsers   => "COUNT(DISTINCT user_id) AS n_users"
   }
 
@@ -1049,7 +1054,7 @@ object FuzzQueries {
       else sh.preds.map(sqlPred).mkString("\n  WHERE ", "\n    AND ", "")
     val metric =
       if (sh.sumMetric)
-        "CAST(SUM(CAST(ROUND(value * 1e6, 0) AS BIGINT)) AS BIGINT)"
+        s"CAST(SUM(${qroundLongSql("value * 1e6")}) AS BIGINT)"
       else "COUNT(*)"
     val p = sh.part.name
     val over = s"PARTITION BY $p ORDER BY day"
@@ -1091,7 +1096,7 @@ object FuzzQueries {
       sh.key.map(k => s",\n  ${sqlKeyExpr(k)} AS ${k.name}").getOrElse("")
     val sumSel =
       if (sh.sumMetric)
-        ",\n  CAST(SUM(CAST(ROUND(value * 1e6, 0) AS BIGINT)) AS BIGINT)" +
+        s",\n  CAST(SUM(${qroundLongSql("value * 1e6")}) AS BIGINT)" +
           " AS sum_micro"
       else ""
     val keyOrd = sh.key.map(k => s", ${k.name}").getOrElse("")
@@ -1125,7 +1130,7 @@ object FuzzQueries {
         val part = sh.key.map(k => s"PARTITION BY ${k.name} ").getOrElse("")
         val vmSel =
           if (sh.sumMetric)
-            ",\n    CAST(ROUND(value * 1e6, 0) AS BIGINT) AS vm"
+            s",\n    ${qroundLongSql("value * 1e6")} AS vm"
           else ""
         val sumAgg =
           if (sh.sumMetric) ",\n  CAST(SUM(vm) AS BIGINT) AS sum_micro"
@@ -1224,13 +1229,13 @@ object FuzzQueries {
   private def sqlJAgg(a: JAgg): String = a match {
     case JCount => "COUNT(*) AS n"
     case JSumQty =>
-      "CAST(SUM(CAST(ROUND(l_quantity * 1e6, 0) AS BIGINT)) AS BIGINT)" +
+      s"CAST(SUM(${qroundLongSql("l_quantity * 1e6")}) AS BIGINT)" +
         " AS sum_qty_micro"
     case JRevenue =>
-      "CAST(SUM(CAST(ROUND(l_extendedprice * (1.0 - l_discount) * 1e6, 0)" +
-        " AS BIGINT)) AS BIGINT) AS revenue_micro"
+      s"CAST(SUM(${qroundLongSql("l_extendedprice * (1.0 - l_discount) * 1e6")})" +
+        " AS BIGINT) AS revenue_micro"
     case JMaxPrice =>
-      "MAX(CAST(ROUND(o_totalprice * 1e6, 0) AS BIGINT)) AS max_price_micro"
+      s"MAX(${qroundLongSql("o_totalprice * 1e6")}) AS max_price_micro"
     case JNCust => "COUNT(DISTINCT o_custkey) AS n_cust"
   }
 

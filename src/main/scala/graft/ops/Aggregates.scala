@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import Ranking.{topK, topKSql}
+import QRound.{qroundLong, qroundLongSql}
+import DedupOps.{polyHash, uniform, uniformSql}
 
 /** Aggregation + window + time-bucketing core. Covers SURVEY.md §2.4 A1-A8,
   * §2.5 W1-W3, §2.8 F15-F29 (date/json/bucketing/histogram), §2.9 batch
@@ -128,6 +130,104 @@ object Aggregates {
       .withColumn("rn", $"off" + row_number().over(wInBin))
       .drop("bin", "off")
   }
+
+  /** HyperLogLog width: registers per key. */
+  private val HllM = 16
+
+  /** (keys..., j, r): the HyperLogLog registers of `frame`'s `user_id`
+    * per key. With h = polyHash(user_id), register j = h % M and rho =
+    * trailing-zeros(h div M) + 1 (27 when h div M = 0); r = max rho.
+    * Trailing zeros are geometric(1/2) for uniform hashes (the FM/PCSA
+    * orientation, chosen because (w & -w) is exact integer algebra in
+    * both engines, where leading-zero counts would need a float log2).
+    * The table is M rows per key whatever the corpus size, and max-merges
+    * across shards. Twin: [[hllRegistersSql]].
+    */
+  private[graft] def hllRegisters(frame: DataFrame, keys: String*): DataFrame = {
+    val k = keys.map(col)
+    frame.select(k :+ polyHash(col("user_id").cast("string")).as("h"): _*)
+      .select(k ++ Seq((col("h") % HllM).as("j"), expr(s"h div $HllM").as("w")): _*)
+      .withColumn("rho", when(col("w") === 0, lit(27))
+        .otherwise(expr("bit_count((w & -w) - 1) + 1")))
+      .groupBy(k :+ col("j"): _*).agg(max(col("rho")).as("r"))
+  }
+
+  /** [[hllRegisters]]' DuckDB twin: a SELECT of (keys..., j, r) from `from`. */
+  private[graft] def hllRegistersSql(from: String, keys: String*): String = {
+    val k = keys.mkString(", ")
+    val h = DedupOps.polyHashSql("CAST(user_id AS VARCHAR)")
+    s"""SELECT $k, j,
+       |    MAX(CASE WHEN w = 0 THEN 27 ELSE bit_count((w & -w) - 1) + 1 END) AS r
+       |  FROM (SELECT $k, $h % $HllM AS j, $h // $HllM AS w FROM $from)
+       |  GROUP BY ${(1 to keys.size + 1).mkString(", ")}""".stripMargin
+  }
+
+  /** (keys..., hll_est): the HyperLogLog estimate of every key of `frame`
+    * from its [[hllRegisters]] `regs`, an absent register counting 0: the
+    * bias-corrected harmonic mean 0.673·M²/Σ2^-r with the small-range
+    * linear-counting correction M·ln(M/zeros), rounded 3dp. Every step is
+    * deterministic, so DuckDB reproduces it bit for bit before the
+    * rounding. Twin: [[hllEstimateSql]].
+    */
+  private[graft] def hllEstimate(frame: DataFrame, regs: DataFrame, keys: String*): DataFrame = {
+    val k = keys.map(col)
+    frame.select(k: _*).distinct()
+      .select(k :+ explode(sequence(lit(0), lit(HllM - 1))).as("j"): _*)
+      .join(regs, keys :+ "j", "left").na.fill(0, Seq("r"))
+      .groupBy(k: _*).agg(
+        sum(pow(lit(2.0), -col("r"))).as("s"),
+        sum(when(col("r") === 0, 1).otherwise(0)).as("zeros"))
+      .withColumn("raw", lit(0.673) * lit(HllM.toDouble * HllM) / col("s"))
+      .select(k :+ round(
+        when(col("raw") <= 2.5 * HllM && col("zeros") > 0,
+          lit(HllM.toDouble) * log(lit(HllM.toDouble) / col("zeros")))
+          .otherwise(col("raw")), 3).as("hll_est"): _*)
+  }
+
+  /** [[hllEstimate]]'s DuckDB twin: a SELECT of (keys..., hll_est) over
+    * the keys of `from` and the register table `regs`.
+    */
+  private[graft] def hllEstimateSql(from: String, regs: String, keys: String*): String = {
+    val k = keys.mkString(", ")
+    s"""SELECT $k,
+       |    ROUND(CASE WHEN raw <= ${2.5 * HllM} AND zeros > 0
+       |      THEN ${HllM.toDouble} * ln(${HllM.toDouble} / zeros) ELSE raw END, 3) AS hll_est
+       |  FROM (
+       |    SELECT $k, 0.673 * ${HllM.toDouble * HllM} / s AS raw, zeros
+       |    FROM (
+       |      SELECT $k, SUM(pow(2.0, -r)) AS s,
+       |        SUM(CASE WHEN r = 0 THEN 1 ELSE 0 END) AS zeros
+       |      FROM (
+       |        SELECT ${keys.map("dom." + _).mkString(", ")}, COALESCE(rg.r, 0) AS r
+       |        FROM (SELECT DISTINCT $k, g.j
+       |          FROM $from CROSS JOIN (SELECT unnest(range($HllM)) AS j) g) dom
+       |        LEFT JOIN $regs rg
+       |          ON ${(keys :+ "j").map(c => s"dom.$c = rg.$c").mkString(" AND ")})
+       |      GROUP BY ${(1 to keys.size).mkString(", ")}))""".stripMargin
+  }
+
+  /** (keys..., n, sv, ssv): per group of `frame`, the row count and the
+    * exact sums of vm and vm², vm = `value` as a milli long, so the
+    * moments are bit-identical on any partitioning. Milli, not micro:
+    * vm² ≤ ~3e11 keeps Σvm² in BIGINT far beyond this corpus (at true
+    * 100 TB row counts the accumulator goes DECIMAL). Twin:
+    * [[milliMomentsSql]].
+    */
+  private def milliMoments(frame: DataFrame, keys: Column*): DataFrame =
+    frame.withColumn("vm", qroundLong(col("value") * 1e3))
+      .groupBy(keys: _*)
+      .agg(count(lit(1)).as("n"), sum(col("vm")).as("sv"),
+        sum(col("vm") * col("vm")).as("ssv"))
+
+  /** [[milliMoments]]' DuckDB twin: a SELECT from `from` grouped by the
+    * select items `keys` (an item may carry an alias).
+    */
+  private def milliMomentsSql(from: String, keys: String*): String =
+    s"""SELECT ${keys.mkString(", ")}, CAST(COUNT(*) AS BIGINT) AS n,
+       |    CAST(SUM(vm) AS BIGINT) AS sv,
+       |    CAST(SUM(vm * vm) AS BIGINT) AS ssv
+       |  FROM (SELECT *, ${qroundLongSql("value * 1e3")} AS vm FROM $from)
+       |  GROUP BY ${(1 to keys.size).mkString(", ")}""".stripMargin
 
   val queries: Map[String, Q] = Map(
     // A1 (bbc_news_dag.py:26-37): group-by key + count + collect-set +
@@ -472,7 +572,7 @@ object Aggregates {
         .filter($"event_type".isin("click", "purchase"))
         .select($"event_type", $"value")
       val ranked = binRanked(s, ev, Seq.empty)
-        .withColumn("vm", round($"value" * 1e3, 0).cast("long"))
+        .withColumn("vm", qroundLong($"value" * 1e3))
       val g = ranked.groupBy($"vm")
         .agg(min($"rn").as("mn"), count(lit(1)).as("c"),
           sum(when($"event_type" === "click", 1L).otherwise(0L)).as("ca"))
@@ -501,7 +601,7 @@ object Aggregates {
     "a_ks_test" -> ((s, d) => {
       import s.implicits._
       val ev = events(s, d)
-        .select($"event_type", round($"value" * 1e3, 0).cast("long").as("vm"))
+        .select($"event_type", qroundLong($"value" * 1e3).as("vm"))
       val types = ev.select($"event_type").distinct()
       val pairs = types.toDF("t1").crossJoin(types.toDF("t2"))
         .filter($"t1" < $"t2")
@@ -560,7 +660,7 @@ object Aggregates {
       // micro-quantize each of the 9 chi² terms before summing so the
       // reduction is order-free exact integer addition
       val chi2 = scored.agg(round(
-        sum(round($"chi_term" * 1e6, 0).cast("long")) / 1e6, 4).as("chi2"))
+        sum(qroundLong($"chi_term" * 1e6)) / 1e6, 4).as("chi2"))
       scored.select($"digit", $"n",
           round($"obs_share", 6).as("obs_share"),
           round($"benford_share", 6).as("benford_share"))
@@ -611,7 +711,7 @@ object Aggregates {
       val ev = events(s, d)
       val purchases = ev.filter($"event_type" === "purchase")
         .select($"event_id".as("p_id"), $"user_id", $"ts".as("p_ts"),
-          round($"value" * 1e6, 0).cast("long").as("v_micro"))
+          qroundLong($"value" * 1e6).as("v_micro"))
         .localCheckpoint(false) // probed by the pair join AND the anti side
       val clicks = ev.filter($"event_type" === "click")
         .select($"user_id", $"ts".as("c_ts"), $"event_id".as("c_id"),
@@ -703,15 +803,15 @@ object Aggregates {
       val tot = xy.agg(sum($"nxy").as("nn"))
       val mi = xy.join(nx, "event_type").join(ny, "dow")
         .crossJoin(broadcast(tot))
-        .select(round(($"nxy".cast("double") / $"nn")
+        .select(qroundLong(($"nxy".cast("double") / $"nn")
           * log($"nn".cast("double") * $"nxy"
-            / ($"nx".cast("double") * $"ny")) * 1e6, 0).cast("long")
+            / ($"nx".cast("double") * $"ny")) * 1e6)
           .as("t"))
         .agg(sum($"t").as("mi_u"))
       def entropy(m: DataFrame, c: String): DataFrame =
         m.crossJoin(broadcast(tot))
-          .select(round((col(c).cast("double") / $"nn")
-            * log(col(c).cast("double") / $"nn") * -1e6, 0).cast("long")
+          .select(qroundLong((col(c).cast("double") / $"nn")
+            * log(col(c).cast("double") / $"nn") * -1e6)
             .as("t"))
           .agg(sum($"t").as(s"h_$c"))
       mi.crossJoin(broadcast(entropy(nx, "nx")))
@@ -753,7 +853,7 @@ object Aggregates {
     "a_pareto_front" -> ((s, d) => {
       import s.implicits._
       val prof = events(s, d).groupBy($"user_id")
-        .agg(sum(round($"value" * 1e6, 0).cast("long")).as("tv_micro"),
+        .agg(sum(qroundLong($"value" * 1e6)).as("tv_micro"),
           count(lit(1)).as("n_events"))
         .localCheckpoint(false) // built once; probed by prune + verify
       val st = prof.agg(min($"tv_micro").as("lo"), max($"tv_micro").as("hi"))
@@ -811,7 +911,7 @@ object Aggregates {
       import s.implicits._
       val ev = events(s, d)
         .select(to_date($"ts").as("day"),
-          round($"value" * 1e3, 0).cast("long").as("vm"),
+          qroundLong($"value" * 1e3).as("vm"),
           unix_micros($"ts").as("tus"), $"event_id")
       val w = Window.partitionBy($"day").orderBy($"tus".asc, $"event_id".asc)
       ev.withColumn("wus", lead($"tus", 1).over(w) - $"tus")
@@ -897,11 +997,11 @@ object Aggregates {
     "a_holt_linear" -> ((s, d) => {
       import s.implicits._
       val daily = events(s, d).groupBy(to_date($"ts").as("day"))
-        .agg(sum(round($"value" * 1e6, 0).cast("long")).as("ym"))
+        .agg(sum(qroundLong($"value" * 1e6)).as("ym"))
       val arr = daily.agg(sort_array(collect_list(struct($"day", $"ym")))
         .as("ys"))
-      val lNew = "CAST(round(0.5 * y.ym + 0.5 * (acc.l + acc.b), 0) AS BIGINT)"
-      val bNew = s"CAST(round(0.3 * ($lNew - acc.l) + 0.7 * acc.b, 0) AS BIGINT)"
+      val lNew = qroundLongSql("0.5 * y.ym + 0.5 * (acc.l + acc.b)")
+      val bNew = qroundLongSql(s"0.3 * ($lNew - acc.l) + 0.7 * acc.b")
       arr.select(explode(expr(
         s"""aggregate(
            |  ys,
@@ -1000,7 +1100,7 @@ object Aggregates {
       // outlier count each re-ran the whole exact-rank pass) and the
       // 5-row quartile table (three consumers)
       val r1 = binRanked(s, ev, Seq("event_type"))
-        .withColumn("vm", round($"value" * 1e3, 0).cast("long"))
+        .withColumn("vm", qroundLong($"value" * 1e3))
         .localCheckpoint(false)
       val qs = r1.groupBy($"event_type").agg(
         max($"n").as("n"),
@@ -1035,21 +1135,14 @@ object Aggregates {
 
     // Welch's t-test between every event-type pair (the A/B-experiment
     // readout; completes the inference trio with a_bootstrap_ci and
-    // a_chi2_daily_mix). ONE corpus pass accumulates exact integer
-    // (n, Σv, Σv²) per group — micro-quantized, so the 5-row stats
-    // table is bit-identical on any partitioning — then the t statistic
+    // a_chi2_daily_mix). ONE corpus pass accumulates the exact
+    // milliMoments (n, Σvm, Σvm²) per group, so the 5-row stats table
+    // is bit-identical on any partitioning — then the t statistic
     // and Welch–Satterthwaite df are fixed-order double expressions
     // over those integers, evaluated on the tiny pair self-join.
     "a_ttest_welch" -> ((s, d) => {
       import s.implicits._
-      // milli (not micro) quantization: the Σv² accumulator must stay in
-      // BIGINT range — vm² ≤ ~3e11 keeps the sum exact far beyond this
-      // corpus (at true 100 TB row counts the accumulator goes DECIMAL)
-      val g = events(s, d)
-        .withColumn("vm", round($"value" * 1e3, 0).cast("long"))
-        .groupBy($"event_type")
-        .agg(count(lit(1)).as("n"), sum($"vm").as("sv"),
-          sum($"vm" * $"vm").as("ssv"))
+      val g = milliMoments(events(s, d), $"event_type")
         .withColumn("m", $"sv" / 1e3 / $"n")
         .withColumn("v",
           ($"ssv" / 1e6 - ($"sv" / 1e3) * ($"sv" / 1e3) / $"n") / ($"n" - 1))
@@ -1088,11 +1181,7 @@ object Aggregates {
     "a_bh_fdr" -> ((s, d) => {
       import s.implicits._
       val zc = bhZCrit.toSeq
-      val g = events(s, d)
-        .withColumn("vm", round($"value" * 1e3, 0).cast("long"))
-        .groupBy($"event_type")
-        .agg(count(lit(1)).as("n"), sum($"vm").as("sv"),
-          sum($"vm" * $"vm").as("ssv"))
+      val g = milliMoments(events(s, d), $"event_type")
         .withColumn("m", $"sv" / 1e3 / $"n")
         .withColumn("v",
           ($"ssv" / 1e6 - ($"sv" / 1e3) * ($"sv" / 1e3) / $"n") / ($"n" - 1))
@@ -1456,8 +1545,8 @@ object Aggregates {
         .join(gs, Seq("lang", "source", "size_bin", "sens"), "left")
         .na.fill(0L, Seq("cnt"))
         .select($"lang", $"source", $"size_bin", $"gsz",
-          round(abs($"cnt".cast("double") / $"gsz"
-            - $"gcnt".cast("double") / $"nn") * 1e6, 0).cast("long")
+          qroundLong(abs($"cnt".cast("double") / $"gsz"
+            - $"gcnt".cast("double") / $"nn") * 1e6)
             .as("term_micro"))
         .groupBy($"lang", $"source", $"size_bin")
         .agg(max($"gsz").as("gsz"),
@@ -1607,42 +1696,16 @@ object Aggregates {
 
     // HyperLogLog built RELATIONALLY and oracle-checked exactly (unlike
     // a_approx_stats, whose datasketches internals have no SQL twin):
-    // register j = max over values of rho, with j = portable-hash % 16
-    // and rho = trailing-zeros(h div 16) + 1 — trailing zeros are
-    // geometric(1/2) for uniform hashes (the FM/PCSA orientation, chosen
-    // because (w & -w) is exact integer algebra in both engines, where
-    // leading-zero counts would need a float log2). Estimate = the
-    // standard bias-corrected harmonic mean with the small-range
-    // linear-counting correction. Every step is deterministic, so DuckDB
-    // reproduces the estimate bit-for-bit pre-rounding. Scale story: the
-    // register table is groupBy(key, j) max — 16 rows per key regardless
-    // of corpus size, the mergeable persist-partial artifact.
+    // the registers and the estimate are hllRegisters / hllEstimate.
+    // Scale story: the register table is groupBy(key, j) max — 16 rows
+    // per key regardless of corpus size, the mergeable persist-partial
+    // artifact.
     "a_hll_probe" -> ((s, d) => {
       import s.implicits._
-      val M = 16
-      val base = events(s, d).select($"event_type",
-        graft.functions.PolyHash.poly_hash($"user_id".cast("string")).as("h"))
-        .select($"event_type", ($"h" % M).as("j"), expr(s"h div $M").as("w"))
-      val rho = base.withColumn("rho",
-        when($"w" === 0, lit(27))
-          .otherwise(expr("bit_count((w & -w) - 1) + 1")))
-      val regs = rho.groupBy($"event_type", $"j").agg(max($"rho").as("r"))
-      // densify to all 16 registers (absent register = 0)
-      val dom = events(s, d).select($"event_type").distinct()
-        .select($"event_type", explode(sequence(lit(0), lit(M - 1))).as("j"))
-      val full = dom.join(regs, Seq("event_type", "j"), "left")
-        .na.fill(0, Seq("r"))
-      val est = full.groupBy($"event_type").agg(
-        sum(pow(lit(2.0), -$"r")).as("s"),
-        sum(when($"r" === 0, 1).otherwise(0)).as("zeros"))
-        .withColumn("raw", lit(0.673) * lit(M.toDouble * M) / $"s")
-        .withColumn("hll_est", round(
-          when($"raw" <= 2.5 * M && $"zeros" > 0,
-            lit(M.toDouble) * log(lit(M.toDouble) / $"zeros"))
-            .otherwise($"raw"), 3))
-      events(s, d).groupBy($"event_type")
+      val ev = events(s, d)
+      ev.groupBy($"event_type")
         .agg(countDistinct($"user_id").as("exact_users"))
-        .join(est.select($"event_type", $"hll_est"), "event_type")
+        .join(hllEstimate(ev, hllRegisters(ev, "event_type"), "event_type"), "event_type")
         .orderBy("event_type")
     }),
 
@@ -1717,34 +1780,15 @@ object Aggregates {
     // artifact (union = re-aggregation, never a raw re-scan).
     "a_hll_shard_merge" -> ((s, d) => {
       import s.implicits._
-      val M = 16
-      val base = events(s, d).select($"event_type", to_date($"ts").as("day"),
-        graft.functions.PolyHash.poly_hash($"user_id".cast("string")).as("h"))
-        .select($"event_type", $"day", ($"h" % M).as("j"), expr(s"h div $M").as("w"))
-      val rho = base.withColumn("rho",
-        when($"w" === 0, lit(27))
-          .otherwise(expr("bit_count((w & -w) - 1) + 1")))
-      val shardRegs = rho.groupBy($"event_type", $"day", $"j")
-        .agg(max($"rho").as("r"))
+      val ev = events(s, d)
+      val shardRegs = hllRegisters(ev.withColumn("day", to_date($"ts")), "event_type", "day")
       val merged = shardRegs.groupBy($"event_type", $"j").agg(max($"r").as("r"))
       val nShards = shardRegs.select($"event_type", $"day").distinct()
         .groupBy($"event_type").agg(count(lit(1)).as("n_shards"))
-      val dom = events(s, d).select($"event_type").distinct()
-        .select($"event_type", explode(sequence(lit(0), lit(M - 1))).as("j"))
-      val full = dom.join(merged, Seq("event_type", "j"), "left")
-        .na.fill(0, Seq("r"))
-      val est = full.groupBy($"event_type").agg(
-        sum(pow(lit(2.0), -$"r")).as("s"),
-        sum(when($"r" === 0, 1).otherwise(0)).as("zeros"))
-        .withColumn("raw", lit(0.673) * lit(M.toDouble * M) / $"s")
-        .withColumn("hll_est", round(
-          when($"raw" <= 2.5 * M && $"zeros" > 0,
-            lit(M.toDouble) * log(lit(M.toDouble) / $"zeros"))
-            .otherwise($"raw"), 3))
-      events(s, d).groupBy($"event_type")
+      ev.groupBy($"event_type")
         .agg(countDistinct($"user_id").as("exact_users"))
         .join(nShards, "event_type")
-        .join(est.select($"event_type", $"hll_est"), "event_type")
+        .join(hllEstimate(ev, merged, "event_type"), "event_type")
         .orderBy("event_type")
     }),
 
@@ -1893,7 +1937,7 @@ object Aggregates {
       import s.implicits._
       val ev = events(s, d)
         .withColumn("day", to_date($"ts"))
-        .withColumn("vm", round($"value" * 1e6, 0).cast("long"))
+        .withColumn("vm", qroundLong($"value" * 1e6))
       val mx = ev.agg(max($"day").as("mday"))
       val tagged = ev.crossJoin(broadcast(mx))
       def partial(df: DataFrame): DataFrame = df.groupBy($"event_type")
@@ -1926,7 +1970,7 @@ object Aggregates {
       import s.implicits._
       events(s, d)
         .withColumn("day", to_date($"ts"))
-        .withColumn("vm", round($"value" * 1e6, 0).cast("long"))
+        .withColumn("vm", qroundLong($"value" * 1e6))
         .cube($"day", $"event_type")
         .agg(count(lit(1)).as("n"),
           round(sum($"vm") / 1e6, 6).as("sum_value"),
@@ -1987,7 +2031,7 @@ object Aggregates {
         .crossJoin(broadcast(tot))
         .withColumn("e", $"nd".cast("double") * $"nt" / $"n")
         .withColumn("chi_e6",
-          round(($"o" - $"e") * ($"o" - $"e") / $"e" * 1e6, 0).cast("long"))
+          qroundLong(($"o" - $"e") * ($"o" - $"e") / $"e" * 1e6))
         .groupBy($"day")
         .agg(max($"nd").as("n_events"), count(lit(1)).as("n_cells"),
           sum($"chi_e6").as("chi2_e6"))
@@ -2052,14 +2096,10 @@ object Aggregates {
     "privacy_dp_counts" -> ((s, d) => {
       import s.implicits._
       val alpha = math.exp(-1.0) // eps = 1
-      def u(tag: String): Column = // hash in [0, 1e9+6] -> u in (0, 1]
-        (graft.functions.PolyHash.poly_hash(
-          concat(lit(tag), $"event_type")) + 1L).cast("double") /
-          lit(1000000008.0)
-      def qNano(tag: String): Column = // nano-quantized ln u / ln alpha
-        round(log(u(tag)) / log(lit(alpha)) * 1e9, 0).cast("long")
+      def u(tag: String): Column = uniform(polyHash(concat(lit(tag), $"event_type")))
       events(s, d).groupBy($"event_type").agg(count(lit(1)).as("n_true"))
-        .withColumn("q1n", qNano("dp1#")).withColumn("q2n", qNano("dp2#"))
+        .withColumn("q1n", qroundLong(log(u("dp1#")) / log(lit(alpha)) * 1e9))
+        .withColumn("q2n", qroundLong(log(u("dp2#")) / log(lit(alpha)) * 1e9))
         .withColumn("noise",
           expr("(q1n div 1000000000) - (q2n div 1000000000)"))
         .select($"event_type", $"n_true", $"noise",
@@ -2084,14 +2124,12 @@ object Aggregates {
     // count aggregate; noise is per-GROUP map arithmetic.
     "privacy_dp_laplace" -> ((s, d) => {
       import s.implicits._
-      val u = (graft.functions.PolyHash.poly_hash(
-        concat(lit("dpL#"), $"event_type")) + 1L).cast("double") /
-        lit(1000000008.0)
+      val u = uniform(polyHash(concat(lit("dpL#"), $"event_type")))
       // the 1e-12 floor removes the measure-zero u = 1 pole (ln 0) and
       // caps |noise| at b*ln(1e12) ~ 27.6 — far beyond any plausible draw
-      val nNano = round(-signum(u - 0.5) *
+      val nNano = qroundLong(-signum(u - 0.5) *
         log(greatest(lit(1.0) - lit(2.0) * abs(u - 0.5), lit(1e-12))) *
-        1e9, 0).cast("long")
+        1e9)
       events(s, d).groupBy($"event_type").agg(count(lit(1)).as("n_true"))
         .withColumn("noise", round(nNano.cast("double") / 1e9, 6))
         .select($"event_type", $"n_true", $"noise",
@@ -2112,12 +2150,9 @@ object Aggregates {
     // caveat as the Laplace mechanisms. Scale: per-GROUP map math.
     "privacy_dp_gaussian" -> ((s, d) => {
       import s.implicits._
-      def u(tag: String): Column =
-        (graft.functions.PolyHash.poly_hash(
-          concat(lit(tag), $"event_type")) + 1L).cast("double") /
-          lit(1000000008.0)
-      val zNano = round(sqrt(log(u("dpg1#")) * -2.0) *
-        cos(u("dpg2#") * (2.0 * math.Pi)) * 1e9, 0).cast("long")
+      def u(tag: String): Column = uniform(polyHash(concat(lit(tag), $"event_type")))
+      val zNano = qroundLong(sqrt(log(u("dpg1#")) * -2.0) *
+        cos(u("dpg2#") * (2.0 * math.Pi)) * 1e9)
       events(s, d).groupBy($"event_type").agg(count(lit(1)).as("n_true"))
         .withColumn("noise", round(zNano.cast("double") / 1e9, 6))
         .select($"event_type", $"n_true", $"noise",
@@ -2174,14 +2209,11 @@ object Aggregates {
       val grid = eps.map(e => (e, e.toString, math.exp(-e)))
         .toDF("eps", "lbl", "alpha")
       def u(tag: String): Column =
-        (graft.functions.PolyHash.poly_hash(concat(
-          lit("dpe"), $"lbl", lit(tag), $"event_type")) + 1L)
-          .cast("double") / lit(1000000008.0)
-      def qNano(tag: String): Column =
-        round(log(u(tag)) / log($"alpha") * 1e9, 0).cast("long")
+        uniform(polyHash(concat(lit("dpe"), $"lbl", lit(tag), $"event_type")))
       events(s, d).groupBy($"event_type").agg(count(lit(1)).as("n_true"))
         .crossJoin(broadcast(grid))
-        .withColumn("q1n", qNano("#1#")).withColumn("q2n", qNano("#2#"))
+        .withColumn("q1n", qroundLong(log(u("#1#")) / log($"alpha") * 1e9))
+        .withColumn("q2n", qroundLong(log(u("#2#")) / log($"alpha") * 1e9))
         .withColumn("noise",
           expr("(q1n div 1000000000) - (q2n div 1000000000)"))
         .select($"eps", $"event_type", $"n_true", $"noise",
@@ -2214,13 +2246,10 @@ object Aggregates {
     // aggregate; selection is ≤|domain| rows of window math.
     "privacy_dp_expmech" -> ((s, d) => {
       import s.implicits._
-      val u = (graft.functions.PolyHash.poly_hash(
-        concat(lit("dpx#"), $"event_type")) + 1L).cast("double") /
-        lit(1000000008.0)
+      val u = uniform(polyHash(concat(lit("dpx#"), $"event_type")))
       // u = 1 gives -ln u = 0 (Gumbel +inf pole); the 1e-12 floor caps
       // g at ln(1e12) ~ 27.6 — measure-zero and far beyond any draw
-      val gNano = round(-log(greatest(-log(u), lit(1e-12))) * 1e9, 0)
-        .cast("long")
+      val gNano = qroundLong(-log(greatest(-log(u), lit(1e-12))) * 1e9)
       val counts = events(s, d).groupBy($"event_type")
         .agg(count(lit(1)).as("n_true"))
       val wAll = Window.partitionBy()
@@ -2228,8 +2257,7 @@ object Aggregates {
         .withColumn("key_nano", $"n_true" * 500000000L + gNano)
         .withColumn("nmax", max($"n_true").over(wAll))
         .withColumn("w_nano",
-          round(exp(($"n_true" - $"nmax").cast("double") / 2.0) * 1e9, 0)
-            .cast("long"))
+          qroundLong(exp(($"n_true" - $"nmax").cast("double") / 2.0) * 1e9))
         .select($"event_type", $"n_true",
           round($"key_nano".cast("double") / 1e9, 6).as("noisy_score"),
           round($"w_nano".cast("double")
@@ -2286,7 +2314,7 @@ object Aggregates {
     "privacy_dp_quantile" -> ((s, d) => {
       import s.implicits._
       val ev = events(s, d)
-        .select(round($"value" * 1e6, 0).cast("long").as("v"))
+        .select(qroundLong($"value" * 1e6).as("v"))
       val st = ev.agg(min($"v").as("lo"), max($"v").as("hi"),
         count(lit(1)).as("n"))
       val binned = ev.crossJoin(broadcast(st))
@@ -2297,11 +2325,8 @@ object Aggregates {
         $"lo", $"hi", $"n")
       val w = Window.orderBy($"bin")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val u = (graft.functions.PolyHash.poly_hash(
-        concat(lit("dpq#"), $"bin".cast("string"))) + 1L).cast("double") /
-        lit(1000000008.0)
-      val gNano = round(-log(greatest(-log(u), lit(1e-12))) * 1e9, 0)
-        .cast("long")
+      val u = uniform(polyHash(concat(lit("dpq#"), $"bin".cast("string"))))
+      val gNano = qroundLong(-log(greatest(-log(u), lit(1e-12))) * 1e9)
       dom.join(binned, Seq("bin"), "left").na.fill(0L, Seq("c"))
         .withColumn("cum", sum($"c").over(w))
         .withColumn("key_nano",
@@ -2380,9 +2405,8 @@ object Aggregates {
       val p = math.exp(1.0) / (math.exp(1.0) + (k - 1))
       val q = 1.0 / (math.exp(1.0) + (k - 1))
       val domain = array(EventTypes.sorted.map(lit): _*)
-      val u = ((graft.functions.PolyHash.poly_hash(
-        concat(lit("rr#"), $"event_id".cast("string"))) * 2654435761L)
-        % 1000000007L + 1L).cast("double") / lit(1000000008.0)
+      val u = uniform((polyHash(concat(lit("rr#"), $"event_id".cast("string")))
+        * 2654435761L) % 1000000007L)
       val j = least(floor((u - lit(p)) / (lit(1.0) - lit(p)) * (k - 1))
         .cast("long"), lit((k - 2).toLong))
       val reported = events(s, d)
@@ -2450,7 +2474,7 @@ object Aggregates {
     "a_psi_drift" -> ((s, d) => {
       import s.implicits._
       val ev = events(s, d).select($"event_type", to_date($"ts").as("day"),
-        round($"value" * 1e6, 0).cast("long").as("v"))
+        qroundLong($"value" * 1e6).as("v"))
       val st = ev.agg(min($"day").as("d0"), min($"v").as("lo"),
         max($"v").as("hi"))
       val binned = ev.crossJoin(broadcast(st))
@@ -2476,7 +2500,7 @@ object Aggregates {
         .withColumn("q", greatest($"c2".cast("double")
           / greatest($"n2", lit(1L)), lit(1e-6)))
         .withColumn("term_nano",
-          round(($"p" - $"q") * log($"p" / $"q") * 1e9, 0).cast("long"))
+          qroundLong(($"p" - $"q") * log($"p" / $"q") * 1e9))
         .groupBy($"event_type")
         .agg(max($"n1").as("n_first"), max($"n2").as("n_second"),
           round(sum($"term_nano").cast("double") / 1e9, 6).as("psi"))
@@ -2502,7 +2526,7 @@ object Aggregates {
       // MILLI quantization: vm^2 sums must stay inside 2^63 under ANSI
       // (the a_cuped_adjusted headroom discipline)
       val ev = events(s, d).select($"event_type", to_date($"ts").as("day"),
-        round($"value" * 1e3, 0).cast("long").as("vm"))
+        qroundLong($"value" * 1e3).as("vm"))
       ev.groupBy($"event_type")
         .agg(count(lit(1)).as("n_obs"),
           countDistinct($"day").as("n_days"),
@@ -2547,7 +2571,7 @@ object Aggregates {
     "a_neyman_alloc" -> ((s, d) => {
       import s.implicits._
       val ev = events(s, d).select($"event_type",
-        round($"value" * 1e3, 0).cast("long").as("vm"))
+        qroundLong($"value" * 1e3).as("vm"))
       val g = ev.groupBy($"event_type")
         .agg(count(lit(1)).as("n_h"), sum($"vm").as("sv"),
           sum($"vm" * $"vm").as("svv"))
@@ -2555,11 +2579,11 @@ object Aggregates {
         .withColumn("sd", sqrt(
           ($"svv".cast("double") - $"sv".cast("double") * $"sv" / $"n_h")
             / ($"n_h" - 1L)) / 1e3)
-        .withColumn("w_nano", round($"n_h" * $"sd" * 1e9, 0).cast("long"))
+        .withColumn("w_nano", qroundLong($"n_h" * $"sd" * 1e9))
       val tot = g.agg(sum($"n_h").as("n_total"),
         sum($"w_nano").as("tw_nano"),
         // Σ N_h·S_h² in nano (for the design effect), exact per-element
-        sum(round($"n_h" * $"sd" * $"sd" * 1e9, 0).cast("long"))
+        sum(qroundLong($"n_h" * $"sd" * $"sd" * 1e9))
           .as("twv_nano"))
         .withColumn("budget", expr("n_total div 10"))
       // greatest(·, 1) guards the all-zero-sd degenerate corpus (every
@@ -2568,11 +2592,10 @@ object Aggregates {
       // a_power_analysis filters); on any real corpus the guard is
       // inert (weights ≥ 1 nano). Allocations degrade to 0, de to 0.
       g.crossJoin(broadcast(tot))
-        .withColumn("neyman_n", round($"budget" *
-          ($"w_nano".cast("double") / greatest($"tw_nano", lit(1L))), 0)
-          .cast("long"))
-        .withColumn("proportional_n", round($"budget" *
-          ($"n_h".cast("double") / $"n_total"), 0).cast("long"))
+        .withColumn("neyman_n", qroundLong($"budget" *
+          ($"w_nano".cast("double") / greatest($"tw_nano", lit(1L)))))
+        .withColumn("proportional_n", qroundLong($"budget" *
+          ($"n_h".cast("double") / $"n_total")))
         // explicit square, not pow(x, 2): libm pow is not ulp-portable
         .withColumn("mwbar", $"tw_nano".cast("double") / 1e9 / $"n_total")
         .withColumn("design_effect", round($"mwbar" * $"mwbar"
@@ -2639,7 +2662,7 @@ object Aggregates {
     "a_did_estimator" -> ((s, d) => {
       import s.implicits._
       val ev = events(s, d).select($"user_id", to_date($"ts").as("day"),
-        round($"value" * 1e6, 0).cast("long").as("vm"))
+        qroundLong($"value" * 1e6).as("vm"))
       val d0 = ev.agg(min($"day").as("d0"))
       val cells = ev.crossJoin(broadcast(d0))
         .select(pmod($"user_id", lit(2L)).as("arm"),
@@ -2671,7 +2694,7 @@ object Aggregates {
     "a_cuped_adjusted" -> ((s, d) => {
       import s.implicits._
       val ev = events(s, d).select($"user_id", to_date($"ts").as("day"),
-        round($"value" * 1e3, 0).cast("long").as("vm"))
+        qroundLong($"value" * 1e3).as("vm"))
       val d0 = ev.agg(min($"day").as("d0"))
       val usr = ev.crossJoin(broadcast(d0))
         .groupBy($"user_id")
@@ -2727,9 +2750,8 @@ object Aggregates {
         .withColumn("n_at_risk",
           $"n_total" - coalesce(sum($"n_ending").over(wPrev), lit(0L)))
         .withColumn("ln_nano",
-          round(log(greatest(($"n_at_risk" - $"n_events").cast("double")
-            / $"n_at_risk".cast("double"), lit(1e-300))) * 1e9, 0)
-            .cast("long"))
+          qroundLong(log(greatest(($"n_at_risk" - $"n_events").cast("double")
+            / $"n_at_risk".cast("double"), lit(1e-300))) * 1e9))
         .withColumn("survival",
           round(exp(sum($"ln_nano").over(wCum).cast("double") / 1e9), 6))
         .select($"dur".as("dur_days"), $"n_at_risk", $"n_events",
@@ -2753,7 +2775,7 @@ object Aggregates {
     "a_gini_concentration" -> ((s, d) => {
       import s.implicits._
       val prof = events(s, d).groupBy($"user_id")
-        .agg(sum(round($"value" * 1e6, 0).cast("long")).as("tv"))
+        .agg(sum(qroundLong($"value" * 1e6)).as("tv"))
       val st = prof.agg(min($"tv").as("lo"), max($"tv").as("hi"),
         count(lit(1)).as("n"), sum($"tv").as("v"))
       val binned = prof.crossJoin(broadcast(st))
@@ -2772,9 +2794,9 @@ object Aggregates {
         .withColumn("cv", sum($"vb").over(wCum))
         .withColumn("t_nano",
           when($"v" === 0L, lit(0L)).otherwise(
-            round(($"nb".cast("double") / $"n".cast("double"))
+            qroundLong(($"nb".cast("double") / $"n".cast("double"))
               * ((($"cv" - $"vb") + $"cv").cast("double")
-                / $"v".cast("double")) * 1e9, 0).cast("long")))
+                / $"v".cast("double")) * 1e9)))
       terms.agg(max($"n").as("n_users"),
           round(max($"v").cast("double") / 1e6, 6).as("total_value"),
           when(max($"v") === 0L, lit(0.0)).otherwise(
@@ -2862,7 +2884,7 @@ object Aggregates {
     "a_mann_whitney_arms" -> ((s, d) => {
       import s.implicits._
       val v = events(s, d).select(pmod($"user_id", lit(2L)).as("arm"),
-        round($"value" * 1e3, 0).cast("long").as("vm"))
+        qroundLong($"value" * 1e3).as("vm"))
       val byV = v.groupBy($"vm")
         .agg(count(lit(1)).as("cnt"), sum($"arm").as("n1v"))
       val w = Window.orderBy($"vm")
@@ -2887,25 +2909,19 @@ object Aggregates {
 
     // One-way ANOVA F across the event-type groups (Fisher 1925) — the
     // k-group generalization of a_ttest_welch, same exact-moments
-    // device: ONE corpus pass accumulates (n, Σvm, Σvm²) per group as
-    // exact milli-longs; each group's between-term (Σvm/1e3)²/n is then
+    // device: ONE corpus pass accumulates milliMoments (n, Σvm, Σvm²)
+    // per group; each group's between-term (Σvm/1e3)²/n is then
     // micro-quantized to a long BEFORE the k-element sum (the
     // a_neyman_alloc ≤5-element-sum pattern — long addition is
     // order-free where double addition is not), so SSB/SSW/F/η² are
     // fixed-order double expressions over exact integers. Scale: the
     // corpus pass is map-side partial-aggregated on 5 keys; everything
-    // after runs on a 5-row frame. (Milli not micro for the Σvm² long
-    // bound — the a_ttest_welch comment; at true 100 TB row counts the
-    // moment accumulators go DECIMAL.)
+    // after runs on a 5-row frame.
     "a_anova_f" -> ((s, d) => {
       import s.implicits._
-      val g = events(s, d)
-        .withColumn("vm", round($"value" * 1e3, 0).cast("long"))
-        .groupBy($"event_type")
-        .agg(count(lit(1)).as("n"), sum($"vm").as("sv"),
-          sum($"vm" * $"vm").as("ssv"))
+      val g = milliMoments(events(s, d), $"event_type")
         .withColumn("bt_micro",
-          round(($"sv" / 1e3) * ($"sv" / 1e3) / $"n" * 1e6, 0).cast("long"))
+          qroundLong(($"sv" / 1e3) * ($"sv" / 1e3) / $"n" * 1e6))
       g.agg(count(lit(1)).as("k"), sum($"n").as("n_total"),
           sum($"sv").as("s_all"), sum($"ssv").as("ss_all"),
           sum($"bt_micro").as("bt_all"))
@@ -2934,12 +2950,8 @@ object Aggregates {
     "a_tost_equivalence" -> ((s, d) => {
       import s.implicits._
       val zcrit = TostZ
-      val g = events(s, d)
-        .select($"event_type", pmod($"user_id", lit(2L)).as("arm"),
-          round($"value" * 1e3, 0).cast("long").as("vm"))
-        .groupBy($"event_type", $"arm")
-        .agg(count(lit(1)).as("n"), sum($"vm").as("sv"),
-          sum($"vm" * $"vm").as("ssv"))
+      val g = milliMoments(events(s, d), $"event_type",
+        pmod($"user_id", lit(2L)).as("arm"))
         .withColumn("m", $"sv" / 1e3 / $"n")
         .withColumn("v",
           ($"ssv" / 1e6 - ($"sv" / 1e3) * ($"sv" / 1e3) / $"n") / ($"n" - 1))
@@ -2988,7 +3000,7 @@ object Aggregates {
           ((datediff(to_date($"ts"), lit("1970-01-01").cast("date")) + 4)
             % 7).as("stratum"),
           pmod($"user_id", lit(2L)).as("arm"),
-          (round($"value" * 1e3, 0).cast("long") > 50000L)
+          (qroundLong($"value" * 1e3) > 50000L)
             .cast("long").as("hit"))
         .groupBy($"stratum")
         .agg(count(lit(1)).as("n"), sum($"arm").as("r1"),
@@ -2996,15 +3008,14 @@ object Aggregates {
         .withColumn("r0", $"n" - $"r1")
         .withColumn("c0", $"n" - $"c1")
         .withColumn("e_nano",
-          round($"r1".cast("double") * $"c1" / $"n" * 1e9, 0).cast("long"))
+          qroundLong($"r1".cast("double") * $"c1" / $"n" * 1e9))
         // greatest(n−1, 1): an n = 1 stratum (seen at sf0.001) has
         // r1·r0 = 0, so V_k is exactly 0 whatever the denominator —
         // the guard only dodges ANSI ÷0, never changes a value (the
         // a_neyman_alloc greatest(tw_nano, 1) device)
-        .withColumn("v_nano", round(
+        .withColumn("v_nano", qroundLong(
           ($"r1".cast("double") / $"n") * ($"r0".cast("double") / $"n") *
-            $"c1" * $"c0" / greatest($"n" - 1L, lit(1L)) * 1e9, 0)
-          .cast("long"))
+            $"c1" * $"c0" / greatest($"n" - 1L, lit(1L)) * 1e9))
       cells.agg(count(lit(1)).as("k"), sum($"n").as("n_total"),
           sum($"a").as("a_total"), sum($"e_nano").as("e_nano"),
           sum($"v_nano").as("v_nano"))
@@ -3157,9 +3168,9 @@ object Aggregates {
     // double expression reads the same exact longs the engine's fold
     // re-quantized, so the trajectories are identical pre-rounding.
     "a_holt_linear" ->
-      """WITH RECURSIVE daily AS (
+      s"""WITH RECURSIVE daily AS (
         |  SELECT CAST(ts AS DATE) AS day,
-        |    CAST(SUM(CAST(ROUND(value * 1e6, 0) AS BIGINT)) AS BIGINT)
+        |    CAST(SUM(${qroundLongSql("value * 1e6")}) AS BIGINT)
         |      AS ym,
         |    row_number() OVER (ORDER BY CAST(ts AS DATE)) AS rn
         |  FROM events GROUP BY 1),
@@ -3167,9 +3178,8 @@ object Aggregates {
         |  SELECT day, ym, rn, ym, CAST(0 AS BIGINT) FROM daily WHERE rn = 1
         |  UNION ALL
         |  SELECT d.day, d.ym, d.rn,
-        |    CAST(ROUND(0.5 * d.ym + 0.5 * (h.ln + h.bn), 0) AS BIGINT),
-        |    CAST(ROUND(0.3 * (CAST(ROUND(0.5 * d.ym + 0.5 * (h.ln + h.bn),
-        |      0) AS BIGINT) - h.ln) + 0.7 * h.bn, 0) AS BIGINT)
+        |    ${qroundLongSql("0.5 * d.ym + 0.5 * (h.ln + h.bn)")},
+        |    ${qroundLongSql(s"""0.3 * (${qroundLongSql("0.5 * d.ym + 0.5 * (h.ln + h.bn)")} - h.ln) + 0.7 * h.bn""")}
         |  FROM hw h JOIN daily d ON d.rn = h.rn + 1)
         |SELECT day, ROUND(CAST(ym AS DOUBLE) / 1e6, 6) AS y,
         |  ROUND(CAST(ln AS DOUBLE) / 1e6, 6) AS level,
@@ -3285,76 +3295,28 @@ object Aggregates {
          |FROM surv GROUP BY 1 ORDER BY 1""".stripMargin
     },
     "a_hll_shard_merge" ->
-      s"""WITH b AS (
-         |  SELECT event_type, CAST(ts AS DATE) AS day,
-         |    ${graft.ops.DedupOps.polyHashSql("CAST(user_id AS VARCHAR)")} % 16 AS j,
-         |    ${graft.ops.DedupOps.polyHashSql("CAST(user_id AS VARCHAR)")} // 16 AS w
-         |  FROM events),
-         |rho AS (
-         |  SELECT event_type, day, j,
-         |    CASE WHEN w = 0 THEN 27
-         |         ELSE bit_count((w & -w) - 1) + 1 END AS rho
-         |  FROM b),
-         |sregs AS (
-         |  SELECT event_type, day, j, MAX(rho) AS r FROM rho GROUP BY 1, 2, 3),
+      s"""WITH b AS (SELECT event_type, CAST(ts AS DATE) AS day, user_id FROM events),
+         |sregs AS (${hllRegistersSql("b", "event_type", "day")}),
          |regs AS (SELECT event_type, j, MAX(r) AS r FROM sregs GROUP BY 1, 2),
          |nsh AS (
          |  SELECT event_type, COUNT(DISTINCT day) AS n_shards
          |  FROM sregs GROUP BY 1),
-         |dom AS (
-         |  SELECT DISTINCT event_type, g.j
-         |  FROM events CROSS JOIN (SELECT unnest(range(16)) AS j) g),
-         |fl AS (
-         |  SELECT dom.event_type, dom.j, COALESCE(regs.r, 0) AS r
-         |  FROM dom LEFT JOIN regs
-         |    ON dom.event_type = regs.event_type AND dom.j = regs.j),
-         |est AS (
-         |  SELECT event_type,
-         |    SUM(pow(2.0, -r)) AS s,
-         |    SUM(CASE WHEN r = 0 THEN 1 ELSE 0 END) AS zeros
-         |  FROM fl GROUP BY 1),
-         |e2 AS (
-         |  SELECT event_type, 0.673 * 256.0 / s AS raw, zeros FROM est)
+         |est AS (${hllEstimateSql("events", "regs", "event_type")})
          |SELECT events.event_type,
          |  COUNT(DISTINCT user_id) AS exact_users,
          |  ANY_VALUE(nsh.n_shards) AS n_shards,
-         |  ANY_VALUE(ROUND(CASE WHEN raw <= 40.0 AND zeros > 0
-         |       THEN 16.0 * ln(16.0 / zeros) ELSE raw END, 3)) AS hll_est
+         |  ANY_VALUE(est.hll_est) AS hll_est
          |FROM events
-         |JOIN e2 ON events.event_type = e2.event_type
+         |JOIN est ON events.event_type = est.event_type
          |JOIN nsh ON events.event_type = nsh.event_type
          |GROUP BY 1 ORDER BY 1""".stripMargin,
     "a_hll_probe" ->
-      s"""WITH b AS (
-         |  SELECT event_type,
-         |    ${graft.ops.DedupOps.polyHashSql("CAST(user_id AS VARCHAR)")} % 16 AS j,
-         |    ${graft.ops.DedupOps.polyHashSql("CAST(user_id AS VARCHAR)")} // 16 AS w
-         |  FROM events),
-         |rho AS (
-         |  SELECT event_type, j,
-         |    CASE WHEN w = 0 THEN 27
-         |         ELSE bit_count((w & -w) - 1) + 1 END AS rho
-         |  FROM b),
-         |regs AS (SELECT event_type, j, MAX(rho) AS r FROM rho GROUP BY 1, 2),
-         |dom AS (
-         |  SELECT DISTINCT event_type, g.j
-         |  FROM events CROSS JOIN (SELECT unnest(range(16)) AS j) g),
-         |fl AS (
-         |  SELECT dom.event_type, dom.j, COALESCE(regs.r, 0) AS r
-         |  FROM dom LEFT JOIN regs
-         |    ON dom.event_type = regs.event_type AND dom.j = regs.j),
-         |est AS (
-         |  SELECT event_type,
-         |    SUM(pow(2.0, -r)) AS s,
-         |    SUM(CASE WHEN r = 0 THEN 1 ELSE 0 END) AS zeros
-         |  FROM fl GROUP BY 1),
-         |e2 AS (
-         |  SELECT event_type, 0.673 * 256.0 / s AS raw, zeros FROM est)
+      s"""WITH regs AS (${hllRegistersSql("events", "event_type")}),
+         |est AS (${hllEstimateSql("events", "regs", "event_type")})
          |SELECT events.event_type,
          |  COUNT(DISTINCT user_id) AS exact_users,
-         |  ANY_VALUE(ROUND(CASE WHEN raw <= 40.0 AND zeros > 0
-         |       THEN 16.0 * ln(16.0 / zeros) ELSE raw END, 3)) AS hll_est
-         |FROM events JOIN e2 ON events.event_type = e2.event_type
+         |  ANY_VALUE(est.hll_est) AS hll_est
+         |FROM events JOIN est ON events.event_type = est.event_type
          |GROUP BY 1 ORDER BY 1""".stripMargin,
     "w_ewma_daily" ->
       """WITH daily AS (
@@ -3502,8 +3464,8 @@ object Aggregates {
         |    CAST(SUM(term_micro) AS BIGINT) // 2 AS dist_micro
         |  FROM (
         |    SELECT g.lang, g.source, g.size_bin, g.gsz,
-        |      CAST(ROUND(ABS(CAST(COALESCE(gs.cnt, 0) AS DOUBLE) / g.gsz
-        |        - CAST(gmx.gcnt AS DOUBLE) / tot.nn) * 1e6, 0) AS BIGINT)
+        |      ${qroundLongSql("""ABS(CAST(COALESCE(gs.cnt, 0) AS DOUBLE) / g.gsz
+        |        - CAST(gmx.gcnt AS DOUBLE) / tot.nn) * 1e6""")}
         |        AS term_micro
         |    FROM g CROSS JOIN gmx CROSS JOIN tot
         |    LEFT JOIN gs ON g.lang = gs.lang AND g.source = gs.source
@@ -3598,9 +3560,9 @@ object Aggregates {
         |  ON p.user_id = c.user_id AND p.ts >= c.click_ts
         |ORDER BY event_id""".stripMargin,
     "a_mann_whitney" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT event_type, value,
-        |    CAST(ROUND(value * 1e3, 0) AS BIGINT) AS vm
+        |    ${qroundLongSql("value * 1e3")} AS vm
         |  FROM events WHERE event_type IN ('click', 'purchase')),
         |r AS (
         |  SELECT *, row_number() OVER (ORDER BY value) AS rn FROM ev),
@@ -3621,8 +3583,8 @@ object Aggregates {
         |    / sqrt(n1 * n2 * (n1 + n2 + 1) / 12.0), 6) AS z
         |FROM u""".stripMargin,
     "a_ks_test" ->
-      """WITH ev AS (
-        |  SELECT event_type, CAST(ROUND(value * 1e3, 0) AS BIGINT) AS vm
+      s"""WITH ev AS (
+        |  SELECT event_type, ${qroundLongSql("value * 1e3")} AS vm
         |  FROM events),
         |ty AS (SELECT DISTINCT event_type FROM ev),
         |pairs AS (
@@ -3661,7 +3623,7 @@ object Aggregates {
     // FLOOR before the BIGINT cast: DuckDB rounds decimal→int casts
     // where Spark truncates; ln(x)/ln(10) mirrors Spark's two-arg log.
     "a_benford_digits" ->
-      """WITH dg AS (
+      s"""WITH dg AS (
         |  SELECT CAST(substr(CAST(CAST(FLOOR(
         |    CAST(o_totalprice AS DECIMAL(12,2))) AS BIGINT) AS VARCHAR),
         |    1, 1) AS INTEGER) AS digit
@@ -3675,9 +3637,8 @@ object Aggregates {
         |    CAST(n AS DOUBLE) / nt AS obs
         |  FROM dc CROSS JOIN tot),
         |chi AS (
-        |  SELECT ROUND(SUM(CAST(ROUND(
-        |      (n - nt * bs) * (n - nt * bs) / (nt * bs) * 1e6, 0)
-        |    AS BIGINT)) / 1e6, 4) AS chi2
+        |  SELECT ROUND(SUM(${qroundLongSql("""
+        |      (n - nt * bs) * (n - nt * bs) / (nt * bs) * 1e6""")}) / 1e6, 4) AS chi2
         |  FROM sc)
         |SELECT digit, n, ROUND(obs, 6) AS obs_share,
         |  ROUND(bs, 6) AS benford_share, chi2
@@ -3703,13 +3664,13 @@ object Aggregates {
         |FROM d2 CROSS JOIN tot
         |GROUP BY dow, tn, td ORDER BY dow""".stripMargin,
     "a_attribution_touch" ->
-      """WITH pur AS (
+      s"""WITH pur AS (
         |  SELECT event_id AS p_id, user_id, ts AS p_ts,
-        |    CAST(ROUND(value * 1e6, 0) AS BIGINT) AS v_micro
+        |    ${qroundLongSql("value * 1e6")} AS v_micro
         |  FROM events WHERE event_type = 'purchase'),
         |clk AS (
         |  SELECT user_id, ts AS c_ts, event_id AS c_id,
-        |    CAST(props->>'$.k' AS BIGINT) // 20 AS channel
+        |    CAST(props->>'$$.k' AS BIGINT) // 20 AS channel
         |  FROM events WHERE event_type = 'click'),
         |pairs AS (
         |  SELECT p.p_id, p.v_micro, c.channel,
@@ -3759,7 +3720,7 @@ object Aggregates {
          |ORDER BY rule_id""".stripMargin
     },
     "a_mutual_info" ->
-      """WITH xy AS MATERIALIZED (
+      s"""WITH xy AS MATERIALIZED (
         |  SELECT event_type,
         |    (datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) + 4) % 7
         |      AS dow,
@@ -3770,19 +3731,19 @@ object Aggregates {
         |ny AS (SELECT dow, CAST(SUM(nxy) AS BIGINT) AS ny FROM xy GROUP BY 1),
         |tot AS (SELECT CAST(SUM(nxy) AS BIGINT) AS nn FROM xy),
         |mi AS (
-        |  SELECT CAST(SUM(CAST(ROUND((CAST(nxy AS DOUBLE) / nn)
+        |  SELECT CAST(SUM(${qroundLongSql("""(CAST(nxy AS DOUBLE) / nn)
         |    * ln(CAST(nn AS DOUBLE) * nxy / (CAST(nx AS DOUBLE) * ny))
-        |    * 1e6, 0) AS BIGINT)) AS BIGINT) AS mi_u
+        |    * 1e6""")}) AS BIGINT) AS mi_u
         |  FROM xy JOIN nx USING (event_type) JOIN ny USING (dow)
         |  CROSS JOIN tot),
         |hx AS (
-        |  SELECT CAST(SUM(CAST(ROUND((CAST(nx AS DOUBLE) / nn)
-        |    * ln(CAST(nx AS DOUBLE) / nn) * -1e6, 0) AS BIGINT)) AS BIGINT)
+        |  SELECT CAST(SUM(${qroundLongSql("""(CAST(nx AS DOUBLE) / nn)
+        |    * ln(CAST(nx AS DOUBLE) / nn) * -1e6""")}) AS BIGINT)
         |    AS h_nx
         |  FROM nx CROSS JOIN tot),
         |hy AS (
-        |  SELECT CAST(SUM(CAST(ROUND((CAST(ny AS DOUBLE) / nn)
-        |    * ln(CAST(ny AS DOUBLE) / nn) * -1e6, 0) AS BIGINT)) AS BIGINT)
+        |  SELECT CAST(SUM(${qroundLongSql("""(CAST(ny AS DOUBLE) / nn)
+        |    * ln(CAST(ny AS DOUBLE) / nn) * -1e6""")}) AS BIGINT)
         |    AS h_ny
         |  FROM ny CROSS JOIN tot)
         |SELECT nn AS n_events,
@@ -3794,9 +3755,9 @@ object Aggregates {
         |  END AS nmi
         |FROM mi CROSS JOIN hx CROSS JOIN hy CROSS JOIN tot""".stripMargin,
     "a_pareto_front" ->
-      """WITH prof AS (
+      s"""WITH prof AS (
         |  SELECT user_id,
-        |    CAST(SUM(CAST(ROUND(value * 1e6, 0) AS BIGINT)) AS BIGINT)
+        |    CAST(SUM(${qroundLongSql("value * 1e6")}) AS BIGINT)
         |      AS tv_micro,
         |    COUNT(*) AS n_events
         |  FROM events GROUP BY 1)
@@ -3822,9 +3783,9 @@ object Aggregates {
         |    / CAST(SUM(n) OVER (PARTITION BY from_type) AS DOUBLE), 6) AS p
         |FROM t ORDER BY from_type, to_type""".stripMargin,
     "a_twap_daily" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT CAST(ts AS DATE) AS day,
-        |    CAST(ROUND(value * 1e3, 0) AS BIGINT) AS vm,
+        |    ${qroundLongSql("value * 1e3")} AS vm,
         |    epoch_us(ts) AS tus, event_id
         |  FROM events),
         |g AS (
@@ -3874,9 +3835,9 @@ object Aggregates {
         |JOIN my ON med.event_type = my.event_type
         |ORDER BY med.event_type""".stripMargin,
     "a_robust_stats" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT event_type, value,
-        |    CAST(ROUND(value * 1e3, 0) AS BIGINT) AS vm
+        |    ${qroundLongSql("value * 1e3")} AS vm
         |  FROM events),
         |r AS (
         |  SELECT event_type, vm,
@@ -3914,14 +3875,7 @@ object Aggregates {
         |JOIN outl ON q.event_type = outl.event_type
         |ORDER BY q.event_type""".stripMargin,
     "a_ttest_welch" ->
-      """WITH g AS (
-        |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(vm) AS BIGINT) AS sv,
-        |    CAST(SUM(vm * vm) AS BIGINT) AS ssv
-        |  FROM (SELECT event_type,
-        |          CAST(ROUND(value * 1e3, 0) AS BIGINT) AS vm
-        |        FROM events)
-        |  GROUP BY 1),
+      s"""WITH g AS (${milliMomentsSql("events", "event_type")}),
         |st AS (
         |  SELECT event_type, n, sv / 1e3 / n AS m,
         |    (ssv / 1e6 - (sv / 1e3) * (sv / 1e3) / n) / (n - 1) AS v
@@ -3944,14 +3898,7 @@ object Aggregates {
     // both engines round it 6dp before the one comparison
     "a_bh_fdr" -> {
       val ladder = bhZCrit.mkString("[", ", ", "]")
-      s"""WITH g AS (
-         |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-         |    CAST(SUM(vm) AS BIGINT) AS sv,
-         |    CAST(SUM(vm * vm) AS BIGINT) AS ssv
-         |  FROM (SELECT event_type,
-         |          CAST(ROUND(value * 1e3, 0) AS BIGINT) AS vm
-         |        FROM events)
-         |  GROUP BY 1),
+      s"""WITH g AS (${milliMomentsSql("events", "event_type")}),
          |st AS (
          |  SELECT event_type, n, sv / 1e3 / n AS m,
          |    (ssv / 1e6 - (sv / 1e3) * (sv / 1e3) / n) / (n - 1) AS v
@@ -4165,9 +4112,9 @@ object Aggregates {
         |CROSS JOIN nb
         |ORDER BY lift DESC, p1 ASC, p2 ASC LIMIT 20""".stripMargin,
     "agg_incremental_merge" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    CAST(ROUND(value * 1e6, 0) AS BIGINT) AS vm
+        |    ${qroundLongSql("value * 1e6")} AS vm
         |  FROM events),
         |mx AS (SELECT MAX(day) AS mday FROM ev),
         |state AS (
@@ -4191,9 +4138,9 @@ object Aggregates {
         |  ROUND(CAST(SUM(sv) AS BIGINT) / 1e6 / SUM(n), 6) AS avg_value
         |FROM u GROUP BY 1 ORDER BY 1""".stripMargin,
     "a_cube_type_day" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT CAST(ts AS DATE) AS day, event_type,
-        |    CAST(ROUND(value * 1e6, 0) AS BIGINT) AS vm
+        |    ${qroundLongSql("value * 1e6")} AS vm
         |  FROM events)
         |SELECT day, event_type, COUNT(*) AS n,
         |  ROUND(CAST(SUM(vm) AS BIGINT) / 1e6, 6) AS sum_value,
@@ -4232,7 +4179,7 @@ object Aggregates {
         |FROM top CROSS JOIN stats
         |ORDER BY n DESC, user_id ASC""".stripMargin,
     "a_chi2_daily_mix" ->
-      """WITH dt AS (
+      s"""WITH dt AS (
         |  SELECT CAST(ts AS DATE) AS day, event_type, COUNT(*) AS o
         |  FROM events GROUP BY 1, 2),
         |dd AS (SELECT day, CAST(SUM(o) AS BIGINT) AS nd FROM dt GROUP BY 1),
@@ -4247,7 +4194,7 @@ object Aggregates {
         |  CROSS JOIN n),
         |terms AS (
         |  SELECT day, nd,
-        |    CAST(ROUND((o - e) * (o - e) / e * 1e6, 0) AS BIGINT) AS chi_e6
+        |    ${qroundLongSql("(o - e) * (o - e) / e * 1e6")} AS chi_e6
         |  FROM cells)
         |SELECT day, MAX(nd) AS n_events, COUNT(*) AS n_cells,
         |  CAST(SUM(chi_e6) AS BIGINT) AS chi2_e6,
@@ -4286,10 +4233,10 @@ object Aggregates {
          |  SELECT event_type, COUNT(*) AS n_true FROM events GROUP BY 1),
          |qn AS (
          |  SELECT event_type, n_true,
-         |    CAST(ROUND(ln(CAST($p + 1 AS DOUBLE) / 1000000008.0)
-         |      / ln($a) * 1e9, 0) AS BIGINT) AS q1n,
-         |    CAST(ROUND(ln(CAST($q + 1 AS DOUBLE) / 1000000008.0)
-         |      / ln($a) * 1e9, 0) AS BIGINT) AS q2n
+         |    ${qroundLongSql(s"""ln(${uniformSql(p)})
+         |      / ln($a) * 1e9""")} AS q1n,
+         |    ${qroundLongSql(s"""ln(${uniformSql(q)})
+         |      / ln($a) * 1e9""")} AS q2n
          |  FROM c),
          |z AS (
          |  SELECT event_type, n_true,
@@ -4306,13 +4253,13 @@ object Aggregates {
          |  SELECT event_type, COUNT(*) AS n_true FROM events GROUP BY 1),
          |un AS (
          |  SELECT event_type, n_true,
-         |    CAST($p + 1 AS DOUBLE) / 1000000008.0 AS u
+         |    ${uniformSql(p)} AS u
          |  FROM c),
          |nn AS (
          |  SELECT event_type, n_true,
-         |    CAST(ROUND(-sign(u - 0.5)
+         |    ${qroundLongSql("""-sign(u - 0.5)
          |      * ln(greatest(1.0 - 2.0 * abs(u - 0.5), 1e-12))
-         |      * 1e9, 0) AS BIGINT) AS n_nano
+         |      * 1e9""")} AS n_nano
          |  FROM un),
          |r AS (
          |  SELECT event_type, n_true,
@@ -4332,13 +4279,13 @@ object Aggregates {
          |  SELECT event_type, COUNT(*) AS n_true FROM events GROUP BY 1),
          |un AS (
          |  SELECT event_type, n_true,
-         |    CAST($p + 1 AS DOUBLE) / 1000000008.0 AS u1,
-         |    CAST($q + 1 AS DOUBLE) / 1000000008.0 AS u2
+         |    ${uniformSql(p)} AS u1,
+         |    ${uniformSql(q)} AS u2
          |  FROM c),
          |nn AS (
          |  SELECT event_type, n_true,
-         |    CAST(ROUND(sqrt(ln(u1) * -2.0)
-         |      * cos(u2 * CAST('$twoPi' AS DOUBLE)) * 1e9, 0) AS BIGINT)
+         |    ${qroundLongSql(s"""sqrt(ln(u1) * -2.0)
+         |      * cos(u2 * CAST('$twoPi' AS DOUBLE)) * 1e9""")}
          |      AS z_nano
          |  FROM un),
          |r AS (
@@ -4386,10 +4333,10 @@ object Aggregates {
          |j AS (SELECT * FROM c CROSS JOIN grid),
          |qn AS (
          |  SELECT eps, event_type, n_true,
-         |    CAST(ROUND(ln(CAST($p + 1 AS DOUBLE) / 1000000008.0)
-         |      / ln(alpha) * 1e9, 0) AS BIGINT) AS q1n,
-         |    CAST(ROUND(ln(CAST($q + 1 AS DOUBLE) / 1000000008.0)
-         |      / ln(alpha) * 1e9, 0) AS BIGINT) AS q2n
+         |    ${qroundLongSql(s"""ln(${uniformSql(p)})
+         |      / ln(alpha) * 1e9""")} AS q1n,
+         |    ${qroundLongSql(s"""ln(${uniformSql(q)})
+         |      / ln(alpha) * 1e9""")} AS q2n
          |  FROM j),
          |z AS (
          |  SELECT eps, event_type, n_true,
@@ -4408,9 +4355,9 @@ object Aggregates {
          |  FROM events GROUP BY 1),
          |g AS (
          |  SELECT event_type, n_true,
-         |    CAST(ROUND(-ln(GREATEST(
-         |      -ln(CAST($h + 1 AS DOUBLE) / 1000000008.0), 1e-12))
-         |      * 1e9, 0) AS BIGINT) AS gn
+         |    ${qroundLongSql(s"""-ln(GREATEST(
+         |      -ln(${uniformSql(h)}), 1e-12))
+         |      * 1e9""")} AS gn
          |  FROM c),
          |k AS (
          |  SELECT event_type, n_true,
@@ -4419,8 +4366,7 @@ object Aggregates {
          |  FROM g),
          |w AS (
          |  SELECT event_type, n_true, key_nano,
-         |    CAST(ROUND(exp(CAST(n_true - nmax AS DOUBLE) / 2.0) * 1e9, 0)
-         |      AS BIGINT) AS wn,
+         |    ${qroundLongSql("exp(CAST(n_true - nmax AS DOUBLE) / 2.0) * 1e9")} AS wn,
          |    CAST(MAX(key_nano) OVER () AS BIGINT) AS kmax
          |  FROM k)
          |SELECT event_type, n_true,
@@ -4454,7 +4400,7 @@ object Aggregates {
     "privacy_dp_quantile" -> {
       val h = graft.ops.DedupOps.polyHashSql("'dpq#' || CAST(bin AS VARCHAR)")
       s"""WITH ev AS (
-         |  SELECT CAST(ROUND(value * 1e6, 0) AS BIGINT) AS v FROM events),
+         |  SELECT ${qroundLongSql("value * 1e6")} AS v FROM events),
          |st AS (
          |  SELECT MIN(v) AS lo, MAX(v) AS hi,
          |    CAST(COUNT(*) AS BIGINT) AS n
@@ -4473,9 +4419,9 @@ object Aggregates {
          |  FROM j),
          |g AS (
          |  SELECT bin, cum,
-         |    CAST(ROUND(-ln(GREATEST(
-         |      -ln(CAST($h + 1 AS DOUBLE) / 1000000008.0), 1e-12))
-         |      * 1e9, 0) AS BIGINT) AS gn
+         |    ${qroundLongSql(s"""-ln(GREATEST(
+         |      -ln(${uniformSql(h)}), 1e-12))
+         |      * 1e9""")} AS gn
          |  FROM cum),
          |k AS (
          |  SELECT bin, n, lo, hi,
@@ -4525,8 +4471,7 @@ object Aggregates {
          |    END AS report
          |  FROM (
          |    SELECT event_type,
-         |      CAST(($h * 2654435761) % 1000000007 + 1 AS DOUBLE)
-         |        / 1000000008.0 AS u
+         |      ${uniformSql(s"($h * 2654435761) % 1000000007")} AS u
          |    FROM events) CROSS JOIN pq),
          |m AS (SELECT COUNT(*) AS m FROM rep),
          |ct AS (SELECT event_type, COUNT(*) AS n_true FROM rep GROUP BY 1),
@@ -4555,9 +4500,9 @@ object Aggregates {
         |FROM dau d JOIN wau w ON d.day = w.day
         |ORDER BY 1""".stripMargin,
     "a_psi_drift" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    CAST(ROUND(value * 1e6, 0) AS BIGINT) AS v
+        |    ${qroundLongSql("value * 1e6")} AS v
         |  FROM events),
         |st AS (SELECT MIN(day) AS d0, MIN(v) AS lo, MAX(v) AS hi FROM ev),
         |b AS (
@@ -4584,7 +4529,7 @@ object Aggregates {
         |  FROM t),
         |terms AS (
         |  SELECT event_type, n1, n2,
-        |    CAST(ROUND((p - q) * ln(p / q) * 1e9, 0) AS BIGINT) AS tn
+        |    ${qroundLongSql("(p - q) * ln(p / q) * 1e9")} AS tn
         |  FROM p)
         |SELECT event_type, MAX(n1) AS n_first, MAX(n2) AS n_second,
         |  ROUND(CAST(SUM(tn) AS DOUBLE) / 1e9, 6) AS psi
@@ -4596,7 +4541,7 @@ object Aggregates {
       }
       s"""WITH ev AS (
          |  SELECT event_type, CAST(ts AS DATE) AS day,
-         |    CAST(ROUND(value * 1e3, 0) AS BIGINT) AS vm
+         |    ${qroundLongSql("value * 1e3")} AS vm
          |  FROM events),
          |g AS (
          |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_obs,
@@ -4625,8 +4570,8 @@ object Aggregates {
          |FROM p ORDER BY event_type""".stripMargin
     },
     "a_neyman_alloc" ->
-      """WITH ev AS (
-        |  SELECT event_type, CAST(ROUND(value * 1e3, 0) AS BIGINT) AS vm
+      s"""WITH ev AS (
+        |  SELECT event_type, ${qroundLongSql("value * 1e3")} AS vm
         |  FROM events),
         |g AS (
         |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_h,
@@ -4640,8 +4585,8 @@ object Aggregates {
         |      / (n_h - 1)) / 1e3 AS sd
         |  FROM g),
         |wn AS (
-        |  SELECT *, CAST(ROUND(n_h * sd * 1e9, 0) AS BIGINT) AS w_nano,
-        |    CAST(ROUND(n_h * sd * sd * 1e9, 0) AS BIGINT) AS wv_nano
+        |  SELECT *, ${qroundLongSql("n_h * sd * 1e9")} AS w_nano,
+        |    ${qroundLongSql("n_h * sd * sd * 1e9")} AS wv_nano
         |  FROM w),
         |tot AS (
         |  SELECT CAST(SUM(n_h) AS BIGINT) AS n_total,
@@ -4651,11 +4596,9 @@ object Aggregates {
         |  FROM wn),
         |f AS (
         |  SELECT event_type, n_h, sd,
-        |    CAST(ROUND(budget * (CAST(w_nano AS DOUBLE)
-        |      / GREATEST(tw_nano, 1)), 0)
-        |      AS BIGINT) AS neyman_n,
-        |    CAST(ROUND(budget * (CAST(n_h AS DOUBLE) / n_total), 0)
-        |      AS BIGINT) AS proportional_n,
+        |    ${qroundLongSql("""budget * (CAST(w_nano AS DOUBLE)
+        |      / GREATEST(tw_nano, 1))""")} AS neyman_n,
+        |    ${qroundLongSql("budget * (CAST(n_h AS DOUBLE) / n_total)")} AS proportional_n,
         |    CAST(tw_nano AS DOUBLE) / 1e9 / n_total AS mwbar,
         |    CAST(GREATEST(twv_nano, 1) AS DOUBLE) / 1e9 / n_total AS mwv
         |  FROM wn CROSS JOIN tot)
@@ -4691,9 +4634,9 @@ object Aggregates {
          |FROM l ORDER BY day""".stripMargin
     },
     "a_did_estimator" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day,
-        |    CAST(ROUND(value * 1e6, 0) AS BIGINT) AS vm
+        |    ${qroundLongSql("value * 1e6")} AS vm
         |  FROM events),
         |d0 AS (SELECT MIN(day) AS d0 FROM ev),
         |cells AS (
@@ -4720,9 +4663,9 @@ object Aggregates {
         |FROM cells CROSS JOIN eff
         |ORDER BY arm, period""".stripMargin,
     "a_cuped_adjusted" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day,
-        |    CAST(ROUND(value * 1e3, 0) AS BIGINT) AS vm
+        |    ${qroundLongSql("value * 1e3")} AS vm
         |  FROM events),
         |d0 AS (SELECT MIN(day) AS d0 FROM ev),
         |usr AS (
@@ -4764,7 +4707,7 @@ object Aggregates {
         |FROM arms CROSS JOIN g2
         |ORDER BY arm""".stripMargin,
     "a_survival_km" ->
-      """WITH life AS (
+      s"""WITH life AS (
         |  SELECT user_id, MIN(CAST(ts AS DATE)) AS fd,
         |    MAX(CAST(ts AS DATE)) AS ld
         |  FROM events GROUP BY 1),
@@ -4786,9 +4729,9 @@ object Aggregates {
         |    AS BIGINT), 0) AS n_at_risk
         |  FROM bd CROSS JOIN tt),
         |lnf AS (
-        |  SELECT *, CAST(ROUND(ln(GREATEST(
+        |  SELECT *, ${qroundLongSql("""ln(GREATEST(
         |    CAST(n_at_risk - n_events AS DOUBLE)
-        |      / CAST(n_at_risk AS DOUBLE), 1e-300)) * 1e9, 0) AS BIGINT)
+        |      / CAST(n_at_risk AS DOUBLE), 1e-300)) * 1e9""")}
         |    AS ln_nano
         |  FROM rk)
         |SELECT dur AS dur_days, n_at_risk, n_events, n_censored,
@@ -4797,9 +4740,9 @@ object Aggregates {
         |    / 1e9), 6) AS survival
         |FROM lnf ORDER BY dur""".stripMargin,
     "a_gini_concentration" ->
-      """WITH prof AS (
+      s"""WITH prof AS (
         |  SELECT user_id,
-        |    CAST(SUM(CAST(ROUND(value * 1e6, 0) AS BIGINT)) AS BIGINT)
+        |    CAST(SUM(${qroundLongSql("value * 1e6")}) AS BIGINT)
         |      AS tv
         |  FROM events GROUP BY 1),
         |st AS (
@@ -4823,9 +4766,9 @@ object Aggregates {
         |  FROM g),
         |t AS (
         |  SELECT *, CASE WHEN v = 0 THEN CAST(0 AS BIGINT)
-        |    ELSE CAST(ROUND((CAST(nb AS DOUBLE) / CAST(n AS DOUBLE))
+        |    ELSE ${qroundLongSql("""(CAST(nb AS DOUBLE) / CAST(n AS DOUBLE))
         |      * (CAST((cv - vb) + cv AS DOUBLE) / CAST(v AS DOUBLE))
-        |      * 1e9, 0) AS BIGINT) END AS t_nano
+        |      * 1e9""")} END AS t_nano
         |  FROM c)
         |SELECT MAX(n) AS n_users,
         |  ROUND(CAST(MAX(v) AS DOUBLE) / 1e6, 6) AS total_value,
@@ -4875,9 +4818,9 @@ object Aggregates {
     // half-unit average ranks over the distinct micro-value table —
     // every term an exact long until the final z (IEEE sqrt, portable)
     "a_mann_whitney_arms" ->
-      """WITH v AS (
+      s"""WITH v AS (
         |  SELECT ((user_id % 2) + 2) % 2 AS arm,
-        |    CAST(ROUND(value * 1e3, 0) AS BIGINT) AS vm
+        |    ${qroundLongSql("value * 1e3")} AS vm
         |  FROM events),
         |byv AS (
         |  SELECT vm, CAST(COUNT(*) AS BIGINT) AS cnt,
@@ -4909,17 +4852,10 @@ object Aggregates {
     // per-group between-terms micro-quantized to BIGINT before the
     // k-element sum; SSB/SSW/F/η² fixed-order doubles over exact longs
     "a_anova_f" ->
-      """WITH g AS (
-        |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(vm) AS BIGINT) AS sv,
-        |    CAST(SUM(vm * vm) AS BIGINT) AS ssv
-        |  FROM (SELECT event_type,
-        |          CAST(ROUND(value * 1e3, 0) AS BIGINT) AS vm
-        |        FROM events)
-        |  GROUP BY 1),
+      s"""WITH g AS (${milliMomentsSql("events", "event_type")}),
         |b AS (
         |  SELECT n, sv, ssv,
-        |    CAST(ROUND((sv / 1e3) * (sv / 1e3) / n * 1e6, 0) AS BIGINT)
+        |    ${qroundLongSql("(sv / 1e3) * (sv / 1e3) / n * 1e6")}
         |      AS bt_micro
         |  FROM g),
         |a AS (
@@ -4943,13 +4879,7 @@ object Aggregates {
     // engine-identical; FULL JOIN keeps one-armed types visible as
     // NULL-statistics rows (mirrors the Spark full_outer)
     "a_tost_equivalence" ->
-      s"""WITH g AS (
-        |  SELECT event_type, ((user_id % 2) + 2) % 2 AS arm,
-        |    CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(vm) AS BIGINT) AS sv,
-        |    CAST(SUM(vm * vm) AS BIGINT) AS ssv
-        |  FROM (SELECT event_type, user_id,
-        |          CAST(ROUND(value * 1e3, 0) AS BIGINT) AS vm FROM events)
-        |  GROUP BY 1, 2),
+      s"""WITH g AS (${milliMomentsSql("events", "event_type", "((user_id % 2) + 2) % 2 AS arm")}),
         |st AS (
         |  SELECT event_type, arm, n, sv, sv / 1e3 / n AS m,
         |    (ssv / 1e6 - (sv / 1e3) * (sv / 1e3) / n) / (n - 1) AS v
@@ -4978,7 +4908,7 @@ object Aggregates {
     // per-stratum E/V nano-quantized to BIGINT before the <= 7-element
     // sums; one final z division
     "a_cmh_test" ->
-      """WITH cells AS (
+      s"""WITH cells AS (
         |  SELECT stratum, CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(arm) AS BIGINT) AS r1,
         |    CAST(SUM(hit) AS BIGINT) AS c1,
@@ -4987,7 +4917,7 @@ object Aggregates {
         |          (date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
         |            + 4) % 7 AS stratum,
         |          ((user_id % 2) + 2) % 2 AS arm,
-        |          CASE WHEN CAST(ROUND(value * 1e3, 0) AS BIGINT)
+        |          CASE WHEN ${qroundLongSql("value * 1e3")}
         |            > 50000 THEN 1 ELSE 0 END AS hit
         |        FROM events)
         |  GROUP BY 1),
@@ -4995,10 +4925,10 @@ object Aggregates {
         |  SELECT n, r1, c1, a, n - r1 AS r0, n - c1 AS c0 FROM cells),
         |e AS (
         |  SELECT n, a,
-        |    CAST(ROUND(CAST(r1 AS DOUBLE) * c1 / n * 1e9, 0) AS BIGINT)
+        |    ${qroundLongSql("CAST(r1 AS DOUBLE) * c1 / n * 1e9")}
         |      AS e_nano,
-        |    CAST(ROUND((CAST(r1 AS DOUBLE) / n) * (CAST(r0 AS DOUBLE) / n)
-        |      * c1 * c0 / GREATEST(n - 1, 1) * 1e9, 0) AS BIGINT) AS v_nano
+        |    ${qroundLongSql("""(CAST(r1 AS DOUBLE) / n) * (CAST(r0 AS DOUBLE) / n)
+        |      * c1 * c0 / GREATEST(n - 1, 1) * 1e9""")} AS v_nano
         |  FROM q),
         |agg AS (
         |  SELECT CAST(COUNT(*) AS BIGINT) AS k,

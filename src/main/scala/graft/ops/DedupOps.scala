@@ -87,6 +87,16 @@ object DedupOps {
        |  WHERE ${polyHashSql(s"CAST($key AS VARCHAR)")} % 50 = 0
        |  ORDER BY $key LIMIT 10""".stripMargin
 
+  /** The seeded uniform draw u ∈ (0, 1] of the DP mechanisms and the
+    * weighted sample: a hash h ∈ [0, 1e9+6] (the [[polyHash]] of
+    * tag ‖ key, or a scatter of it) as (h + 1) / (1e9 + 8). Exact in
+    * both engines: h + 1 < 2^53 and one IEEE division.
+    */
+  def uniform(h: Column): Column = (h + 1L).cast("double") / lit(1000000008.0)
+
+  /** [[uniform]]'s DuckDB twin over a hash expression `h`. */
+  def uniformSql(h: String): String = s"CAST($h + 1 AS DOUBLE) / 1000000008.0"
+
   /** Second independent polynomial (base 137, mod 1e9+9) — the DuckDB
     * twin of graft.functions.PolyHash2.
     */

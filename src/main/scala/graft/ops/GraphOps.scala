@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import Ranking.{topK, topKSql}
+import QRound.{qroundLong, qroundLongSql}
 
 /** Graph analytics over the customer→supplier trade network — the
   * iterative-join family a training-data pipeline needs for link-graph
@@ -204,9 +205,9 @@ object GraphOps {
         Window.unboundedPreceding, Window.unboundedFollowing)
       perC.join(nNodes, "community")
         .withColumn("t", sum($"deg_sum").over(wAll))
-        .withColumn("qm", round(($"intra_rows".cast("double") / $"t"
+        .withColumn("qm", qroundLong(($"intra_rows".cast("double") / $"t"
           - ($"deg_sum".cast("double") / $"t")
-            * ($"deg_sum".cast("double") / $"t")) * 1e6, 0).cast("long"))
+            * ($"deg_sum".cast("double") / $"t")) * 1e6))
         .withColumn("q_total",
           round(sum($"qm").over(wAll).cast("double") / 1e6, 6))
         .select($"community", $"n_nodes", $"intra_rows", $"deg_sum",
@@ -315,7 +316,7 @@ object GraphOps {
         .filter($"s" =!= $"t" && $"v" =!= $"s" && $"v" =!= $"t" &&
           $"dsv" + $"dvt" === $"dst")
         .withColumn("term_nano",
-          round($"sigsv" * $"sigvt" * lit(1e9) / $"sigst", 0).cast("long"))
+          qroundLong($"sigsv" * $"sigvt" * lit(1e9) / $"sigst"))
         .groupBy($"v").agg(sum($"term_nano").as("tn"))
       nation(s, d).select($"n_nationkey".as("v"), $"n_name")
         .join(bc, Seq("v"), "left")
@@ -592,7 +593,7 @@ object GraphOps {
       val aa = cand
         .join(broadcast(deg.select($"node".as("z"), $"deg".as("degz"))), "z")
         .withColumn("aa_nano",
-          round(lit(1e9) / log($"degz".cast("double")), 0).cast("long"))
+          qroundLong(lit(1e9) / log($"degz".cast("double"))))
         .groupBy($"x", $"y")
         .agg(count(lit(1)).as("common"), sum($"aa_nano").as("aa_nano"))
       aa.join(broadcast(deg.select($"node".as("x"), $"deg".as("deg_x"))), "x")
@@ -790,7 +791,7 @@ object GraphOps {
          |$rounds,
          |terms AS (
          |  SELECT sv.v AS v,
-         |    CAST(ROUND(sv.sig * vt.sig * 1e9 / stt.sig, 0) AS BIGINT)
+         |    ${qroundLongSql("sv.sig * vt.sig * 1e9 / stt.sig")}
          |      AS term_nano
          |  FROM b4 sv
          |  JOIN b4 vt ON sv.v = vt.s
@@ -907,9 +908,9 @@ object GraphOps {
          |  FROM nl GROUP BY 1),
          |qq AS (
          |  SELECT pc.community, nn.n_nodes, pc.intra_rows, pc.deg_sum,
-         |    CAST(ROUND((CAST(intra_rows AS DOUBLE) / t
+         |    ${qroundLongSql("""(CAST(intra_rows AS DOUBLE) / t
          |      - (CAST(deg_sum AS DOUBLE) / t)
-         |        * (CAST(deg_sum AS DOUBLE) / t)) * 1e6, 0) AS BIGINT)
+         |        * (CAST(deg_sum AS DOUBLE) / t)) * 1e6""")}
          |      AS qm
          |  FROM pc JOIN nn ON pc.community = nn.community
          |  CROSS JOIN tt)
@@ -971,8 +972,7 @@ object GraphOps {
          |    SELECT 1 FROM und u WHERE u.a = w.x AND u.b = w.y)),
          |aa AS (
          |  SELECT x, y, CAST(COUNT(*) AS BIGINT) AS common,
-         |    CAST(SUM(CAST(ROUND(1e9 / ln(CAST(dz.deg AS DOUBLE)), 0)
-         |      AS BIGINT)) AS BIGINT) AS aa_nano
+         |    CAST(SUM(${qroundLongSql("1e9 / ln(CAST(dz.deg AS DOUBLE))")}) AS BIGINT) AS aa_nano
          |  FROM cand JOIN deg dz ON cand.z = dz.node
          |  GROUP BY 1, 2)
          |SELECT x, y, common, dx.deg AS deg_x, dy.deg AS deg_y,

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import Ranking.{topK, topKSql}
+import QRound.{qroundLong, qroundLongSql}
 
 /** ML layer (SURVEY §2.10 U5/U6/U8, §7.1 M7): CountVectorizer bag-of-words,
   * seeded LDA topic modeling (reference: Gensim LdaModel k=12/32/auto,
@@ -452,7 +453,7 @@ object MLOps {
       .withColumn("npmi",
         log($"pj" * $"n_units" * $"n_units" / ($"df1" * $"df2")) / -log($"pj"))
       .select($"topic", $"w1", $"w2",
-        round($"npmi" * 1e6, 0).cast("long").as("q"))
+        qroundLong($"npmi" * 1e6).as("q"))
     val ctx = q.groupBy($"topic", $"w2").agg(sum($"q").as("sq"))
     val per = q.join(ctx, Seq("topic", "w2"))
       .groupBy($"topic", $"w1")
@@ -460,9 +461,8 @@ object MLOps {
     val nrm = ctx.groupBy($"topic").agg(sum($"sq" * $"sq").as("n2"))
     per.join(nrm, "topic")
       .withColumn("phiq",
-        round($"dot".cast("double")
-          / (sqrt($"n1".cast("double")) * sqrt($"n2".cast("double"))) * 1e6, 0)
-          .cast("long"))
+        qroundLong($"dot".cast("double")
+          / (sqrt($"n1".cast("double")) * sqrt($"n2".cast("double"))) * 1e6))
       .select($"topic", $"w1", $"phiq")
   }
 
@@ -680,11 +680,8 @@ object MLOps {
           // posexploding to nnz×K rows — the checkpoint buffer shrinks
           // K-fold in row count and both M-step aggregates read the
           // array positionally, so no k column ever needs grouping.
-          // QRound.qroundLong is the bit-identical fast path for
-          // round(x*1e6, 0).cast("long") — this expression runs
-          // nnz×K times per round and was BigDecimal-bound.
           .select($"doc_id", $"word",
-            array((0 until k).map(j => QRound.qroundLong(
+            array((0 until k).map(j => qroundLong(
               $"n" * (element_at($"rl", j + 1) / $"den") * 1e6)): _*)
               .as("wk"))
           .localCheckpoint(false)
@@ -808,7 +805,7 @@ object MLOps {
           var den = 0.0
           var j = 0
           while (j < k) { den += rl(j); j += 1 }
-          (w, Array.tabulate(k)(j => QRound.qroundLong(n * (rl(j) / den) * 1e6)))
+          (w, Array.tabulate(k)(j => qroundLong(n * (rl(j) / den) * 1e6)))
         }
       val phBs = scala.collection.mutable.ListBuffer
         .empty[org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]]
@@ -978,9 +975,8 @@ object MLOps {
           element_at($"ds", 1).getField("d").as("a"),
           element_at($"ds", 2).getField("d").as("b"))
         .withColumn("sm",
-          round(when(greatest($"a", $"b") === 0, lit(0.0))
-            .otherwise(($"b" - $"a") / greatest($"a", $"b")) * 1e6, 0)
-            .cast("long"))
+          qroundLong(when(greatest($"a", $"b") === 0, lit(0.0))
+            .otherwise(($"b" - $"a") / greatest($"a", $"b")) * 1e6))
         .groupBy($"cid")
         .agg(count(lit(1)).as("n"),
           round(sum($"sm").cast("double") / count(lit(1)) / 1e6, 6)
@@ -1295,21 +1291,21 @@ object MLOps {
         .select($"vec_id", posexplode(slice($"e", 1, PcaDim)))
         .toDF("vec_id", "i", "xi")
       val mu = ex.groupBy($"i")
-        .agg(sum(round($"xi" * 1e6, 0).cast("long")).as("zs"),
+        .agg(sum(qroundLong($"xi" * 1e6)).as("zs"),
           count(lit(1)).as("cnt"))
         .select($"i", ($"zs" / 1e6 / $"cnt").as("mu"))
       val cij = ex.join(broadcast(mu), "i")
         .join(ex.toDF("vec_id", "j", "xj")
           .join(broadcast(mu.toDF("j", "muj")), "j"), "vec_id")
         .withColumn("t_e12",
-          round(($"xi" - $"mu") * ($"xj" - $"muj") * 1e12, 0).cast("long"))
+          qroundLong(($"xi" - $"mu") * ($"xj" - $"muj") * 1e12))
         .groupBy($"i", $"j").agg(sum($"t_e12").as("c"))
         .localCheckpoint(false)
       var v = mu.select($"i".as("j"), lit(1.0).as("vj"))
       var mx: DataFrame = null
       for (_ <- 1 to PcaIters) {
         val sdf = cij.join(broadcast(v), "j")
-          .withColumn("t", round($"c" * $"vj" / 1e3, 0).cast("long"))
+          .withColumn("t", qroundLong($"c" * $"vj" / 1e3))
           .groupBy($"i").agg(sum($"t").as("s"))
         mx = sdf.agg(max(abs($"s")).as("m"))
         v = sdf.crossJoin(broadcast(mx))
@@ -1341,10 +1337,8 @@ object MLOps {
         a11 * (a22 * a33 - a23 * a32) - a12 * (a21 * a33 - a23 * a31) +
           a13 * (a21 * a32 - a22 * a31)
       val z = embeddings(s, d).select(
-        round(element_at($"embedding", 1).cast("double") * 1e6, 0)
-          .cast("long").as("z1"),
-        round(element_at($"embedding", 2).cast("double") * 1e6, 0)
-          .cast("long").as("z2"),
+        qroundLong(element_at($"embedding", 1).cast("double") * 1e6).as("z1"),
+        qroundLong(element_at($"embedding", 2).cast("double") * 1e6).as("z2"),
         $"label".cast("long").as("y"))
       val g = z.agg(
         count(lit(1)).as("n"), sum($"z1").as("s1"), sum($"z2").as("s2"),
@@ -1375,7 +1369,7 @@ object MLOps {
         .withColumn("yhat",
           $"w1" * $"z1".cast("double") + $"w2" * $"z2".cast("double") + $"w0")
         .withColumn("se_e6",
-          round(($"y" - $"yhat") * ($"y" - $"yhat") * 1e6, 0).cast("long"))
+          qroundLong(($"y" - $"yhat") * ($"y" - $"yhat") * 1e6))
         .groupBy($"n", $"w1", $"w2", $"w0")
         .agg(sum($"se_e6").as("sse_e6"))
         .select($"n",
@@ -1443,8 +1437,7 @@ object MLOps {
       val pt = (1 to GdSteps).map { k =>
         val p = lit(1.0) / (lit(1.0) + exp(-(col(s"w0_$k")
           + col(s"w1_$k") * $"x1" + col(s"w2_$k") * $"x2")))
-        round((when($"y" === 1.0, p).otherwise(lit(1.0) - p)) * 1e9, 0)
-          .cast("long")
+        qroundLong((when($"y" === 1.0, p).otherwise(lit(1.0) - p)) * 1e9)
       }
       val scored = zc.crossJoin(broadcast(wWide))
         .withColumn("sp", pt.reduce(_ + _))
@@ -1491,10 +1484,10 @@ object MLOps {
         .select((round($"value" * 1e6, 0) / 1e6).as("x"))
         .localCheckpoint(false) // one build, GmmSteps passes
       var w = z.agg(count(lit(1)).as("n"),
-          min(round($"x" * 1e6, 0).cast("long")).as("xmin"),
-          max(round($"x" * 1e6, 0).cast("long")).as("xmax"),
-          sum(round($"x" * 1e6, 0).cast("long")).as("sx"),
-          sum(round($"x" * $"x" * 1e6, 0).cast("long")).as("sxx"))
+          min(qroundLong($"x" * 1e6)).as("xmin"),
+          max(qroundLong($"x" * 1e6)).as("xmax"),
+          sum(qroundLong($"x" * 1e6)).as("sx"),
+          sum(qroundLong($"x" * $"x" * 1e6)).as("sxx"))
         .select($"n", lit(0.5).as("w1"),
           ($"xmin".cast("double") / 1e6
             + ($"xmax".cast("double") / 1e6 - $"xmin".cast("double") / 1e6)
@@ -1521,14 +1514,14 @@ object MLOps {
           .withColumn("den", greatest($"l1" + $"l2", lit(1e-300)))
           .withColumn("r1", $"l1" / $"den")
         val g = sc.agg(max($"n").as("n"),
-          sum(round($"r1" * 1e9, 0).cast("long")).as("a1"),
-          sum(round($"r1" * $"x" * 1e6, 0).cast("long")).as("b1"),
-          sum(round($"r1" * $"x" * $"x" * 1e6, 0).cast("long")).as("c1"),
-          sum(round((lit(1.0) - $"r1") * 1e9, 0).cast("long")).as("a2"),
-          sum(round((lit(1.0) - $"r1") * $"x" * 1e6, 0).cast("long")).as("b2"),
-          sum(round((lit(1.0) - $"r1") * $"x" * $"x" * 1e6, 0).cast("long"))
+          sum(qroundLong($"r1" * 1e9)).as("a1"),
+          sum(qroundLong($"r1" * $"x" * 1e6)).as("b1"),
+          sum(qroundLong($"r1" * $"x" * $"x" * 1e6)).as("c1"),
+          sum(qroundLong((lit(1.0) - $"r1") * 1e9)).as("a2"),
+          sum(qroundLong((lit(1.0) - $"r1") * $"x" * 1e6)).as("b2"),
+          sum(qroundLong((lit(1.0) - $"r1") * $"x" * $"x" * 1e6))
             .as("c2"),
-          sum(round(log($"den") * 1e6, 0).cast("long")).as("ll"))
+          sum(qroundLong(log($"den") * 1e6)).as("ll"))
           .localCheckpoint(false)
         val p1 = mstep($"a1", $"b1", $"c1")
         val p2 = mstep($"a2", $"b2", $"c2")
@@ -1569,8 +1562,7 @@ object MLOps {
     "ml_decision_stump" -> ((s, d) => {
       import s.implicits._
       val z = embeddings(s, d).select(
-        round(element_at($"embedding", 1).cast("double") * 1e6, 0)
-          .cast("long").as("micro"),
+        qroundLong(element_at($"embedding", 1).cast("double") * 1e6).as("micro"),
         when($"label" === 1, 1L).otherwise(0L).as("y"))
       val st = z.agg(min($"micro").as("lo"), max($"micro").as("hi"),
         count(lit(1)).as("n"), sum($"y").as("npos"))
@@ -1656,12 +1648,9 @@ object MLOps {
       val T = 3
       val base = embeddings(s, d).select(
         $"vec_id",
-        round(element_at($"embedding", 1).cast("double") * 1e6, 0)
-          .cast("long").as("f1"),
-        round(element_at($"embedding", 2).cast("double") * 1e6, 0)
-          .cast("long").as("f2"),
-        round(element_at($"embedding", 3).cast("double") * 1e6, 0)
-          .cast("long").as("f3"),
+        qroundLong(element_at($"embedding", 1).cast("double") * 1e6).as("f1"),
+        qroundLong(element_at($"embedding", 2).cast("double") * 1e6).as("f2"),
+        qroundLong(element_at($"embedding", 3).cast("double") * 1e6).as("f3"),
         when($"label" === 1, 1L).otherwise(-1L).as("y"))
       val feat = base.select($"vec_id", $"y",
         explode(map(lit(1L), $"f1", lit(2L), $"f2", lit(3L), $"f3"))
@@ -1710,9 +1699,9 @@ object MLOps {
           .withColumn("epsc", greatest($"eps", expr("sw div 1000")))
           .withColumn("alpha",
             log(($"sw" - $"epsc").cast("double") / $"epsc") * 0.5)
-          .withColumn("alpha_nano", round($"alpha" * 1e9, 0).cast("long"))
-          .withColumn("fup", round(exp($"alpha") * 1e6, 0).cast("long"))
-          .withColumn("fdn", round(exp(-$"alpha") * 1e6, 0).cast("long"))
+          .withColumn("alpha_nano", qroundLong($"alpha" * 1e9))
+          .withColumn("fup", qroundLong(exp($"alpha") * 1e6))
+          .withColumn("fdn", qroundLong(exp(-$"alpha") * 1e6))
           .localCheckpoint(false) // 1 row; ends the round's lineage
         val pred = binned.join(broadcast(best.select($"j",
             $"bin".as("tb"), $"pol", $"fup", $"fdn", $"alpha_nano")), "j")
@@ -1768,14 +1757,10 @@ object MLOps {
       val T = 3
       val base0 = embeddings(s, d).select(
         $"vec_id",
-        round(element_at($"embedding", 1).cast("double") * 1e6, 0)
-          .cast("long").as("f1"),
-        round(element_at($"embedding", 2).cast("double") * 1e6, 0)
-          .cast("long").as("f2"),
-        round(element_at($"embedding", 3).cast("double") * 1e6, 0)
-          .cast("long").as("f3"),
-        round(element_at($"embedding", 4).cast("double") * 1e6, 0)
-          .cast("long").as("y"))
+        qroundLong(element_at($"embedding", 1).cast("double") * 1e6).as("f1"),
+        qroundLong(element_at($"embedding", 2).cast("double") * 1e6).as("f2"),
+        qroundLong(element_at($"embedding", 3).cast("double") * 1e6).as("f3"),
+        qroundLong(element_at($"embedding", 4).cast("double") * 1e6).as("y"))
       val feat = base0.select($"vec_id",
         explode(map(lit(1L), $"f1", lit(2L), $"f2", lit(3L), $"f3"))
           .as(Seq("j", "micro")))
@@ -1787,7 +1772,7 @@ object MLOps {
         .select($"vec_id", $"j", $"bin")
         .localCheckpoint(false)
       val f0 = base0.agg(
-        round(sum($"y").cast("double") / count(lit(1)), 0).cast("long")
+        qroundLong(sum($"y").cast("double") / count(lit(1)))
           .as("f0"))
       var res = base0.select($"vec_id", $"y").crossJoin(broadcast(f0))
         .select($"vec_id", ($"y" - $"f0").as("r"))
@@ -1813,9 +1798,9 @@ object MLOps {
         val best = cum
           .orderBy($"gain".desc, $"j".asc, $"bin".asc).limit(1)
           .select($"j", $"bin".as("tb"),
-            round($"sl".cast("double") / $"nl" * 0.5, 0).cast("long")
+            qroundLong($"sl".cast("double") / $"nl" * 0.5)
               .as("cl"),
-            round($"sr".cast("double") / $"nr" * 0.5, 0).cast("long")
+            qroundLong($"sr".cast("double") / $"nr" * 0.5)
               .as("cr"))
           .localCheckpoint(false)
         res = res.join(
@@ -1880,9 +1865,8 @@ object MLOps {
         val den = nij
           .join(st.select($"t".as("ti"), $"s_e9".as("si")), "ti")
           .join(st.select($"t".as("tj"), $"s_e9".as("sj")), "tj")
-          .withColumn("term_e9", round(lit(1e9) * $"nij".cast("double")
-            / ($"si".cast("double") / 1e9 + $"sj".cast("double") / 1e9), 0)
-            .cast("long"))
+          .withColumn("term_e9", qroundLong(lit(1e9) * $"nij".cast("double")
+            / ($"si".cast("double") / 1e9 + $"sj".cast("double") / 1e9)))
           .groupBy($"ti".as("t")).agg(sum($"term_e9").as("den_e9"))
         // +0.5 pseudo-win regularization (the standard BT floor): raw BT
         // strengths are only well-defined when the comparison graph is
@@ -1893,12 +1877,12 @@ object MLOps {
         // double and the trajectory still replays bit-for-bit in the
         // oracle (which applies the same floor).
         val raw = dom.join(den, Seq("t"))
-          .withColumn("r_e9", round(($"wi".cast("double") + 0.5)
-            / ($"den_e9".cast("double") / 1e9) * 1e9, 0).cast("long"))
+          .withColumn("r_e9", qroundLong(($"wi".cast("double") + 0.5)
+            / ($"den_e9".cast("double") / 1e9) * 1e9))
         val tot = raw.agg(sum($"r_e9").as("sum_e9"), count(lit(1)).as("nt"))
         st = raw.crossJoin(broadcast(tot))
-          .select($"t", round($"r_e9".cast("double") * $"nt".cast("double")
-            * 1e9 / $"sum_e9".cast("double"), 0).cast("long").as("s_e9"))
+          .select($"t", qroundLong($"r_e9".cast("double") * $"nt".cast("double")
+            * 1e9 / $"sum_e9".cast("double")).as("s_e9"))
           .localCheckpoint(false)
         st.select(lit(k).as("step"), $"t".as("event_type"),
           $"s_e9".as("strength_e9"),
@@ -1932,14 +1916,12 @@ object MLOps {
         // quantization — strategy/fast-path only, values identical
         val pe = r.join(u.hint("SHUFFLE_HASH"), "cust")
           .join(v.hint("SHUFFLE_HASH"), "part")
-          .select(QRound.qroundLong((($"r" - ($"u1" * $"v1" + $"u2" * $"v2"))
+          .select(qroundLong((($"r" - ($"u1" * $"v1" + $"u2" * $"v2"))
               * ($"r" - ($"u1" * $"v1" + $"u2" * $"v2"))) * 1e6)
             .as("se_e6"))
           .agg(count(lit(1)).as("n_pairs"), sum($"se_e6").as("se"))
-        val un = u.agg(sum(round((abs($"u1") + abs($"u2")) * 1e6, 0)
-          .cast("long")).as("su"))
-        val vn = v.agg(sum(round((abs($"v1") + abs($"v2")) * 1e6, 0)
-          .cast("long")).as("sv"))
+        val un = u.agg(sum(qroundLong((abs($"u1") + abs($"u2")) * 1e6)).as("su"))
+        val vn = v.agg(sum(qroundLong((abs($"v1") + abs($"v2")) * 1e6)).as("sv"))
         pe.crossJoin(un).crossJoin(vn).select(
           lit(i + 1).as("step"), $"n_pairs",
           round(sqrt(($"se".cast("double") / 1e6) / $"n_pairs".cast("double")),
@@ -2027,7 +2009,7 @@ object MLOps {
     topK(items.crossJoin(broadcast(DedupOps.hashSample(users, "cust")))
         .join(r.select(col("cust"), col("part")), Seq("cust", "part"), "left_anti")
         .withColumn("pred_e6",
-          round((col("u1") * col("v1") + col("u2") * col("v2")) * 1e6, 0).cast("long")),
+          qroundLong((col("u1") * col("v1") + col("u2") * col("v2")) * 1e6)),
       Seq(col("cust")), Seq(desc("pred_e6"), asc("part")), depth, Some("rank"))
       .select(col("cust"), col("part"), col("pred_e6"), col("rank"))
 
@@ -2038,8 +2020,7 @@ object MLOps {
     s"""qc AS (${DedupOps.hashSampleSql("cust, u1, u2", s"u$AlsIters", "cust")}),
        |cand AS (
        |  SELECT qc.cust, v.part,
-       |    CAST(ROUND((qc.u1 * v.v1 + qc.u2 * v.v2) * 1000000.0, 0)
-       |      AS BIGINT) AS pred_e6
+       |    ${qroundLongSql("(qc.u1 * v.v1 + qc.u2 * v.v2) * 1000000.0")} AS pred_e6
        |  FROM qc CROSS JOIN v$AlsIters v
        |  WHERE NOT EXISTS (
        |    SELECT 1 FROM r WHERE r.cust = qc.cust AND r.part = v.part)),
@@ -2122,19 +2103,17 @@ object MLOps {
   private def alsTerms(r: DataFrame, fac: DataFrame, joinKey: String,
       groupKey: String, g1: String, g2: String): DataFrame = {
     import org.apache.spark.sql.functions.{col => c}
-    // QRound.qroundLong = bit-identical fast path for round(·,0).cast
-    // (five quantizations per rating row per half-step — BigDecimal-hot)
     // SHUFFLE_HASH on the factor side (round 18): the default
     // sort-merge re-SORTED the ratings table every half-step (10 sorts
     // per fit); hash-building the side-cardinality factor frame
     // streams the ratings unsorted. Output row-identical.
     r.join(fac.hint("SHUFFLE_HASH"), joinKey)
       .select(c(groupKey),
-        QRound.qroundLong((c(g1) * c(g1)) * 1e6).as("q11"),
-        QRound.qroundLong((c(g1) * c(g2)) * 1e6).as("q12"),
-        QRound.qroundLong((c(g2) * c(g2)) * 1e6).as("q22"),
-        QRound.qroundLong((c("r") * c(g1)) * 1e6).as("qb1"),
-        QRound.qroundLong((c("r") * c(g2)) * 1e6).as("qb2"))
+        qroundLong((c(g1) * c(g1)) * 1e6).as("q11"),
+        qroundLong((c(g1) * c(g2)) * 1e6).as("q12"),
+        qroundLong((c(g2) * c(g2)) * 1e6).as("q22"),
+        qroundLong((c("r") * c(g1)) * 1e6).as("qb1"),
+        qroundLong((c("r") * c(g2)) * 1e6).as("qb2"))
       .groupBy(c(groupKey)).agg(sum(c("q11")).as("a11"),
         sum(c("q12")).as("a12"), sum(c("q22")).as("a22"),
         sum(c("qb1")).as("b1"), sum(c("qb2")).as("b2"))
@@ -2211,12 +2190,11 @@ object MLOps {
       val g = joined.agg(
         max($"n").as("n"), max($"w0").as("pw0"),
         max($"w1").as("pw1"), max($"w2").as("pw2"),
-        sum(round($"r" * 1e9, 0).cast("long")).as("g0"),
-        sum(round($"r" * $"x1" * 1e9, 0).cast("long")).as("g1"),
-        sum(round($"r" * $"x2" * 1e9, 0).cast("long")).as("g2"),
-        sum(round(-($"y" * log($"pc") +
-          (lit(1.0) - $"y") * log(lit(1.0) - $"pc")) * 1e6, 0)
-          .cast("long")).as("le6"))
+        sum(qroundLong($"r" * 1e9)).as("g0"),
+        sum(qroundLong($"r" * $"x1" * 1e9)).as("g1"),
+        sum(qroundLong($"r" * $"x2" * 1e9)).as("g2"),
+        sum(qroundLong(-($"y" * log($"pc") +
+          (lit(1.0) - $"y") * log(lit(1.0) - $"pc")) * 1e6)).as("le6"))
       w = g.select($"n",
           ($"pw0" - lit(GdEta) * ($"g0" / 1e9) / $"n").as("w0"),
           ($"pw1" - lit(GdEta) * ($"g1" / 1e9) / $"n").as("w1"),
@@ -2241,11 +2219,11 @@ object MLOps {
       val pw = if (k == 1) "wz" else s"w${k - 1}"
       s"""g$k AS MATERIALIZED (
          |  SELECT
-         |    SUM(CAST(ROUND(r * 1000000000.0, 0) AS BIGINT)) AS g0,
-         |    SUM(CAST(ROUND(r * x1 * 1000000000.0, 0) AS BIGINT)) AS g1,
-         |    SUM(CAST(ROUND(r * x2 * 1000000000.0, 0) AS BIGINT)) AS g2,
-         |    SUM(CAST(ROUND(-(y * ln(pc) + (1.0 - y) * ln(1.0 - pc))
-         |      * 1000000.0, 0) AS BIGINT)) AS le6
+         |    SUM(${qroundLongSql("r * 1000000000.0")}) AS g0,
+         |    SUM(${qroundLongSql("r * x1 * 1000000000.0")}) AS g1,
+         |    SUM(${qroundLongSql("r * x2 * 1000000000.0")}) AS g2,
+         |    SUM(${qroundLongSql("""-(y * ln(pc) + (1.0 - y) * ln(1.0 - pc))
+         |      * 1000000.0""")}) AS le6
          |  FROM (
          |    SELECT y, x1, x2,
          |      GREATEST(LEAST(p, 1.0 - 1e-12), 1e-12) AS pc, p - y AS r
@@ -2409,9 +2387,9 @@ object MLOps {
        |${pfx}jt AS (SELECT * FROM ${pfx}jtu
        |  UNION ALL SELECT topic, w2, w1, joint FROM ${pfx}jtu),
        |${pfx}q AS (
-       |  SELECT topic, w1, w2, CAST(ROUND(
+       |  SELECT topic, w1, w2, ${qroundLongSql("""
        |      ln(pj * n_units * n_units / (df1 * df2)) / -ln(pj)
-       |      * 1000000.0) AS BIGINT) AS q
+       |      * 1000000.0""")} AS q
        |  FROM (
        |    SELECT p.topic, p.w1, p.w2, d1.df AS df1, d2.df AS df2,
        |      (SELECT n_units FROM ${pfx}u) AS n_units,
@@ -2431,9 +2409,9 @@ object MLOps {
        |${pfx}nrm AS (SELECT topic, SUM(sq * sq) AS n2 FROM ${pfx}ctx GROUP BY 1),
        |${pfx}phi AS (
        |  SELECT p.topic,
-       |    CAST(ROUND(CAST(p.dot AS DOUBLE)
+       |    ${qroundLongSql("""CAST(p.dot AS DOUBLE)
        |      / (sqrt(CAST(p.n1 AS DOUBLE)) * sqrt(CAST(n.n2 AS DOUBLE)))
-       |      * 1000000.0) AS BIGINT) AS phiq
+       |      * 1000000.0""")} AS phiq
        |  FROM ${pfx}per p JOIN ${pfx}nrm n ON p.topic = n.topic)""".stripMargin
   }
 
@@ -2522,7 +2500,7 @@ object MLOps {
          |  FROM ${pfx}j$t GROUP BY 1, 2),
          |${pfx}r$t AS MATERIALIZED (
          |  SELECT j.doc_id, j.word, j.k,
-         |    CAST(ROUND((j.n * (j.q / d.den)) * 1000000.0) AS BIGINT) AS wkm
+         |    ${qroundLongSql("(j.n * (j.q / d.den)) * 1000000.0")} AS wkm
          |  FROM ${pfx}j$t j JOIN ${pfx}den$t d
          |    ON j.doc_id = d.doc_id AND j.word = d.word),
          |${pfx}skw$t AS (
@@ -2606,8 +2584,8 @@ object MLOps {
          |    ON r1.vec_id = r2.vec_id AND r1.rn = 1 AND r2.rn = 2),
          |sm AS (
          |  SELECT cid,
-         |    CAST(ROUND((CASE WHEN GREATEST(a, b) = 0 THEN 0.0
-         |      ELSE (b - a) / GREATEST(a, b) END) * 1000000.0) AS BIGINT)
+         |    ${qroundLongSql("""(CASE WHEN GREATEST(a, b) = 0 THEN 0.0
+         |      ELSE (b - a) / GREATEST(a, b) END) * 1000000.0""")}
          |      AS sm
          |  FROM ab)
          |SELECT cid, COUNT(*) AS n,
@@ -2752,7 +2730,7 @@ object MLOps {
       val rounds = (1 to PcaIters).map { r =>
         s"""s$r AS (
            |  SELECT c.i,
-           |    CAST(SUM(CAST(ROUND(c.c * v${r - 1}.vj / 1e3, 0) AS BIGINT))
+           |    CAST(SUM(${qroundLongSql(s"c.c * v${r - 1}.vj / 1e3")})
            |      AS BIGINT) AS s
            |  FROM c JOIN v${r - 1} ON c.j = v${r - 1}.j GROUP BY 1),
            |m$r AS (SELECT MAX(ABS(s)) AS m FROM s$r),
@@ -2767,13 +2745,12 @@ object MLOps {
          |  FROM x, (SELECT unnest(range($PcaDim)) AS i) g),
          |mu AS (
          |  SELECT i,
-         |    CAST(SUM(CAST(ROUND(xi * 1e6, 0) AS BIGINT)) AS BIGINT)
+         |    CAST(SUM(${qroundLongSql("xi * 1e6")}) AS BIGINT)
          |      / 1e6 / COUNT(*) AS mu
          |  FROM ex GROUP BY 1),
          |c AS (
          |  SELECT a.i, b.i AS j,
-         |    CAST(SUM(CAST(ROUND((a.xi - m1.mu) * (b.xi - m2.mu) * 1e12, 0)
-         |      AS BIGINT)) AS BIGINT) AS c
+         |    CAST(SUM(${qroundLongSql("(a.xi - m1.mu) * (b.xi - m2.mu) * 1e12")}) AS BIGINT) AS c
          |  FROM ex a
          |  JOIN ex b ON a.vec_id = b.vec_id
          |  JOIN mu m1 ON a.i = m1.i
@@ -2805,10 +2782,10 @@ object MLOps {
       // the Spark side holds all GdSteps quantized probabilities in one
       // row, so the oracle mirrors that as fixed left-to-right sums.
       def ptk(k: Int) =
-        s"""CAST(ROUND((CASE WHEN y = 1.0
+        qroundLongSql(s"""(CASE WHEN y = 1.0
            |  THEN 1.0 / (1.0 + exp(-(w$k.w0 + w$k.w1 * x1 + w$k.w2 * x2)))
            |  ELSE 1.0 - 1.0 / (1.0 + exp(-(w$k.w0 + w$k.w1 * x1
-           |    + w$k.w2 * x2))) END) * 1e9, 0) AS BIGINT)""".stripMargin
+           |    + w$k.w2 * x2))) END) * 1e9""".stripMargin)
       val ptCols = (1 to GdSteps)
         .map(k => s"${ptk(k)} AS pt$k").mkString(",\n")
       val spSum = (1 to GdSteps).map(k => s"pt$k").mkString(" + ")
@@ -2854,9 +2831,8 @@ object MLOps {
          |ORDER BY vec_id""".stripMargin
     },
     "ml_decision_stump" ->
-      """WITH z AS (
-        |  SELECT CAST(ROUND(CAST(embedding[1] AS DOUBLE) * 1e6, 0)
-        |    AS BIGINT) AS micro,
+      s"""WITH z AS (
+        |  SELECT ${qroundLongSql("CAST(embedding[1] AS DOUBLE) * 1e6")} AS micro,
         |    CASE WHEN label = 1 THEN 1 ELSE 0 END AS y
         |  FROM embeddings),
         |st AS (
@@ -2950,9 +2926,9 @@ object MLOps {
            |  SELECT *, ln(CAST(sw - epsc AS DOUBLE) / epsc) * 0.5 AS alpha
            |  FROM pick$t),
            |bf$t AS (
-           |  SELECT *, CAST(ROUND(alpha * 1e9, 0) AS BIGINT) AS alpha_nano,
-           |    CAST(ROUND(exp(alpha) * 1e6, 0) AS BIGINT) AS fup,
-           |    CAST(ROUND(exp(-alpha) * 1e6, 0) AS BIGINT) AS fdn
+           |  SELECT *, ${qroundLongSql("alpha * 1e9")} AS alpha_nano,
+           |    ${qroundLongSql("exp(alpha) * 1e6")} AS fup,
+           |    ${qroundLongSql("exp(-alpha) * 1e6")} AS fdn
            |  FROM al$t),
            |pred$t AS (
            |  SELECT b.vec_id,
@@ -2974,11 +2950,11 @@ object MLOps {
       }.mkString("\nUNION ALL\n")
       s"""WITH base AS (
          |  SELECT vec_id,
-         |    CAST(ROUND(CAST(embedding[1] AS DOUBLE) * 1e6, 0) AS BIGINT)
+         |    ${qroundLongSql("CAST(embedding[1] AS DOUBLE) * 1e6")}
          |      AS f1,
-         |    CAST(ROUND(CAST(embedding[2] AS DOUBLE) * 1e6, 0) AS BIGINT)
+         |    ${qroundLongSql("CAST(embedding[2] AS DOUBLE) * 1e6")}
          |      AS f2,
-         |    CAST(ROUND(CAST(embedding[3] AS DOUBLE) * 1e6, 0) AS BIGINT)
+         |    ${qroundLongSql("CAST(embedding[3] AS DOUBLE) * 1e6")}
          |      AS f3,
          |    CASE WHEN label = 1 THEN CAST(1 AS BIGINT)
          |      ELSE CAST(-1 AS BIGINT) END AS y
@@ -3044,9 +3020,9 @@ object MLOps {
            |  FROM cum$t WHERE nl < nt),
            |best$t AS (
            |  SELECT j, bin AS tb,
-           |    CAST(ROUND(CAST(sl AS DOUBLE) / nl * 0.5, 0) AS BIGINT)
+           |    ${qroundLongSql("CAST(sl AS DOUBLE) / nl * 0.5")}
            |      AS cl,
-           |    CAST(ROUND(CAST(sr AS DOUBLE) / nr * 0.5, 0) AS BIGINT)
+           |    ${qroundLongSql("CAST(sr AS DOUBLE) / nr * 0.5")}
            |      AS cr
            |  FROM gain$t ORDER BY gain DESC, j, bin LIMIT 1),
            |res${t + 1} AS (
@@ -3070,13 +3046,13 @@ object MLOps {
       }.mkString("\nUNION ALL\n")
       s"""WITH base AS (
          |  SELECT vec_id,
-         |    CAST(ROUND(CAST(embedding[1] AS DOUBLE) * 1e6, 0) AS BIGINT)
+         |    ${qroundLongSql("CAST(embedding[1] AS DOUBLE) * 1e6")}
          |      AS f1,
-         |    CAST(ROUND(CAST(embedding[2] AS DOUBLE) * 1e6, 0) AS BIGINT)
+         |    ${qroundLongSql("CAST(embedding[2] AS DOUBLE) * 1e6")}
          |      AS f2,
-         |    CAST(ROUND(CAST(embedding[3] AS DOUBLE) * 1e6, 0) AS BIGINT)
+         |    ${qroundLongSql("CAST(embedding[3] AS DOUBLE) * 1e6")}
          |      AS f3,
-         |    CAST(ROUND(CAST(embedding[4] AS DOUBLE) * 1e6, 0) AS BIGINT)
+         |    ${qroundLongSql("CAST(embedding[4] AS DOUBLE) * 1e6")}
          |      AS y
          |  FROM embeddings),
          |feat AS (
@@ -3094,8 +3070,7 @@ object MLOps {
          |  FROM feat f JOIN grid g ON f.j = g.j
          |  WHERE hi <> lo),
          |f0 AS (
-         |  SELECT CAST(ROUND(CAST(SUM(y) AS DOUBLE) / COUNT(*), 0)
-         |    AS BIGINT) AS f0
+         |  SELECT ${qroundLongSql("CAST(SUM(y) AS DOUBLE) / COUNT(*)")} AS f0
          |  FROM base),
          |res1 AS (
          |  SELECT vec_id, y - f0 AS r FROM base CROSS JOIN f0),
@@ -3108,13 +3083,13 @@ object MLOps {
         val prev = if (k == 1) "gw0" else s"gw${k - 1}"
         s"""ge$k AS MATERIALIZED (
            |  SELECT n,
-           |    SUM(CAST(ROUND(r1 * 1e9, 0) AS BIGINT)) AS a1,
-           |    SUM(CAST(ROUND(r1 * x * 1e6, 0) AS BIGINT)) AS b1,
-           |    SUM(CAST(ROUND(r1 * x * x * 1e6, 0) AS BIGINT)) AS c1,
-           |    SUM(CAST(ROUND((1.0 - r1) * 1e9, 0) AS BIGINT)) AS a2,
-           |    SUM(CAST(ROUND((1.0 - r1) * x * 1e6, 0) AS BIGINT)) AS b2,
-           |    SUM(CAST(ROUND((1.0 - r1) * x * x * 1e6, 0) AS BIGINT)) AS c2,
-           |    SUM(CAST(ROUND(ln(den) * 1e6, 0) AS BIGINT)) AS ll
+           |    SUM(${qroundLongSql("r1 * 1e9")}) AS a1,
+           |    SUM(${qroundLongSql("r1 * x * 1e6")}) AS b1,
+           |    SUM(${qroundLongSql("r1 * x * x * 1e6")}) AS c1,
+           |    SUM(${qroundLongSql("(1.0 - r1) * 1e9")}) AS a2,
+           |    SUM(${qroundLongSql("(1.0 - r1) * x * 1e6")}) AS b2,
+           |    SUM(${qroundLongSql("(1.0 - r1) * x * x * 1e6")}) AS c2,
+           |    SUM(${qroundLongSql("ln(den) * 1e6")}) AS ll
            |  FROM (
            |    SELECT n, x, l1 / GREATEST(l1 + l2, 1e-300) AS r1,
            |      GREATEST(l1 + l2, 1e-300) AS den
@@ -3157,10 +3132,10 @@ object MLOps {
          |  SELECT ROUND(value * 1e6, 0) / 1e6 AS x FROM events),
          |gst AS (
          |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         |    CAST(MIN(CAST(ROUND(x * 1e6, 0) AS BIGINT)) AS BIGINT) AS xmin,
-         |    CAST(MAX(CAST(ROUND(x * 1e6, 0) AS BIGINT)) AS BIGINT) AS xmax,
-         |    CAST(SUM(CAST(ROUND(x * 1e6, 0) AS BIGINT)) AS BIGINT) AS sx,
-         |    CAST(SUM(CAST(ROUND(x * x * 1e6, 0) AS BIGINT)) AS BIGINT)
+         |    CAST(MIN(${qroundLongSql("x * 1e6")}) AS BIGINT) AS xmin,
+         |    CAST(MAX(${qroundLongSql("x * 1e6")}) AS BIGINT) AS xmax,
+         |    CAST(SUM(${qroundLongSql("x * 1e6")}) AS BIGINT) AS sx,
+         |    CAST(SUM(${qroundLongSql("x * x * 1e6")}) AS BIGINT)
          |      AS sxx
          |  FROM zg),
          |gw0 AS (
@@ -3187,23 +3162,23 @@ object MLOps {
       val roundCtes = (1 to BtRounds).map { k =>
         val prev = if (k == 1) "s0" else s"s${k - 1}"
         s"""den$k AS (
-           |  SELECT n.ti AS t, CAST(SUM(CAST(ROUND(1e9 * CAST(n.nij AS DOUBLE)
+           |  SELECT n.ti AS t, CAST(SUM(${qroundLongSql("""1e9 * CAST(n.nij AS DOUBLE)
            |    / (CAST(si.s_e9 AS DOUBLE) / 1e9
-           |       + CAST(sj.s_e9 AS DOUBLE) / 1e9), 0) AS BIGINT)) AS BIGINT)
+           |       + CAST(sj.s_e9 AS DOUBLE) / 1e9)""")}) AS BIGINT)
            |    AS den_e9
            |  FROM nij n JOIN $prev si ON n.ti = si.t
            |    JOIN $prev sj ON n.tj = sj.t
            |  GROUP BY 1),
            |raw$k AS (
-           |  SELECT dw.t, CAST(ROUND((CAST(dw.wi AS DOUBLE) + 0.5)
-           |    / (CAST(den_e9 AS DOUBLE) / 1e9) * 1e9, 0) AS BIGINT) AS r_e9
+           |  SELECT dw.t, ${qroundLongSql("""(CAST(dw.wi AS DOUBLE) + 0.5)
+           |    / (CAST(den_e9 AS DOUBLE) / 1e9) * 1e9""")} AS r_e9
            |  FROM dw JOIN den$k ON dw.t = den$k.t),
            |tot$k AS (
            |  SELECT CAST(SUM(r_e9) AS BIGINT) AS sum_e9, COUNT(*) AS nt
            |  FROM raw$k),
            |s$k AS (
-           |  SELECT t, CAST(ROUND(CAST(r_e9 AS DOUBLE) * CAST(nt AS DOUBLE)
-           |    * 1e9 / CAST(sum_e9 AS DOUBLE), 0) AS BIGINT) AS s_e9
+           |  SELECT t, ${qroundLongSql("""CAST(r_e9 AS DOUBLE) * CAST(nt AS DOUBLE)
+           |    * 1e9 / CAST(sum_e9 AS DOUBLE)""")} AS s_e9
            |  FROM raw$k CROSS JOIN tot$k)""".stripMargin
       }.mkString(",\n")
       val rows = (1 to BtRounds).map { k =>
@@ -3244,9 +3219,9 @@ object MLOps {
           s"$a13 * ($a21 * $a32 - $a22 * $a31)"
       s"""WITH z AS (
          |  SELECT
-         |    CAST(ROUND(CAST(embedding[1] AS DOUBLE) * 1e6, 0) AS BIGINT)
+         |    ${qroundLongSql("CAST(embedding[1] AS DOUBLE) * 1e6")}
          |      AS z1,
-         |    CAST(ROUND(CAST(embedding[2] AS DOUBLE) * 1e6, 0) AS BIGINT)
+         |    ${qroundLongSql("CAST(embedding[2] AS DOUBLE) * 1e6")}
          |      AS z2,
          |    CAST(label AS BIGINT) AS y
          |  FROM embeddings),
@@ -3283,10 +3258,10 @@ object MLOps {
          |  FROM a),
          |f AS (
          |  SELECT sol.n, sol.w1, sol.w2, sol.w0,
-         |    CAST(ROUND((y - (w1 * CAST(z1 AS DOUBLE) + w2 * CAST(z2 AS DOUBLE)
+         |    ${qroundLongSql("""(y - (w1 * CAST(z1 AS DOUBLE) + w2 * CAST(z2 AS DOUBLE)
          |        + w0))
          |      * (y - (w1 * CAST(z1 AS DOUBLE) + w2 * CAST(z2 AS DOUBLE) + w0))
-         |      * 1e6, 0) AS BIGINT) AS se_e6
+         |      * 1e6""")} AS se_e6
          |  FROM z CROSS JOIN sol)
          |SELECT n, ROUND(w1 * 1e6, 6) AS w1_x, ROUND(w2 * 1e6, 6) AS w2_x,
          |  ROUND(w0, 6) AS intercept,
@@ -3298,15 +3273,13 @@ object MLOps {
       val metrics = (1 to AlsIters).map { k =>
         s"""m$k AS (
            |  SELECT COUNT(*) AS n_pairs,
-           |    SUM(CAST(ROUND(((r - (u1 * v1 + u2 * v2))
-           |      * (r - (u1 * v1 + u2 * v2))) * 1000000.0, 0) AS BIGINT)) AS se
+           |    SUM(${qroundLongSql("""((r - (u1 * v1 + u2 * v2))
+           |      * (r - (u1 * v1 + u2 * v2))) * 1000000.0""")}) AS se
            |  FROM r JOIN u$k USING (cust) JOIN v$k USING (part)),
            |un$k AS (
-           |  SELECT SUM(CAST(ROUND((ABS(u1) + ABS(u2)) * 1000000.0, 0)
-           |    AS BIGINT)) AS su FROM u$k),
+           |  SELECT SUM(${qroundLongSql("(ABS(u1) + ABS(u2)) * 1000000.0")}) AS su FROM u$k),
            |vn$k AS (
-           |  SELECT SUM(CAST(ROUND((ABS(v1) + ABS(v2)) * 1000000.0, 0)
-           |    AS BIGINT)) AS sv FROM v$k)""".stripMargin
+           |  SELECT SUM(${qroundLongSql("(ABS(v1) + ABS(v2)) * 1000000.0")}) AS sv FROM v$k)""".stripMargin
       }.mkString(",\n")
       val rows = (1 to AlsIters).map { k =>
         s"""SELECT $k AS step, m$k.n_pairs,
@@ -3359,11 +3332,11 @@ object MLOps {
       groupKey: String, g1: String, g2: String, src: String = "r"): String =
     s"""$out AS (
        |  SELECT $groupKey,
-       |    SUM(CAST(ROUND(($g1 * $g1) * 1000000.0, 0) AS BIGINT)) AS a11,
-       |    SUM(CAST(ROUND(($g1 * $g2) * 1000000.0, 0) AS BIGINT)) AS a12,
-       |    SUM(CAST(ROUND(($g2 * $g2) * 1000000.0, 0) AS BIGINT)) AS a22,
-       |    SUM(CAST(ROUND((r * $g1) * 1000000.0, 0) AS BIGINT)) AS b1,
-       |    SUM(CAST(ROUND((r * $g2) * 1000000.0, 0) AS BIGINT)) AS b2
+       |    SUM(${qroundLongSql(s"($g1 * $g1) * 1000000.0")}) AS a11,
+       |    SUM(${qroundLongSql(s"($g1 * $g2) * 1000000.0")}) AS a12,
+       |    SUM(${qroundLongSql(s"($g2 * $g2) * 1000000.0")}) AS a22,
+       |    SUM(${qroundLongSql(s"(r * $g1) * 1000000.0")}) AS b1,
+       |    SUM(${qroundLongSql(s"(r * $g2) * 1000000.0")}) AS b2
        |  FROM $src JOIN $fac USING ($joinKey) GROUP BY $groupKey)""".stripMargin
 
   private def alsSolveSql(out: String, terms: String, key: String,

@@ -3,15 +3,21 @@ package graft.ops
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Value-identical fast path for the engine's quantization idiom
-  * `round(y, 0).cast("long")` (round 18).
+/** The engine's one quantization rule: a double to an exact long,
+  * HALF_UP, the value of Spark's `round(y, 0).cast("long")`.
+  *
+  * The analytics quantize each double at a fixed scale (milli, micro or
+  * nano: the caller writes `x * 1e6`) before any order-sensitive sum, so
+  * Spark and the DuckDB oracle add the same integers in any order. Every
+  * quantization site under `src/main` goes through one of three forms:
+  * the Column form `qroundLong(y: Column)`, the scalar form
+  * `qroundLong(y: Double)` for hand-written trainers, and the DuckDB
+  * twin [[qroundLongSql]]. MLSpec's source scan fails on any other
+  * spelling under `src/main`.
   *
   * Spark's `Round` on DoubleType goes through
   * `BigDecimal.valueOf(y).setScale(0, HALF_UP)` — a Double.toString +
-  * decimal parse + object allocation PER ROW. On the hot quantization
-  * sites (the micro/nano-long discipline runs once per corpus row, and
-  * in the EM/ALS trainers once per row per topic per round) that detour
-  * is a measurable fraction of the whole query. The fast path computes
+  * decimal parse + object allocation PER ROW. The Column form computes
   * plain half-up directly on the double; the `when` guard routes the
   * only inputs where the two can disagree to the original expression:
   *
@@ -27,8 +33,8 @@ import org.apache.spark.sql.functions._
   *
   * Negative values: HALF_UP rounds away from zero, so the fast path is
   * sign(y) * floor(|y| + 0.5). The result is bit-identical to
-  * `round(y, 0).cast("long")` by construction — oracle-facing sites can
-  * use it freely (and the DuckDB oracles are unchanged either way).
+  * `round(y, 0).cast("long")` by construction (MLSpec checks the three
+  * forms against it on a boundary-heavy value set).
   */
 object QRound {
   /** The same rule on a driver- or executor-side double, for the
@@ -52,4 +58,10 @@ object QRound {
       when(y < lit(0.0), -floor(t + lit(0.5))).otherwise(floor(t + lit(0.5))))
       .otherwise(round(y, 0).cast("long"))
   }
+
+  /** The DuckDB twin: `y` is a SQL expression, rounded half away from
+    * zero. The string is valid Spark SQL too (`round(y)` has scale 0),
+    * for the `expr` sites that cannot take a Column.
+    */
+  def qroundLongSql(y: String): String = s"CAST(ROUND($y) AS BIGINT)"
 }

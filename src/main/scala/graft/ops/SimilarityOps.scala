@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import Ranking.{topK, topKSql}
+import QRound.{qroundLong, qroundLongSql}
 
 /** Similarity search over the embeddings table (north-star M9, SURVEY §7.4):
   * brute-force cosine top-k as the exact baseline, random-hyperplane LSH
@@ -102,12 +103,11 @@ object SimilarityOps {
       .withColumn("m_next", lead($"m", 1).over(wr))
     val terms = ranked.withColumn("t_e9",
       when($"m_next".isNull,
-        round($"m".cast("double") * 1e9
-          / greatest(lit(ShapK.toLong), $"nn").cast("double"), 0)
-          .cast("long"))
-        .otherwise(round(($"m" - $"m_next").cast("double")
+        qroundLong($"m".cast("double") * 1e9
+          / greatest(lit(ShapK.toLong), $"nn").cast("double")))
+        .otherwise(qroundLong(($"m" - $"m_next").cast("double")
           * least(lit(ShapK.toDouble), $"i".cast("double")) * 1e9
-          / (lit(ShapK.toDouble) * $"i".cast("double")), 0).cast("long")))
+          / (lit(ShapK.toDouble) * $"i".cast("double")))))
       .withColumn("shap_e9", sum($"t_e9").over(
         Window.partitionBy($"query_id").orderBy($"i")
           .rowsBetween(Window.currentRow, Window.unboundedFollowing)))
@@ -794,8 +794,7 @@ object SimilarityOps {
         v.join(sel.select($"vec_id"), Seq("vec_id"), "left_anti")
           .crossJoin(broadcast(selv))
           .withColumn("dn",
-            round((lit(1.0) - dot($"e", $"se") / ($"norm" * $"sn")) * 1e9, 0)
-              .cast("long"))
+            qroundLong((lit(1.0) - dot($"e", $"se") / ($"norm" * $"sn")) * 1e9))
           .groupBy($"vec_id").agg(min($"dn").as("md"))
       }
       var sel = v.orderBy($"vec_id").limit(1)
@@ -836,10 +835,10 @@ object SimilarityOps {
       val v = vectors(s, d)
       val dims = v.select($"norm", posexplode($"e").as(Seq("dim", "x")))
         .select($"dim",
-          round($"x" / $"norm" * 1e9, 0).cast("long").as("xq"))
+          qroundLong($"x" / $"norm" * 1e9).as("xq"))
         .groupBy($"dim").agg(sum($"xq").as("sd"))
-      val ss = dims.select(round(($"sd".cast("double") / 1e9)
-          * ($"sd".cast("double") / 1e9) * 1e6, 0).cast("long").as("t"))
+      val ss = dims.select(qroundLong(($"sd".cast("double") / 1e9)
+          * ($"sd".cast("double") / 1e9) * 1e6).as("t"))
         .agg(sum($"t").as("ss_u"))
       val nn = v.agg(count(lit(1)).as("n"))
       ss.crossJoin(broadcast(nn)).select(
@@ -1196,7 +1195,7 @@ object SimilarityOps {
           Some("rank"))
         .withColumn("gain_e6",
           when($"label" === $"qlabel",
-            round(lit(1e6) / log2($"rank" + 1), 0).cast("long"))
+            qroundLong(lit(1e6) / log2($"rank" + 1)))
             .otherwise(0L))
       val dcg = hits.groupBy($"query_id")
         .agg(sum($"gain_e6").as("dcg_e6"),
@@ -1207,7 +1206,7 @@ object SimilarityOps {
       val ideal = rel
         .withColumn("i",
           explode(sequence(lit(1L), least($"n_rel", lit(NdcgK.toLong)))))
-        .withColumn("g_e6", round(lit(1e6) / log2($"i" + 1), 0).cast("long"))
+        .withColumn("g_e6", qroundLong(lit(1e6) / log2($"i" + 1)))
         .groupBy($"query_id")
         .agg(max($"n_rel").as("n_rel"), sum($"g_e6").as("idcg_e6"))
       dcg.join(ideal, Seq("query_id"))
@@ -1387,12 +1386,12 @@ object SimilarityOps {
          |    ORDER BY cos_exact DESC, vec_id ASC)),
          |te AS (
          |  SELECT query_id, vec_id, label, i,
-         |    CAST(ROUND(CASE WHEN m_next IS NULL
+         |    ${qroundLongSql(s"""CASE WHEN m_next IS NULL
          |      THEN CAST(m AS DOUBLE) * 1e9
          |        / CAST(GREATEST($ShapK, nn) AS DOUBLE)
          |      ELSE CAST(m - m_next AS DOUBLE)
          |        * LEAST($ShapK.0, CAST(i AS DOUBLE)) * 1e9
-         |        / ($ShapK.0 * CAST(i AS DOUBLE)) END, 0) AS BIGINT) AS t_e9
+         |        / ($ShapK.0 * CAST(i AS DOUBLE)) END""")} AS t_e9
          |  FROM rk),
          |sp AS (
          |  SELECT query_id, vec_id, label,
@@ -1496,13 +1495,13 @@ object SimilarityOps {
          |  SELECT norm, e, unnest(range(len(e))) AS dim FROM n),
          |comp AS (
          |  SELECT dim,
-         |    CAST(ROUND(e[dim + 1] / norm * 1e9, 0) AS BIGINT) AS xq
+         |    ${qroundLongSql("e[dim + 1] / norm * 1e9")} AS xq
          |  FROM pos),
          |dims AS (SELECT dim, CAST(SUM(xq) AS BIGINT) AS sd
          |  FROM comp GROUP BY 1),
          |ss AS (
-         |  SELECT CAST(SUM(CAST(ROUND((CAST(sd AS DOUBLE) / 1e9)
-         |    * (CAST(sd AS DOUBLE) / 1e9) * 1e6, 0) AS BIGINT)) AS BIGINT)
+         |  SELECT CAST(SUM(${qroundLongSql("""(CAST(sd AS DOUBLE) / 1e9)
+         |    * (CAST(sd AS DOUBLE) / 1e9) * 1e6""")}) AS BIGINT)
          |    AS ss_u
          |  FROM dims),
          |nv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM n)
@@ -1514,8 +1513,8 @@ object SimilarityOps {
     "sample_coreset_kcenter" -> {
       def mdSql(selRel: String): String =
         s"""SELECT c.vec_id,
-           |  MIN(CAST(ROUND((1.0 - ${dotSql("c.e", "s.e")}
-           |    / (c.norm * s.norm)) * 1e9, 0) AS BIGINT)) AS md
+           |  MIN(${qroundLongSql(s"""(1.0 - ${dotSql("c.e", "s.e")}
+           |    / (c.norm * s.norm)) * 1e9""")}) AS md
            |FROM n c, $selRel sp, n s
            |WHERE s.vec_id = sp.vec_id
            |  AND c.vec_id NOT IN (SELECT vec_id FROM $selRel)
@@ -1902,7 +1901,7 @@ object SimilarityOps {
          |hits AS (
          |  SELECT query_id,
          |    CASE WHEN label = qlabel
-         |      THEN CAST(ROUND(1e6 / log2(rank + 1), 0) AS BIGINT)
+         |      THEN ${qroundLongSql("1e6 / log2(rank + 1)")}
          |      ELSE 0 END AS gain_e6,
          |    CASE WHEN label = qlabel THEN 1 ELSE 0 END AS r
          |  FROM ranked),
@@ -1916,7 +1915,7 @@ object SimilarityOps {
          |  GROUP BY 1),
          |ideal AS (
          |  SELECT query_id, MAX(n_rel) AS n_rel,
-         |    CAST(SUM(CAST(ROUND(1e6 / log2(i + 1), 0) AS BIGINT)) AS BIGINT)
+         |    CAST(SUM(${qroundLongSql("1e6 / log2(i + 1)")}) AS BIGINT)
          |      AS idcg_e6
          |  FROM (
          |    SELECT query_id, n_rel,

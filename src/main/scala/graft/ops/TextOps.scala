@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Lexicons
 import Ranking.{topK, topKSql}
+import QRound.{qroundLong, qroundLongSql}
 
 /** Text analytics layer. Covers SURVEY.md §2.8 F1-F12/F28, §2.4 A10-A11,
   * §2.10 U3 (VADER-style scoring) and U7 (TF-IDF), plus the
@@ -213,15 +214,14 @@ object TextOps {
        |ct AS (SELECT lang, COUNT(*) AS nc FROM tw GROUP BY 1),
        |vz AS (SELECT COUNT(DISTINCT word) AS v FROM tw),
        |pri AS (
-       |  SELECT lang, CAST(ROUND(ln(CAST(ndc AS DOUBLE) / nd) * 1000000.0)
-       |    AS BIGINT) AS prior_micro
+       |  SELECT lang, ${qroundLongSql("ln(CAST(ndc AS DOUBLE) / nd) * 1000000.0")} AS prior_micro
        |  FROM (SELECT lang, COUNT(*) AS ndc FROM tr GROUP BY 1)
        |  CROSS JOIN (SELECT COUNT(*) AS nd FROM tr)),
        |vocab AS (SELECT DISTINCT word FROM tw),
        |wl AS (
        |  SELECT vocab.word, ct.lang,
-       |    CAST(ROUND(ln(CAST(COALESCE(cc.cwc, 0) + 1 AS DOUBLE)
-       |      / (ct.nc + (SELECT v FROM vz))) * 1000000.0) AS BIGINT)
+       |    ${qroundLongSql("""ln(CAST(COALESCE(cc.cwc, 0) + 1 AS DOUBLE)
+       |      / (ct.nc + (SELECT v FROM vz))) * 1000000.0""")}
        |      AS lp_micro
        |  FROM vocab CROSS JOIN ct
        |  LEFT JOIN cc ON cc.word = vocab.word AND cc.lang = ct.lang),
@@ -250,8 +250,8 @@ object TextOps {
        |mx AS (SELECT doc_id, MAX(score) AS smax FROM sc GROUP BY 1),
        |soft AS (
        |  SELECT sc.doc_id, sc.true_lang, sc.pred_cand, sc.score,
-       |    CAST(ROUND(exp(CAST(sc.score - mx.smax AS DOUBLE) / 1e6)
-       |      * 1e9, 0) AS BIGINT) AS nano
+       |    ${qroundLongSql("""exp(CAST(sc.score - mx.smax AS DOUBLE) / 1e6)
+       |      * 1e9""")} AS nano
        |  FROM sc JOIN mx ON sc.doc_id = mx.doc_id),
        |den AS (
        |  SELECT doc_id, CAST(SUM(nano) AS BIGINT) AS dn
@@ -272,8 +272,7 @@ object TextOps {
     val mx = sc.groupBy($"doc_id").agg(max($"score").as("smax"))
     val soft = sc.join(mx, "doc_id")
       .withColumn("nano",
-        round(exp(($"score" - $"smax").cast("double") / 1e6) * 1e9, 0)
-          .cast("long"))
+        qroundLong(exp(($"score" - $"smax").cast("double") / 1e6) * 1e9))
       // round 18: den and the argmax row both read it — pin once
       .localCheckpoint(false)
     val den = soft.groupBy($"doc_id").agg(sum($"nano").as("dn"))
@@ -283,7 +282,7 @@ object TextOps {
       .select(
         when($"true_lang" === $"pred_cand", 1L).otherwise(0L).as("ok"),
         least(floor($"conf" * 10).cast("long") + 1L, lit(10L)).as("bin"),
-        round($"conf" * 1e6, 0).cast("long").as("confm"))
+        qroundLong($"conf" * 1e6).as("confm"))
     pred.groupBy($"bin").agg(
       count(lit(1)).as("n_docs"),
       sum($"confm").as("sconf"),
@@ -313,15 +312,13 @@ object TextOps {
     val priors = train.groupBy($"lang").agg(count(lit(1)).as("ndc"))
       .crossJoin(broadcast(train.agg(count(lit(1)).as("nd"))))
       .select($"lang",
-        round(log($"ndc".cast("double") / $"nd") * 1e6, 0)
-          .cast("long").as("prior_micro"))
+        qroundLong(log($"ndc".cast("double") / $"nd") * 1e6).as("prior_micro"))
     val wl = classCounts.select($"word").distinct()
       .crossJoin(broadcast(classTotals))
       .join(classCounts, Seq("lang", "word"), "left")
       .na.fill(0L, Seq("cwc"))
       .select($"word", $"lang",
-        round(log(($"cwc" + 1).cast("double") / ($"nc" + vocabSize)) * 1e6, 0)
-          .cast("long").as("lp_micro"))
+        qroundLong(log(($"cwc" + 1).cast("double") / ($"nc" + vocabSize)) * 1e6).as("lp_micro"))
     val docClass = test
       .select($"doc_id", explode($"t").as("word"))
       .join(wl, "word")
@@ -422,7 +419,7 @@ object TextOps {
         col("idf") * col("tf") * lit(2.2) /
           (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dlr"))))
     scored.select((tf.columns.map(col) :+ col("w") :+
-      round(col("w") * 1e6, 0).cast("long").as("wm")): _*)
+      qroundLong(col("w") * 1e6).as("wm")): _*)
   }
 
   /** Each query's BM25 score of every doc but itself, for a (qdoc, word,
@@ -448,7 +445,7 @@ object TextOps {
     * plus `w` and `wm`, reading the [[bm25StatsSql]] CTEs.
     */
   private[graft] def bm25WeightsSql(tf: String): String =
-    s"""SELECT *, CAST(ROUND(w * 1e6, 0) AS BIGINT) AS wm FROM (
+    s"""SELECT *, ${qroundLongSql("w * 1e6")} AS wm FROM (
        |  SELECT $tf.*,
        |    ln((st.n_docs - dfx.df + 0.5) / (dfx.df + 0.5) + 1.0)
        |      * $tf.tf * 2.2 /
@@ -1514,7 +1511,7 @@ object TextOps {
             / $"ch"
             + (lit(D) * $"n1f".cast("double") / $"ch") * $"pcont")
           .otherwise($"pcont"))
-        .withColumn("nllm", round(-log($"p") * 1e6, 0).cast("long"))
+        .withColumn("nllm", qroundLong(-log($"p") * 1e6))
       scored.groupBy($"doc_id")
         .agg(count(lit(1)).as("n_bigrams"), sum($"nllm").as("snll"))
         .select($"doc_id", $"n_bigrams",
@@ -2061,13 +2058,11 @@ object TextOps {
       val mx = sc.groupBy($"doc_id").agg(max($"score").as("smax"))
       val soft = sc.join(mx, "doc_id")
         .withColumn("nano",
-          round(exp(($"score" - $"smax").cast("double") / 1e6) * 1e9, 0)
-            .cast("long"))
+          qroundLong(exp(($"score" - $"smax").cast("double") / 1e6) * 1e9))
       val den = soft.groupBy($"doc_id").agg(sum($"nano").as("dn"))
       val scored = soft.join(den, "doc_id")
         .withColumn("alpha_m",
-          round((lit(1.0) - $"nano".cast("double") / $"dn") * 1e6, 0)
-            .cast("long"))
+          qroundLong((lit(1.0) - $"nano".cast("double") / $"dn") * 1e6))
         .withColumn("split", pmod(graft.functions.PolyHash.poly_hash(
           $"doc_id".cast("string")), lit(10L)))
       val cal = scored.filter($"split" === 8 && $"pred_cand" === $"true_lang")
@@ -2124,7 +2119,7 @@ object TextOps {
       val perDoc = lmScores(s, d)
         .join(documents(s, d).select($"doc_id", $"source"), "doc_id")
         .select($"source",
-          round($"avg_logprob" * -1e6, 0).cast("long").as("nllm"))
+          qroundLong($"avg_logprob" * -1e6).as("nllm"))
       val bySrc = perDoc.groupBy($"source")
         .agg(count(lit(1)).as("n_docs"), sum($"nllm").as("snll"))
       val ref = bySrc.agg(sum($"snll").as("tsnll"), sum($"n_docs").as("tn"))
@@ -2134,7 +2129,7 @@ object TextOps {
         .withColumn("excess", greatest(lit(0.0), $"mean_nll" - $"ref_nll"))
         .withColumn("wraw",
           ($"n_docs".cast("double") / $"tn") * exp(lit(Eta) * $"excess"))
-        .withColumn("wm", round($"wraw" * 1e6, 0).cast("long"))
+        .withColumn("wm", qroundLong($"wraw" * 1e6))
       w.withColumn("tw", sum($"wm").over(Window.partitionBy()))
         .withColumn("mw", max($"wm").over(Window.partitionBy()))
         .select($"source", $"n_docs",
@@ -2242,8 +2237,7 @@ object TextOps {
       val base = documents(s, d)
         .select($"source", $"doc_id", size(tokens($"text")).as("w_tok"))
         .filter($"w_tok" >= 1)
-      val u = (graft.functions.PolyHash.poly_hash($"doc_id".cast("string")) + 1)
-        .cast("double") / lit(1000000008.0)
+      val u = DedupOps.uniform(DedupOps.polyHash($"doc_id".cast("string")))
       topK(base.withColumn("ekey", round(-log(u) / $"w_tok", 9)),
           Seq($"source"), Seq($"ekey".asc, $"doc_id".asc), M, Some("pick"))
         .select($"source", $"pick", $"doc_id", $"w_tok", $"ekey")
@@ -2374,9 +2368,9 @@ object TextOps {
       val ranked = top
         .withColumn("rank", row_number().over(wr).cast("long"))
         .withColumn("xq",
-          round(log($"rank".cast("double")) * 1e6, 0).cast("long"))
+          qroundLong(log($"rank".cast("double")) * 1e6))
         .withColumn("yq",
-          round(log($"freq".cast("double")) * 1e6, 0).cast("long"))
+          qroundLong(log($"freq".cast("double")) * 1e6))
       // The five sums are exact integer algebra (safe at ANY corpus:
       // the 10k rank cap bounds them under 2^63), but the OLS
       // combination n·sxy − sx·sy can reach ~1e22 at a full 10k-point
@@ -2445,8 +2439,8 @@ object TextOps {
         .withColumn("cum_vocab", sum($"v_new").over(w))
         .withColumn("cum_tokens", sum($"n_tok").over(w))
         .select($"b".as("decile"), $"cum_tokens", $"cum_vocab")
-        .withColumn("xq", round(log($"cum_tokens") * 1e6, 0).cast("long"))
-        .withColumn("yq", round(log($"cum_vocab") * 1e6, 0).cast("long"))
+        .withColumn("xq", qroundLong(log($"cum_tokens") * 1e6))
+        .withColumn("yq", qroundLong(log($"cum_vocab") * 1e6))
       val fit = curve.agg(
           count(lit(1)).as("n"), sum($"xq").as("sx"), sum($"yq").as("sy"),
           sum($"xq" * $"yq").as("sxy"), sum($"xq" * $"xq").as("sxx"))
@@ -2523,7 +2517,7 @@ object TextOps {
           aggregate(array_distinct($"chars"), lit(0L), (acc, c) => {
             val cnt = size(filter($"chars", x => x === c))
             val p = cnt / $"n"
-            acc + round(-p * log(p) * lit(1e9), 0).cast("long")
+            acc + qroundLong(-p * log(p) * lit(1e9))
           }))
         .select($"doc_id", $"n".cast("long").as("n_chars"),
           size(array_distinct($"chars")).cast("long").as("n_alphabet"),
@@ -2606,7 +2600,7 @@ object TextOps {
         .crossJoin(broadcast(tot))
         .withColumn("term",
           ($"c_sw" / $"n_s") * log(($"c_sw" / $"n_s") / ($"c_w" / $"n_all")))
-        .withColumn("term_e9", round($"term" * 1e9, 0).cast("long"))
+        .withColumn("term_e9", qroundLong($"term" * 1e9))
         .groupBy($"source")
         .agg(max($"n_s").as("n_tokens"), count(lit(1)).as("n_types"),
           sum($"term_e9").as("kl_e9"))
@@ -2971,7 +2965,7 @@ object TextOps {
          |  SELECT CASE WHEN pr.true_lang = pr.pred_cand THEN 1 ELSE 0 END
          |      AS ok,
          |    LEAST(CAST(FLOOR((1e9 / dn) * 10) AS BIGINT) + 1, 10) AS bin,
-         |    CAST(ROUND((1e9 / dn) * 1e6, 0) AS BIGINT) AS confm
+         |    ${qroundLongSql("(1e9 / dn) * 1e6")} AS confm
          |  FROM pr JOIN den ON pr.doc_id = den.doc_id),
          |bins AS (
          |  SELECT bin, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -3027,16 +3021,15 @@ object TextOps {
          |mx AS (SELECT doc_id, MAX(score) AS smax FROM sc GROUP BY 1),
          |soft AS (
          |  SELECT sc.doc_id, sc.true_lang, sc.pred_cand,
-         |    CAST(ROUND(exp(CAST(sc.score - mx.smax AS DOUBLE) / 1e6)
-         |      * 1e9, 0) AS BIGINT) AS nano
+         |    ${qroundLongSql("""exp(CAST(sc.score - mx.smax AS DOUBLE) / 1e6)
+         |      * 1e9""")} AS nano
          |  FROM sc JOIN mx ON sc.doc_id = mx.doc_id),
          |den AS (
          |  SELECT doc_id, CAST(SUM(nano) AS BIGINT) AS dn
          |  FROM soft GROUP BY 1),
          |sco AS (
          |  SELECT soft.doc_id, soft.true_lang, soft.pred_cand,
-         |    CAST(ROUND((1.0 - CAST(nano AS DOUBLE) / dn) * 1e6, 0)
-         |      AS BIGINT) AS alpha_m,
+         |    ${qroundLongSql("(1.0 - CAST(nano AS DOUBLE) / dn) * 1e6")} AS alpha_m,
          |    ${graft.ops.DedupOps.polyHashSql("CAST(soft.doc_id AS VARCHAR)")}
          |      % 10 AS split
          |  FROM soft JOIN den ON soft.doc_id = den.doc_id),
@@ -3091,7 +3084,7 @@ object TextOps {
          |  GROUP BY doc_id),
          |pm AS (
          |  SELECT d.source,
-         |    CAST(ROUND(pd.avg_logprob * -1000000.0) AS BIGINT) AS nllm
+         |    ${qroundLongSql("pd.avg_logprob * -1000000.0")} AS nllm
          |  FROM pd JOIN documents d ON pd.doc_id = d.doc_id),
          |bs AS (
          |  SELECT source, COUNT(*) AS n_docs, CAST(SUM(nllm) AS BIGINT) AS snll
@@ -3108,8 +3101,8 @@ object TextOps {
          |  FROM bs CROSS JOIN ref),
          |w2 AS (
          |  SELECT source, n_docs, mean_nll, excess,
-         |    CAST(ROUND((CAST(n_docs AS DOUBLE) / tn) * exp(1.0 * excess)
-         |      * 1000000.0) AS BIGINT) AS wm
+         |    ${qroundLongSql("""(CAST(n_docs AS DOUBLE) / tn) * exp(1.0 * excess)
+         |      * 1000000.0""")} AS wm
          |  FROM w)
          |SELECT source, n_docs,
          |  ROUND(mean_nll, 6) AS mean_nll,
@@ -3171,7 +3164,7 @@ object TextOps {
          |    FROM dzk WHERE bucket = 9)),
          |sck AS (
          |  SELECT tek.doc_id,
-         |    CAST(ROUND(-ln(
+         |    ${qroundLongSql("""-ln(
          |      CASE WHEN histk.ch IS NOT NULL THEN
          |        GREATEST(CAST(COALESCE(bik.cb, 0) AS DOUBLE) - 0.75, 0.0)
          |          / histk.ch
@@ -3179,8 +3172,7 @@ object TextOps {
          |          * (CAST(COALESCE(contk.n1b, 0) + 1 AS DOUBLE)
          |             / CAST(stk.nbt + vzk.v AS DOUBLE))
          |      ELSE CAST(COALESCE(contk.n1b, 0) + 1 AS DOUBLE)
-         |        / CAST(stk.nbt + vzk.v AS DOUBLE) END) * 1e6, 0)
-         |      AS BIGINT) AS nllm
+         |        / CAST(stk.nbt + vzk.v AS DOUBLE) END) * 1e6""")} AS nllm
          |  FROM tek
          |  LEFT JOIN bik ON tek.w1 = bik.w1 AND tek.w2 = bik.w2
          |  LEFT JOIN histk ON tek.w1 = histk.w1
@@ -3456,8 +3448,8 @@ object TextOps {
          |  SELECT source, doc_id, len(${tokensSql("text")}) AS w_tok FROM documents),
          |k AS (
          |  SELECT source, doc_id, w_tok,
-         |    ROUND(-ln((${graft.ops.DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)")}
-         |        + 1) / 1000000008.0) / w_tok, 9) AS ekey
+         |    ROUND(-ln(${DedupOps.uniformSql(DedupOps.polyHashSql("CAST(doc_id AS VARCHAR)"))})
+         |      / w_tok, 9) AS ekey
          |  FROM base WHERE w_tok >= 1),
          |r AS (${topKSql("k", Seq("source"), Seq("ekey ASC", "doc_id ASC"), 10, Some("pick"))})
          |SELECT source, pick, doc_id, w_tok, ekey
@@ -3549,8 +3541,8 @@ object TextOps {
          |rk AS (${topKSql("f", Nil, Seq("freq DESC", "word ASC"), 10000, Some("rank"))}),
          |q AS (
          |  SELECT rank, word, freq,
-         |    CAST(ROUND(ln(CAST(rank AS DOUBLE)) * 1e6, 0) AS BIGINT) AS xq,
-         |    CAST(ROUND(ln(CAST(freq AS DOUBLE)) * 1e6, 0) AS BIGINT) AS yq
+         |    ${qroundLongSql("ln(CAST(rank AS DOUBLE)) * 1e6")} AS xq,
+         |    ${qroundLongSql("ln(CAST(freq AS DOUBLE)) * 1e6")} AS yq
          |  FROM rk),
          |g AS (
          |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -3641,8 +3633,8 @@ object TextOps {
          |  LEFT JOIN nt ON dom.b = nt.b),
          |q AS (
          |  SELECT decile, cum_tokens, cum_vocab,
-         |    CAST(ROUND(ln(cum_tokens) * 1e6, 0) AS BIGINT) AS xq,
-         |    CAST(ROUND(ln(cum_vocab) * 1e6, 0) AS BIGINT) AS yq
+         |    ${qroundLongSql("ln(cum_tokens) * 1e6")} AS xq,
+         |    ${qroundLongSql("ln(cum_vocab) * 1e6")} AS yq
          |  FROM curve),
          |fit AS (
          |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -3694,7 +3686,7 @@ object TextOps {
          |  GROUP BY 1)
          |ORDER BY source""".stripMargin,
     "text_char_entropy" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id,
         |    list_filter(string_split(lower(text), ''), c -> c <> '') AS chars
         |  FROM documents),
@@ -3703,9 +3695,9 @@ object TextOps {
         |    len(list_distinct(chars)) AS n_alphabet,
         |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
         |      list_transform(list_distinct(chars), c ->
-        |        CAST(ROUND(-(len(list_filter(chars, x -> x = c)) / len(chars))
+        |        ${qroundLongSql("""-(len(list_filter(chars, x -> x = c)) / len(chars))
         |          * ln(len(list_filter(chars, x -> x = c)) / len(chars))
-        |          * 1e9, 0) AS BIGINT))),
+        |          * 1e9""")})),
         |      (a, b) -> a + b) AS BIGINT) AS ent_e9
         |  FROM t)
         |SELECT doc_id, CAST(n AS BIGINT) AS n_chars,
@@ -3753,8 +3745,8 @@ object TextOps {
          |tt AS (SELECT CAST(SUM(c_w) AS BIGINT) AS n_all FROM wt),
          |terms AS (
          |  SELECT sw.source, st.n_s,
-         |    CAST(ROUND(((c_sw / n_s) * ln((c_sw / n_s) / (c_w / n_all)))
-         |      * 1e9, 0) AS BIGINT) AS term_e9
+         |    ${qroundLongSql("""((c_sw / n_s) * ln((c_sw / n_s) / (c_w / n_all)))
+         |      * 1e9""")} AS term_e9
          |  FROM sw
          |  JOIN st ON sw.source = st.source
          |  JOIN wt ON sw.word = wt.word

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.Tables
 import graft.ops.Ranking.{topK, topKSql}
+import graft.ops.QRound.{qroundLong, qroundLongSql}
+import graft.ops.Aggregates.{hllEstimate, hllEstimateSql, hllRegisters, hllRegistersSql}
 
 /** Time-windowed / incremental semantics (SURVEY §2.9, §7.1 M8).
   *
@@ -169,7 +171,7 @@ object StreamingOps {
       s.read.parquet(out)
         .groupBy($"batch_id".cast("long").as("batch_id"))
         .agg(count(lit(1)).as("n"),
-          sum(round($"value" * 1e6, 0).cast("long")).as("sum_micro"))
+          sum(qroundLong($"value" * 1e6)).as("sum_micro"))
         .orderBy("batch_id")
     }),
 
@@ -325,35 +327,13 @@ object StreamingOps {
     // bytes-scale registers — watermark-bounded regardless of rate.
     "stream_hll_daily" -> ((s, d) => {
       import s.implicits._
-      val M = 16
       val base = events(s, d).select(
         window($"ts", "1 day").getField("start").as("win_start"),
-        $"event_type",
-        $"user_id",
-        graft.functions.PolyHash.poly_hash($"user_id".cast("string")).as("h"))
-        .select($"win_start", $"event_type", $"user_id",
-          ($"h" % M).as("j"), expr(s"h div $M").as("w"))
-      val regs = base
-        .withColumn("rho", when($"w" === 0, lit(27))
-          .otherwise(expr("bit_count((w & -w) - 1) + 1")))
-        .groupBy($"win_start", $"event_type", $"j").agg(max($"rho").as("r"))
-      val dom = base.select($"win_start", $"event_type").distinct()
-        .select($"win_start", $"event_type",
-          explode(sequence(lit(0), lit(M - 1))).as("j"))
-      val est = dom.join(regs, Seq("win_start", "event_type", "j"), "left")
-        .na.fill(0, Seq("r"))
-        .groupBy($"win_start", $"event_type").agg(
-          sum(pow(lit(2.0), -$"r")).as("s"),
-          sum(when($"r" === 0, 1).otherwise(0)).as("zeros"))
-        .withColumn("raw", lit(0.673) * lit(M.toDouble * M) / $"s")
-        .withColumn("hll_est", round(
-          when($"raw" <= 2.5 * M && $"zeros" > 0,
-            lit(M.toDouble) * log(lit(M.toDouble) / $"zeros"))
-            .otherwise($"raw"), 3))
+        $"event_type", $"user_id")
+      val keys = Seq("win_start", "event_type")
       base.groupBy($"win_start", $"event_type")
         .agg(countDistinct($"user_id").as("exact_users"))
-        .join(est.select($"win_start", $"event_type", $"hll_est"),
-          Seq("win_start", "event_type"))
+        .join(hllEstimate(base, hllRegisters(base, keys: _*), keys: _*), keys)
         .orderBy("win_start", "event_type")
     }),
   )
@@ -437,10 +417,10 @@ object StreamingOps {
     // ((x % 4) + 4) % 4 is the sign-safe pmod form (epoch days are
     // positive here, but arm/batch-split oracles follow the convention).
     "sink_exactly_once_batches" ->
-      """SELECT ((date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
+      s"""SELECT ((date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
         |    % 4) + 4) % 4 AS batch_id,
         |  COUNT(*) AS n,
-        |  CAST(SUM(CAST(ROUND(value * 1e6, 0) AS BIGINT)) AS BIGINT)
+        |  CAST(SUM(${qroundLongSql("value * 1e6")}) AS BIGINT)
         |    AS sum_micro
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
     "stream_interval_join_full" ->
@@ -498,39 +478,14 @@ object StreamingOps {
         |GROUP BY 1 ORDER BY 1""".stripMargin,
     "stream_hll_daily" ->
       s"""WITH b AS (
-         |  SELECT date_trunc('day', ts) AS win_start, event_type, user_id,
-         |    ${graft.ops.DedupOps.polyHashSql("CAST(user_id AS VARCHAR)")} % 16 AS j,
-         |    ${graft.ops.DedupOps.polyHashSql("CAST(user_id AS VARCHAR)")} // 16 AS w
-         |  FROM events),
-         |rho AS (
-         |  SELECT win_start, event_type, j,
-         |    CASE WHEN w = 0 THEN 27
-         |         ELSE bit_count((w & -w) - 1) + 1 END AS rho
-         |  FROM b),
-         |regs AS (
-         |  SELECT win_start, event_type, j, MAX(rho) AS r
-         |  FROM rho GROUP BY 1, 2, 3),
-         |dom AS (
-         |  SELECT DISTINCT win_start, event_type, g.j
-         |  FROM b CROSS JOIN (SELECT unnest(range(16)) AS j) g),
-         |fl AS (
-         |  SELECT dom.win_start, dom.event_type, dom.j, COALESCE(regs.r, 0) AS r
-         |  FROM dom LEFT JOIN regs ON dom.win_start = regs.win_start
-         |    AND dom.event_type = regs.event_type AND dom.j = regs.j),
-         |est AS (
-         |  SELECT win_start, event_type,
-         |    SUM(pow(2.0, -r)) AS s,
-         |    SUM(CASE WHEN r = 0 THEN 1 ELSE 0 END) AS zeros
-         |  FROM fl GROUP BY 1, 2),
-         |e2 AS (
-         |  SELECT win_start, event_type, 0.673 * 256.0 / s AS raw, zeros
-         |  FROM est)
+         |  SELECT date_trunc('day', ts) AS win_start, event_type, user_id FROM events),
+         |regs AS (${hllRegistersSql("b", "win_start", "event_type")}),
+         |est AS (${hllEstimateSql("b", "regs", "win_start", "event_type")})
          |SELECT b.win_start, b.event_type,
          |  COUNT(DISTINCT b.user_id) AS exact_users,
-         |  ANY_VALUE(ROUND(CASE WHEN raw <= 40.0 AND zeros > 0
-         |       THEN 16.0 * ln(16.0 / zeros) ELSE raw END, 3)) AS hll_est
-         |FROM b JOIN e2 ON b.win_start = e2.win_start
-         |  AND b.event_type = e2.event_type
+         |  ANY_VALUE(est.hll_est) AS hll_est
+         |FROM b JOIN est ON b.win_start = est.win_start
+         |  AND b.event_type = est.event_type
          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     // Recursive-CTE replay of the greedy survivor chain: the walk steps
     // one rn at a time per key (all keys advance in parallel per

@@ -36,15 +36,27 @@ object Probe {
     * session-global `plan_id` (it moves with whatever planned before) as
     * `plan_id=N`, an RDD's session-global id and its call site's line
     * (`MapPartitionsRDD[460] at localCheckpoint at MLOps.scala:650`) as
-    * `RDD[N]` and the file alone, and a path under the working directory
-    * relative to it (`file:./…`).
+    * `RDD[N]` and the file alone, a path under the working directory
+    * relative to it (`file:./…`), and the session-global expression ids
+    * (`rank#8136`) renumbered 1, 2, … in order of first appearance, so
+    * one query's plan does not move with what the session planned before.
     */
-  def formattedPlan(df: DataFrame): String =
-    df.queryExecution.explainString(FormattedMode)
-      .replaceAll("""\$\$Lambda[^@\s,\]]*@\p{XDigit}+""", "\\$\\$Lambda")
-      .replaceAll("""\[plan_id=\d+\]""", "[plan_id=N]")
-      .replaceAll("""RDD\[\d+\] at (\w+) at (\w+\.scala):\d+""", "RDD[N] at $1 at $2")
-      .replace(s"file:${Paths.get("").toAbsolutePath}/", "file:./")
+  def formattedPlan(df: DataFrame): String = {
+    val ids = scala.collection.mutable.HashMap.empty[String, Int]
+    exprId.replaceAllIn(
+      df.queryExecution.explainString(FormattedMode)
+        .replaceAll("""\$\$Lambda[^@\s,\]]*@\p{XDigit}+""", "\\$\\$Lambda")
+        .replaceAll("""\[plan_id=\d+\]""", "[plan_id=N]")
+        .replaceAll("""RDD\[\d+\] at (\w+) at (\w+\.scala):\d+""", "RDD[N] at $1 at $2")
+        .replace(s"file:${Paths.get("").toAbsolutePath}/", "file:./"),
+      m => s"#${ids.getOrElseUpdate(m.group(1), ids.size + 1)}")
+  }
+
+  /** An expression id: `#` and digits right after a name or a closing
+    * parenthesis (`weight#8139`, `sum(x#1)#42L`); a string literal's `#`
+    * after a space or a comma is left alone.
+    */
+  private val exprId = """(?<=[\w)`])#(\d+)""".r
 
   private def matching(nameRegex: String): Seq[String] =
     SparkEntry.queries.keys.toSeq.sorted.filter(SparkEntry.nameFilter(nameRegex))

@@ -50,8 +50,9 @@ class MLSpec extends SparkSpec {
     assert(jobs == EmIters + 4, s"$jobs jobs for $EmIters rounds")
   }
 
-  test("QRound's scalar and Column forms both equal BigDecimal HALF_UP") {
+  test("QRound's scalar, Column and SQL forms all equal BigDecimal HALF_UP") {
     import graft.ops.QRound
+    import org.apache.spark.sql.functions.{expr, round}
     // exact half-integers, values inside and just outside the 1e-5 guard
     // band, the 1e9 cutoff and beyond, both signs, and zero
     val base = Seq(0.0, -0.0, 0.5, 1.5, 2.5, 0.49999999999999994, 2.4999999,
@@ -62,10 +63,75 @@ class MLSpec extends SparkSpec {
     def exact(y: Double) = BigDecimal.valueOf(y)
       .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
     ys.foreach(y => assert(QRound.qroundLong(y) == exact(y), s"scalar at $y"))
-    val col = ys.toDF("y").select($"y", QRound.qroundLong($"y").as("q"))
-      .as[(Double, Long)].collect()
-    assert(col.length == ys.length)
-    col.foreach { case (y, q) => assert(q == QRound.qroundLong(y), s"Column at $y") }
+    // the Column form, the SQL twin parsed by Spark, and the built-in
+    // round-to-long the rule replaces, side by side on every value
+    val all = ys.toDF("y").select($"y", QRound.qroundLong($"y").as("q"),
+        expr(QRound.qroundLongSql("y")).as("qs"),
+        round($"y", 0).cast("long").as("qb"))
+      .as[(Double, Long, Long, Long)].collect()
+    assert(all.length == ys.length)
+    all.foreach { case (y, q, qs, qb) =>
+      assert(q == QRound.qroundLong(y), s"Column at $y")
+      assert(qs == q, s"SQL twin at $y")
+      assert(qb == q, s"built-in round at $y")
+    }
+  }
+
+  /** Round-to-long sites under src/main that keep their own spelling, as
+    * (file, the trimmed text of the line the `round(` is on, why). Each
+    * line's count of entries is its count of sites. None today.
+    */
+  private val ownRoundToLong: Seq[(String, String, String)] = Nil
+
+  test("each round-to-long is written once under src/main") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val roundCall = """(?i)(?<!\w)round\s*\(""".r
+    val sparkCast = """\s*\.cast\(\s*("long"|"bigint"|LongType)\s*\)""".r
+    val sqlCast = """(?i)\s*AS\s+(BIGINT|LONG)\b""".r
+    val sqlOpen = """(?is).*CAST\s*\(\s*""".r
+    def closing(t: String, open: Int): Int = {
+      var depth = 0
+      var i = open
+      while (i < t.length) {
+        if (t(i) == '(') depth += 1
+        else if (t(i) == ')') { depth -= 1; if (depth == 0) return i }
+        i += 1
+      }
+      t.length - 1
+    }
+    // (file, trimmed line) of every round(…) outside QRound whose result
+    // is cast to a long: Spark's `.cast("long")` or SQL's
+    // `CAST(ROUND(…) AS BIGINT)`. Comment lines and doc blocks are
+    // blanked (a code line may start with `*`) and stripMargin bars
+    // dropped, so a site may span lines.
+    val sites = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "QRound.scala")
+      .toSeq.sortBy(_.toString).flatMap { p =>
+        var inDoc = false
+        val lines = Files.readAllLines(p).asScala.toIndexedSeq.map { l =>
+          val t = l.trim
+          if (inDoc || t.startsWith("/*")) { inDoc = !t.contains("*/"); "" }
+          else if (t.startsWith("//")) ""
+          else l.replaceFirst("""^\s*\|""", "")
+        }
+        val text = lines.mkString("\n")
+        roundCall.findAllMatchIn(text).filter { m =>
+          val end = closing(text, m.end - 1) + 1
+          val after = text.substring(end, math.min(text.length, end + 40))
+          sparkCast.findPrefixOf(after).isDefined ||
+            (sqlCast.findPrefixOf(after).isDefined &&
+              sqlOpen.matches(text.substring(math.max(0, m.start - 20), m.start)))
+        }.map(m => p.getFileName.toString -> lines(text.substring(0, m.start).count(_ == '\n')).trim)
+      }
+    val allowed = ownRoundToLong.groupBy(e => (e._1, e._2)).map { case (k, v) => k -> v.size }
+    val found = sites.groupBy(identity).map { case (k, v) => k -> v.size }
+    val extra = found.filter { case (site, n) => n > allowed.getOrElse(site, 0) }
+    assert(extra.isEmpty,
+      s"round-to-long outside QRound: $extra — write it as qroundLong(y) or qroundLongSql(y)," +
+        " or list it with its reason in ownRoundToLong")
+    val stale = allowed.filter { case (site, n) => found.getOrElse(site, 0) != n }
+    assert(stale.isEmpty, s"ownRoundToLong entries with no matching site: $stale")
   }
 
   test("LDA doc-topic histogram covers all docs") {

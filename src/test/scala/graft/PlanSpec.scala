@@ -26,6 +26,14 @@ class PlanSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  test("the plan formatter prints one query's plan the same however often it is built") {
+    // each build allocates fresh expression ids; the formatter numbers
+    // them by first appearance
+    def built = graft.tools.Probe.formattedPlan(SparkEntry.queries("a4_daily_value_trend")(spark, sf))
+    val (a, b) = (built, built)
+    assert(a.contains("#1") && a == b, s"$a\n---\n$b")
+  }
+
   test("projection pushdown: s2 scan reads only the selected columns") {
     val p = plan("s2_projected_scan")
     assert(p.contains("ReadSchema: struct<doc_id:bigint,lang:string,n_chars:bigint>"), p)
